@@ -6,8 +6,9 @@
 
 The reference's entry points are a publisher script and a Beam pipeline
 main [U/H, SURVEY §3]; this is the batch-query face of the engine — the
-streaming face lives in `streaming/` (see tools/soak.py for the
-end-to-end encrypted-stream run).
+streaming face lives in `streaming/` (see
+`perfbench/run.py --workload envelope_stream` for the end-to-end
+encrypted-stream run).
 """
 
 from __future__ import annotations

@@ -2674,12 +2674,13 @@ def _gr_edges_sql(l: int) -> str:
 # family's recall recovery), never from the all-pairs self-join.
 _GRB_TABLES = ((0, 4), (4, 8))
 
-# pair-kernel occupancy cap (VERDICT r15 item 7): 65536² float64 is a
-# 32 GiB distance block — far past any bucket the bits ≈ log2(n/B)
-# sizing rule admits (target mean occupancy B=160); a bucket at the cap
-# indicates a mis-sized table, and the kernel's assert names the knob
-# instead of OOMing the Python worker.
-_GRB_OCC_CAP = 65536
+# pair-kernel occupancy cap, sized from a per-Python-worker memory budget:
+# the kernel's float64 distance block is occupancy² × 8 B, so the cap of
+# 16,384 rows keeps it at 2 GiB — far past any bucket the bits ≈ log2(n/B)
+# sizing rule admits (target mean occupancy B=160). A bucket over the cap
+# indicates a mis-sized table, and the kernel raises a ValueError naming
+# the knob instead of OOMing the Python worker.
+_GRB_OCC_CAP = 16384
 
 
 def _lsh_slice_sql(col: str, lo: int, hi: int) -> str:
@@ -2980,7 +2981,7 @@ def _grb_scored_pairs_arrow(nodes):
     occupancy², the same Σ n_c² budget that bounds the join form's
     output — a skewed cell costs both forms alike, and the table-width
     knob (`bits ≈ log2(n/B)`) bounds occupancy in both; the explicit
-    `_GRB_OCC_CAP` assert turns a pathological bucket into a fast,
+    `_GRB_OCC_CAP` guard turns a pathological bucket into a fast,
     knob-naming failure instead of a Python-worker OOM (VERDICT r15
     item 7).
 
@@ -3005,10 +3006,11 @@ def _grb_scored_pairs_arrow(nodes):
                     "d": pd.Series([], dtype="int64"),
                 }
             )
-        assert n <= _GRB_OCC_CAP, (
-            f"bucket occupancy {n} exceeds the pair-kernel cap "
-            f"{_GRB_OCC_CAP}; widen the tables (bits ≈ log2(n/B))"
-        )
+        if n > _GRB_OCC_CAP:
+            raise ValueError(
+                f"bucket occupancy {n} exceeds the pair-kernel cap "
+                f"{_GRB_OCC_CAP}; widen the tables (bits ≈ log2(n/B))"
+            )
         order = np.argsort(pdf["vec_id"].to_numpy())
         ids = pdf["vec_id"].to_numpy()[order]
         lvl = pdf["lvl"].to_numpy()[order]

@@ -10,10 +10,3 @@ from .pipeline import (  # noqa: F401
     write_parquet_sink,
     write_text_sink,
 )
-from .cdc import cdc_current_view, cdc_upsert_sink  # noqa: F401
-from .cdc_multi import multi_current_view, multi_upsert_sink  # noqa: F401
-from .versioned import versioned_upsert_sink  # noqa: F401
-from .bitmap import bitmap_distinct_sink, bitmap_distinct_view  # noqa: F401
-from .cms import cms_grid_view, cms_sketch_sink  # noqa: F401
-from .stateful import running_user_census  # noqa: F401
-from .stateful_v2 import running_top_purchases, session_timeout_summaries  # noqa: F401

@@ -11,9 +11,9 @@ transformation here is THE SAME code the batch operators use
 the design point (Structured Streaming, SIGMOD 2018).
 
 Source stand-ins (no Pub/Sub in this environment): a file-stream over the
-events parquet replays the topic deterministically; ``rate`` source works
-for soak tests. Tests assert stream≡batch on the windowed counts
-(prefix-consistency) and that the watermark drops late rows.
+events parquet replays the topic deterministically. Tests assert
+stream≡batch on the windowed counts (prefix-consistency) and that the
+watermark drops late rows.
 
 Scale notes: stateful ops (windowed counts, dropDuplicatesWithinWatermark)
 keep per-key state in the state store — bound it with watermarks (done

@@ -1,26 +1,8 @@
-"""Round-10 tests (VERDICT r9 items 1/2/3/5 + ADVICE r9 items 2/3):
-the registered production-width graph-ANN build, the winnowing census
-single-kernel pin, restart-safe pacing + plan-drift guards on the
-custom streaming source, and optimistic concurrency on the commit-log
-pointer."""
+"""Round-10 tests (VERDICT r9 item 1 + residual 1): the registered
+production-width graph-ANN build and the winnowing census single-kernel
+pin."""
 
 from __future__ import annotations
-
-import json
-import os
-import shutil
-import tempfile
-
-import pytest
-
-from tests.test_streaming_r9 import _stage_split
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="sparkgraft-r10-")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
 
 
 # --- VERDICT r9 item 1: the wide graph-ANN width is driver-provable ---------
@@ -88,335 +70,3 @@ def test_winnowing_census_single_kernel_pass(spark, sf_dir):
     df = DQ["dedup_winnowing_fingerprints"](spark, sf_dir)
     assert "MapInPandas" not in formatted_plan(df)
     assert df.count() > 0
-
-
-# --- VERDICT r9 item 2 / ADVICE r9 items 2-3: source pacing + drift ---------
-
-
-def _reader(src, k=0, progress=None, redeliver=False):
-    from dataflow_pubsub_message_encryption_spark.sources.pubsub_replay import (
-        PubsubReplayStreamReader,
-    )
-
-    opts = {"path": src}
-    if k:
-        opts["max_segments_per_batch"] = str(k)
-    if progress:
-        opts["progress_path"] = progress
-    if redeliver:
-        opts["redeliver_first"] = "true"
-    return PubsubReplayStreamReader(opts)
-
-
-def _register(spark):
-    from dataflow_pubsub_message_encryption_spark.sources.pubsub_replay import (
-        PubsubReplayDataSource,
-    )
-
-    try:
-        spark.dataSource.register(PubsubReplayDataSource)
-    except Exception as e:  # re-registration across tests in one session
-        if "already" not in str(e).lower():
-            raise
-
-
-def _offsets_entries(ckpt: str) -> list[int]:
-    """End-offset entry of every journaled micro-batch, in batch order."""
-    odir = os.path.join(ckpt, "offsets")
-    out = []
-    batches = [n for n in os.listdir(odir) if n.isdigit()]
-    for name in sorted(batches, key=int):
-        with open(os.path.join(odir, name)) as fh:
-            last = [ln for ln in fh.read().splitlines() if ln.strip()][-1]
-        out.append(json.loads(last)["entry"])
-    return out
-
-
-def test_pubsub_pacing_cold_start_takes_ceil_n_over_k_batches(
-    spark, sf_dir, tmpdir
-):
-    """A 6-segment cold start with max_segments_per_batch=2 drains in
-    exactly ⌈6/2⌉ = 3 micro-batches (the unpaced form was ONE unbounded
-    batch — a 100 TB backlog in a single batch, VERDICT r9 item 2),
-    delivering every row exactly once."""
-    src = f"{tmpdir}/src"
-    _stage_split(sf_dir, src, 6)
-    _register(spark)
-    ckpt = f"{tmpdir}/ckpt"
-    stream = (
-        spark.readStream.format("pubsub_replay")
-        .option("path", src)
-        .option("max_segments_per_batch", "2")
-        .option("progress_path", f"{ckpt}/pubsub_progress.json")
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("paced_cold")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    from dataflow_pubsub_message_encryption_spark.sources import load_events
-
-    n = load_events(spark, sf_dir).count()
-    rows = spark.table("paced_cold").collect()
-    assert len(rows) == n
-    assert len({r.event_id for r in rows}) == n
-    assert _offsets_entries(ckpt) == [2, 4, 6]
-
-
-def test_pubsub_pacing_redelivery_crosses_micro_batches(spark, sf_dir, tmpdir):
-    """With pacing, the at-least-once redelivery entry (plan position 6)
-    genuinely lands in a LATER micro-batch than segment 0's first
-    delivery (plan position 0) — the cross-micro-batch redelivery the
-    unpaced drain couldn't exercise (ADVICE r9 item 3)."""
-    src = f"{tmpdir}/src"
-    _stage_split(sf_dir, src, 6)
-    _register(spark)
-    ckpt = f"{tmpdir}/ckpt"
-    stream = (
-        spark.readStream.format("pubsub_replay")
-        .option("path", src)
-        .option("redeliver_first", "true")
-        .option("max_segments_per_batch", "2")
-        .option("progress_path", f"{ckpt}/pubsub_progress.json")
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("paced_redeliver")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    # 7 plan entries at K=2 -> batches end at 2, 4, 6, 7: first delivery
-    # of segment 0 is in batch 0, the redelivery alone in batch 3
-    assert _offsets_entries(ckpt) == [2, 4, 6, 7]
-    rows = spark.table("paced_redeliver").collect()
-    import pyarrow.parquet as pq
-
-    seg0 = pq.read_table(f"{src}/part0.parquet")
-    dup = [r for r in rows if r.attrs["delivery"] == "2"]
-    assert {r.event_id for r in dup} == set(seg0["event_id"].to_pylist())
-
-
-def test_pubsub_pacing_restart_protocol(sf_dir, tmpdir):
-    """Protocol-level restart drill (no engine; the reader is driven the
-    way python_streaming_source_runner drives it). (a) a fresh instance
-    resumes pacing from the committed entry via the progress file —
-    never re-plans committed segments; (b) an uncommitted-batch replay
-    re-seeds the floor from the engine-planned end (offset-log truth)
-    even with no progress file; (c) a LOST progress file with an
-    intact checkpoint degrades to ONE unpaced poll (the full plan
-    head): the old cold floor+K head could land BEHIND the committed
-    offset, and Spark compares offsets by EQUALITY — the regressed
-    head would be journaled as a batch end and later batches would
-    re-plan delivered segments (ADVICE r10)."""
-    src = f"{tmpdir}/src"
-    _stage_split(sf_dir, src, 6)
-    pp = f"{tmpdir}/progress.json"
-
-    r1 = _reader(src, k=2, progress=pp)
-    o0 = r1.initialOffset()
-    assert o0["entry"] == 0
-    o1 = r1.latestOffset()
-    assert o1["entry"] == 2
-    assert [p.seq for p in r1.partitions(o0, o1)] == [0, 1]
-    r1.commit(o1)
-
-    # (a) crash + restart: the new instance reads the journaled floor
-    r2 = _reader(src, k=2, progress=pp)
-    o2 = r2.latestOffset()
-    assert o2["entry"] == 4, "restart must resume pacing past committed"
-    assert [p.seq for p in r2.partitions(o1, o2)] == [2, 3]
-    r2.commit(o2)
-
-    # (b) restart WITHOUT the progress file, engine replays the
-    # uncommitted batch [4, 6): the planned end re-bumps the floor
-    os.remove(pp)
-    r3 = _reader(src, k=2)
-    assert [p.seq for p in r3.partitions({"entry": 4}, {"entry": 6})] == [4, 5]
-    assert r3.latestOffset()["entry"] == 6
-
-    # (c) lost file + completed last batch (committed=4, floor unseeded):
-    # the unseeded paced poll must report the FULL plan head — never a
-    # cold K-step the engine could order behind its committed offset
-    r4 = _reader(src, k=2, progress=pp)
-    heads = [r4.latestOffset()["entry"] for _ in range(3)]
-    assert heads == [6, 6, 6], "unseeded paced polls must report the full head"
-    # the engine plans [4, 6) from checkpoint truth; partitions() re-seeds
-    # the floor and pacing resumes — no segment skipped, none re-planned
-    assert [p.seq for p in r4.partitions({"entry": 4}, {"entry": 6})] == [4, 5]
-    r4.commit({"entry": 6})
-    assert r4.latestOffset()["entry"] == 6, "paced again, parked at plan end"
-
-    # (c') the same lost-file restart NEVER emits a head below any
-    # committable value at any poll count (the ADVICE r10 regression:
-    # min(K, len) = 2 < committed 4 journaled as a batch end)
-    os.remove(pp)  # r4.commit re-journaled it; lose it again
-    r5 = _reader(src, k=2, progress=pp)
-    assert min(r5.latestOffset()["entry"] for _ in range(5)) == 6
-
-    # (d) a FRESH start (initialOffset called: committed is provably 0)
-    # still paces from the first poll — the degrade is restart-only
-    r6 = _reader(src, k=2, progress=f"{tmpdir}/fresh.json")
-    assert r6.initialOffset()["entry"] == 0
-    assert r6.latestOffset()["entry"] == 2, "fresh starts keep pacing"
-
-
-def test_pubsub_plan_drift_and_bounds_are_loud(sf_dir, tmpdir):
-    """ADVICE r9 item 2: a checkpoint restarted over a CHANGED plan
-    (segment removed / redeliver knob flipped) must fail loudly in
-    partitions — committed entries would silently re-map to different
-    files — and an end entry beyond the plan is a clear error, not an
-    IndexError."""
-    src = f"{tmpdir}/src"
-    _stage_split(sf_dir, src, 3)
-    r = _reader(src)
-    off = r.latestOffset()
-    assert off["entry"] == 3 and len(off["fp"]) == 12
-
-    # same plan, same fingerprint: offsets round-trip
-    assert len(r.partitions({"entry": 0, "fp": off["fp"]}, off)) == 3
-
-    # drift: a segment disappears -> new plan, old offsets must be refused
-    os.remove(f"{src}/part1.parquet")
-    r2 = _reader(src)
-    with pytest.raises(ValueError, match="does not match the current delivery plan"):
-        r2.partitions({"entry": 0, "fp": off["fp"]}, off)
-    # flipping the redeliver knob is also drift
-    r3 = _reader(src, redeliver=True)
-    assert r3.latestOffset()["fp"] != r2.latestOffset()["fp"]
-
-    # legacy offsets without fp: bounds still validated with a clear error
-    with pytest.raises(ValueError, match="exceeds the current plan length"):
-        r2.partitions({"entry": 0}, {"entry": 99})
-
-    # a stale progress file from a DIFFERENT plan must not seed the floor:
-    # the reader treats it as ABSENT — and with no offset log beside it to
-    # re-seed from, a paced poll degrades to the full head (2 after the
-    # removal above), never a foreign-floor K-step (ADVICE r10 contract)
-    pp = f"{tmpdir}/progress.json"
-    with open(pp, "w") as fh:
-        json.dump({"entry": 2, "fp": off["fp"]}, fh)
-    r4 = _reader(src, k=1, progress=pp)
-    assert r4.latestOffset()["entry"] == 2, "foreign floor must not seed/pace"
-    r4.commit({"entry": 0})  # engine channel seeds the floor (checkpoint truth)
-    assert r4.latestOffset()["entry"] == 1, "pacing resumes once seeded"
-
-
-# --- VERDICT r9 item 3: optimistic concurrency on the commit-log pointer ----
-
-
-def _fs_writer(tag: str):
-    def write_tables(vdir: str) -> dict[str, str]:
-        os.makedirs(os.path.join(vdir, "users"), exist_ok=True)
-        with open(os.path.join(vdir, "users", "part"), "w") as fh:
-            fh.write(tag)
-        return {"users": f"{os.path.basename(vdir)}/users"}
-
-    return write_tables
-
-
-def test_versioned_cas_two_writer_interleaving(tmpdir):
-    """Two writers read the same committed parent; the first CAS commit
-    wins, the second raises CommitConflict (the pointer never attests a
-    snapshot built from a stale parent), the loser retries against the
-    NEW parent, and both commits land with a LINEAR history."""
-    from dataflow_pubsub_message_encryption_spark.streaming import versioned as V
-
-    t = f"{tmpdir}/t"
-    os.makedirs(t)
-    assert V.commit(t, 0, _fs_writer("b0")) == 0
-
-    # both writers base their merge on parent=0
-    parent_a = V.latest_version(t)
-    parent_b = V.latest_version(t)
-    assert V.commit(t, 1, _fs_writer("A"), parent=parent_a) == 1  # A wins
-    with pytest.raises(V.CommitConflict, match="no longer the committed"):
-        V.commit(t, 1, _fs_writer("B-stale"), parent=parent_b)  # B loses
-    # the losing attempt left nothing behind: no orphan v2, no claim
-    assert not os.path.exists(f"{t}/v2")
-    assert not any(p.endswith(".claim") for p in os.listdir(f"{t}/_log"))
-
-    # loser retries against the new parent -> linear history, no lost update
-    assert V.commit(t, 2, _fs_writer("B-retry"), parent=V.latest_version(t)) == 2
-    hist = V.history(t)
-    assert [h["version"] for h in hist] == [0, 1, 2]
-    assert [h["batch_id"] for h in hist] == [0, 1, 2]
-    assert open(f"{t}/v1/users/part").read() == "A"
-    assert open(f"{t}/v2/users/part").read() == "B-retry"
-
-
-def test_versioned_cas_claim_blocks_rivals_and_recover_sweeps(tmpdir):
-    """A held claim excludes rival committers of that version (the
-    O_EXCL mutual-exclusion primitive); the rival NEVER sweeps a live
-    claim — only quiesced recovery does, after which commits proceed."""
-    from dataflow_pubsub_message_encryption_spark.streaming import versioned as V
-
-    t = f"{tmpdir}/t"
-    os.makedirs(f"{t}/_log")
-    V.commit(t, 0, _fs_writer("b0"))
-
-    claim = f"{t}/_log/v1.json.claim"  # a live (or crashed) writer's claim
-    open(claim, "w").close()
-    with pytest.raises(V.CommitConflict, match="claimed by another writer"):
-        V.commit(t, 1, _fs_writer("rival"))
-    assert os.path.exists(claim), "a loser must never sweep a rival's claim"
-
-    V.recover(t)  # quiesced: the claim's writer is known dead
-    assert not os.path.exists(claim)
-    assert V.commit(t, 1, _fs_writer("after")) == 1
-    assert V.latest_version(t) == 1
-
-
-def test_pubsub_pacing_engine_level_restart_drill(spark, sf_dir, tmpdir):
-    """The REAL-engine restart proof of VERDICT r9 item 2(b): each
-    availableNow run captures one paced head, drains ONE K-segment
-    micro-batch, and terminates; the next run is a fresh reader
-    instance that must resume from the progress file + checkpoint.
-    Three runs drain all 6 segments with zero duplicates and zero
-    skips, a fourth run is a no-op, and the offset log reads exactly
-    [K, 2K, 3K]. (Uses a parquet sink — the memory sink refuses
-    checkpoint recovery.)"""
-    _register(spark)
-    src = f"{tmpdir}/src"
-    _stage_split(sf_dir, src, 6)
-    ckpt, out = f"{tmpdir}/ckpt", f"{tmpdir}/out"
-
-    def run_once():
-        stream = (
-            spark.readStream.format("pubsub_replay")
-            .option("path", src)
-            .option("max_segments_per_batch", "2")
-            .option("progress_path", f"{ckpt}/pubsub_progress.json")
-            .load()
-        )
-        q = (
-            stream.selectExpr("event_id")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        return spark.read.parquet(out).count()
-
-    from dataflow_pubsub_message_encryption_spark.sources import load_events
-
-    n = load_events(spark, sf_dir).count()
-    counts = [run_once() for _ in range(4)]
-    assert counts[2] == counts[3] == n, "3 paced runs drain; run 4 is a no-op"
-    assert counts[0] < counts[1] < counts[2], "each restart makes progress"
-    ids = [r.event_id for r in spark.read.parquet(out).collect()]
-    assert len(set(ids)) == len(ids) == n, "no duplicates, no skips"
-    assert _offsets_entries(ckpt) == [2, 4, 6]

@@ -1,45 +1,7 @@
-"""Round-11 tests (VERDICT r10 items 1/3 + ADVICE r10 items 1/5):
-the exhaustive CAS crash-point matrix on the commit-log protocol, the
-enforced quiesced-recovery contract (LiveClaim), and the paced
-source's lost-progress-file degrade at the real engine level."""
+"""Round-11 tests (VERDICT r10 item 1): the auto-derived graph-ANN
+table width and the auto-sized IVF k-means."""
 
 from __future__ import annotations
-
-import json
-import os
-import shutil
-import tempfile
-
-import pytest
-
-from tests.test_round10_ops import _offsets_entries, _register
-from tests.test_streaming_r9 import _stage_split
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="sparkgraft-r11-")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def _dead_pid() -> int:
-    """A pid that provably belonged to a real, now-dead process."""
-    pid = os.fork()
-    if pid == 0:
-        os._exit(0)
-    os.waitpid(pid, 0)
-    return pid
-
-
-def _fs_writer(tag: str):
-    def write_tables(vdir: str) -> dict[str, str]:
-        os.makedirs(os.path.join(vdir, "users"), exist_ok=True)
-        with open(os.path.join(vdir, "users", "part"), "w") as fh:
-            fh.write(tag)
-        return {"users": f"{os.path.basename(vdir)}/users"}
-
-    return write_tables
 
 
 # --- VERDICT r10 item 1: auto-derived graph-ANN table width ------------------
@@ -147,266 +109,3 @@ def test_kmeans_ivf_auto_equals_explicit_body(spark, sf_dir):
     assert all(0 <= r.cell < 45 for r in wider), "cells must be the derived k"
     sims = [r.cos_sim for r in wider]
     assert sims == sorted(sims, reverse=True)
-
-
-# --- VERDICT r10 item 3: exhaustive CAS crash-point matrix -------------------
-
-# each crash point = the exact on-disk state a writer killed at that
-# protocol step leaves behind (the r6 snapshot-swap drill idiom: fabricate
-# the post-crash state, then prove recovery + replay converge)
-_CRASH_POINTS = [
-    "after_claim_create",
-    "after_snapshot_write",
-    "after_log_entry",
-    "after_pointer_swap",  # committed! only the claim release was lost
-]
-
-
-@pytest.mark.parametrize("point", _CRASH_POINTS)
-def test_versioned_cas_crash_matrix_converges(tmpdir, point):
-    """Kill the CAS commit protocol at EVERY step (VERDICT r10 item 3 —
-    the r6 precedent found two real holes this way) and prove the replay
-    rule converges: recover() sweeps exactly the uncommitted leftovers,
-    the replayed batch lands iff the crash preceded the pointer swap
-    (skips iff it followed it), and the final history is LINEAR with the
-    right content at every version."""
-    from dataflow_pubsub_message_encryption_spark.streaming import versioned as V
-
-    t = f"{tmpdir}/t"
-    os.makedirs(f"{t}/_log")
-    assert V.commit(t, 0, _fs_writer("b0")) == 0  # healthy committed v0
-
-    # fabricate the crash state of a writer committing batch 1 -> v1,
-    # killed at `point`; its claim carries a verifiably-dead pid
-    claim = f"{t}/_log/v1.json.claim"
-    with open(claim, "w") as fh:
-        json.dump({"pid": _dead_pid(), "host": __import__("socket").gethostname()}, fh)
-    if point in ("after_snapshot_write", "after_log_entry", "after_pointer_swap"):
-        _fs_writer("crashed")(f"{t}/v1")
-    if point in ("after_log_entry", "after_pointer_swap"):
-        with open(f"{t}/_log/v1.json", "w") as fh:
-            json.dump(
-                {"version": 1, "batch_id": 1, "tables": {"users": "v1/users"}},
-                fh,
-            )
-    if point == "after_pointer_swap":
-        with open(f"{t}/_latest", "w") as fh:
-            fh.write("1")
-
-    # recovery (non-forced: the dead-pid check is the path under test)
-    V.recover(t)
-    committed_before_crash = point == "after_pointer_swap"
-    assert not os.path.exists(claim), "dead writer's claim must be swept"
-    if committed_before_crash:
-        # the pointer moved: v1 IS committed; nothing may be rolled back
-        assert V.latest_version(t) == 1
-        assert os.path.exists(f"{t}/v1/users/part")
-        assert open(f"{t}/v1/users/part").read() == "crashed"
-    else:
-        # the pointer never moved: every v1 leftover is rolled back
-        assert V.latest_version(t) == 0
-        assert not os.path.exists(f"{t}/v1")
-        assert not os.path.exists(f"{t}/_log/v1.json")
-
-    # replay batch 1 exactly as the sink does: skip iff already committed
-    if V.committed_batch_id(t) < 1:
-        assert V.commit(t, 1, _fs_writer("replayed")) == 1
-        assert open(f"{t}/v1/users/part").read() == "replayed"
-    else:
-        assert V.committed_batch_id(t) == 1  # exactly-once: replay skips
-
-    # converged: linear history, one log entry per version, no claims,
-    # no orphan dirs, and a further batch proceeds normally
-    assert [h["version"] for h in V.history(t)] == [0, 1]
-    assert [h["batch_id"] for h in V.history(t)] == [0, 1]
-    assert not any(p.endswith(".claim") for p in os.listdir(f"{t}/_log"))
-    vdirs = sorted(
-        d for d in os.listdir(t) if d.startswith("v") and d[1:].isdigit()
-    )
-    assert vdirs == ["v0", "v1"]
-    assert V.commit(t, 2, _fs_writer("next")) == 2
-    assert V.latest_version(t) == 2
-
-    # recovery is re-runnable on the converged state
-    V.recover(t)
-    assert V.latest_version(t) == 2
-
-
-def test_versioned_recover_refuses_live_claim(tmpdir):
-    """VERDICT r10 item 3 second half: a non-quiesced recover() under a
-    LIVE claim fails loudly (LiveClaim) BEFORE touching any state —
-    sweeping a live writer's claim would hand its version to a rival and
-    sweeping its in-flight log entry would corrupt its commit."""
-    from dataflow_pubsub_message_encryption_spark.streaming import versioned as V
-
-    t = f"{tmpdir}/t"
-    os.makedirs(f"{t}/_log")
-    V.commit(t, 0, _fs_writer("b0"))
-
-    # a live same-host writer (this very process) holds the v1 claim and
-    # has written its uncommitted log entry — mid-commit state
-    claim = f"{t}/_log/v1.json.claim"
-    with open(claim, "w") as fh:
-        json.dump(
-            {"pid": os.getpid(), "host": __import__("socket").gethostname()},
-            fh,
-        )
-    with open(f"{t}/_log/v1.json", "w") as fh:
-        json.dump({"version": 1, "batch_id": 1, "tables": {}}, fh)
-
-    with pytest.raises(V.LiveClaim, match="not verifiably dead"):
-        V.recover(t)
-    # NOTHING was swept: the claim and the in-flight entry both survive
-    assert os.path.exists(claim)
-    assert os.path.exists(f"{t}/_log/v1.json")
-
-    # a foreign-host claim is unverifiable -> also refused
-    with open(claim, "w") as fh:
-        json.dump({"pid": 1, "host": "some-other-executor"}, fh)
-    with pytest.raises(V.LiveClaim):
-        V.recover(t)
-
-    # force=True is the operator's verified-quiesced escape hatch
-    V.recover(t, force=True)
-    assert not os.path.exists(claim)
-    assert not os.path.exists(f"{t}/_log/v1.json")
-    assert V.latest_version(t) == 0
-
-
-def test_versioned_recover_sweeps_dead_and_empty_claims(tmpdir):
-    """The two claim states recover() may sweep without force: a claim
-    whose same-host writer is verifiably dead, and an empty claim (a
-    crash inside the few-instruction create-to-identity-write window)."""
-    from dataflow_pubsub_message_encryption_spark.streaming import versioned as V
-
-    t = f"{tmpdir}/t"
-    os.makedirs(f"{t}/_log")
-    V.commit(t, 0, _fs_writer("b0"))
-
-    with open(f"{t}/_log/v1.json.claim", "w") as fh:
-        json.dump(
-            {"pid": _dead_pid(), "host": __import__("socket").gethostname()},
-            fh,
-        )
-    open(f"{t}/_log/v2.json.claim", "w").close()  # empty: pre-identity crash
-    V.recover(t)
-    assert not any(p.endswith(".claim") for p in os.listdir(f"{t}/_log"))
-
-
-# --- ADVICE r10 item 1: lost progress file at the REAL engine ---------------
-
-
-def _paced_runner(spark, src, ckpt, out, progress):
-    """One availableNow run of the paced source (the engine captures one
-    paced head per run — the r10 restart-drill harness)."""
-
-    def run_once():
-        stream = (
-            spark.readStream.format("pubsub_replay")
-            .option("path", src)
-            .option("max_segments_per_batch", "2")
-            .option("progress_path", progress)
-            .load()
-        )
-        q = (
-            stream.selectExpr("event_id")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        return spark.read.parquet(out).count()
-
-    return run_once
-
-
-def test_pubsub_lost_progress_file_mid_stream_engine_level(
-    spark, sf_dir, tmpdir
-):
-    """Delete the pacing progress file between availableNow runs (the
-    engine-level drill ADVICE r10 asked for), documented placement
-    (progress INSIDE the checkpoint dir): the restarted reader re-seeds
-    its floor from the engine's own offset log — the checkpoint truth
-    the progress file merely caches — so pacing RESUMES, nothing is
-    re-planned, and no head is ever journaled behind the committed
-    offset (the ADVICE r10 regression: a cold min(K, len) head ordered
-    behind committed made later batches re-deliver segments)."""
-    _register(spark)
-    src = f"{tmpdir}/src"
-    _stage_split(sf_dir, src, 6)
-    ckpt, out = f"{tmpdir}/ckpt", f"{tmpdir}/out"
-    progress = f"{ckpt}/pubsub_progress.json"
-    run_once = _paced_runner(spark, src, ckpt, out, progress)
-
-    from dataflow_pubsub_message_encryption_spark.sources import load_events
-
-    n = load_events(spark, sf_dir).count()
-
-    c1 = run_once()  # paced cold start: segments [0, 2)
-    assert 0 < c1 < n
-    assert os.path.exists(progress)
-    os.remove(progress)  # LOSE the pacing journal mid-stream
-
-    c2 = run_once()  # offset-log re-seed: pacing RESUMES at [2, 4)
-    assert c1 < c2 < n, "checkpoint-truth seeding must keep pacing"
-    c3 = run_once()  # [4, 6): drained
-    c4 = run_once()  # parked at plan end: no-op
-    assert c3 == c4 == n
-
-    ids = [r.event_id for r in spark.read.parquet(out).collect()]
-    assert len(set(ids)) == len(ids) == n, "no duplicates, no skips"
-    ends = _offsets_entries(ckpt)
-    assert ends == sorted(set(ends)) == [2, 4, 6], (
-        "offset log must be strictly increasing — a regressed batch end "
-        "is exactly the ADVICE r10 failure"
-    )
-
-
-def test_pubsub_lost_progress_file_unknown_placement_degrades_unpaced(
-    spark, sf_dir, tmpdir
-):
-    """The same mid-stream loss with the progress file OUTSIDE the
-    checkpoint dir (legal but undocumented placement — no offset log
-    beside it to re-seed from): the restarted reader is UNSEEDED and
-    must degrade to the full plan head — one unpaced batch drains the
-    backlog from the COMMITTED offset (committed=4 here: the old cold
-    min(K,len)=2 head would have been journaled BEHIND it); never a
-    regressed head, duplicate, or skip."""
-    from tests.test_round10_ops import _reader
-
-    _register(spark)
-    src = f"{tmpdir}/src"
-    _stage_split(sf_dir, src, 6)
-    ckpt, out = f"{tmpdir}/ckpt", f"{tmpdir}/out"
-    progress = f"{tmpdir}/progress-elsewhere.json"  # NOT inside ckpt
-    # outside the checkpoint there is no offset log to prove a cold start
-    # fresh, so pacing under this placement needs the file to exist: seed
-    # it at entry 0 (what a deployment script would do)
-    with open(progress, "w") as fh:
-        json.dump({"entry": 0, "fp": _reader(src, k=2)._fp}, fh)
-    run_once = _paced_runner(spark, src, ckpt, out, progress)
-
-    from dataflow_pubsub_message_encryption_spark.sources import load_events
-
-    n = load_events(spark, sf_dir).count()
-
-    c1 = run_once()  # paced: [0, 2)
-    c2 = run_once()  # paced: [2, 4)
-    assert 0 < c1 < c2 < n, "progress-file seeding must keep pacing"
-    os.remove(progress)  # LOSE it — nothing left to seed from
-
-    c3 = run_once()  # unseeded: ONE unpaced batch drains [4, 6)
-    assert c3 == n, "the degrade drains the backlog, never regresses"
-    c4 = run_once()
-    assert c4 == n  # parked: no-op
-
-    ids = [r.event_id for r in spark.read.parquet(out).collect()]
-    assert len(set(ids)) == len(ids) == n, "no duplicates, no skips"
-    ends = _offsets_entries(ckpt)
-    assert ends == sorted(set(ends)) == [2, 4, 6], (
-        "offset log must be strictly increasing — a regressed batch end "
-        "is exactly the ADVICE r10 failure"
-    )

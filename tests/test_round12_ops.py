@@ -1,29 +1,10 @@
-"""Round-12 tests (VERDICT r11 items 4/6 + ADVICE r11 items 2/5):
-the threshold-derived LSH banding laws, the paced-source crash-point
-matrix during a multi-batch drain (floor-seeding under every fabricated
-mid-poll crash state, mirroring the versioned.py CAS matrix), the
-pid-recycling-proof claim identity, and the Arrow read path's pinned
-edge semantics (ns timestamps, null user_id)."""
+"""Round-12 tests (VERDICT r11 items 4/5): the threshold-derived LSH
+banding laws, the SinglePartition plan-audit classifier, and the
+sample-capped IVF train."""
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import tempfile
-
-import pytest
-
-from tests.test_round10_ops import _offsets_entries, _register
-from tests.test_round11_ops import _dead_pid, _fs_writer
-from tests.test_streaming_r9 import _stage_split
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="sparkgraft-r12-")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
 
 
 # --- VERDICT r11 item 4: threshold-derived LSH banding -----------------------
@@ -103,265 +84,6 @@ def test_lsh_pairs_auto_generalized_bands_match_oracle(spark, sf_dir, duck):
     prod = dedup_minhash_lsh_pairs_auto(spark, sf_dir).collect()
     got_pairs = {(a, b) for a, b, _ in got}
     assert {(r.doc_a, r.doc_b) for r in prod} <= got_pairs
-
-
-# --- ADVICE r11 item 5: pid-recycling-proof claim identity -------------------
-
-
-def test_pid_start_identity():
-    from dataflow_pubsub_message_encryption_spark.streaming.versioned import (
-        _pid_start,
-    )
-
-    own = _pid_start(os.getpid())
-    assert isinstance(own, int) and own > 0
-    assert _pid_start(os.getpid()) == own  # stable for a live process
-    assert _pid_start(_dead_pid()) is None  # gone: /proc entry vanished
-
-
-def test_recover_sweeps_recycled_pid_claim(tmpdir):
-    """A claim whose pid is LIVE but whose recorded start tick differs is
-    a recycled pid — the original writer is dead and recover() must sweep
-    it WITHOUT force (ADVICE r11: the per-batch recover() in the
-    streaming sink previously wedged with LiveClaim until an operator
-    intervened)."""
-    from dataflow_pubsub_message_encryption_spark.streaming import versioned as V
-
-    t = f"{tmpdir}/t"
-    os.makedirs(f"{t}/_log")
-    V.commit(t, 0, _fs_writer("b0"))
-
-    claim = f"{t}/_log/v1.json.claim"
-    with open(claim, "w") as fh:
-        json.dump(
-            {
-                "pid": os.getpid(),  # live pid...
-                "host": __import__("socket").gethostname(),
-                "start": V._pid_start(os.getpid()) - 7,  # ...wrong incarnation
-            },
-            fh,
-        )
-    V.recover(t)  # no force, no LiveClaim
-    assert not os.path.exists(claim)
-
-    # the SAME live pid with the MATCHING start tick is a live writer:
-    # still refused (the recycling fix must not weaken the live check)
-    with open(claim, "w") as fh:
-        json.dump(
-            {
-                "pid": os.getpid(),
-                "host": __import__("socket").gethostname(),
-                "start": V._pid_start(os.getpid()),
-            },
-            fh,
-        )
-    with pytest.raises(V.LiveClaim):
-        V.recover(t)
-
-    # legacy claim (no start tick) + live pid: conservative refusal stays
-    with open(claim, "w") as fh:
-        json.dump(
-            {"pid": os.getpid(), "host": __import__("socket").gethostname()},
-            fh,
-        )
-    with pytest.raises(V.LiveClaim):
-        V.recover(t)
-
-
-def test_commit_records_start_tick(tmpdir):
-    """New claims carry the writer's start tick so a future recover() can
-    disambiguate recycling; verified via the claim a crashed commit
-    leaves behind."""
-    from dataflow_pubsub_message_encryption_spark.streaming import versioned as V
-
-    t = f"{tmpdir}/t"
-    os.makedirs(f"{t}/_log")
-    V.commit(t, 0, _fs_writer("b0"))
-
-    def boom(vdir):
-        raise RuntimeError("crash inside write_tables, claim held")
-
-    with pytest.raises(RuntimeError, match="claim held"):
-        V.commit(t, 1, boom)
-    claims = [p for p in os.listdir(f"{t}/_log") if p.endswith(".claim")]
-    if claims:  # commit() may clean its own claim on failure — either is fine
-        info = json.load(open(f"{t}/_log/{claims[0]}"))
-        assert info["start"] == V._pid_start(os.getpid())
-
-
-# --- VERDICT r11 item 6: paced-drain crash-point matrix ----------------------
-#
-# Mirrors the versioned.py CAS matrix: each point FABRICATES the on-disk
-# state a crash would leave at one step of the per-micro-batch cycle
-# (poll -> engine offsets journal -> partitions/progress journal -> batch
-# run -> engine commit -> commit/progress journal), mid-way through a
-# paced multi-batch drain, then restarts the query and requires
-# convergence: every event delivered exactly once, the engine offset log
-# strictly increasing (the ADVICE r10 regression), and the drained stream
-# parked.
-
-_DRAIN_POINTS = [
-    "clean_restart",            # control: no crash state at all
-    "torn_progress_write",      # killed mid-json-write: truncated file
-    "aside_only",               # killed before os.replace: .w left behind
-    "progress_rewound",         # restored-from-backup progress (entry=0)
-    "progress_ahead",           # self-heal bump journaled, no batch planned
-    "lost_engine_commit",       # offsets/N journaled, commits/N lost
-    "lost_progress_and_commit", # both pacing cache and engine commit lost
-]
-
-
-@pytest.mark.parametrize("point", _DRAIN_POINTS)
-def test_paced_drain_crash_matrix_converges(spark, sf_dir, tmpdir, point):
-    _register(spark)
-    src = f"{tmpdir}/src"
-    _stage_split(sf_dir, src, 6)
-    ckpt, out = f"{tmpdir}/ckpt", f"{tmpdir}/out"
-    progress = f"{ckpt}/pubsub_progress.json"
-
-    def run_once():
-        stream = (
-            spark.readStream.format("pubsub_replay")
-            .option("path", src)
-            .option("max_segments_per_batch", "2")
-            .option("progress_path", progress)
-            .load()
-        )
-        q = (
-            stream.selectExpr("event_id")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        return spark.read.parquet(out).count()
-
-    from dataflow_pubsub_message_encryption_spark.sources import load_events
-
-    n = load_events(spark, sf_dir).count()
-
-    # drain the first two paced batches ([0,2), [2,4)) healthily
-    c1 = run_once()
-    assert 0 < c1 < n
-
-    # fabricate the crash state
-    rec = json.load(open(progress))
-    if point == "torn_progress_write":
-        with open(progress, "w") as fh:
-            fh.write(json.dumps(rec)[: len(json.dumps(rec)) // 2])
-    elif point == "aside_only":
-        with open(f"{progress}.w", "w") as fh:
-            fh.write("{torn aside from a killed writer")
-    elif point == "progress_rewound":
-        with open(progress, "w") as fh:
-            json.dump({"entry": 0, "fp": rec["fp"]}, fh)
-    elif point == "progress_ahead":
-        # the idle self-heal journals floor+K with no batch planned yet
-        with open(progress, "w") as fh:
-            json.dump({"entry": min(rec["entry"] + 2, 6), "fp": rec["fp"]}, fh)
-    elif point in ("lost_engine_commit", "lost_progress_and_commit"):
-        commits = sorted(
-            (p for p in os.listdir(f"{ckpt}/commits") if p.isdigit()), key=int
-        )
-        os.remove(f"{ckpt}/commits/{commits[-1]}")
-        # a crash-before-commit loses the checksum sidecar with the file
-        crc = f"{ckpt}/commits/.{commits[-1]}.crc"
-        if os.path.exists(crc):
-            os.remove(crc)
-        if point == "lost_progress_and_commit":
-            os.remove(progress)
-
-    # restart(s): must converge to a full drain, then park. The Python
-    # microbatch source runs availableNow as single-batch-per-run, and a
-    # fabricated lost engine commit makes the first restart a pure REPLAY
-    # run (no advance) — so drive a fixed budget of runs and require the
-    # last two to be the fully-drained parked state (monotone, no thrash).
-    counts = [run_once() for _ in range(5)]
-    assert counts == sorted(counts), f"{point}: drain must be monotone"
-    assert counts[-2] == counts[-1] == n, (
-        f"{point}: drain must converge and park, got {counts}"
-    )
-
-    # exactly-once at the sink across every fabricated crash
-    ids = [r.event_id for r in spark.read.parquet(out).collect()]
-    assert len(set(ids)) == len(ids) == n, f"{point}: duplicates or skips"
-
-    # the engine offset log NEVER regresses (ADVICE r10 failure mode) —
-    # a rewound progress file in particular must not journal a
-    # behind-committed head
-    ends = _offsets_entries(ckpt)
-    assert ends == sorted(set(ends)), f"{point}: offset log regressed: {ends}"
-    assert ends[-1] == 6
-
-
-# --- ADVICE r11 item 2: Arrow read-path edge semantics -----------------------
-
-
-def _read_segment(path: str):
-    """Run the executor-side read() directly on one staged segment."""
-    from dataflow_pubsub_message_encryption_spark.sources.pubsub_replay import (
-        PubsubReplayStreamReader,
-        _Segment,
-    )
-
-    reader = PubsubReplayStreamReader({"path": os.path.dirname(path)})
-    batches = list(reader.read(_Segment(0, path, 1)))
-    assert len(batches) == 1
-    return batches[0]
-
-
-def test_arrow_read_truncates_ns_timestamps(tmpdir):
-    """A ns-precision segment with sub-microsecond components must keep
-    draining (truncated toward zero), matching the retired tuple path's
-    to_pydatetime() — not raise ArrowInvalid (ADVICE r11)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    ns = 1_700_000_000_123_456_789  # ...789 ns: sub-us component
-    tbl = pa.table(
-        {
-            "event_id": pa.array([1], pa.int64()),
-            "ts": pa.array([ns], pa.timestamp("ns")),
-            "user_id": pa.array([7], pa.int64()),
-            "event_type": pa.array(["click"], pa.string()),
-            "props": pa.array(['{"k": 1}'], pa.string()),
-        }
-    )
-    seg = f"{tmpdir}/part0.parquet"
-    pq.write_table(tbl, seg, coerce_timestamps=None)
-    batch = _read_segment(seg)
-    got = batch.column("publish_ts").cast(pa.int64()).to_pylist()[0]
-    assert got == ns // 1000  # truncated, exactly like to_pydatetime()
-
-
-def test_arrow_read_null_user_id_yields_null_attr(tmpdir):
-    """A NULL user_id maps to a NULL attrs value — the documented
-    semantics (ADVICE r11 asked for the decision to be pinned; the old
-    tuple path leaked the literal string 'None')."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tbl = pa.table(
-        {
-            "event_id": pa.array([1, 2], pa.int64()),
-            "ts": pa.array([1_700_000_000_000_000] * 2, pa.timestamp("us")),
-            "user_id": pa.array([None, 42], pa.int64()),
-            "event_type": pa.array(["click", "view"], pa.string()),
-            "props": pa.array(["{}", "{}"], pa.string()),
-        }
-    )
-    seg = f"{tmpdir}/part0.parquet"
-    pq.write_table(tbl, seg)
-    batch = _read_segment(seg)
-    attrs = batch.column("attrs").to_pylist()
-    m0 = dict(attrs[0])
-    m1 = dict(attrs[1])
-    assert m0["user_id"] is None  # null propagates, no 'None' literal
-    assert m1["user_id"] == "42"
-    assert m0["event_type"] == "click"
 
 
 # --- VERDICT r11 item 5: SinglePartition plan-audit classification ----------
@@ -572,23 +294,3 @@ def test_km_auto_stride_properties():
     check()
 
 
-def test_arrow_read_empty_segment(tmpdir):
-    """A zero-row segment (compacted-away topic tail) must yield a valid
-    empty RecordBatch, not an Arrow length error."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tbl = pa.table(
-        {
-            "event_id": pa.array([], pa.int64()),
-            "ts": pa.array([], pa.timestamp("us")),
-            "user_id": pa.array([], pa.int64()),
-            "event_type": pa.array([], pa.string()),
-            "props": pa.array([], pa.string()),
-        }
-    )
-    seg = f"{tmpdir}/part0.parquet"
-    pq.write_table(tbl, seg)
-    batch = _read_segment(seg)
-    assert batch.num_rows == 0
-    assert batch.schema.names == ["event_id", "value", "attrs", "publish_ts"]

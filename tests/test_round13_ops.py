@@ -1,19 +1,12 @@
-"""Round-13 tests (VERDICT r12 items 5/6 + ADVICE r12 items 1/3):
-the DSIR importance-resampling self-consistency law, the sliced-prefix
-band-join equivalence, recover()'s unreadable-start-tick conservatism
-(live claims are never false-swept), and the plan audit's tree-header
-consumer resolution (left-subtree-terminal exchanges)."""
+"""Round-13 tests (VERDICT r12 item 5 + ADVICE r12 item 3): the DSIR
+importance-resampling self-consistency law, the sliced-prefix band-join
+equivalence, and the plan audit's tree-header consumer resolution
+(left-subtree-terminal exchanges)."""
 
 from __future__ import annotations
 
-import json
 import os
-import socket
 import sys
-
-import pytest
-
-from tests.test_round11_ops import _dead_pid
 
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
@@ -97,77 +90,6 @@ def test_lsh_candidates_emit_once_no_duplicates(spark, sf_dir):
     assert len(pairs) == len(set(pairs)) and pairs
 
 
-# --- recover(): unreadable start tick never false-sweeps (ADVICE r12) --------
-
-
-def _claim_dir(tmp_path, pid: int, start):
-    from dataflow_pubsub_message_encryption_spark.streaming import versioned
-
-    d = str(tmp_path)
-    os.makedirs(os.path.join(d, versioned._LOG), exist_ok=True)
-    claim = os.path.join(d, versioned._LOG, "v0.json.claim")
-    info = {"pid": pid, "host": socket.gethostname()}
-    if start is not None:
-        info["start"] = start
-    with open(claim, "w") as fh:
-        json.dump(info, fh)
-    return d, claim
-
-
-def test_recover_unreadable_start_tick_raises_liveclaim(tmp_path, monkeypatch):
-    """A LIVE pid whose /proc/<pid>/stat is unreadable (hidepid mount,
-    EPERM on another user's process) is INCONCLUSIVE: recover() must
-    raise LiveClaim, not treat `None != start` as a recycled pid and
-    sweep a possibly-live writer's claim (ADVICE r12 item 1)."""
-    from dataflow_pubsub_message_encryption_spark.streaming import versioned
-
-    d, claim = _claim_dir(tmp_path, os.getpid(), start=12345)
-    monkeypatch.setattr(versioned, "_pid_start", lambda pid: None)
-    with pytest.raises(versioned.LiveClaim):
-        versioned.recover(d)
-    assert os.path.exists(claim)  # nothing was touched
-
-
-def test_recover_exit_between_checks_sweeps(tmp_path, monkeypatch):
-    """If the writer exits BETWEEN the liveness probe and the start-tick
-    read (alive -> stat unreadable -> re-probe dead), the claim is a
-    crash orphan and is swept without force."""
-    from dataflow_pubsub_message_encryption_spark.streaming import versioned
-
-    d, claim = _claim_dir(tmp_path, os.getpid(), start=12345)
-    alive_answers = iter([True, False])
-    monkeypatch.setattr(versioned, "_pid_alive", lambda pid: next(alive_answers))
-    monkeypatch.setattr(versioned, "_pid_start", lambda pid: None)
-    versioned.recover(d)
-    assert not os.path.exists(claim)
-
-
-def test_recover_recycled_pid_still_sweeps(tmp_path):
-    """The r11 behavior the fix must preserve: a dead pid's claim (or a
-    live recycled pid whose READABLE start tick mismatches) is swept."""
-    from dataflow_pubsub_message_encryption_spark.streaming import versioned
-
-    d, claim = _claim_dir(tmp_path, _dead_pid(), start=12345)
-    versioned.recover(d)
-    assert not os.path.exists(claim)
-
-    d2, claim2 = _claim_dir(tmp_path, os.getpid(), start=-1)  # impossible tick
-    versioned.recover(d2)  # readable current tick != -1 -> recycled -> sweep
-    assert not os.path.exists(claim2)
-
-
-def test_recover_matching_start_tick_raises(tmp_path):
-    """A live pid whose readable start tick MATCHES the claim is the
-    original writer — LiveClaim, before any state is touched."""
-    from dataflow_pubsub_message_encryption_spark.streaming import versioned
-
-    me = os.getpid()
-    d, claim = _claim_dir(tmp_path, me, start=versioned._pid_start(me))
-    with pytest.raises(versioned.LiveClaim):
-        versioned.recover(d)
-    assert os.path.exists(claim)
-
-
 # --- plan audit: consumer by tree header (ADVICE r12 item 3) ------------------
 
 _LEFT_TERMINAL_PLAN = """== Physical Plan ==
@@ -246,120 +168,6 @@ Arguments: stuff (2)
 Keys: []
 """
     assert _parent_map(plan) == {1: 2}
-
-
-# --- VERDICT r12 item 6: crash-during-write on the segment files themselves --
-
-_WRITE_POINTS = [
-    "aside_torn",            # producer died mid-write of a '.w' aside
-    "torn_segment_repaired", # producer violated the atomic-stage protocol
-    "zero_row_segment",      # producer committed a valid but empty segment
-]
-
-
-@pytest.mark.parametrize("point", _WRITE_POINTS)
-def test_segment_write_crash_matrix_converges(spark, sf_dir, tmpdir, point):
-    """The r12 matrix drilled the CHECKPOINT-side crash states; this
-    drills the SEGMENT files themselves (VERDICT r12 item 6). A torn
-    '.w' aside (the atomic-stage protocol working as designed) must be
-    invisible to the plan; a torn file under the real '*.parquet' name
-    (protocol violated) must fail LOUDLY naming the segment and then
-    converge with no dup/skip once the bytes are restored and the
-    checkpointed batch replays; a valid zero-row segment mid-plan must
-    drain through (its batch journaled, not skipped)."""
-    import pyarrow.parquet as pq
-
-    from tests.test_round10_ops import _offsets_entries, _register
-    from tests.test_streaming_r9 import _stage_split
-
-    _register(spark)
-    src = f"{tmpdir}/src"
-    _stage_split(sf_dir, src, 6)
-    ckpt, out = f"{tmpdir}/ckpt", f"{tmpdir}/out"
-
-    from dataflow_pubsub_message_encryption_spark.sources import load_events
-
-    n = load_events(spark, sf_dir).count()
-    plan_len = 6
-
-    good = pq.read_table(f"{src}/part0.parquet")
-    if point == "aside_torn":
-        # mid-write crash under the protocol: garbage bytes, '.w' name
-        with open(f"{src}/part6.parquet.w", "wb") as fh:
-            fh.write(b"PAR1 torn mid-write, no footer")
-    elif point == "torn_segment_repaired":
-        # protocol violation: valid bytes truncated under the real name
-        pq.write_table(good, f"{src}/part6.parquet")
-        size = os.path.getsize(f"{src}/part6.parquet")
-        with open(f"{src}/part6.parquet", "r+b") as fh:
-            fh.truncate(size // 2)
-        n += good.num_rows  # repaired later; its rows must arrive once
-        plan_len = 7
-    elif point == "zero_row_segment":
-        # valid parquet, zero rows, sorted mid-plan (between part2/part3)
-        pq.write_table(good.slice(0, 0), f"{src}/part2z.parquet")
-        plan_len = 7
-
-    def run_once():
-        stream = (
-            spark.readStream.format("pubsub_replay")
-            .option("path", src)
-            .option("max_segments_per_batch", "2")
-            .option("progress_path", f"{ckpt}/pubsub_progress.json")
-            .load()
-        )
-        q = (
-            stream.selectExpr("event_id")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        return spark.read.parquet(out).count()
-
-    counts, failures = [], 0
-    for _ in range(8):
-        try:
-            counts.append(run_once())
-        except Exception as e:
-            failures += 1
-            assert point == "torn_segment_repaired", f"{point}: {e}"
-            assert "unreadable" in str(e) and "part6.parquet" in str(e)
-            # producer repairs via the documented protocol: full bytes
-            # to the '.w' aside, then an atomic replace into place
-            pq.write_table(good, f"{src}/part6.parquet.w")
-            os.replace(f"{src}/part6.parquet.w", f"{src}/part6.parquet")
-        if counts and counts[-1] == n:
-            break
-    if point == "torn_segment_repaired":
-        assert failures >= 1, "the torn segment must fail the query loudly"
-    else:
-        assert failures == 0, f"{point}: no run may fail"
-
-    counts.append(run_once())  # parked: one more run must not change it
-    assert counts == sorted(counts), f"{point}: drain must be monotone"
-    assert counts[-2] == counts[-1] == n, f"{point}: got {counts}"
-
-    ids = [r.event_id for r in spark.read.parquet(out).collect()]
-    if point == "torn_segment_repaired":
-        # part6 is a byte-copy of part0: ITS ids arrive exactly twice
-        # (both planned deliveries), every other segment's exactly once
-        from collections import Counter
-
-        freq = Counter(ids)
-        dup_ids = set(good["event_id"].to_pylist())
-        assert all(freq[i] == 2 for i in dup_ids)
-        assert all(c == 1 for i, c in freq.items() if i not in dup_ids)
-        assert len(ids) == n
-    else:
-        assert len(set(ids)) == len(ids) == n, f"{point}: duplicates or skips"
-
-    ends = _offsets_entries(ckpt)
-    assert ends == sorted(set(ends)), f"{point}: offset log regressed"
-    assert ends[-1] == plan_len  # zero-row/torn batches journal, not skip
 
 
 # --- DSIR selection: the above-mean acceptance rule ---------------------------

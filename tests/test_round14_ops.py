@@ -1,6 +1,5 @@
 """Round-14 regression tests: the DSIR acceptance boundary's DECIMAL
-overflow-proofing (ADVICE r13 item 1), the pubsub_replay torn-write vs
-schema-drift disambiguation (ADVICE r13 item 2), the explain_all
+overflow-proofing (ADVICE r13 item 1), the explain_all
 unresolved-consumer NEEDS REVIEW rule (ADVICE r13 item 3), and the
 round's new operators' laws (bloom auto-sizing, banded embedding-LSH).
 """
@@ -64,70 +63,6 @@ def test_dsir_acceptance_decimal_never_overflows(spark, label, wis):
         "      > CAST(%d AS DECIMAL(38,0))" % (na, list(wis), na, s)
     ).fetchall()
     assert {r[0] for r in rows} == truth, f"{label}: duckdb disagrees"
-
-
-# --- ADVICE r13 item 2: torn-write vs schema-drift diagnosis -----------------
-
-
-def _read_segment(tmpdir, fname):
-    """Call the reader's executor-side read() directly on one segment."""
-    from dataflow_pubsub_message_encryption_spark.sources.pubsub_replay import (
-        PubsubReplayStreamReader,
-        _Segment,
-    )
-
-    reader = PubsubReplayStreamReader({"path": str(tmpdir)})
-    return list(reader.read(_Segment(0, os.path.join(str(tmpdir), fname), 1)))
-
-
-def _write_events_segment(path, drop_column=None):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    cols = {
-        "event_id": pa.array([1, 2], pa.int64()),
-        "ts": pa.array([10**15, 2 * 10**15], pa.int64()),
-        "user_id": pa.array([7, 8], pa.int64()),
-        "event_type": pa.array(["a", "b"]),
-        "props": pa.array(["{}", "{}"]),
-    }
-    if drop_column:
-        cols.pop(drop_column)
-    pq.write_table(pa.table(cols), path)
-
-
-def test_pubsub_replay_torn_write_gets_restore_runbook(tmpdir):
-    """Truncated bytes under the real '*.parquet' name: footer unreadable,
-    so the error must carry the torn-write diagnosis and the
-    restore-from-producer runbook."""
-    p = os.path.join(str(tmpdir), "part0.parquet")
-    _write_events_segment(p)
-    with open(p, "r+b") as fh:
-        fh.truncate(os.path.getsize(p) // 2)
-    with pytest.raises(RuntimeError, match="torn write"):
-        _read_segment(tmpdir, "part0.parquet")
-
-
-def test_pubsub_replay_schema_drift_not_called_torn(tmpdir):
-    """A valid segment missing an expected column (producer upgrade
-    drift) raises the SAME pyarrow type as a torn file (ArrowInvalid) —
-    the reader must disambiguate via the footer and must NOT direct the
-    operator to restore bytes (ADVICE r13)."""
-    p = os.path.join(str(tmpdir), "part0.parquet")
-    _write_events_segment(p, drop_column="props")
-    with pytest.raises(RuntimeError) as ei:
-        _read_segment(tmpdir, "part0.parquet")
-    msg = str(ei.value)
-    assert "schema drift" in msg and "props" in msg
-    assert "torn" not in msg.lower().replace("not a torn", "")
-    assert "Do not restore bytes" in msg
-
-
-def test_pubsub_replay_healthy_segment_reads(tmpdir):
-    p = os.path.join(str(tmpdir), "part0.parquet")
-    _write_events_segment(p)
-    batches = _read_segment(tmpdir, "part0.parquet")
-    assert sum(b.num_rows for b in batches) == 2
 
 
 # --- VERDICT r13 item 3: the self-tuning bloom width --------------------------

@@ -141,3 +141,17 @@ def test_gr_edges_pd_equals_recomputed_distance(spark, fixture):
             assert truth[r.dst] == r.pd, (l, r.src, r.dst, r.pd)
             checked += 1
     assert checked, "fixture admits no edges — law would be vacuous"
+
+
+def test_grb_pair_kernel_occupancy_cap_raises(spark, sf_dir, monkeypatch):
+    """An over-cap bucket fails the registered blocked graph-ANN query
+    with the knob-naming cap message. The guard is a ValueError, not an
+    assert, so it also holds under ``python -O``."""
+    from dataflow_pubsub_message_encryption_spark.operators import similarity as S
+
+    assert S._GRB_OCC_CAP == 16384
+    # the pair kernel is pickled by value, so the patched cap reaches the
+    # Python workers; any bucket of two or more rows is now over the cap
+    monkeypatch.setattr(S, "_GRB_OCC_CAP", 1)
+    with pytest.raises(Exception, match="exceeds the pair-kernel cap 1;"):
+        S.QUERIES["sim_ann_graph_topk_blocked"](spark, sf_dir).collect()

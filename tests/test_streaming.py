@@ -293,42 +293,6 @@ def test_parquet_sink_checkpointed(spark, sf_dir, tmpdir):
     assert os.path.isdir(ckpt), "checkpoint log must exist (exactly-once)"
 
 
-def test_custom_stateful_operator_accumulates_across_batches(spark, sf_dir, tmpdir):
-    """applyInPandasWithState: state must persist across micro-batches —
-    final census equals the batch groupBy over the full replay."""
-    import glob
-    import shutil as sh
-
-    from dataflow_pubsub_message_encryption_spark.streaming.stateful import (
-        running_user_census,
-    )
-
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], f"{tmpdir}/events.parquet")
-    stream = st.events_file_stream(spark, tmpdir)
-    census = running_user_census(stream)
-    q = (
-        census.writeStream.format("memory")
-        .queryName("user_census")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # update mode: last row per user is the final state
-    from pyspark.sql import Window
-
-    got = spark.table("user_census")
-    rows = {r.user_id: (r.n_events, round(r.total_value, 2)) for r in got.collect()}
-    batch = (
-        load_events(spark, sf_dir)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("tv"))
-        .collect()
-    )
-    for r in batch:
-        assert rows[r.user_id] == (r.n, r.tv), r.user_id
-
-
 def test_text_sink_writes_decrypted_lines(spark, sf_dir, tmpdir):
     import glob
     import shutil as sh
@@ -670,62 +634,70 @@ def test_wire_schema_matches_kafka_source_contract(spark, sf_dir, tmpdir):
     assert got == want
 
 
-def test_cdc_upsert_stream_equals_batch(spark, sf_dir, tmpdir):
-    """foreachBatch MERGE upsert drained over a 4-file replay must equal
-    the batch cdc_upsert_latest result exactly (latest-wins merge is
-    associative, so ANY micro-batch split folds to the same state), and a
-    checkpoint-resumed restart must not double-count versions."""
+def test_wire_topic_redelivery_and_restart_is_effectively_once(
+    spark, sf_dir, tmpdir
+):
+    """At-least-once -> effectively-once over the wire path: after a first
+    drain, two already-delivered segments arrive again under new names
+    (later mtimes, as a redelivering subscription would hand them over)
+    and the consumer restarts on the same checkpoint. The watermarked
+    dedup, its watermark and state restored from the checkpoint, must
+    leave every verified message in the sink exactly once: the batch
+    decode's distinct ids, the n/2 untampered messages."""
     import glob
     import os
+    import shutil as sh
 
+    import pandas as pd
     import pyarrow.parquet as pq
 
-    from dataflow_pubsub_message_encryption_spark.operators.cdc import QUERIES as CQ
-    from dataflow_pubsub_message_encryption_spark.streaming import (
-        cdc_current_view,
-        cdc_upsert_sink,
-    )
+    from dataflow_pubsub_message_encryption_spark.sources import wire
 
-    tbl = pq.read_table(glob.glob(f"{sf_dir}/events.parquet")[0])
-    n = tbl.num_rows
-    idx = tbl["ts"].to_pandas().sort_values().index
-    src = f"{tmpdir}/src"
-    os.makedirs(src)
-    for i in range(4):
-        pq.write_table(
-            tbl.take(sorted(idx[i * n // 4 : (i + 1) * n // 4])),
-            f"{src}/part{i}.parquet",
+    topic, out, ckpt = (os.path.join(tmpdir, d) for d in ("topic", "out", "ckpt"))
+    n = wire.publish_topic(spark, sf_dir, topic, tamper=True, n_files=4)
+    want = {
+        r.event_id
+        for r in wire.decode_wire(wire.read_topic_batch(spark, topic))
+        .select("event_id")
+        .collect()
+    }
+    assert len(want) == n // 2
+
+    def drain() -> int:
+        stream = st.stateful_dedup_stream(
+            wire.decode_wire(wire.read_topic_stream(spark, topic)),
+            watermark="10 days",
         )
-
-    target, ckpt = f"{tmpdir}/target", f"{tmpdir}/ckpt"
-    stream = st.events_file_stream(spark, src, max_files_per_trigger=1)
-    q = cdc_upsert_sink(stream, target, ckpt).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-
-    got = {
-        r.user_id: (
-            r.last_event_type,
-            round(float(r.last_value), 2),
-            r.last_ts.strftime("%Y-%m-%d %H:%M:%S.%f"),
-            r.n_versions,
+        q = (
+            st.write_parquet_sink(stream.select("event_id", "ts"), out, ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        for r in cdc_current_view(spark, target).collect()
-    }
-    batch = {
-        r.user_id: (r.last_event_type, r.last_value, r.last_ts, r.n_versions)
-        for r in CQ["cdc_upsert_latest"](spark, sf_dir).collect()
-    }
-    assert got == batch
+        assert q.awaitTermination(300), "stream still active after 300s"
+        return sum(p["numInputRows"] for p in q.recentProgress)
 
-    # restart from the same checkpoint: no new files -> state unchanged
-    q2 = cdc_upsert_sink(
-        st.events_file_stream(spark, src, max_files_per_trigger=1), target, ckpt
-    ).trigger(availableNow=True).start()
-    q2.awaitTermination(120)
-    again = {
-        r.user_id: r.n_versions for r in cdc_current_view(spark, target).collect()
-    }
-    assert again == {u: v[3] for u, v in got.items()}
+    assert drain() == n
+
+    segs = sorted(glob.glob(f"{topic}/part-*.parquet"), key=os.path.getmtime)
+    ts = [
+        pq.read_table(s, columns=["timestamp"])["timestamp"].to_pandas()
+        for s in segs
+    ]
+    horizon = max(t.max() for t in ts) - pd.Timedelta(days=10)
+    # the first segment lies wholly behind the restored watermark (its
+    # redelivery is dropped as late), the last wholly ahead of it (its
+    # redelivery must be caught by the restored dedup state)
+    assert ts[0].max() < horizon <= ts[-1].min()
+    stamp = int(os.path.getmtime(segs[-1]))
+    for i, seg in enumerate((segs[0], segs[-1]), start=1):
+        copy = f"{topic}/redelivered-{i}.parquet"
+        sh.copy(seg, copy)
+        os.utime(copy, (stamp + i, stamp + i))
+
+    assert drain() == len(ts[0]) + len(ts[-1])
+    ids = [r.event_id for r in spark.read.parquet(out).select("event_id").collect()]
+    assert len(ids) == len(set(ids)), "a redelivered message reached the sink twice"
+    assert set(ids) == want
 
 
 def test_session_window_stream_equals_batch_sessions(spark, sf_dir, tmpdir):
@@ -751,124 +723,6 @@ def test_session_window_stream_equals_batch_sessions(spark, sf_dir, tmpdir):
         for r in BQ["sessionize_gap_sql"](spark, sf_dir).collect()
     }
     assert g == b
-
-
-def test_transform_with_state_processor_logic():
-    """TopPurchasesProcessor per-key logic against a fake ValueState:
-    leaderboard merges across batches, n_seen accumulates, slots pad
-    with None. (The Spark-side execution of transformWithStateInPandas
-    needs protobuf, absent in this container — see stateful_v2.py; the
-    end-to-end twin below auto-skips without it.)"""
-    import pandas as pd
-
-    from dataflow_pubsub_message_encryption_spark.streaming.stateful_v2 import (
-        TopPurchasesProcessor,
-    )
-
-    class FakeState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    p = TopPurchasesProcessor()
-    p._state = FakeState()
-    out1 = list(p.handleInputRows((7,), [pd.DataFrame({"value": [5.0, 2.0]})], None))
-    r1 = out1[0].iloc[0]
-    assert (r1.n_seen, r1.top1, r1.top2) == (2, 5.0, 2.0) and r1.top3 is None
-    out2 = list(p.handleInputRows((7,), [pd.DataFrame({"value": [9.0, 1.0]})], None))
-    r2 = out2[0].iloc[0]
-    assert (r2.n_seen, r2.top1, r2.top2, r2.top3) == (4, 9.0, 5.0, 2.0)
-
-
-def test_transform_with_state_top_purchases_equals_batch(spark, sf_dir, tmpdir):
-    """transformWithStateInPandas leaderboard: drained over a 2-file
-    replay, each user's FINAL update (max n_seen) must equal the batch
-    top-3 purchase values and purchase count. Bootstraps the vendored
-    pure-python protobuf runtime (streaming/_pb_vendor.py — the round-7
-    unblock of the r6 env boundary) and routes it to the Python workers
-    via sc.environment PYTHONPATH + the _worker_boot sitecustomize hook;
-    skips only if no usable runtime exists at all."""
-    from dataflow_pubsub_message_encryption_spark.streaming._pb_vendor import (
-        BOOT_DIR,
-        ensure_protobuf,
-    )
-
-    if not ensure_protobuf():
-        pytest.skip("protobuf unavailable: no real install, no vendorable runtime")
-    # workers fork from the daemon with env from sc.environment (merged
-    # into the worker PYTHONPATH by PythonWorkerFactory) — this reaches
-    # them even though the JVM predates the bootstrap
-    spark.sparkContext.environment["PYTHONPATH"] = BOOT_DIR
-    # transformWithState keeps each state variable in its own column
-    # family — only the RocksDB provider supports that (the HDFS-backed
-    # default hard-errors UNSUPPORTED_FEATURE); read per-query at start
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    import glob
-    try:
-
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(glob.glob(f"{sf_dir}/events.parquet")[0])
-        n = tbl.num_rows
-        idx = tbl["ts"].to_pandas().sort_values().index
-        import os as _os
-
-        src = f"{tmpdir}/src"
-        _os.makedirs(src)
-        for i in range(2):
-            pq.write_table(
-                tbl.take(sorted(idx[i * n // 2 : (i + 1) * n // 2])),
-                f"{src}/part{i}.parquet",
-            )
-
-        stream = st.running_top_purchases(
-            st.events_file_stream(spark, src, max_files_per_trigger=1)
-        )
-        got_rows = _run_stream_to_memory(spark, stream, "twstate_top")
-        final = {}
-        for r in got_rows.collect():
-            if r.user_id not in final or r.n_seen > final[r.user_id].n_seen:
-                final[r.user_id] = r
-
-        ev = load_events(spark, sf_dir)
-        from collections import defaultdict
-
-        purchases = defaultdict(list)
-        for r in ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", "value"
-        ).collect():
-            purchases[r.user_id].append(r.value)
-        assert purchases, "fixture must contain purchases"
-        assert set(final) == set(purchases)
-        for uid, vals in purchases.items():
-            top = sorted(vals, reverse=True)[:3]
-            got = [v for v in (final[uid].top1, final[uid].top2, final[uid].top3)
-                   if v is not None]
-            assert final[uid].n_seen == len(vals)
-            assert got == top, f"user {uid}: {got} != {top}"
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-        spark.sparkContext.environment.pop("PYTHONPATH", None)
 
 
 def test_watermark_progress_metrics_reported(spark, tmpdir):
@@ -957,368 +811,3 @@ def test_observe_metrics_on_decrypt_pipeline(spark, sf_dir, tmpdir):
     assert n_out == n_total - ev.filter(F.col("event_id") % 2 == 1).count()
 
 
-def test_bitmap_distinct_stream_equals_batch(spark, sf_dir, tmpdir):
-    """foreachBatch bitmap merge drained over a 4-file replay must equal
-    the batch agg_bitmap_distinct exactly (bit_or is associative,
-    commutative AND idempotent — any micro-batch split, and any replay,
-    folds to the same word table)."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    from dataflow_pubsub_message_encryption_spark.operators.scale import (
-        QUERIES as SCQ,
-    )
-
-    tbl = pq.read_table(glob.glob(f"{sf_dir}/events.parquet")[0])
-    n = tbl.num_rows
-    src = f"{tmpdir}/src"
-    os.makedirs(src)
-    for i in range(4):
-        pq.write_table(
-            tbl.slice(i * n // 4, (i + 1) * n // 4 - i * n // 4),
-            f"{src}/part{i}.parquet",
-        )
-
-    target, ckpt = f"{tmpdir}/target", f"{tmpdir}/ckpt"
-    stream = st.events_file_stream(spark, src, max_files_per_trigger=1)
-    q = st.bitmap_distinct_sink(stream, target, ckpt).trigger(
-        availableNow=True
-    ).start()
-    q.awaitTermination(120)
-
-    got = {
-        r.event_type: (r.n_words, r.distinct_users)
-        for r in st.bitmap_distinct_view(spark, target).collect()
-    }
-    batch = {
-        r.event_type: (r.n_words, r.distinct_users)
-        for r in SCQ["agg_bitmap_distinct"](spark, sf_dir).collect()
-    }
-    assert got == batch
-
-    # replay from the same checkpoint: OR idempotence -> state unchanged
-    q2 = st.bitmap_distinct_sink(
-        st.events_file_stream(spark, src, max_files_per_trigger=1), target, ckpt
-    ).trigger(availableNow=True).start()
-    q2.awaitTermination(120)
-    again = {
-        r.event_type: (r.n_words, r.distinct_users)
-        for r in st.bitmap_distinct_view(spark, target).collect()
-    }
-    assert again == batch
-
-
-def test_snapshot_swap_crash_recovery(tmpdir):
-    """A crash between rename(cur, old) and rename(tmp, cur) must not lose
-    state: recover_snapshot restores the complete post-merge tmp AND
-    journals its batch id (so non-idempotent merges like cdc's
-    sum(n_versions) don't fold the replayed batch in twice)."""
-    import os
-
-    from dataflow_pubsub_message_encryption_spark.streaming._snapshot import (
-        recover_snapshot,
-    )
-
-    def mkdir_with(path, sentinel):
-        os.makedirs(path)
-        open(os.path.join(path, sentinel), "w").write(sentinel)
-
-    # crash window: cur gone, old-6 (pre-merge) + tmp-6 (post-merge) both left
-    t1 = f"{tmpdir}/t1"
-    mkdir_with(f"{t1}/.old-6", "pre")
-    mkdir_with(f"{t1}/.tmp-6", "post")
-    open(f"{t1}/_last_batch_id", "w").write("5")
-    recover_snapshot(t1, "words", "_last_batch_id")
-    assert os.path.exists(f"{t1}/words/post"), "post-merge tmp not restored"
-    assert open(f"{t1}/_last_batch_id").read() == "6", "marker not journaled"
-    assert not os.path.exists(f"{t1}/.old-6") and not os.path.exists(f"{t1}/.tmp-6")
-
-    # defensive fallback: only a pre-merge old survives -> restore, keep marker
-    t2 = f"{tmpdir}/t2"
-    mkdir_with(f"{t2}/.old-3", "pre")
-    open(f"{t2}/_last_batch_id", "w").write("2")
-    recover_snapshot(t2, "words", "_last_batch_id")
-    assert os.path.exists(f"{t2}/words/pre")
-    assert open(f"{t2}/_last_batch_id").read() == "2", "marker must stay pre-merge"
-
-    # healthy snapshot: stale leftovers from an interrupted write are dropped
-    # and the marker is untouched (the merge never landed)
-    t3 = f"{tmpdir}/t3"
-    mkdir_with(f"{t3}/words", "live")
-    mkdir_with(f"{t3}/.tmp-9", "partial")
-    open(f"{t3}/_last_batch_id", "w").write("8")
-    recover_snapshot(t3, "words", "_last_batch_id")
-    assert os.path.exists(f"{t3}/words/live") and not os.path.exists(f"{t3}/.tmp-9")
-    assert open(f"{t3}/_last_batch_id").read() == "8"
-
-    # crash AFTER the swap but before marker write: cur is the post-merge
-    # snapshot, .old-{b} survives as the only evidence — the marker must be
-    # journaled to b before dropping it, or the replayed batch re-merges
-    # into a snapshot that already contains it (double-count for SUM merges)
-    t5 = f"{tmpdir}/t5"
-    mkdir_with(f"{t5}/words", "post")
-    mkdir_with(f"{t5}/.old-6", "pre")
-    open(f"{t5}/_last_batch_id", "w").write("5")
-    recover_snapshot(t5, "words", "_last_batch_id")
-    assert os.path.exists(f"{t5}/words/post") and not os.path.exists(f"{t5}/.old-6")
-    assert open(f"{t5}/_last_batch_id").read() == "6", "swap-complete marker not journaled"
-
-    # first-batch crash BEFORE the marker write: no old witness and no
-    # marker proof, so the tmp may be a torn parquet write — it must be
-    # dropped (the replay redoes batch 0 from empty, exactly once); under
-    # the pre-round-7 protocol this state was restored + journaled, which
-    # silently accepted torn first-batch writes
-    t4 = f"{tmpdir}/t4"
-    mkdir_with(f"{t4}/.tmp-0", "post")
-    recover_snapshot(t4, "words", "_last_batch_id")
-    assert not os.path.exists(f"{t4}/words"), "unproven first-batch tmp restored"
-    assert not os.path.exists(f"{t4}/_last_batch_id")
-    assert not os.path.exists(f"{t4}/.tmp-0")
-
-    # first-batch crash AFTER the marker write (marker == tmp batch proves
-    # the tmp complete — swap_in journals only after the parquet write):
-    # restore and keep the marker, so the replayed batch 0 skips
-    t6 = f"{tmpdir}/t6"
-    mkdir_with(f"{t6}/.tmp-0", "post")
-    open(f"{t6}/_last_batch_id", "w").write("0")
-    recover_snapshot(t6, "words", "_last_batch_id")
-    assert os.path.exists(f"{t6}/words/post")
-    assert open(f"{t6}/_last_batch_id").read() == "0"
-
-    # torn marker journal: the write-aside file is never the source of
-    # truth and must be cleaned up
-    t7 = f"{tmpdir}/t7"
-    mkdir_with(f"{t7}/words", "live")
-    open(f"{t7}/_last_batch_id", "w").write("3")
-    open(f"{t7}/_last_batch_id.w", "w").write("4")
-    recover_snapshot(t7, "words", "_last_batch_id")
-    assert not os.path.exists(f"{t7}/_last_batch_id.w")
-    assert open(f"{t7}/_last_batch_id").read() == "3"
-
-
-def test_stateful_v2_env_boundary_is_exactly_protobuf():
-    """Pin the (round-7 unblocked) env boundary: the ONLY thing between
-    this container and the transformWithStateInPandas e2e path is a
-    usable protobuf runtime. streaming/_pb_vendor bootstraps the image's
-    vendored pure-python runtime when no real install exists, so
-    ensure_protobuf() must succeed exactly when a real protobuf OR the
-    vendored SDK copy is present — if the SDK copy ever vanishes from
-    the image (reverting the e2e to skip), this assertion makes that
-    visible instead of silent."""
-    import importlib
-    import os
-
-    from dataflow_pubsub_message_encryption_spark.streaming._pb_vendor import (
-        VENDOR_DIR,
-        ensure_protobuf,
-    )
-
-    try:
-        importlib.import_module("google.protobuf")
-        has_real = True
-    except ImportError:
-        has_real = False
-    has_vendor = os.path.isdir(os.path.join(VENDOR_DIR, "google", "protobuf"))
-    assert ensure_protobuf() == (has_real or has_vendor), (
-        "protobuf bootstrap outcome diverged from runtime availability"
-    )
-    if has_real or has_vendor:
-        # after a successful bootstrap the state protocol must import
-        importlib.import_module(
-            "pyspark.sql.streaming.proto.StateMessage_pb2"
-        )
-
-
-def test_protobuf_version_bypass_is_scoped():
-    """The bootstrap's validator patch must admit ONLY the proven
-    one-minor gencode/runtime skew — a gencode a full major (or two
-    minors) ahead must still raise through the real validator. A blanket
-    no-op here would silently accept any future skew for every protobuf
-    user in the interpreter (the round-7 advisory)."""
-    import pytest
-
-    from dataflow_pubsub_message_encryption_spark.streaming._pb_vendor import (
-        ensure_protobuf,
-    )
-
-    if not ensure_protobuf():
-        pytest.skip("no protobuf runtime in this environment")
-    from google.protobuf import runtime_version as rv
-
-    v = rv.ValidateProtobufRuntimeVersion
-    if not getattr(v, "_spark_graft_scoped", False):
-        # a real protobuf install needs no patch — nothing to scope-check,
-        # but the validator must then be the genuine article (a bare
-        # lambda bypass would be the bug this test exists to catch)
-        assert v.__module__ == "google.protobuf.runtime_version", (
-            "validator replaced by an unscoped bypass"
-        )
-        pytest.skip("real protobuf runtime: validator unpatched")
-    # the known-good skew passes...
-    assert v(rv.Domain.PUBLIC, rv.MAJOR, rv.MINOR + 1, 0, "", "t.proto") is None
-    # ...a larger skew still fails loudly (VersionError subclasses vary;
-    # any raise is the contract)
-    with pytest.raises(Exception):
-        v(rv.Domain.PUBLIC, rv.MAJOR + 1, 0, 0, "", "t.proto")
-    with pytest.raises(Exception):
-        v(rv.Domain.PUBLIC, rv.MAJOR, rv.MINOR + 2, 0, "", "t.proto")
-
-
-def test_cms_sketch_stream_equals_batch_grid(spark, sf_dir, tmpdir):
-    """The streaming CMS counter grid, folded over a 4-file replay, must
-    be BIT-IDENTICAL to the batch-built sketch (cell sums are associative
-    over any micro-batch split), and a checkpoint-resumed restart must
-    not double-count — SUM is not idempotent, so this e2e is what proves
-    the batch-id journal + crash recovery actually carry the
-    at-least-once contract (the bitmap twin's bit_or would mask a replay
-    bug)."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    from dataflow_pubsub_message_encryption_spark.streaming import (
-        cms_grid_view,
-        cms_sketch_sink,
-    )
-    from dataflow_pubsub_message_encryption_spark.streaming.cms import (
-        _batch_cells,
-    )
-    from dataflow_pubsub_message_encryption_spark.sources import load_events
-
-    tbl = pq.read_table(glob.glob(f"{sf_dir}/events.parquet")[0])
-    n = tbl.num_rows
-    src = f"{tmpdir}/src"
-    os.makedirs(src)
-    for i in range(4):
-        pq.write_table(
-            tbl.slice(i * n // 4, (i + 1) * n // 4 - i * n // 4),
-            f"{src}/part{i}.parquet",
-        )
-
-    target, ckpt = f"{tmpdir}/target", f"{tmpdir}/ckpt"
-    stream = st.events_file_stream(spark, src, max_files_per_trigger=1)
-    q = cms_sketch_sink(stream, target, ckpt).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-
-    got = {
-        (r.i, r.p): r.c for r in cms_grid_view(spark, target).collect()
-    }
-    want = {
-        (r.i, r.p): r.c
-        for r in _batch_cells(load_events(spark, sf_dir)).collect()
-    }
-    assert got == want, "stream-folded grid diverged from batch grid"
-
-    # restart from the same checkpoint: replayed batches must be skipped
-    # (a double-count would inflate every touched cell)
-    q2 = cms_sketch_sink(
-        st.events_file_stream(spark, src, max_files_per_trigger=1), target, ckpt
-    ).trigger(availableNow=True).start()
-    q2.awaitTermination(120)
-    again = {(r.i, r.p): r.c for r in cms_grid_view(spark, target).collect()}
-    assert again == want, "checkpoint restart double-counted cells"
-
-
-def test_snapshot_swap_every_crash_point_converges(tmpdir):
-    """Exhaustive crash-point drill for the swap protocol, mirroring the
-    sinks' REAL merge_batch sequence (recover_snapshot preamble,
-    marker_value skip rule, the isdir guard, and swap_in's two orderings)
-    step for step. Two scenarios:
-
-    - steady state (prior snapshot + marker present): crash after each of
-      (tmp dir created/torn, tmp written, rename cur->old, rename
-      tmp->cur, journal marker, rmtree old) must converge to exactly one
-      application of batch 7 on top of batch 6, marker = 7, no leftovers;
-    - BOOTSTRAP (no snapshot, no marker — the round-6 ADVICE hole): crash
-      after each of (tmp dir created/torn, tmp written, journal marker,
-      rename tmp->cur) must converge to exactly one application of batch
-      0 ('+b0', never '+b0+b0'), marker = 0, no leftovers.
-
-    Recovery is additionally run TWICE on replay (it must be
-    re-runnable — a crash inside recovery is just another crash point).
-    """
-    import os
-    import shutil
-
-    from dataflow_pubsub_message_encryption_spark.streaming._snapshot import (
-        _journal,
-        marker_value,
-        recover_snapshot,
-    )
-
-    def write_dir(path, content):
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "state"), "w") as fh:
-            fh.write(content)
-
-    def read_dir(path):
-        with open(os.path.join(path, "state")) as fh:
-            return fh.read()
-
-    DONE = 99
-
-    def apply_batch(root, batch_id, crash_after):
-        """One merge_batch for `batch_id` ('+b{id}' appended to state),
-        stopping after the named step (DONE = run to completion). Steps
-        mirror merge_batch + swap_in exactly; step numbering follows the
-        branch actually taken (steady: 0-5, bootstrap: 0-3)."""
-        recover_snapshot(root, "snap", "_m")
-        if batch_id <= marker_value(root, "_m"):
-            return  # replay skip — same rule as the sinks
-        cur = os.path.join(root, "snap")
-        tmp = os.path.join(root, f".tmp-{batch_id}")
-        merged = (read_dir(cur) if os.path.isdir(cur) else "") + f"+b{batch_id}"
-        os.makedirs(tmp, exist_ok=True)
-        if crash_after == 0:
-            return  # torn tmp write: dir exists, content missing
-        write_dir(tmp, merged)
-        if crash_after == 1:
-            return
-        # --- mirror of swap_in ---
-        if os.path.isdir(cur):
-            old = os.path.join(root, f".old-{batch_id}")
-            os.rename(cur, old)
-            if crash_after == 2:
-                return
-            os.rename(tmp, cur)
-            if crash_after == 3:
-                return
-            _journal(root, "_m", batch_id)
-            if crash_after == 4:
-                return
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            _journal(root, "_m", batch_id)
-            if crash_after == 2:
-                return
-            os.rename(tmp, cur)
-
-    def replay_and_check(root, batch_id, want_state, tag):
-        recover_snapshot(root, "snap", "_m")
-        recover_snapshot(root, "snap", "_m")  # recovery is re-runnable
-        apply_batch(root, batch_id, DONE)
-        recover_snapshot(root, "snap", "_m")
-        assert read_dir(f"{root}/snap") == want_state, tag
-        assert open(f"{root}/_m").read() == str(batch_id), tag
-        leftovers = [p for p in os.listdir(root) if p.startswith(".")]
-        assert not leftovers, f"{tag}: {leftovers}"
-
-    # steady state: batch 7 lands on batch 6's snapshot
-    for crash_after in (0, 1, 2, 3, 4, 5, DONE):
-        root = f"{tmpdir}/steady{crash_after}"
-        write_dir(f"{root}/snap", "+b6")
-        with open(f"{root}/_m", "w") as fh:
-            fh.write("6")
-        apply_batch(root, 7, crash_after)  # crash here
-        replay_and_check(root, 7, "+b6+b7", f"steady crash@{crash_after}")
-
-    # bootstrap: batch 0 lands on NOTHING — no old witness can exist, so
-    # the marker-before-rename ordering is what prevents '+b0+b0'
-    for crash_after in (0, 1, 2, 3, DONE):
-        root = f"{tmpdir}/boot{crash_after}"
-        os.makedirs(root)
-        apply_batch(root, 0, crash_after)  # crash here
-        replay_and_check(root, 0, "+b0", f"bootstrap crash@{crash_after}")

@@ -3,7 +3,7 @@
 Mirrors the reference's two-binary structure [U/H, SURVEY §3 entry point 1]:
 this is the standalone encrypt-and-publish side; the pipeline side consumes
 the topic with ``sources.wire.read_topic_stream`` + ``decode_wire`` (see
-tools/soak.py --topic for the streaming consumer).
+``perfbench/run.py --workload envelope_stream`` for the streaming consumer).
 
 Usage: python tools/publish.py OUT_DIR [SF_DIR] [--tamper] [--hmac]
        [--files N]
