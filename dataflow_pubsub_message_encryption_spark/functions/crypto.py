@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import base64
 import hashlib
-import os
 import time
 
 import pandas as pd
@@ -38,8 +37,12 @@ from pyspark.sql.types import BinaryType
 KEK = hashlib.sha256(b"spark-graft-mock-kek-v1").digest()  # 32-byte mock KMS KEK
 MAC_KEY = "spark-graft-mac-key-v1"  # HMAC-stand-in secret (see mac_col)
 
-#: default cache TTL — mirrors the reference's expiring cache [U/M]
-CACHE_TTL_SECONDS = float(os.environ.get("SPARK_GRAFT_DEK_TTL", "300"))
+#: cache TTL — mirrors the reference's expiring cache [U/M]
+CACHE_TTL_SECONDS = 300.0
+
+#: DEK rotation population: messages spread over this many DEKs
+#: (``user_id % N_KEYS``), so the unwrap cache has real keys to cache
+N_KEYS = 4
 
 
 def dek(i: int = 0) -> bytes:
@@ -164,53 +167,46 @@ def hmac_col(payload: Column) -> Column:
     return hmac_hex_udf(payload)
 
 
-def decrypt_verify(df, ciphertext: str = "ciphertext", wrapped: str = "wrapped_dek",
-                   mac: str = "mac", out: str = "props_decrypted",
-                   strategy: str = "cached_udf", mac_mode: str = "sha2"):
-    """The reference ``DecryptDoFn`` as a DataFrame transformation:
-    unwrap DEK -> AES-decrypt (JVM expression) -> recompute MAC -> drop
-    rows whose tag does not verify. Works identically on batch and
-    streaming DataFrames (Structured Streaming's unified model).
+def mac_tag(payload: Column, mac_mode: str = "sha2") -> Column:
+    """The integrity tag of ``mac_mode``: ``sha2`` (:func:`mac_col`) or
+    ``hmac`` (:func:`hmac_col`)."""
+    return {"sha2": mac_col, "hmac": hmac_col}[mac_mode](payload)
 
-    Two unwrap strategies, both amortizing the per-message KMS RPC the
-    reference exists to avoid [U/H]:
 
-    - ``cached_udf`` (default; reference parity): every row passes through
-      the vectorized unwrap UDF backed by the executor-local expiring
-      cache — the exact per-worker-cache semantics of the reference DoFn.
-      Required under streaming (a distinct+join would re-shuffle state).
-    - ``broadcast`` (the 100 TB batch shape): unwrap only the DISTINCT
-      wrapped keys (a key-population-sized DataFrame), broadcast-join the
-      plaintext DEKs back. The per-row path is then 100% JVM codegen — no
-      Python worker round-trip — and KMS cost is once per key per *query*,
-      not per key per worker.
+def decrypt_verify(df, mac_mode: str = "sha2"):
+    """The reference ``DecryptDoFn`` as a DataFrame transformation over the
+    envelope columns (``ciphertext``, ``wrapped_dek``, ``mac``): unwrap DEK
+    -> AES-decrypt (JVM expression) into ``props_decrypted`` -> recompute
+    MAC -> drop rows whose tag does not verify.
+
+    The unwrap shape follows ``df.isStreaming``; both amortize the
+    per-message KMS RPC the reference exists to avoid [U/H]:
+
+    - streams: every row passes through the vectorized unwrap UDF backed
+      by the executor-local expiring cache — the exact per-worker-cache
+      semantics of the reference DoFn (a distinct+join would need state).
+    - batch: unwrap only the DISTINCT wrapped keys (a key-population-sized
+      DataFrame) and broadcast-join the plaintext DEKs back. The per-row
+      path is then 100% JVM codegen — no Python worker round-trip — and
+      KMS cost is once per key per *query*, not per key per worker.
 
     ``mac_mode`` selects the integrity tag recomputed for the verify-drop:
     ``sha2`` (oracle-expressible model, JVM codegen) or ``hmac`` (true
     HMAC-SHA256 like the reference, vectorized UDF).
     """
-    tag = {"sha2": mac_col, "hmac": hmac_col}[mac_mode]
-    if strategy == "broadcast":
-        if df.isStreaming:
-            raise ValueError(
-                "broadcast unwrap needs a bounded distinct over the wrapped "
-                "keys; use strategy='cached_udf' on streaming DataFrames"
-            )
+    if df.isStreaming:
+        joined, dek_bin = df, unwrap_dek_udf(F.col("wrapped_dek"))
+    else:
         keys = (
-            df.select(F.col(wrapped).alias("_w"))
+            df.select(F.col("wrapped_dek").alias("_w"))
             .distinct()
             .withColumn("_dek", unwrap_dek_udf(F.col("_w")))
         )
-        joined = df.join(F.broadcast(keys), F.col(wrapped) == F.col("_w"))
-        plain = F.aes_decrypt(F.col(ciphertext), F.col("_dek")).cast("string")
-        return (
-            joined.withColumn(out, plain)
-            .filter(tag(F.col(out)) == F.col(mac))
-            .drop("_w", "_dek")
-        )
-    dek_bin = unwrap_dek_udf(F.col(wrapped))
-    plain = F.aes_decrypt(F.col(ciphertext), dek_bin).cast("string")
+        joined = df.join(F.broadcast(keys), F.col("wrapped_dek") == F.col("_w"))
+        dek_bin = F.col("_dek")
+    plain = F.aes_decrypt(F.col("ciphertext"), dek_bin).cast("string")
     return (
-        df.withColumn(out, plain)
-        .filter(tag(F.col(out)) == F.col(mac))
+        joined.withColumn("props_decrypted", plain)
+        .filter(mac_tag(F.col("props_decrypted"), mac_mode) == F.col("mac"))
+        .drop("_w", "_dek")
     )

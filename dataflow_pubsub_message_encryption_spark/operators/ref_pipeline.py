@@ -23,8 +23,7 @@ from .base import make_registry
 
 QUERIES, ORACLES, query = make_registry()
 
-_N_KEYS = 4
-_WRAPPED = [crypto.wrap_dek(crypto.dek(i)) for i in range(_N_KEYS)]
+_WRAPPED = [crypto.wrap_dek(crypto.dek(i)) for i in range(crypto.N_KEYS)]
 
 
 @query(
@@ -104,11 +103,11 @@ def json_parse_props(spark, sf_dir):
 )
 def envelope_roundtrip(spark, sf_dir):
     """R5 — THE core op: envelope decrypt. Synthesize wire form (AES-GCM
-    ciphertext + wrapped-DEK attribute), then unwrap via the cached pandas
-    UDF and AES-decrypt with Spark's native expression [U/H: DecryptDoFn].
+    ciphertext + wrapped-DEK attribute), then unwrap the DEKs and
+    AES-decrypt with Spark's native expression [U/H: DecryptDoFn].
     Oracle: decrypt∘encrypt = identity, so DuckDB just projects the
     plaintext — the AES never needs to match cross-engine."""
-    env = with_envelope(load_events(spark, sf_dir), n_keys=_N_KEYS)
+    env = with_envelope(load_events(spark, sf_dir))
     return crypto.decrypt_verify(env).select("event_id", "props_decrypted")
 
 
@@ -128,7 +127,7 @@ def mac_verify_filter(spark, sf_dir):
     and rejects]. Tamper is injected deterministically on odd event_ids so
     both engines agree on the surviving set; the MAC itself is
     sha2(key||payload), identical in DuckDB as sha256(key||payload)."""
-    env = with_envelope(load_events(spark, sf_dir), n_keys=_N_KEYS, tamper=True)
+    env = with_envelope(load_events(spark, sf_dir), tamper=True)
     return crypto.decrypt_verify(env).select("event_id", "mac")
 
 
@@ -149,9 +148,7 @@ def mac_hmac_verify_filter(spark, sf_dir):
     payloads — is oracle-checkable without DuckDB ever computing an HMAC.
     The sha2-model twin (mac_verify_filter) keeps the tag value itself
     cross-engine-checked."""
-    env = with_envelope(
-        load_events(spark, sf_dir), n_keys=_N_KEYS, tamper=True, mac_mode="hmac"
-    )
+    env = with_envelope(load_events(spark, sf_dir), tamper=True, mac_mode="hmac")
     return crypto.decrypt_verify(env, mac_mode="hmac").select(
         "event_id", "props_decrypted"
     )
@@ -159,10 +156,10 @@ def mac_hmac_verify_filter(spark, sf_dir):
 
 def _dek_cache_oracle() -> str:
     whens = "\n      ".join(
-        f"WHEN {i} THEN '{_WRAPPED[i]}'" for i in range(_N_KEYS)
+        f"WHEN {i} THEN '{_WRAPPED[i]}'" for i in range(crypto.N_KEYS)
     )
     return f"""
-    SELECT CASE CAST(user_id % {_N_KEYS} AS INTEGER)
+    SELECT CASE CAST(user_id % {crypto.N_KEYS} AS INTEGER)
       {whens}
       END AS wrapped_dek,
       count(*) AS n_msgs
@@ -174,13 +171,13 @@ def _dek_cache_oracle() -> str:
 @query("dek_cache", _dek_cache_oracle())
 def dek_cache(spark, sf_dir):
     """R7 — DEK rotation across the message stream: events spread over
-    {_N_KEYS} wrapped DEKs, all unwrapped through the executor-local
-    expiring cache (one mock-KMS call per key per Python worker, not per
-    message — the reference's raison d'être [U/H]). The per-key message
-    census below proves every key took the decrypt path; the cache-hit
-    amortization itself is asserted by the unit-test call counter
-    (tests/test_crypto.py)."""
-    env = with_envelope(load_events(spark, sf_dir), n_keys=_N_KEYS)
+    ``crypto.N_KEYS`` wrapped DEKs, each unwrapped once per key, not per
+    message — the reference's raison d'être [U/H]; on this batch frame
+    ``decrypt_verify`` unwraps the distinct keys and broadcasts them. The
+    per-key message census below proves every key took the decrypt path;
+    the executor-local cache's amortization on the per-row (streaming)
+    path is asserted by the unit-test call counter (tests/test_crypto.py)."""
+    env = with_envelope(load_events(spark, sf_dir))
     return (
         crypto.decrypt_verify(env)
         .groupBy("wrapped_dek")
@@ -229,16 +226,11 @@ def window_tumbling_counts(spark, sf_dir):
 )
 def pipeline_end_to_end(spark, sf_dir):
     """Flagship — the whole reference pipeline in one DAG (R1–R8): scan ->
-    synthesize envelope (tampered) -> cached unwrap -> AES-decrypt -> MAC
+    synthesize envelope (tampered) -> DEK unwrap -> AES-decrypt -> MAC
     verify-and-drop -> JSON-parse the plaintext -> hourly tumbling counts +
     payload aggregation. ``entry()`` runs this at sf0.001."""
-    env = with_envelope(
-        load_events(spark, sf_dir), n_keys=_N_KEYS, tamper=True
-    )
-    # batch flagship uses the broadcast unwrap (per-row path is pure JVM
-    # codegen); the cached-UDF reference-parity path is exercised by
-    # envelope_roundtrip / mac_verify_filter / dek_cache and streaming.
-    plain = crypto.decrypt_verify(env, strategy="broadcast")
+    env = with_envelope(load_events(spark, sf_dir), tamper=True)
+    plain = crypto.decrypt_verify(env)
     parsed = plain.withColumn(
         "k", F.from_json("props_decrypted", "k INT").getField("k")
     )
@@ -336,7 +328,7 @@ def envelope_map_attrs(spark, sf_dir):
     envelope columns are packed into a map, the pipeline extracts them by
     key (element_at) and decrypts — proving MapType flows through the
     whole decrypt DAG. Oracle: identity, as for R5."""
-    env = with_envelope(load_events(spark, sf_dir), n_keys=_N_KEYS)
+    env = with_envelope(load_events(spark, sf_dir))
     wired = env.select(
         "event_id",
         "ciphertext",
@@ -357,8 +349,8 @@ def envelope_map_attrs(spark, sf_dir):
     "envelope_key_rotation",
     f"""
     SELECT event_id,
-           CAST(user_id % {_N_KEYS} AS INTEGER) AS old_key_id,
-           CAST(user_id % {_N_KEYS} + 100 AS INTEGER) AS new_key_id,
+           CAST(user_id % {crypto.N_KEYS} AS INTEGER) AS old_key_id,
+           CAST(user_id % {crypto.N_KEYS} + 100 AS INTEGER) AS new_key_id,
            sha256(props) AS payload_sha
     FROM events
     """,
@@ -366,8 +358,8 @@ def envelope_map_attrs(spark, sf_dir):
 def envelope_key_rotation(spark, sf_dir):
     """Key rotation — the operational task envelope encryption exists to
     make cheap [U/M: rotating the DEK re-encrypts payloads; rotating the
-    KEK only re-wraps keys]: decrypt under the OLD DEKs (broadcast unwrap
-    — the per-key, not per-row, KMS path), re-encrypt every payload under
+    KEK only re-wraps keys]: decrypt under the OLD DEKs (the batch
+    broadcast unwrap — the per-key, not per-row, KMS path), re-encrypt every payload under
     the rotated DEK (old id + 100) with JVM ``aes_encrypt``, and PROVE
     the rotation by decrypting the new ciphertext in-plan with the new
     key and emitting the payload digest. GCM ciphertext is random-IV
@@ -377,14 +369,14 @@ def envelope_key_rotation(spark, sf_dir):
     digest, plus both key-id ledgers. The whole per-row path —
     decrypt, re-encrypt, verify-decrypt, hash — is native Spark codegen;
     Python appears only in the one-batch-per-distinct-key unwrap."""
-    env = with_envelope(load_events(spark, sf_dir), n_keys=_N_KEYS)
-    plain = crypto.decrypt_verify(env, strategy="broadcast").withColumn(
-        "key_id", (F.col("user_id") % _N_KEYS).cast("int")
+    env = with_envelope(load_events(spark, sf_dir))
+    plain = crypto.decrypt_verify(env).withColumn(
+        "key_id", (F.col("user_id") % crypto.N_KEYS).cast("int")
     )
     new_dek_map = F.create_map(
         *[
             x
-            for i in range(_N_KEYS)
+            for i in range(crypto.N_KEYS)
             for x in (F.lit(i), F.lit(crypto.dek(100 + i)))
         ]
     )

@@ -85,11 +85,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def with_envelope(
-    events: DataFrame,
-    n_keys: int = 4,
-    tamper: bool = False,
-    rebalance: bool = True,
-    mac_mode: str = "sha2",
+    events: DataFrame, tamper: bool = False, mac_mode: str = "sha2"
 ) -> DataFrame:
     """Synthesize the reference's encrypted wire format from ``events``.
 
@@ -98,9 +94,9 @@ def with_envelope(
     KMS KEK, HMACs the payload, and ships wrapped key + MAC as message
     attributes beside the ciphertext. Here:
 
-    - ``key_id``      : DEK rotation — events are spread over ``n_keys``
-                        DEKs (by ``user_id % n_keys``) so the unwrap cache
-                        has a real key population to cache.
+    - ``key_id``      : DEK rotation — events are spread over
+                        ``crypto.N_KEYS`` DEKs (by ``user_id % N_KEYS``) so
+                        the unwrap cache has a real key population to cache.
     - ``wrapped_dek`` : base64 mock-KMS-wrapped DEK (attribute).
     - ``ciphertext``  : ``aes_encrypt(props, dek)`` — AES-256-GCM, random
                         IV, hence nondeterministic: never hashed or
@@ -116,20 +112,21 @@ def with_envelope(
     All of this is JVM-side codegen (aes_encrypt / sha2 are native Spark
     expressions) — no Python in the encrypt path.
 
-    ``rebalance`` repartitions to the session's default parallelism before
-    the crypto map: the fixture tables are single-row-group files, so the
-    scan is one task and, without a shuffle first, ALL downstream AES/MAC
-    work would run on one core (measured 3x slowdown at sf0.1). A real
-    multi-file source already arrives partitioned — the repartition is then
-    a cheap no-op-sized shuffle, and batch callers can pass False.
+    A batch frame is repartitioned to the session's default parallelism
+    before the crypto map: the fixture tables are single-row-group files,
+    so the scan is one task and, without a shuffle first, ALL downstream
+    AES/MAC work would run on one core (measured 3x slowdown at sf0.1). A
+    real multi-file source already arrives partitioned — the repartition
+    is then a cheap no-op-sized shuffle.
     """
     from ..functions import crypto
 
-    if rebalance and not events.isStreaming:
+    if not events.isStreaming:
         events = events.repartition(
             events.sparkSession.sparkContext.defaultParallelism
         )
 
+    n_keys = crypto.N_KEYS
     key_id = (F.col("user_id") % F.lit(n_keys)).cast("int")
     dek_map = F.create_map(
         *[x for i in range(n_keys) for x in (F.lit(i), F.lit(crypto.dek(i)))]
@@ -148,12 +145,7 @@ def with_envelope(
             F.aes_encrypt(F.col("props").cast("binary"), dek_map[F.col("key_id")]),
         )
         .withColumn("wrapped_dek", wrapped_map[F.col("key_id")])
-        .withColumn(
-            "mac",
-            {"sha2": crypto.mac_col, "hmac": crypto.hmac_col}[mac_mode](
-                F.col("props")
-            ),
-        )
+        .withColumn("mac", crypto.mac_tag(F.col("props"), mac_mode))
     )
     if tamper:
         df = df.withColumn(

@@ -18,8 +18,9 @@ decrypts in flight. This module mirrors that split for Spark:
 - :func:`read_topic_stream` consumes the topic as an unbounded file
   stream, one file (= "partition segment") per micro-batch.
 - :func:`decode_wire` is the DecryptDoFn equivalent over the wire layout:
-  headers -> attribute map -> cached DEK unwrap -> AES decrypt -> MAC
-  verify-and-drop. Works identically on the batch and streaming frames.
+  headers -> attribute map -> DEK unwrap -> AES decrypt -> MAC
+  verify-and-drop. Works identically on the batch and streaming frames,
+  and is the engine's only encrypted stream source.
 
 Scale notes: the publisher writes ``n_files`` segments so the stream
 replays as real micro-batches and a batch consumer scans in parallel;
@@ -53,7 +54,6 @@ def publish_topic(
     sf_dir: str,
     out_dir: str,
     topic: str = "events.encrypted",
-    n_keys: int = 4,
     tamper: bool = False,
     mac_mode: str = "sha2",
     n_files: int = 8,
@@ -66,9 +66,7 @@ def publish_topic(
     computed shuffle-free relative to the envelope map (one window over the
     partition column, which the write would have clustered anyway).
     """
-    env = with_envelope(
-        load_events(spark, sf_dir), n_keys=n_keys, tamper=tamper, mac_mode=mac_mode
-    )
+    env = with_envelope(load_events(spark, sf_dir), tamper=tamper, mac_mode=mac_mode)
     part = (F.col("user_id") % n_files).cast("int")
     from pyspark.sql import Window
 
@@ -155,9 +153,12 @@ def read_topic_batch(spark: SparkSession, topic_dir: str) -> DataFrame:
 
 def decode_wire(wire: DataFrame, mac_mode: str = "sha2") -> DataFrame:
     """DecryptDoFn over the Kafka wire layout: headers array -> attribute
-    map -> cached unwrap -> AES decrypt -> MAC verify-and-drop. Returns
-    (event_id, ts, event_type, props_decrypted) plus the wire columns.
-    Identical code on batch and streaming frames (unified model)."""
+    map -> DEK unwrap -> AES decrypt -> MAC verify-and-drop. Returns
+    ``event_id``, ``ts`` (the message timestamp), ``user_id`` (the message
+    key), ``event_type``, the envelope columns ``ciphertext``,
+    ``wrapped_dek`` and ``mac``, and ``props_decrypted``. Identical code on
+    batch and streaming frames (unified model); ``decrypt_verify`` picks
+    the unwrap shape for each."""
     attrs = F.map_from_entries(
         F.transform(
             "headers",
@@ -169,6 +170,7 @@ def decode_wire(wire: DataFrame, mac_mode: str = "sha2") -> DataFrame:
     unpacked = wire.select(
         F.element_at(attrs, "event_id").cast("long").alias("event_id"),
         F.col("timestamp").alias("ts"),
+        F.col("key").cast("string").cast("long").alias("user_id"),
         F.element_at(attrs, "event_type").alias("event_type"),
         F.col("value").alias("ciphertext"),
         F.element_at(attrs, "wrapped_dek").alias("wrapped_dek"),

@@ -1,8 +1,6 @@
 from .pipeline import (  # noqa: F401
     attribution_join_stream,
     attribution_join_stream_outer,
-    decrypted_stream,
-    events_file_stream,
     session_counts_stream,
     sliding_counts_stream,
     stateful_dedup_stream,

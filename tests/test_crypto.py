@@ -112,30 +112,47 @@ def test_mac_matches_duckdb(spark, duck):
     assert s == d
 
 
-def test_broadcast_strategy_equals_cached_udf(spark, sf_dir):
-    """Both unwrap strategies must produce the identical surviving row set
-    and plaintext (same semantics, different physical shape)."""
-    events = load_events(spark, sf_dir)
-    env = with_envelope(events, tamper=True)
-    a = crypto.decrypt_verify(env).select("event_id", "props_decrypted")
-    b = crypto.decrypt_verify(env, strategy="broadcast").select(
-        "event_id", "props_decrypted"
-    )
-    rows_a = sorted((r.event_id, r.props_decrypted) for r in a.collect())
-    rows_b = sorted((r.event_id, r.props_decrypted) for r in b.collect())
-    assert rows_a == rows_b
+def _subtree_lines(tree: str, root: str) -> set[int]:
+    """Indices of the lines of ``tree`` (a physical-plan ``treeString``)
+    that lie under a node whose line contains ``root``."""
+    lines = tree.splitlines()
+
+    def depth(line: str) -> int:
+        return (len(line) - len(line.lstrip(" :+-"))) // 3
+
+    inside, root_depth = set(), None
+    for i, line in enumerate(lines):
+        d = depth(line)
+        if root_depth is not None and d <= root_depth:
+            root_depth = None
+        if root_depth is not None:
+            inside.add(i)
+        elif root in line:
+            root_depth = d
+    return inside
 
 
-def test_broadcast_strategy_keeps_row_path_jvm_only(spark, sf_dir):
-    """The broadcast unwrap must leave no Python eval node on the fact-row
-    side — ArrowEvalPython may appear only under the tiny distinct-keys
-    branch feeding the broadcast exchange."""
+def test_broadcast_strategy_keeps_row_path_jvm_only(spark, sf_dir, tmp_path):
+    """decrypt_verify picks the unwrap shape from ``isStreaming``. On
+    batch it must leave no Python eval node on the fact-row side:
+    ArrowEvalPython may appear only under the distinct-keys branch that
+    feeds the broadcast exchange. On a stream it must unwrap per row
+    through the cached UDF, with no broadcast join."""
     from dataflow_pubsub_message_encryption_spark.plans import formatted_plan
+    from dataflow_pubsub_message_encryption_spark.sources import wire
 
-    env = with_envelope(load_events(spark, sf_dir))
-    df = crypto.decrypt_verify(env, strategy="broadcast")
-    plan = formatted_plan(df)
-    assert "BroadcastHashJoin" in plan
+    batch = crypto.decrypt_verify(with_envelope(load_events(spark, sf_dir)))
+    tree = batch._jdf.queryExecution().executedPlan().treeString()
+    lines = tree.splitlines()
+    py = {i for i, line in enumerate(lines) if "ArrowEvalPython" in line}
+    assert "BroadcastHashJoin" in tree
+    assert py, "the unwrap UDF must run on the distinct keys"
+    assert py <= _subtree_lines(tree, "BroadcastExchange"), tree
+
+    stream = wire.decode_wire(wire.read_topic_stream(spark, str(tmp_path)))
+    plan = formatted_plan(stream)
+    assert "ArrowEvalPython" in plan
+    assert "Broadcast" not in plan, plan
 
 
 def test_aes_roundtrip_unicode_payloads(spark):
@@ -151,22 +168,6 @@ def test_aes_roundtrip_unicode_payloads(spark):
         ).cast("string").alias("rt"),
     )
     assert all(r.x == r.rt for r in out.collect())
-
-
-def test_broadcast_strategy_rejected_on_streams(spark, sf_dir, tmp_path):
-    import glob
-    import shutil as sh
-
-    import pytest as _pytest
-
-    from dataflow_pubsub_message_encryption_spark import streaming as st
-    from dataflow_pubsub_message_encryption_spark.sources import with_envelope as we
-
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], str(tmp_path / "e.parquet"))
-    stream = st.events_file_stream(spark, str(tmp_path))
-    env = we(stream)
-    with _pytest.raises(ValueError, match="cached_udf"):
-        crypto.decrypt_verify(env, strategy="broadcast")
 
 
 def test_hmac_udf_rfc4231_vectors(spark):

@@ -1,9 +1,11 @@
 """Streaming mirror tests (SURVEY §5.4): batch ≡ stream on the windowed
 counts (prefix consistency), watermark late-data handling, stateful dedup,
-and the exactly-once parquet sink."""
+and the exactly-once parquet sink. Every encrypted stream is the wire
+topic: ``read_topic_stream`` -> ``decode_wire``."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -14,7 +16,7 @@ from dataflow_pubsub_message_encryption_spark import streaming as st
 from dataflow_pubsub_message_encryption_spark.operators.ref_pipeline import (
     QUERIES as REFQ,
 )
-from dataflow_pubsub_message_encryption_spark.sources import load_events
+from dataflow_pubsub_message_encryption_spark.sources import load_events, wire
 
 
 @pytest.fixture()
@@ -22,6 +24,62 @@ def tmpdir():
     d = tempfile.mkdtemp(prefix="sparkgraft-stream-")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+def _topic(spark, sf_dir, tamper):
+    d = tempfile.mkdtemp(prefix="sparkgraft-topic-")
+    n = wire.publish_topic(spark, sf_dir, d, tamper=tamper, n_files=4)
+    return d, n
+
+
+@pytest.fixture(scope="module")
+def clean_topic(spark, sf_dir):
+    """The events table published once as an untampered 4-segment topic
+    (time-range segments, so the replay advances the watermark in
+    order); tests only read it."""
+    d, _ = _topic(spark, sf_dir, tamper=False)
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def tampered_topic(spark, sf_dir):
+    """The same 4-segment topic with every odd event_id's MAC corrupted;
+    yields (topic dir, messages published)."""
+    d, n = _topic(spark, sf_dir, tamper=True)
+    yield d, n
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def _decoded(spark, topic):
+    return wire.decode_wire(wire.read_topic_stream(spark, topic))
+
+
+#: hand-built event files: ts as a UTC instant, read as Spark TIMESTAMP
+_EVENTS_DDL = "event_id BIGINT, ts TIMESTAMP, event_type STRING"
+
+
+def _write_events(path, rows):
+    """(event_id, ts micros since epoch) rows as one click-event file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pa.table(
+        {
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us", tz="UTC")),
+            "event_type": pa.array(["click"] * len(rows)),
+        }
+    )
+    pq.write_table(tbl, path)
+
+
+def _events_stream(spark, src):
+    return (
+        spark.readStream.schema(_EVENTS_DDL)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
 
 
 def _run_stream_to_memory(spark, sdf, name, mode="append"):
@@ -42,9 +100,9 @@ def _run_stream_to_memory(spark, sdf, name, mode="append"):
     return spark.table(name)
 
 
-def test_stream_windowed_counts_equal_batch(spark, sf_dir, tmpdir):
-    """Replaying the events table through a file stream must yield the
-    exact batch R8 result once the stream drains.
+def test_stream_windowed_counts_equal_batch(spark, sf_dir, clean_topic):
+    """Replaying the encrypted topic through the streaming decode must
+    yield the exact batch R8 result once the stream drains.
 
     Complete mode is the deterministic drain: availableNow never runs the
     no-data micro-batch that would flush watermark-closed windows in append
@@ -53,14 +111,7 @@ def test_stream_windowed_counts_equal_batch(spark, sf_dir, tmpdir):
     must equal batch EXACTLY (a stronger assertion than the append prefix).
     Append-mode watermark emission/drop semantics are covered separately by
     test_watermark_drops_late_rows."""
-    # stage the parquet into a stream-source dir
-    import glob
-    import shutil as sh
-
-    src = glob.glob(f"{sf_dir}/events.parquet")[0]
-    sh.copy(src, f"{tmpdir}/events.parquet")
-
-    stream = st.events_file_stream(spark, tmpdir)
+    stream = _decoded(spark, clean_topic)
     counts = st.windowed_counts_stream(stream, watermark="10 minutes")
     got = _run_stream_to_memory(spark, counts, "stream_counts", mode="complete")
 
@@ -73,14 +124,10 @@ def test_stream_windowed_counts_equal_batch(spark, sf_dir, tmpdir):
     assert g == b
 
 
-def test_stream_stream_interval_join_equals_batch(spark, sf_dir, tmpdir):
+def test_stream_stream_interval_join_equals_batch(spark, sf_dir, clean_topic):
     """The watermarked stream-stream attribution join, drained over the
     full replay, must produce exactly the batch interval-join result."""
-    import glob
-    import shutil as sh
-
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], f"{tmpdir}/events.parquet")
-    stream = st.events_file_stream(spark, tmpdir)
+    stream = _decoded(spark, clean_topic)
     got = _run_stream_to_memory(
         spark, st.attribution_join_stream(stream), "stream_ssjoin"
     ).collect()
@@ -113,28 +160,17 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_dir, tmpdir):
     }
 
 
-def test_stream_stream_left_outer_join_matches_batch_matches(spark, sf_dir, tmpdir):
+def test_stream_stream_left_outer_join_matches_batch_matches(
+    spark, sf_dir, clean_topic
+):
     """LEFT OUTER stream-stream interval join: matched rows emit on match
     (same as inner); null-padded unmatched clicks emit only once the
-    watermark proves no purchase can still arrive. Multi-file replay
-    advances the watermark between micro-batches, so early unmatched
-    clicks DO flush; the drained output's matched set must equal batch,
-    emitted null rows must be truly unmatched, and no click may appear
-    both matched and null-padded."""
-    import glob
-    import shutil as sh
-
-    import pyarrow.parquet as pq
-
-    # split events into 4 files so the watermark advances across batches
-    tbl = pq.read_table(glob.glob(f"{sf_dir}/events.parquet")[0])
-    n = tbl.num_rows
-    idx = tbl["ts"].to_pandas().sort_values().index
-    for i in range(4):
-        pq.write_table(tbl.take(sorted(idx[i * n // 4 : (i + 1) * n // 4])),
-                       f"{tmpdir}/part{i}.parquet")
-
-    stream = st.events_file_stream(spark, tmpdir)
+    watermark proves no purchase can still arrive. The topic's four
+    time-range segments advance the watermark between micro-batches, so
+    early unmatched clicks DO flush; the drained output's matched set must
+    equal batch, emitted null rows must be truly unmatched, and no click
+    may appear both matched and null-padded."""
+    stream = _decoded(spark, clean_topic)
     # the join itself is the registered pipeline stage (one source of
     # truth — this test used to inline a copy of it)
     joined = st.attribution_join_stream_outer(stream).select(
@@ -174,22 +210,18 @@ def test_stream_stream_left_outer_join_matches_batch_matches(spark, sf_dir, tmpd
     assert len(got_null) >= (n_clicks - len(matched_clicks)) * 0.8
 
 
-def test_stream_static_enrichment_join(spark, sf_dir, tmpdir):
+def test_stream_static_enrichment_join(spark, sf_dir, clean_topic):
     """Stream-static join: the unbounded event stream enriched against a
     static (batch) dimension — no watermark needed on the static side;
     Spark re-plans the static relation per micro-batch. The drained
     stream must equal the batch join."""
-    import glob
-    import shutil as sh
-
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], f"{tmpdir}/events.parquet")
     ev_batch = load_events(spark, sf_dir)
     dim = (
         ev_batch.select("user_id")
         .distinct()
         .withColumn("tier", (F.col("user_id") % 3).cast("int"))
     )
-    stream = st.events_file_stream(spark, tmpdir)
+    stream = _decoded(spark, clean_topic)
     got = _run_stream_to_memory(
         spark,
         stream.join(dim, "user_id").select("event_id", "tier"),
@@ -202,82 +234,39 @@ def test_stream_static_enrichment_join(spark, sf_dir, tmpdir):
     assert len(got) == ev_batch.count()  # dim covers every user: no drops
 
 
-def test_stream_decrypt_matches_batch(spark, sf_dir, tmpdir):
-    import glob
-    import shutil as sh
-
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], f"{tmpdir}/events.parquet")
-    stream = st.decrypted_stream(st.events_file_stream(spark, tmpdir), tamper=True)
-    got = _run_stream_to_memory(
-        spark, stream.select("event_id", "props_decrypted"), "stream_decrypt"
-    )
-    rows = got.collect()
-    n = load_events(spark, sf_dir).count()
-    assert len(rows) == n // 2  # tampered odd ids dropped in-flight
-    assert all(r.event_id % 2 == 0 for r in rows)
-
-
 def test_watermark_drops_late_rows(spark, tmpdir):
     """Two micro-batches: batch 2 carries an event 2 hours older than the
     advanced watermark -> its window is already closed and the row is
     dropped from the append-mode output."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    H = 3_600_000_000  # 1h in micros
+    base = 1_700_000_000_000_000
+    _write_events(f"{tmpdir}/b0.parquet", [(0, base + 0 * H), (1, base + 4 * H)])
+    # watermark -> 4h - 10m; late event in hour-0 window: watermark (3h50m)
+    # >> window end (1h) -> drop
+    _write_events(f"{tmpdir}/b1.parquet", [(2, base + 1), (3, base + 5 * H)])
 
-    def write(batch_id, rows):
-        tbl = pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array([r[1] for r in rows], pa.int64()),  # ns
-                "user_id": pa.array([1] * len(rows), pa.int64()),
-                "event_type": pa.array(["click"] * len(rows)),
-                "value": pa.array([1.0] * len(rows)),
-                "props": pa.array(['{"k": 1}'] * len(rows)),
-            }
-        )
-        pq.write_table(tbl, f"{tmpdir}/b{batch_id}.parquet")
-
-    H = 3_600_000_000_000  # 1h in ns
-    base = 1_700_000_000_000_000_000
-    write(0, [(0, base + 0 * H), (1, base + 4 * H)])  # watermark -> 4h - 10m
-    # late event in hour-0 window: watermark (3h50m) >> window end (1h) -> drop
-    write(1, [(2, base + 1), (3, base + 5 * H)])
-
-    stream = st.events_file_stream(spark, tmpdir, max_files_per_trigger=1)
-    counts = st.windowed_counts_stream(stream, watermark="10 minutes")
+    counts = st.windowed_counts_stream(
+        _events_stream(spark, tmpdir), watermark="10 minutes"
+    )
     got = _run_stream_to_memory(spark, counts, "late_counts")
     total = got.agg(F.sum("cnt")).collect()[0][0]
     assert total == 3, "late row must be dropped, open windows not emitted"
 
 
 def test_stateful_dedup_within_watermark(spark, tmpdir):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    base = 1_700_000_000_000_000_000
-    tbl = pa.table(
-        {
-            "event_id": pa.array([1, 1, 2, 2, 3], pa.int64()),
-            "ts": pa.array([base, base + 1000, base, base + 5000, base], pa.int64()),
-            "user_id": pa.array([1] * 5, pa.int64()),
-            "event_type": pa.array(["click"] * 5),
-            "value": pa.array([1.0] * 5),
-            "props": pa.array(['{"k": 1}'] * 5),
-        }
+    base = 1_700_000_000_000_000
+    _write_events(
+        f"{tmpdir}/dups.parquet",
+        [(1, base), (1, base + 1), (2, base), (2, base + 5), (3, base)],
     )
-    pq.write_table(tbl, f"{tmpdir}/dups.parquet")
-    stream = st.stateful_dedup_stream(st.events_file_stream(spark, tmpdir))
+    stream = st.stateful_dedup_stream(_events_stream(spark, tmpdir))
     got = _run_stream_to_memory(spark, stream.select("event_id"), "dedup_stream")
     assert sorted(r.event_id for r in got.collect()) == [1, 2, 3]
 
 
-def test_parquet_sink_checkpointed(spark, sf_dir, tmpdir):
-    import glob
-    import shutil as sh
-
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], f"{tmpdir}/events.parquet")
+def test_parquet_sink_checkpointed(spark, sf_dir, clean_topic, tmpdir):
     out, ckpt = f"{tmpdir}/out", f"{tmpdir}/ckpt"
-    stream = st.decrypted_stream(st.events_file_stream(spark, tmpdir))
+    stream = _decoded(spark, clean_topic)
     q = (
         st.write_parquet_sink(
             stream.select("event_id", "props_decrypted"), out, ckpt
@@ -288,18 +277,12 @@ def test_parquet_sink_checkpointed(spark, sf_dir, tmpdir):
     q.awaitTermination(120)
     n = load_events(spark, sf_dir).count()
     assert spark.read.parquet(out).count() == n
-    import os
-
     assert os.path.isdir(ckpt), "checkpoint log must exist (exactly-once)"
 
 
-def test_text_sink_writes_decrypted_lines(spark, sf_dir, tmpdir):
-    import glob
-    import shutil as sh
-
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], f"{tmpdir}/events.parquet")
+def test_text_sink_writes_decrypted_lines(spark, sf_dir, clean_topic, tmpdir):
     out, ckpt = f"{tmpdir}/txt", f"{tmpdir}/txt_ckpt"
-    stream = st.decrypted_stream(st.events_file_stream(spark, tmpdir))
+    stream = _decoded(spark, clean_topic)
     q = (
         st.write_text_sink(stream, out, ckpt, col="props_decrypted")
         .trigger(availableNow=True)
@@ -311,12 +294,8 @@ def test_text_sink_writes_decrypted_lines(spark, sf_dir, tmpdir):
     assert lines.filter(F.col("value").startswith('{"k":')).count() == lines.count()
 
 
-def test_sliding_stream_equals_batch(spark, sf_dir, tmpdir):
-    import glob
-    import shutil as sh
-
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], f"{tmpdir}/events.parquet")
-    stream = st.sliding_counts_stream(st.events_file_stream(spark, tmpdir))
+def test_sliding_stream_equals_batch(spark, sf_dir, clean_topic):
+    stream = st.sliding_counts_stream(_decoded(spark, clean_topic))
     got = _run_stream_to_memory(spark, stream, "sliding_counts", mode="complete")
     batch = REFQ["window_sliding_counts"](spark, sf_dir)
     g = {
@@ -329,41 +308,13 @@ def test_sliding_stream_equals_batch(spark, sf_dir, tmpdir):
     assert g == b
 
 
-def test_session_window_stream_prefix_of_batch(spark, sf_dir, tmpdir):
-    """session_window under a watermark in streaming mode: the drained
-    stream's sessions must equal the batch gaps-and-islands result.
-    Complete-mode drain (see test_stream_windowed_counts_equal_batch) —
-    session merging across micro-batches still exercises the streaming
-    session-state machinery, and the final table must match batch EXACTLY."""
-    import glob
-    import shutil as sh
-
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], f"{tmpdir}/events.parquet")
-    stream = st.events_file_stream(spark, tmpdir)
-    sess = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            "n_events",
-        )
-    )
-    got = _run_stream_to_memory(spark, sess, "stream_sessions", mode="complete")
-    batch = REFQ["window_session_stats"](spark, sf_dir)
-    g = {
-        (r.user_id, r.session_start.strftime("%Y-%m-%d %H:%M:%S.%f")): r.n_events
-        for r in got.collect()
-    }
-    b = {(r.user_id, r.session_start): r.n_events for r in batch.collect()}
-    assert g == b
-
-
 def test_rate_source_through_decrypt_pipeline(spark):
     """Unbounded non-file source: the rate source synthesizes messages on
     the fly; the same envelope+decrypt transformations apply unchanged —
     source-agnostic pipeline, the Structured Streaming design point."""
+    from dataflow_pubsub_message_encryption_spark.functions import crypto
+    from dataflow_pubsub_message_encryption_spark.sources import with_envelope
+
     rate = (
         spark.readStream.format("rate")
         .option("rowsPerSecond", "500")
@@ -377,7 +328,7 @@ def test_rate_source_through_decrypt_pipeline(spark):
         F.lit(1.0).alias("value"),
         F.concat(F.lit('{"k": '), (F.col("value") % 100), F.lit("}")).alias("props"),
     )
-    dec = st.decrypted_stream(events)
+    dec = crypto.decrypt_verify(with_envelope(events))
     q = (
         dec.select("event_id", "props_decrypted")
         .writeStream.format("memory")
@@ -402,14 +353,10 @@ def test_rate_source_through_decrypt_pipeline(spark):
         q.stop()
 
 
-def test_foreach_batch_sink_custom_logic(spark, sf_dir, tmpdir):
+def test_foreach_batch_sink_custom_logic(spark, sf_dir, clean_topic, tmpdir):
     """R9 variant: foreachBatch — arbitrary batch-DataFrame logic per
     micro-batch (the escape hatch for sinks Spark lacks, e.g. upserts).
     Here each batch appends its per-type counts with the batch id."""
-    import glob
-    import shutil as sh
-
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], f"{tmpdir}/events.parquet")
     out = f"{tmpdir}/batch_counts"
 
     def sink(batch_df, batch_id):
@@ -420,7 +367,7 @@ def test_foreach_batch_sink_custom_logic(spark, sf_dir, tmpdir):
             .write.mode("append").parquet(out)
         )
 
-    stream = st.events_file_stream(spark, tmpdir)
+    stream = _decoded(spark, clean_topic)
     q = (
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", f"{tmpdir}/fb_ckpt")
@@ -430,26 +377,24 @@ def test_foreach_batch_sink_custom_logic(spark, sf_dir, tmpdir):
     q.awaitTermination(120)
     got = spark.read.parquet(out)
     total = got.agg(F.sum("count")).collect()[0][0]
-    from dataflow_pubsub_message_encryption_spark.sources import load_events as le
-
-    assert total == le(spark, sf_dir).count()
+    assert total == load_events(spark, sf_dir).count()
 
 
-def test_checkpoint_resume_is_exactly_once(spark, sf_dir, tmpdir):
+def test_checkpoint_resume_is_exactly_once(spark, sf_dir, clean_topic, tmpdir):
     """Stop-and-resume against the same checkpoint must process new files
     only — every event reaches the sink exactly once across restarts."""
     import glob
-    import shutil as sh
 
     src, out, ckpt = f"{tmpdir}/src", f"{tmpdir}/out", f"{tmpdir}/ckpt"
-    import os
-
     os.makedirs(src)
-    events_file = glob.glob(f"{sf_dir}/events.parquet")[0]
-    sh.copy(events_file, f"{src}/batch1.parquet")
+    segments = glob.glob(f"{clean_topic}/part-*.parquet")
+
+    def deliver(batch):
+        for i, seg in enumerate(segments):
+            shutil.copy(seg, f"{src}/{batch}-{i}.parquet")
 
     def run_once():
-        stream = st.events_file_stream(spark, src)
+        stream = _decoded(spark, src)
         q = (
             st.write_parquet_sink(stream.select("event_id"), out, ckpt)
             .trigger(availableNow=True)
@@ -457,30 +402,28 @@ def test_checkpoint_resume_is_exactly_once(spark, sf_dir, tmpdir):
         )
         q.awaitTermination(120)
 
+    deliver("batch1")
     run_once()
     n1 = spark.read.parquet(out).count()
-    # second batch arrives (same rows, different file name), query restarts
-    sh.copy(events_file, f"{src}/batch2.parquet")
+    # second delivery arrives (same messages, new file names), query restarts
+    deliver("batch2")
     run_once()
     got = spark.read.parquet(out)
     n_events = load_events(spark, sf_dir).count()
     assert n1 == n_events
     assert got.count() == 2 * n_events  # batch1 NOT reprocessed on resume
-    # each event id appears exactly twice (once per source file), never more
+    # each event id appears exactly twice (once per delivery), never more
     over = got.groupBy("event_id").count().filter("count != 2").count()
     assert over == 0
 
 
-def test_observe_metrics_on_decrypt_stream(spark, sf_dir, tmpdir):
+def test_observe_metrics_on_decrypt_stream(spark, tampered_topic, tmpdir):
     """The observe() API: in-flight metrics (rows, MAC failures survive as
     row-count delta) without a second pass over the stream."""
-    import glob
-    import shutil as sh
-
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], f"{tmpdir}/events.parquet")
-    stream = st.decrypted_stream(
-        st.events_file_stream(spark, tmpdir), tamper=True
-    ).observe("decrypt_metrics", F.count(F.lit(1)).alias("rows_out"))
+    topic, n = tampered_topic
+    stream = _decoded(spark, topic).observe(
+        "decrypt_metrics", F.count(F.lit(1)).alias("rows_out")
+    )
     captured = {}
 
     from pyspark.sql.streaming import StreamingQueryListener
@@ -515,20 +458,15 @@ def test_observe_metrics_on_decrypt_stream(spark, sf_dir, tmpdir):
         import time
 
         time.sleep(2)  # listener delivery is async
-        n = load_events(spark, sf_dir).count()
         assert captured.get("rows_out") == n // 2  # tampered half dropped
     finally:
         spark.streams.removeListener(listener)
 
 
-def test_rocksdb_state_store_provider(spark, sf_dir, tmpdir):
+def test_rocksdb_state_store_provider(spark, sf_dir, clean_topic):
     """The claimed 100 TB state backend: the same windowed aggregation
     runs on the RocksDB state store provider (off-heap state, the large-
     key-space configuration) and produces identical results."""
-    import glob
-    import shutil as sh
-
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], f"{tmpdir}/events.parquet")
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
     spark.conf.set(
@@ -536,7 +474,7 @@ def test_rocksdb_state_store_provider(spark, sf_dir, tmpdir):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        stream = st.events_file_stream(spark, tmpdir)
+        stream = _decoded(spark, clean_topic)
         counts = st.windowed_counts_stream(stream, watermark="10 minutes")
         got = _run_stream_to_memory(spark, counts, "rocksdb_counts", mode="complete")
         batch = REFQ["window_tumbling_counts"](spark, sf_dir)
@@ -556,45 +494,42 @@ def test_rocksdb_state_store_provider(spark, sf_dir, tmpdir):
 # --- Kafka-wire topic: publisher + streaming consumer -----------------------
 
 
-def test_wire_topic_publish_and_stream_decrypt(spark, sf_dir, tmpdir):
+def test_wire_topic_publish_and_stream_decrypt(spark, sf_dir, tampered_topic):
     """Publisher/pipeline split over the Kafka wire layout: publish an
     encrypted topic (value BINARY + headers, tampered), consume it as an
-    unbounded stream, decrypt + verify in flight; the decrypted stream must
-    equal the batch decode of the same topic, and survivors are exactly
-    the untampered (even event_id) messages."""
-    from dataflow_pubsub_message_encryption_spark.sources import wire
+    unbounded stream, decrypt + verify in flight. The streaming decode
+    (per-row cached unwrap) must equal the batch decode of the same topic
+    (distinct-key broadcast unwrap), and survivors are exactly the
+    untampered (even event_id) messages with their plaintext and user."""
+    topic, n = tampered_topic
+    events = load_events(spark, sf_dir)
+    assert n == events.count()
 
-    n = wire.publish_topic(spark, sf_dir, tmpdir, tamper=True, n_files=4)
-    assert n == load_events(spark, sf_dir).count()
-
-    stream = wire.read_topic_stream(spark, tmpdir, max_files_per_trigger=1)
+    cols = ("event_id", "user_id", "props_decrypted")
     got = _run_stream_to_memory(
-        spark, wire.decode_wire(stream), "wire_decrypted"
-    ).select("event_id", "props_decrypted")
-
-    batch = wire.decode_wire(wire.read_topic_batch(spark, tmpdir)).select(
-        "event_id", "props_decrypted"
-    )
-    g = {(r.event_id, r.props_decrypted) for r in got.collect()}
-    b = {(r.event_id, r.props_decrypted) for r in batch.collect()}
+        spark, _decoded(spark, topic), "wire_decrypted"
+    ).select(*cols)
+    batch = wire.decode_wire(wire.read_topic_batch(spark, topic)).select(*cols)
+    g = {tuple(r) for r in got.collect()}
+    b = {tuple(r) for r in batch.collect()}
     assert g == b and len(g) == n // 2
-    assert all(eid % 2 == 0 for eid, _ in g)
+    assert all(eid % 2 == 0 for eid, _, _ in g)
+    want = events.filter(F.col("event_id") % 2 == 0).select(
+        "event_id", "user_id", "props"
+    )
+    assert g == {tuple(r) for r in want.collect()}
 
 
-def test_wire_topic_windowed_counts_stream_equals_batch(spark, sf_dir, tmpdir):
+def test_wire_topic_windowed_counts_stream_equals_batch(spark, clean_topic):
     """Full reference pipeline over the wire: encrypted topic -> streaming
     decrypt -> watermarked tumbling counts == the same aggregation computed
     in batch over the same topic."""
-    from dataflow_pubsub_message_encryption_spark.sources import wire
-
-    wire.publish_topic(spark, sf_dir, tmpdir, n_files=4)
-
-    stream = wire.decode_wire(wire.read_topic_stream(spark, tmpdir))
+    stream = _decoded(spark, clean_topic)
     counts = st.windowed_counts_stream(stream, watermark="10 minutes")
     got = _run_stream_to_memory(spark, counts, "wire_counts")
 
     batch = (
-        wire.decode_wire(wire.read_topic_batch(spark, tmpdir))
+        wire.decode_wire(wire.read_topic_batch(spark, clean_topic))
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count("*").alias("cnt"))
         .select(F.col("window.start").alias("window_start"), "event_type", "cnt")
@@ -607,8 +542,6 @@ def test_wire_topic_windowed_counts_stream_equals_batch(spark, sf_dir, tmpdir):
 
 def test_wire_topic_hmac_mode(spark, sf_dir, tmpdir):
     """Wire topic signed with true HMAC-SHA256 decrypts + verifies."""
-    from dataflow_pubsub_message_encryption_spark.sources import wire
-
     n = wire.publish_topic(
         spark, sf_dir, tmpdir, tamper=True, mac_mode="hmac", n_files=2
     )
@@ -619,13 +552,10 @@ def test_wire_topic_hmac_mode(spark, sf_dir, tmpdir):
     assert len(ids) == n // 2 and all(i % 2 == 0 for i in ids)
 
 
-def test_wire_schema_matches_kafka_source_contract(spark, sf_dir, tmpdir):
+def test_wire_schema_matches_kafka_source_contract(spark, clean_topic):
     """The published topic's schema is byte-for-byte Spark's Kafka source
     schema — the documented drop-in seam."""
-    from dataflow_pubsub_message_encryption_spark.sources import wire
-
-    wire.publish_topic(spark, sf_dir, tmpdir, n_files=2)
-    got = spark.read.parquet(tmpdir).schema.simpleString()
+    got = spark.read.parquet(clean_topic).schema.simpleString()
     want = (
         "struct<key:binary,value:binary,topic:string,partition:int,"
         "offset:bigint,timestamp:timestamp,timestampType:int,"
@@ -650,8 +580,6 @@ def test_wire_topic_redelivery_and_restart_is_effectively_once(
 
     import pandas as pd
     import pyarrow.parquet as pq
-
-    from dataflow_pubsub_message_encryption_spark.sources import wire
 
     topic, out, ckpt = (os.path.join(tmpdir, d) for d in ("topic", "out", "ckpt"))
     n = wire.publish_topic(spark, sf_dir, topic, tamper=True, n_files=4)
@@ -700,19 +628,43 @@ def test_wire_topic_redelivery_and_restart_is_effectively_once(
     assert set(ids) == want
 
 
-def test_session_window_stream_equals_batch_sessions(spark, sf_dir, tmpdir):
+def test_session_window_stream_prefix_of_batch(spark, sf_dir, clean_topic):
+    """session_window under a watermark in streaming mode: the drained
+    stream's sessions must equal the batch session_window query
+    (window_session_stats). Complete-mode drain (see
+    test_stream_windowed_counts_equal_batch) — session merging across
+    micro-batches still exercises the streaming session-state machinery,
+    and the final table must match batch EXACTLY."""
+    sess = (
+        _decoded(spark, clean_topic)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        .agg(F.count("*").alias("n_events"))
+        .select(
+            "user_id",
+            F.col("session_window.start").alias("session_start"),
+            "n_events",
+        )
+    )
+    got = _run_stream_to_memory(spark, sess, "stream_sessions", mode="complete")
+    batch = REFQ["window_session_stats"](spark, sf_dir)
+    g = {
+        (r.user_id, r.session_start.strftime("%Y-%m-%d %H:%M:%S.%f")): r.n_events
+        for r in got.collect()
+    }
+    b = {(r.user_id, r.session_start): r.n_events for r in batch.collect()}
+    assert g == b
+
+
+def test_session_window_stream_equals_batch_sessions(spark, sf_dir, clean_topic):
     """The streaming session_window aggregation, drained in complete mode
     over the full replay, must produce exactly the batch
     sessionize_gap_sql session set (same user, start, event count)."""
-    import glob
-    import shutil as sh
-
     from dataflow_pubsub_message_encryption_spark.operators.behavior import (
         QUERIES as BQ,
     )
 
-    sh.copy(glob.glob(f"{sf_dir}/events.parquet")[0], f"{tmpdir}/events.parquet")
-    stream = st.session_counts_stream(st.events_file_stream(spark, tmpdir))
+    stream = st.session_counts_stream(_decoded(spark, clean_topic))
     got = _run_stream_to_memory(spark, stream, "session_stream", mode="complete")
     g = {
         (r.user_id, r.session_start.strftime("%Y-%m-%d %H:%M:%S.%f")): r.n_events
@@ -734,30 +686,14 @@ def test_watermark_progress_metrics_reported(spark, tmpdir):
     late row is filtered plan-side before the state operator; the DROP
     itself is asserted by row content in test_watermark_drops_late_rows,
     this test pins the metrics surface.)"""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def write(batch_id, rows):
-        tbl = pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array([r[1] for r in rows], pa.int64()),
-                "user_id": pa.array([1] * len(rows), pa.int64()),
-                "event_type": pa.array(["click"] * len(rows)),
-                "value": pa.array([1.0] * len(rows)),
-                "props": pa.array(['{"k": 1}'] * len(rows)),
-            }
-        )
-        pq.write_table(tbl, f"{tmpdir}/b{batch_id}.parquet")
-
-    H = 3_600_000_000_000
-    base = 1_700_000_000_000_000_000
-    write(0, [(0, base), (1, base + 4 * H)])
-    write(1, [(2, base + 1), (3, base + 5 * H)])  # event 2 is hours late
+    H = 3_600_000_000
+    base = 1_700_000_000_000_000
+    _write_events(f"{tmpdir}/b0.parquet", [(0, base), (1, base + 4 * H)])
+    # event 2 is hours late
+    _write_events(f"{tmpdir}/b1.parquet", [(2, base + 1), (3, base + 5 * H)])
 
     stream = st.windowed_counts_stream(
-        st.events_file_stream(spark, tmpdir, max_files_per_trigger=1),
-        watermark="10 minutes",
+        _events_stream(spark, tmpdir), watermark="10 minutes"
     )
     q = (
         stream.writeStream.format("memory")
