@@ -30,6 +30,8 @@ Layout
                    dedup, sinks).
 """
 
+from . import _zipcache  # noqa: F401  (installs the zip-directory cache fix)
+
 __version__ = "0.1.0"
 
 

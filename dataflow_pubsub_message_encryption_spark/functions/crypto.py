@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import base64
 import hashlib
+import hmac
 import time
 
 import pandas as pd
@@ -93,6 +94,10 @@ def _cached_unwrap(wrapped_b64: str, ttl: float = CACHE_TTL_SECONDS) -> bytes:
     hit = _DEK_CACHE.get(wrapped_b64)
     if hit is not None and now - hit[0] < ttl:
         return hit[1]
+    # a miss evicts every expired entry, so rotated-out keys leave and the
+    # cache holds at most the keys fetched within one TTL
+    for k in [k for k, (t, _) in _DEK_CACHE.items() if now - t >= ttl]:
+        del _DEK_CACHE[k]
     _UNWRAP_CALLS += 1  # stands in for the KMS decrypt RPC
     dek_bytes = unwrap_dek(wrapped_b64)
     _DEK_CACHE[wrapped_b64] = (now, dek_bytes)
@@ -143,18 +148,23 @@ def make_hmac_udf(key: bytes):
     MAC, as opposed to :func:`mac_col`'s oracle-expressible sha2 model.
     Arrow-batched (one Python crossing per batch, not per row); the inner
     ``hmac.digest`` is C-accelerated stdlib. Pinned against RFC 4231 test
-    vectors in tests/test_crypto.py."""
-    import hmac as _hmac
+    vectors in tests/test_crypto.py.
 
+    The UDF body calls the module-level :func:`_hmac_hex`, which the
+    worker unpickles by reference: that imports this package there, and
+    with it the per-task import-cache fix (``_zipcache``), even when an
+    HMAC job is the first engine code a worker runs."""
     from pyspark.sql.types import StringType
 
     @F.pandas_udf(StringType())
     def hmac_hex(payload: pd.Series) -> pd.Series:
-        return payload.map(
-            lambda p: _hmac.digest(key, p.encode("utf-8"), "sha256").hex()
-        )
+        return _hmac_hex(key, payload)
 
     return hmac_hex
+
+
+def _hmac_hex(key: bytes, payload: pd.Series) -> pd.Series:
+    return payload.map(lambda p: hmac.digest(key, p.encode("utf-8"), "sha256").hex())
 
 
 #: engine-default HMAC UDF (MAC_KEY-bound), used by the hmac MAC mode

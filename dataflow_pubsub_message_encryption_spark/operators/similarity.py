@@ -2952,6 +2952,47 @@ def _grb_scored_pairs(nodes):
     )
 
 
+def _grb_pair_kernel(pdf: pd.DataFrame, cap: int) -> pd.DataFrame:
+    """Every unordered bucket-mate pair of ``pdf`` once (upper triangle,
+    src < dst after the id sort), with its exact squared L2 distance.
+    Module level, so a Python worker unpickles it by reference and so
+    imports this package (see ``make_hmac_udf``)."""
+    n = len(pdf)
+    if n < 2:
+        return pd.DataFrame(
+            {
+                "src": pd.Series([], dtype="int64"),
+                "dst": pd.Series([], dtype="int64"),
+                "src_lvl": pd.Series([], dtype="int32"),
+                "dst_lvl": pd.Series([], dtype="int32"),
+                "d": pd.Series([], dtype="int64"),
+            }
+        )
+    if n > cap:
+        raise ValueError(
+            f"bucket occupancy {n} exceeds the pair-kernel cap "
+            f"{cap}; widen the tables (bits ≈ log2(n/B))"
+        )
+    order = np.argsort(pdf["vec_id"].to_numpy())
+    ids = pdf["vec_id"].to_numpy()[order]
+    lvl = pdf["lvl"].to_numpy()[order]
+    Qf = np.array(pdf["qe"].tolist(), dtype=np.int64)[order].astype(
+        np.float64
+    )
+    sq = (Qf * Qf).sum(axis=1)
+    D = (sq[:, None] + sq[None, :] - 2.0 * (Qf @ Qf.T)).astype(np.int64)
+    i, j = np.triu_indices(n, k=1)
+    return pd.DataFrame(
+        {
+            "src": ids[i],
+            "dst": ids[j],
+            "src_lvl": lvl[i].astype("int32"),
+            "dst_lvl": lvl[j].astype("int32"),
+            "d": D[i, j],
+        }
+    )
+
+
 def _grb_scored_pairs_arrow(nodes):
     """Within-bucket pair generation + scoring as ONE numpy kernel per
     bucket — the `_sd_pairs_arrow` / `_km_assign_arrow` treatment applied
@@ -2966,8 +3007,8 @@ def _grb_scored_pairs_arrow(nodes):
     scoring pandas UDF (~0.5M pairs × 2 × 512 B at sf0.1 — the measured
     stage floor, see `_grb_scored_pairs`'s own note). Here nodes hash by
     bucket key once per table (|V| rows × ~530 B) into `applyInPandas`,
-    the kernel emits every ordered bucket-mate pair with its exact
-    distance, and only (src, dst, lvls, d) rows reach the distinct —
+    the kernel emits the bucket-mate pairs with their exact distance,
+    and only (src, dst, lvls, d) rows reach the distinct —
     vectors cross the Python boundary once per node per table instead of
     twice per pair (~250× less Arrow traffic), and both shuffle_hash
     vector re-joins disappear. Measured 2.4 → 0.9 s warm on the stage at
@@ -2987,48 +3028,17 @@ def _grb_scored_pairs_arrow(nodes):
 
     Round-16 optimization (VERDICT r15 item 7): the kernel emits each
     unordered pair ONCE (upper triangle, src < dst by the in-kernel id
-    sort) and the ordered-pair set the rank rule needs is restored by a
-    cheap JVM projection union before the distinct — half the kernel
-    output rows and Arrow return traffic for one extra narrow map.
-    Pair set law-pinned identical (same law test), stage A/B 0.67 →
-    0.63 s med at sf0.1 (4/5 pairwise, tools/slope_runs/r16/
-    ab_grb_triu.log)."""
+    sort) and a JVM ``explode`` over a two-element array emits both
+    orientations before the distinct — half the kernel output rows and
+    Arrow return traffic. The mirror reads the kernel output once, so the
+    kernel runs once per LSH table (a ``unionByName`` of the output with
+    its swapped projection would run it twice). Pair set law-pinned
+    identical (same law test)."""
+
+    cap = _GRB_OCC_CAP  # read on the driver; the closure ships it by value
 
     def pair_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {
-                    "src": pd.Series([], dtype="int64"),
-                    "dst": pd.Series([], dtype="int64"),
-                    "src_lvl": pd.Series([], dtype="int32"),
-                    "dst_lvl": pd.Series([], dtype="int32"),
-                    "d": pd.Series([], dtype="int64"),
-                }
-            )
-        if n > _GRB_OCC_CAP:
-            raise ValueError(
-                f"bucket occupancy {n} exceeds the pair-kernel cap "
-                f"{_GRB_OCC_CAP}; widen the tables (bits ≈ log2(n/B))"
-            )
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order]
-        lvl = pdf["lvl"].to_numpy()[order]
-        Qf = np.array(pdf["qe"].tolist(), dtype=np.int64)[order].astype(
-            np.float64
-        )
-        sq = (Qf * Qf).sum(axis=1)
-        D = (sq[:, None] + sq[None, :] - 2.0 * (Qf @ Qf.T)).astype(np.int64)
-        i, j = np.triu_indices(n, k=1)
-        return pd.DataFrame(
-            {
-                "src": ids[i],
-                "dst": ids[j],
-                "src_lvl": lvl[i].astype("int32"),
-                "dst_lvl": lvl[j].astype("int32"),
-                "d": D[i, j],
-            }
-        )
+        return _grb_pair_kernel(pdf, cap)
 
     out = None
     for i in range(1, len(_GRB_TABLES) + 1):
@@ -3041,16 +3051,19 @@ def _grb_scored_pairs_arrow(nodes):
             )
         )
         out = per if out is None else out.unionByName(per)
-    mirrored = out.unionByName(
-        out.select(
-            F.col("dst").alias("src"),
-            F.col("src").alias("dst"),
-            F.col("dst_lvl").alias("src_lvl"),
-            F.col("src_lvl").alias("dst_lvl"),
-            "d",
+    both = F.explode(
+        F.array(
+            F.struct("src", "dst", "src_lvl", "dst_lvl", "d"),
+            F.struct(
+                F.col("dst").alias("src"),
+                F.col("src").alias("dst"),
+                F.col("dst_lvl").alias("src_lvl"),
+                F.col("src_lvl").alias("dst_lvl"),
+                "d",
+            ),
         )
     )
-    return mirrored.distinct()
+    return out.select(both.alias("p")).select("p.*").distinct()
 
 
 def _grb_edges(nodes, l: int, scored=None):

@@ -23,6 +23,13 @@ RUNTIME_CONFS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for pandas UDF / toPandas round-trips (key-unwrap UDF hot path).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # A file-stream micro-batch re-lists the files it was just handed
+    # (FileStreamSource.getBatch -> InMemoryFileIndex). Above this many
+    # paths (default 32) that listing is a 100-task Spark job; in
+    # local[N] those tasks share the driver's JVM and add only launch
+    # cost (a 40-file batch's getBatch: 559 -> 70 ms). Keep listing on
+    # the driver for any realistic backlog.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1000000",
 }
 
 

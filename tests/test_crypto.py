@@ -97,6 +97,31 @@ def test_dek_cache_ttl_expiry():
     assert crypto.unwrap_calls() == 2
 
 
+def test_dek_cache_bounded_under_key_rotation(monkeypatch):
+    """Rotating keys: a miss evicts expired entries, so the cache never
+    holds more keys than were used within one TTL, while each key still
+    costs one unwrap per TTL (a key that comes back after expiry is
+    fetched again)."""
+    import types
+
+    clock = [0.0]
+    monkeypatch.setattr(crypto, "time", types.SimpleNamespace(monotonic=lambda: clock[0]))
+    crypto.reset_cache()
+    ttl = 1.0
+    keys = [crypto.wrap_dek(crypto.dek(i)) for i in range(10)]
+    used = []  # (time, key) of every lookup
+    # key p is used at p, p+0.3 and p+0.6; key 0 comes back at 10.0
+    schedule = [(p + dt, p) for p in range(10) for dt in (0.0, 0.3, 0.6)]
+    for now, i in schedule + [(10.0, 0)]:
+        clock[0] = now
+        assert crypto._cached_unwrap(keys[i], ttl=ttl) == crypto.dek(i)
+        used.append((now, keys[i]))
+        recent = {k for t, k in used if now - t < ttl}
+        assert len(crypto._DEK_CACHE) <= len(recent), (now, len(crypto._DEK_CACHE))
+    assert crypto.unwrap_calls() == 11  # one per key, plus key 0 again
+    crypto.reset_cache()
+
+
 def test_mac_matches_duckdb(spark, duck):
     """Spark sha2(key||payload) == DuckDB sha256(key||payload), lowercase hex."""
     payload = "hello-world"

@@ -27,6 +27,8 @@ they compute; these laws are the equivalence proofs:
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -189,6 +191,10 @@ def test_grb_scored_pairs_arrow_plan_shape(spark, sf_dir):
     assert "FlatMapGroupsInPandas" in plan
     assert "Join" not in plan
     assert "ArrowEvalPython" not in plan
+    # the pair kernel runs once per LSH table: the mirror reads its output
+    # once (a union with a swapped copy would plan the kernel twice)
+    kernels = re.findall(r"^\(\d+\) FlatMapGroupsInPandas", plan, re.MULTILINE)
+    assert len(kernels) == len(S._GRB_TABLES), plan
 
 
 @pytest.mark.parametrize("fixture", FIXTURES)

@@ -552,6 +552,41 @@ def test_wire_topic_hmac_mode(spark, sf_dir, tmpdir):
     assert len(ids) == n // 2 and all(i % 2 == 0 for i in ids)
 
 
+def test_backlog_micro_batch_lists_files_on_the_driver(spark, clean_topic, tmpdir):
+    """A micro-batch over 40 new segment files lists them on the driver:
+    no "Listing leaf files" job (above 32 paths Spark's default lists them
+    with a 100-task job), and the decode equals the batch decode."""
+    import collections
+    import glob
+
+    for i, seg in enumerate(sorted(glob.glob(f"{clean_topic}/part-*.parquet")) * 10):
+        shutil.copy(seg, f"{tmpdir}/seg-{i:02d}.parquet")
+    assert len(os.listdir(tmpdir)) == 40
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def jobs():  # job id -> "name | description" from the status store
+        seq, out = store.jobsList(None), {}
+        for i in range(seq.size()):
+            j = seq.apply(i)
+            desc = j.description().get() if j.description().isDefined() else ""
+            out[j.jobId()] = f"{j.name()} | {desc}"
+        return out
+
+    before = set(jobs())
+    cols = ("event_id", "user_id", "props_decrypted")
+    stream = wire.decode_wire(
+        wire.read_topic_stream(spark, tmpdir, max_files_per_trigger=40)
+    )
+    got = _run_stream_to_memory(spark, stream, "wire_backlog").select(*cols)
+    new = {k: v for k, v in jobs().items() if k not in before}
+    assert new, "the micro-batch ran no job"
+    assert not [v for v in new.values() if "Listing leaf files" in v], new
+    batch = wire.decode_wire(wire.read_topic_batch(spark, tmpdir)).select(*cols)
+    g = collections.Counter(tuple(r) for r in got.collect())
+    assert g == collections.Counter(tuple(r) for r in batch.collect())
+    assert sum(g.values()) == 10 * spark.read.parquet(clean_topic).count()
+
+
 def test_wire_schema_matches_kafka_source_contract(spark, clean_topic):
     """The published topic's schema is byte-for-byte Spark's Kafka source
     schema — the documented drop-in seam."""
