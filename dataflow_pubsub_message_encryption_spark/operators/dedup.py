@@ -20,7 +20,7 @@ implementations, and it pins the band/bucket logic, not just row counts.
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — module scope needed for pandas_udf type hints
+import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -313,121 +313,12 @@ def dedup_minhash_signature(spark, sf_dir):
     )
 
 
-_BAND1 = [f"mh{i}" for i in range(0, _N_PERMS // 2)]
-_BAND2 = [f"mh{i}" for i in range(_N_PERMS // 2, _N_PERMS)]
-
-
-def _lsh_candidates(banded):
-    """Candidate pairs from a (doc_id, band1, band2) signature table as ONE
-    self-join instead of one join per band. Signatures explode to
-    (doc_id, band_idx, hash) rows and the join key is (band_idx, hash) —
-    band_idx keeps collisions within a band, exactly like the per-band
-    joins, but the expensive minhash subtree now feeds a single join
-    (2 evaluations, not 2 per band) and there is only one shuffle. A pair
-    colliding in several bands is emitted only by its FIRST matching band
-    (idx 1, or idx 2 with band1 differing), so the output is disjoint by
-    construction and needs NO distinct — no dedup shuffle over the
-    candidate set. Measured 3.5x over the two-join emit-once form on this
-    self-similar corpus where most near-dup pairs collide in every band.
-    At scale the explode generalizes to b bands (b rows per doc) with the
-    shuffle volume b x (doc_id + hash) — still ids-only."""
-    exploded = banded.select(
-        "doc_id",
-        "band1",
-        F.explode(
-            F.array(
-                F.struct(F.lit(1).alias("idx"), F.col("band1").alias("h")),
-                F.struct(F.lit(2).alias("idx"), F.col("band2").alias("h")),
-            )
-        ).alias("e"),
-    ).select("doc_id", "band1", F.col("e.idx").alias("idx"), F.col("e.h").alias("h"))
-    a, b = exploded.alias("a"), exploded.alias("b")
-    return a.join(
-        b,
-        (F.col("a.idx") == F.col("b.idx"))
-        & (F.col("a.h") == F.col("b.h"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & ((F.col("a.idx") == 1) | (F.col("a.band1") != F.col("b.band1"))),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-    )
-
-
 def _lsh_bands_sql() -> tuple[str, str]:
-    b1 = f"sha256(concat({', '.join(_BAND1)}))"
-    b2 = f"sha256(concat({', '.join(_BAND2)}))"
-    return b1, b2
-
-
-@query(
-    "dedup_minhash_lsh_pairs",
-    f"""
-    WITH sig AS (
-      SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks,
-             {', '.join(_minhash_sql_cols())}
-      FROM documents
-    ),
-    banded AS (
-      SELECT doc_id, toks,
-             {_lsh_bands_sql()[0]} AS band1,
-             {_lsh_bands_sql()[1]} AS band2
-      FROM sig
-    ),
-    cand AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.toks AS toks_a, b.toks AS toks_b
-      FROM banded a JOIN banded b ON a.band1 = b.band1 AND a.doc_id < b.doc_id
-      UNION
-      SELECT a.doc_id, b.doc_id, a.toks, b.toks
-      FROM banded a JOIN banded b ON a.band2 = b.band2 AND a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b, jac FROM (
-      SELECT doc_a, doc_b,
-             round(CAST(len(list_intersect(toks_a, toks_b)) AS DOUBLE)
-                   / (len(toks_a) + len(toks_b)
-                      - len(list_intersect(toks_a, toks_b))), 6) AS jac
-      FROM cand
-    ) WHERE jac >= {_LSH_TAU}
-    """,
-)
-def dedup_minhash_lsh_pairs(spark, sf_dir):
-    """MinHash + LSH near-dup pipeline: signature -> band hashes (2 bands x
-    8 rows) -> candidate pairs via equi-join on band value -> verify true
-    Jaccard >= 0.9. THE scalable near-dup shape: candidate generation is a
-    shuffle join on band hashes (cost ∝ collisions), and only candidates
-    pay the set-intersection verify. Fully EXACT-oracle-checked, bands and
-    all. The 16-permutation sha256 signature is the heavy narrow map —
-    ``_parallel`` spreads it off the single-row-group scan; the verify
-    intersect runs on int64 fingerprints (``fp64``), while the signature
-    itself stays sha256-over-strings because the band hashes define the
-    candidate set the oracle mirrors bit-for-bit."""
-    docs = _parallel(spark, load(spark, sf_dir, "documents"))
-    # bands carry only (doc_id, band hash): the candidate join shuffles
-    # 2 ids + a hash per pair, never the token arrays.
-    banded = docs.select(
-        "doc_id", _minhash_sig().alias("sig")
-    ).select(
-        "doc_id", *_minhash_cols()
-    ).select(
-        "doc_id",
-        F.sha2(F.concat(*_BAND1), 256).alias("band1"),
-        F.sha2(F.concat(*_BAND2), 256).alias("band2"),
-    )
-    cand = _lsh_candidates(banded)
-    # token sets join in only for the verify stage, keyed by doc id
-    toks = docs.select("doc_id", fp64(distinct_tokens("text")).alias("toks"))
-    cand = (
-        cand.join(toks.withColumnsRenamed({"doc_id": "doc_a", "toks": "toks_a"}), "doc_a")
-        .join(toks.withColumnsRenamed({"doc_id": "doc_b", "toks": "toks_b"}), "doc_b")
-    )
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = F.round(
-        inter.cast("double")
-        / (F.size("toks_a") + F.size("toks_b") - inter),
-        6,
-    )
-    return cand.select("doc_a", "doc_b", jac.alias("jac")).filter(
-        F.col("jac") >= _LSH_TAU
+    """The fixed-width keys' two band hashes, as frozen in their oracles."""
+    half = _N_PERMS // 2
+    return tuple(
+        f"sha256(concat({', '.join(f'mh{i}' for i in range(lo, lo + half))}))"
+        for lo in (0, half)
     )
 
 
@@ -457,11 +348,15 @@ def _lsh_auto_bands(tau: float, n_perms: int = _N_PERMS) -> tuple[int, int]:
 
 
 def _lsh_candidates_n(banded, nb: int):
-    """``_lsh_candidates`` generalized to ``nb`` bands: explode each doc to
+    """Candidate pairs from a (doc_id, band0..band{nb-1}) signature table
+    as ONE self-join instead of one join per band: explode each doc to
     (band_idx, band_hash) rows, one self-equi-join on (idx, hash), and
     emit-once — a pair colliding in several bands is produced only by its
     FIRST matching band (idx k requires bands 0..k-2 to differ), so the
-    output is disjoint by construction and needs no distinct.
+    output is disjoint by construction and needs no distinct, no dedup
+    shuffle over the candidate set. The expensive minhash subtree feeds a
+    single join (measured 3.5x over the two-join emit-once form on this
+    self-similar corpus, where most near-dup pairs collide in every band).
 
     Carried width (VERDICT r12 item 5): the emit-once inequality for the
     row at band idx k only ever reads bands 0..k-2, so each exploded row
@@ -519,6 +414,99 @@ def _lsh_candidates_n(banded, nb: int):
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
     )
+
+
+def _lsh_candidate_sets(docs, toks, tau: float):
+    """The one MinHash-LSH candidate pipeline: signature over the distinct
+    element array ``toks`` -> ``_lsh_auto_bands(tau)`` band hashes ->
+    ``_lsh_candidates_n`` -> (doc_a, doc_b, toks_a, toks_b), the element
+    sets as int64 fingerprints (``fp64``). Bands carry only (doc_id, band
+    hash), so the candidate join shuffles ids + hashes, never the token
+    arrays; the sets join in by doc id only for the verify. At tau 0.9 the
+    banding is 2x8, the fixed-width keys' frozen split."""
+    nb, r = _lsh_auto_bands(tau)
+    banded = (
+        docs.select("doc_id", _minhash_sig(toks).alias("sig"))
+        .select("doc_id", *_minhash_cols())
+        .select(
+            "doc_id",
+            *[
+                F.sha2(
+                    F.concat(*[f"mh{b * r + k}" for k in range(r)]), 256
+                ).alias(f"band{b}")
+                for b in range(nb)
+            ],
+        )
+    )
+    sets = docs.select("doc_id", fp64(toks).alias("toks"))
+    return (
+        _lsh_candidates_n(banded, nb)
+        .join(sets.withColumnsRenamed({"doc_id": "doc_a", "toks": "toks_a"}), "doc_a")
+        .join(sets.withColumnsRenamed({"doc_id": "doc_b", "toks": "toks_b"}), "doc_b")
+    )
+
+
+def _jaccard():
+    """Unrounded set Jaccard of the candidate columns toks_a / toks_b."""
+    inter = F.size(F.array_intersect("toks_a", "toks_b"))
+    return inter.cast("double") / (F.size("toks_a") + F.size("toks_b") - inter)
+
+
+def _lsh_jaccard_pairs(docs, toks, tau: float):
+    """Verified (doc_a, doc_b, jac) pairs with the 6-dp Jaccard >= tau —
+    the pair keys' oracles round before they filter."""
+    jac = F.round(_jaccard(), 6)
+    return (
+        _lsh_candidate_sets(docs, toks, tau)
+        .select("doc_a", "doc_b", jac.alias("jac"))
+        .filter(F.col("jac") >= tau)
+    )
+
+
+@query(
+    "dedup_minhash_lsh_pairs",
+    f"""
+    WITH sig AS (
+      SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks,
+             {', '.join(_minhash_sql_cols())}
+      FROM documents
+    ),
+    banded AS (
+      SELECT doc_id, toks,
+             {_lsh_bands_sql()[0]} AS band1,
+             {_lsh_bands_sql()[1]} AS band2
+      FROM sig
+    ),
+    cand AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.toks AS toks_a, b.toks AS toks_b
+      FROM banded a JOIN banded b ON a.band1 = b.band1 AND a.doc_id < b.doc_id
+      UNION
+      SELECT a.doc_id, b.doc_id, a.toks, b.toks
+      FROM banded a JOIN banded b ON a.band2 = b.band2 AND a.doc_id < b.doc_id
+    )
+    SELECT doc_a, doc_b, jac FROM (
+      SELECT doc_a, doc_b,
+             round(CAST(len(list_intersect(toks_a, toks_b)) AS DOUBLE)
+                   / (len(toks_a) + len(toks_b)
+                      - len(list_intersect(toks_a, toks_b))), 6) AS jac
+      FROM cand
+    ) WHERE jac >= {_LSH_TAU}
+    """,
+)
+def dedup_minhash_lsh_pairs(spark, sf_dir):
+    """MinHash + LSH near-dup pipeline: signature -> band hashes (2 bands x
+    8 rows) -> candidate pairs via equi-join on band value -> verify true
+    Jaccard >= 0.9. THE scalable near-dup shape: candidate generation is a
+    shuffle join on band hashes (cost ∝ collisions), and only candidates
+    pay the set-intersection verify. Fully EXACT-oracle-checked, bands and
+    all. The 16-permutation sha256 signature is the heavy narrow map —
+    ``_parallel`` spreads it off the single-row-group scan; the verify
+    intersect runs on int64 fingerprints (``fp64``), while the signature
+    itself stays sha256-over-strings because the band hashes define the
+    candidate set the oracle mirrors bit-for-bit. It runs the body of
+    ``dedup_minhash_lsh_pairs_auto``, whose ``_lsh_auto_bands(0.9)`` is
+    this key's 2x8."""
+    return dedup_minhash_lsh_pairs_auto(spark, sf_dir)
 
 
 def _lsh_pairs_banded_sql(nb: int, r: int, tau: float) -> str:
@@ -582,36 +570,8 @@ def dedup_minhash_lsh_pairs_auto(spark, sf_dir, tau: float = _LSH_TAU):
     the candidate set distinct-free, and only candidates pay the
     fingerprint-intersect verify. More bands (lower tau) means b rows per
     doc in the band shuffle — linear in b, never quadratic in n."""
-    nb, r = _lsh_auto_bands(tau)
     docs = _parallel(spark, load(spark, sf_dir, "documents"))
-    banded = (
-        docs.select("doc_id", _minhash_sig().alias("sig"))
-        .select("doc_id", *_minhash_cols())
-        .select(
-            "doc_id",
-            *[
-                F.sha2(
-                    F.concat(*[f"mh{b * r + k}" for k in range(r)]), 256
-                ).alias(f"band{b}")
-                for b in range(nb)
-            ],
-        )
-    )
-    cand = _lsh_candidates_n(banded, nb)
-    toks = docs.select("doc_id", fp64(distinct_tokens("text")).alias("toks"))
-    cand = cand.join(
-        toks.withColumnsRenamed({"doc_id": "doc_a", "toks": "toks_a"}), "doc_a"
-    ).join(
-        toks.withColumnsRenamed({"doc_id": "doc_b", "toks": "toks_b"}), "doc_b"
-    )
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = F.round(
-        inter.cast("double") / (F.size("toks_a") + F.size("toks_b") - inter),
-        6,
-    )
-    return cand.select("doc_a", "doc_b", jac.alias("jac")).filter(
-        F.col("jac") >= tau
-    )
+    return _lsh_jaccard_pairs(docs, distinct_tokens("text"), tau)
 
 
 dedup_minhash_lsh_pairs_auto.__doc__ = dedup_minhash_lsh_pairs_auto.__doc__.format(
@@ -725,25 +685,7 @@ def dedup_shingle_minhash_lsh(spark, sf_dir):
             F.size(F.split(F.col("text"), " ")) >= 3
         ),
     )
-    banded = docs.select(
-        "doc_id", _minhash_sig(_shingles3()).alias("sig")
-    ).select("doc_id", *_minhash_cols()).select(
-        "doc_id",
-        F.sha2(F.concat(*_BAND1), 256).alias("band1"),
-        F.sha2(F.concat(*_BAND2), 256).alias("band2"),
-    )
-    cand = _lsh_candidates(banded)
-    toks = docs.select("doc_id", fp64(_shingles3()).alias("toks"))
-    cand = cand.join(
-        toks.withColumnsRenamed({"doc_id": "doc_a", "toks": "toks_a"}), "doc_a"
-    ).join(toks.withColumnsRenamed({"doc_id": "doc_b", "toks": "toks_b"}), "doc_b")
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = F.round(
-        inter.cast("double") / (F.size("toks_a") + F.size("toks_b") - inter), 6
-    )
-    return cand.select("doc_a", "doc_b", jac.alias("jac")).filter(
-        F.col("jac") >= _LSH_TAU
-    )
+    return _lsh_jaccard_pairs(docs, _shingles3(), _LSH_TAU)
 
 
 @query(
@@ -805,57 +747,61 @@ def dedup_simhash(spark, sf_dir):
     shared by both forms. Naive vectorizations lose: a (tokens, 64) int64
     ±1 matrix is 400 MB and memory-bound (0.9x), axis-0 ``reduceat`` on
     uint8 strides badly (1.5x)."""
-    import hashlib
     import sys
 
-    import numpy as np
-
-    # the SWAR lane mapping below reinterprets raw bytes as uint64 words
-    # and back; every view uses explicit '<u8', which only matches the
-    # in-memory lane layout on a little-endian host.
+    # the SWAR lane mapping in ``_simhash64`` reinterprets raw bytes as
+    # uint64 words and back; every view uses explicit '<u8', which only
+    # matches the in-memory lane layout on a little-endian host.
     assert sys.byteorder == "little", "simhash SWAR path assumes little-endian"
-
-    @F.pandas_udf("long")
-    def simhash64(texts: pd.Series) -> pd.Series:
-        tok_sets = [set(t.split(" ")) for t in texts]
-        counts = np.array([len(s) for s in tok_sets], dtype=np.int64)
-        if len(counts) == 0:
-            return pd.Series([], dtype="int64")
-        buf = b"".join(
-            hashlib.sha256(tok.encode("utf-8")).digest()[:8]
-            for s in tok_sets
-            for tok in s
-        )
-        hb = np.frombuffer(buf, dtype=np.uint8).reshape(-1, 8)
-        # digest bytes are big-endian; reverse to little so unpackbits
-        # (bitorder='little') puts bit (h >> j) & 1 in column j — the
-        # scalar reference's bit order exactly.
-        bits = np.unpackbits(hb[:, ::-1], axis=1, bitorder="little")
-        w = bits.view(np.dtype("<u8"))  # (tokens, 8): 8 one-bit-per-byte lanes
-        starts = np.cumsum(counts) - counts
-        # chunk each document's rows at 255 so uint64 byte-lane sums can't
-        # carry into the next lane
-        sub_starts = np.concatenate(
-            [
-                np.arange(s, s + c, 255, dtype=np.int64)
-                for s, c in zip(starts, counts)
-            ]
-        )
-        seg_of_sub = np.repeat(np.arange(len(counts)), (counts + 254) // 255)
-        sub = np.add.reduceat(w, sub_starts, axis=0)
-        sub8 = sub.astype("<u8").view(np.uint8).reshape(len(sub), 64).astype(np.int32)
-        cnt = np.zeros((len(counts), 64), dtype=np.int32)
-        np.add.at(cnt, seg_of_sub, sub8)
-        maj = (2 * cnt > counts[:, None]).astype(np.uint8)
-        vb = np.ascontiguousarray(np.packbits(maj, axis=1, bitorder="little"))
-        # reinterpret the uint64 bit pattern as signed i64 (two's complement)
-        return pd.Series(vb.view("<u8").ravel().view(np.int64))
-
+    simhash64 = F.pandas_udf(_simhash64, "long")
     return (
         load(spark, sf_dir, "documents")
         .select("doc_id", simhash64(F.col("text")).alias("simhash"))
         .withColumn("band16", F.shiftrightunsigned("simhash", 48))
     )
+
+
+def _simhash64(texts: pd.Series) -> pd.Series:
+    """The batch SimHash kernel of :func:`dedup_simhash`. Module level, so
+    a Python worker unpickles it by reference and imports this package
+    (see ``functions.crypto.make_hmac_udf``)."""
+    import hashlib
+
+    import numpy as np
+
+    tok_sets = [set(t.split(" ")) for t in texts]
+    counts = np.array([len(s) for s in tok_sets], dtype=np.int64)
+    if len(counts) == 0:
+        return pd.Series([], dtype="int64")
+    buf = b"".join(
+        hashlib.sha256(tok.encode("utf-8")).digest()[:8]
+        for s in tok_sets
+        for tok in s
+    )
+    hb = np.frombuffer(buf, dtype=np.uint8).reshape(-1, 8)
+    # digest bytes are big-endian; reverse to little so unpackbits
+    # (bitorder='little') puts bit (h >> j) & 1 in column j — the
+    # scalar reference's bit order exactly.
+    bits = np.unpackbits(hb[:, ::-1], axis=1, bitorder="little")
+    w = bits.view(np.dtype("<u8"))  # (tokens, 8): 8 one-bit-per-byte lanes
+    starts = np.cumsum(counts) - counts
+    # chunk each document's rows at 255 so uint64 byte-lane sums can't
+    # carry into the next lane
+    sub_starts = np.concatenate(
+        [
+            np.arange(s, s + c, 255, dtype=np.int64)
+            for s, c in zip(starts, counts)
+        ]
+    )
+    seg_of_sub = np.repeat(np.arange(len(counts)), (counts + 254) // 255)
+    sub = np.add.reduceat(w, sub_starts, axis=0)
+    sub8 = sub.astype("<u8").view(np.uint8).reshape(len(sub), 64).astype(np.int32)
+    cnt = np.zeros((len(counts), 64), dtype=np.int32)
+    np.add.at(cnt, seg_of_sub, sub8)
+    maj = (2 * cnt > counts[:, None]).astype(np.uint8)
+    vb = np.ascontiguousarray(np.packbits(maj, axis=1, bitorder="little"))
+    # reinterpret the uint64 bit pattern as signed i64 (two's complement)
+    return pd.Series(vb.view("<u8").ravel().view(np.int64))
 
 
 @query(
@@ -977,29 +923,10 @@ def corpus_clean_pipeline(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    # bands are ids-only; the verify sets (int64 fp64 fingerprints,
-    # 8 bytes/token) join back in by doc id only for surviving candidates.
-    banded = exact_kept.select(
-        "doc_id", _minhash_sig().alias("sig")
-    ).select("doc_id", *_minhash_cols()).select(
-        "doc_id",
-        F.sha2(F.concat(*_BAND1), 256).alias("band1"),
-        F.sha2(F.concat(*_BAND2), 256).alias("band2"),
-    )
-    toks = exact_kept.select(
-        "doc_id", fp64(distinct_tokens("text")).alias("toks")
-    )
-    cand = (
-        _lsh_candidates(banded)
-        .join(toks.withColumnsRenamed({"doc_id": "doc_a", "toks": "ta"}), "doc_a")
-        .join(toks.withColumnsRenamed({"doc_id": "doc_b", "toks": "tb"}), "doc_b")
-    )
-    inter = F.size(F.array_intersect("ta", "tb"))
+    # the oracle filters on the UNROUNDED Jaccard, so no round here
     near_dropped = (
-        cand.filter(
-            inter.cast("double") / (F.size("ta") + F.size("tb") - inter)
-            >= _LSH_TAU
-        )
+        _lsh_candidate_sets(exact_kept, distinct_tokens("text"), _LSH_TAU)
+        .filter(_jaccard() >= _LSH_TAU)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -2460,44 +2387,47 @@ def _winnow_fps(docs):
     and NULL text yields no rows — the defined contract for both forms,
     so the kernel never calls len(None). The old form is kept as
     :func:`_winnow_fps_exploded` for the equivalence law test."""
+    return docs.select("doc_id", "text").mapInPandas(
+        _winnow_kernel, "doc_id long, fp long"
+    )
+
+
+def _winnow_kernel(it):
+    """The ``mapInPandas`` kernel of :func:`_winnow_fps`, at module level
+    so a Python worker imports this package (see ``_simhash64``)."""
     import numpy as np
 
-    def fps(it):
-        for pdf in it:
-            out_id, out_fp = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None or len(text) < _WIN_K:
-                    continue  # NULL or sub-k text -> no fingerprints
-                n = len(text)
-                codes = np.fromiter(map(ord, text), np.int64, count=n)
-                m = n - _WIN_K + 1  # k-gram count
-                acc = np.zeros(m, dtype=np.int64)
-                for j, w in enumerate(_WIN_POLY):
-                    acc += codes[j : j + m] * w % _WIN_M
-                kh = acc % _WIN_M
-                # min over kh[i : i+w] for every i (frame capped at end):
-                # head = full windows, tail = running suffix minima
-                suf = np.minimum.accumulate(kh[::-1])[::-1]
-                if m > _WIN_W:
-                    head = np.lib.stride_tricks.sliding_window_view(
-                        kh, _WIN_W
-                    ).min(axis=1)
-                    mins = np.concatenate([head, suf[m - _WIN_W + 1 :]])
-                else:
-                    mins = suf
-                u = np.unique(mins)
-                out_id.extend([doc_id] * len(u))
-                out_fp.extend(u.tolist())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_id, dtype="int64"),
-                    "fp": pd.Series(out_fp, dtype="int64"),
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(
-        fps, "doc_id long, fp long"
-    )
+    for pdf in it:
+        out_id, out_fp = [], []
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            if text is None or len(text) < _WIN_K:
+                continue  # NULL or sub-k text -> no fingerprints
+            n = len(text)
+            codes = np.fromiter(map(ord, text), np.int64, count=n)
+            m = n - _WIN_K + 1  # k-gram count
+            acc = np.zeros(m, dtype=np.int64)
+            for j, w in enumerate(_WIN_POLY):
+                acc += codes[j : j + m] * w % _WIN_M
+            kh = acc % _WIN_M
+            # min over kh[i : i+w] for every i (frame capped at end):
+            # head = full windows, tail = running suffix minima
+            suf = np.minimum.accumulate(kh[::-1])[::-1]
+            if m > _WIN_W:
+                head = np.lib.stride_tricks.sliding_window_view(
+                    kh, _WIN_W
+                ).min(axis=1)
+                mins = np.concatenate([head, suf[m - _WIN_W + 1 :]])
+            else:
+                mins = suf
+            u = np.unique(mins)
+            out_id.extend([doc_id] * len(u))
+            out_fp.extend(u.tolist())
+        yield pd.DataFrame(
+            {
+                "doc_id": pd.Series(out_id, dtype="int64"),
+                "fp": pd.Series(out_fp, dtype="int64"),
+            }
+        )
 
 
 def _winnow_fps_exploded(docs):

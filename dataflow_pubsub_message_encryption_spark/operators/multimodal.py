@@ -112,20 +112,24 @@ def multimodal_decode_features(spark, sf_dir):
     docs = with_media(load(spark, sf_dir, "documents"))
     schema = "doc_id LONG, mime STRING, n_bytes INT, feat0 DOUBLE, feat1 DOUBLE"
 
-    def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = pdf["payload"].map(_fake_decode)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": pdf["meta"].map(lambda m: m["mime"]),
-                    "n_bytes": pdf["payload"].map(len),
-                    "feat0": feats.map(lambda f: f[0]),
-                    "feat1": feats.map(lambda f: f[1]),
-                }
-            )
+    return docs.mapInPandas(_decode_batch, schema)
 
-    return docs.mapInPandas(decode_batch, schema)
+
+def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The ``mapInPandas`` kernel of :func:`multimodal_decode_features`.
+    Module level, so a Python worker unpickles it by reference and imports
+    this package (see ``functions.crypto.make_hmac_udf``)."""
+    for pdf in batches:
+        feats = pdf["payload"].map(_fake_decode)
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "mime": pdf["meta"].map(lambda m: m["mime"]),
+                "n_bytes": pdf["payload"].map(len),
+                "feat0": feats.map(lambda f: f[0]),
+                "feat1": feats.map(lambda f: f[1]),
+            }
+        )
 
 
 def _fake_decode(payload: bytes) -> tuple[float, float]:
@@ -832,50 +836,53 @@ def _cdc_chunks(hx):
     — the defined contract for both forms (the twin filters them; a
     NULL is an absent payload, not an empty one), so the kernel never
     calls len(None) and the equivalence law covers the case."""
+    return hx.mapInPandas(_cdc_kernel, "doc_id long, chash string, nb long")
+
+
+def _cdc_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The ``mapInPandas`` kernel of :func:`_cdc_chunks`, at module level
+    so a Python worker imports this package (see ``_decode_batch``)."""
     import hashlib
 
     import numpy as np
 
-    def chunks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_id, out_ch, out_nb = [], [], []
-            for doc_id, h in zip(pdf["doc_id"], pdf["h"]):
-                if h is None:
-                    continue  # NULL payload -> no chunks (contract below)
-                n = len(h)
-                # n == 0 still emits the mandatory end-of-doc chunk
-                # (sha256(''), nb 0) — the oracle's unconditional
-                # end-row does the same
-                ends = []
-                if n >= 16:
-                    codes = np.frombuffer(
-                        h.encode("ascii"), np.uint8
-                    ).astype(np.int64)
-                    idx = np.arange(16, n + 1, 2)  # 1-based boundaries
-                    acc = np.zeros(len(idx), dtype=np.int64)
-                    for j, w in enumerate(_CDC_W):
-                        acc += codes[idx - 1 - j] * w % _CDC_M
-                    hv = acc % _CDC_M
-                    ends = idx[(hv % _CDC_MASK == 0) & (idx < n)].tolist()
-                ends.append(n)
-                s = 1
-                for e in ends:
-                    span = h[s - 1 : e]
-                    out_id.append(doc_id)
-                    out_ch.append(
-                        hashlib.sha256(span.encode("ascii")).hexdigest()
-                    )
-                    out_nb.append(len(span) // 2)
-                    s = e + 1
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_id, dtype="int64"),
-                    "chash": pd.Series(out_ch, dtype="object"),
-                    "nb": pd.Series(out_nb, dtype="int64"),
-                }
-            )
-
-    return hx.mapInPandas(chunks, "doc_id long, chash string, nb long")
+    for pdf in it:
+        out_id, out_ch, out_nb = [], [], []
+        for doc_id, h in zip(pdf["doc_id"], pdf["h"]):
+            if h is None:
+                continue  # NULL payload -> no chunks (contract below)
+            n = len(h)
+            # n == 0 still emits the mandatory end-of-doc chunk
+            # (sha256(''), nb 0) — the oracle's unconditional
+            # end-row does the same
+            ends = []
+            if n >= 16:
+                codes = np.frombuffer(
+                    h.encode("ascii"), np.uint8
+                ).astype(np.int64)
+                idx = np.arange(16, n + 1, 2)  # 1-based boundaries
+                acc = np.zeros(len(idx), dtype=np.int64)
+                for j, w in enumerate(_CDC_W):
+                    acc += codes[idx - 1 - j] * w % _CDC_M
+                hv = acc % _CDC_M
+                ends = idx[(hv % _CDC_MASK == 0) & (idx < n)].tolist()
+            ends.append(n)
+            s = 1
+            for e in ends:
+                span = h[s - 1 : e]
+                out_id.append(doc_id)
+                out_ch.append(
+                    hashlib.sha256(span.encode("ascii")).hexdigest()
+                )
+                out_nb.append(len(span) // 2)
+                s = e + 1
+        yield pd.DataFrame(
+            {
+                "doc_id": pd.Series(out_id, dtype="int64"),
+                "chash": pd.Series(out_ch, dtype="object"),
+                "nb": pd.Series(out_nb, dtype="int64"),
+            }
+        )
 
 
 def _cdc_chunks_exploded(hx):

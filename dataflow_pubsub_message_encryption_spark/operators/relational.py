@@ -13,7 +13,7 @@ are per-operator docstrings.
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — needed at module scope for pandas_udf type hints
+import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -532,24 +532,10 @@ def win_ntile(spark, sf_dir):
     Delegates to the distributed global-rank machinery (VERDICT r6
     cleanup: a user calling the legacy key must not get the
     single-partition plan) — same oracle, same rows; the scalable twin
-    proved the equality before the legacy keys were re-pointed. The
-    anti-pattern this replaced is kept as
-    :func:`win_ntile_single_partition_demo` (unregistered)."""
+    proved the equality before the legacy keys were re-pointed."""
     from .scale import win_ntile_scalable
 
     return win_ntile_scalable(spark, sf_dir)
-
-
-def win_ntile_single_partition_demo(spark, sf_dir):
-    """THE labeled single-partition-window anti-pattern demo (the one
-    VERDICT r6 item 5 allows): `Window.orderBy` with no partitionBy moves
-    every row through ONE task — WindowExec warns, and at fact-table
-    scale the stage is a straggler by construction. Kept unregistered,
-    for plan-contrast only; every registry key uses `_global_rank`."""
-    w = Window.orderBy("c_acctbal", "c_custkey")
-    return load(spark, sf_dir, "customer").select(
-        "c_custkey", F.ntile(4).over(w).alias("quartile")
-    )
 
 
 # --- sort / set ops / dedup -------------------------------------------------
@@ -797,19 +783,25 @@ def udf_surface(spark, sf_dir):
     row-counted."""
     from pyspark.sql.types import LongType, StringType
 
-    @F.pandas_udf(LongType())
-    def char_sum(s: pd.Series) -> pd.Series:  # vectorized
-        return s.map(lambda x: sum(ord(c) for c in x) % 1000)
-
-    @F.udf(StringType())
-    def tag(x: str) -> str:  # row-at-a-time (demo only)
-        return f"evt:{x[:2]}"
-
+    char_sum = F.pandas_udf(_char_sum, LongType())  # vectorized
+    tag = F.udf(_type_tag, StringType())  # row-at-a-time (demo only)
     return load_events(spark, sf_dir).select(
         "event_id",
         char_sum(F.col("event_type")).alias("type_charsum"),
         tag(F.col("event_type")).alias("type_tag"),
     )
+
+
+# The UDF kernels are module-level functions, so a Python worker unpickles
+# them by reference and imports this package — with it the per-task
+# import-cache fix (``_zipcache``) — even when they are the first engine
+# code the worker runs (see ``functions.crypto.make_hmac_udf``).
+def _char_sum(s: pd.Series) -> pd.Series:
+    return s.map(lambda x: sum(ord(c) for c in x) % 1000)
+
+
+def _type_tag(x: str) -> str:
+    return f"evt:{x[:2]}"
 
 
 @query(
@@ -1023,12 +1015,7 @@ def udaf_surface(spark, sf_dir):
     boolean beside the deterministic group counts; the oracle emits the
     same counts and literal true. The UDAF execution path (Arrow group
     transfer, grouped-agg protocol) is thereby value-gated cross-engine."""
-    import numpy as np
-
-    @F.pandas_udf("double")
-    def geo_mean(v: pd.Series) -> float:
-        return float(np.exp(np.log(v.clip(lower=1e-12)).mean()))
-
+    geo_mean = F.pandas_udf(_geo_mean, "double")
     li = load(spark, sf_dir, "lineitem")
     # grouped-agg pandas UDFs cannot share an .agg() with non-pandas
     # aggregates (INVALID_PANDAS_UDF_PLACEMENT) — two aggregations joined
@@ -1047,6 +1034,13 @@ def udaf_surface(spark, sf_dir):
             "udaf_matches_decomposition"
         ),
     )
+
+
+def _geo_mean(v: pd.Series) -> float:
+    """Module-level grouped-agg kernel (see ``_char_sum``)."""
+    import numpy as np
+
+    return float(np.exp(np.log(v.clip(lower=1e-12)).mean()))
 
 
 @query(

@@ -57,6 +57,35 @@ _CENT_SQL = f"""cent AS (
     )"""
 
 
+def _quantize(col):
+    """Fixed-point quantize a double array (see _CENT_SCALE) to BIGINTs —
+    the Spark twin of the oracles' ``CAST(round(x * _CENT_SCALE) AS BIGINT)``."""
+    return F.transform(col, lambda x: F.round(x * _CENT_SCALE).cast("long"))
+
+
+_KM_FIXTURE_N = 500  # both graded fixtures (sf0.001/sf0.01) carry 500 vectors
+
+
+def _graded_n(e, sf_dir: str, n_override: int = None) -> int:
+    """Embedding count ``n`` for the derived-width keys: ``n_override``
+    (law tests) or ``e.count()``. The oracles of those keys are frozen at
+    values derived from _KM_FIXTURE_N, while the Spark path derives them
+    from the live count, so a regenerated graded fixture with another
+    count fails HERE with the real cause instead of as what looks like an
+    operator bug at the driver gate (ADVICE r11)."""
+    if n_override is not None:
+        return n_override
+    n = e.count()
+    if sf_dir.rstrip("/").endswith(("sf0.001", "sf0.01")) and n != _KM_FIXTURE_N:
+        raise ValueError(
+            f"graded fixture {sf_dir} has {n} embeddings but the oracle SQL "
+            f"is frozen at _KM_FIXTURE_N={_KM_FIXTURE_N} (similarity.py) — "
+            "update the constant and the oracles derived from it to match "
+            "the regenerated fixture"
+        )
+    return n
+
+
 def _int_centroids(e):
     """Per-label centroids from fixed-point component sums (see
     _CENT_SCALE): quantize -> integer sum -> one double division, then
@@ -546,17 +575,7 @@ def _km_assign_arrow(e_q, cents):
     bc = spark.sparkContext.broadcast((cell_ids, C.T.copy(), c_norm))
 
     def assign_batches(it):
-        ids, CT, cn = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["de"].tolist(), dtype=np.float64)
-            vn = np.sqrt((V * V).sum(axis=1))
-            sims = np.round((V @ CT) / np.outer(vn, cn), 6)
-            best = sims.argmax(axis=1)  # first max = lowest cell id
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": ids[best]}
-            )
+        return _km_assign_kernel(it, bc.value)
 
     out = e_q.select("vec_id", "de").mapInPandas(
         assign_batches, "vec_id long, cell long"
@@ -568,6 +587,22 @@ def _km_assign_arrow(e_q, cents):
         F.col("vec_id").cast(e_q.schema["vec_id"].dataType),
         F.col("cell").cast(cents.schema["cell"].dataType),
     )
+
+
+def _km_assign_kernel(it, centroids):
+    """The ``mapInPandas`` kernel of :func:`_km_assign_arrow` over the
+    broadcast (cell ids, C.T, centroid norms). Module level, so a Python
+    worker unpickles it by reference and imports this package (see
+    ``functions.crypto.make_hmac_udf``)."""
+    ids, CT, cn = centroids
+    for pdf in it:
+        if len(pdf) == 0:
+            continue
+        V = np.array(pdf["de"].tolist(), dtype=np.float64)
+        vn = np.sqrt((V * V).sum(axis=1))
+        sims = np.round((V @ CT) / np.outer(vn, cn), 6)
+        best = sims.argmax(axis=1)  # first max = lowest cell id
+        yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": ids[best]})
 
 
 def _km_update(assign, e_q):
@@ -664,6 +699,39 @@ def _km_train(spark, e_q, k: int, stride: int):
     )
 
 
+def _km_ivf_serve(e_q, cents, nprobe: int):
+    """Learned-IVF serve over trained ``cents`` (cell, cq): assign every
+    vector of ``e_q`` (vec_id, de, qe) to its cell, rank the cells by
+    cosine to the probe, keep the ``nprobe`` best, and rerank the vectors
+    in those cells exactly — the top-_TOPK (vec_id, cell, cos_sim)."""
+    final_assign = _km_assign_arrow(e_q, cents)
+    probe = e_q.filter(F.col("vec_id") == _PROBE_ID).select(
+        F.col("de").alias("pe")
+    )
+    cd = F.transform("cq", lambda x: x.cast("double") / _CENT_SCALE)
+    best_cell = (
+        cents.join(F.broadcast(probe))
+        .select("cell", F.round(cosine(cd, F.col("pe")), 6).alias("cs"))
+        .orderBy(F.desc("cs"), "cell")
+        .limit(nprobe)
+        .select("cell")
+    )
+    return (
+        final_assign.join(F.broadcast(best_cell), "cell")
+        .alias("a")
+        .join(e_q.alias("v"), F.col("a.vec_id") == F.col("v.vec_id"))
+        .filter(F.col("a.vec_id") != _PROBE_ID)
+        .join(F.broadcast(probe))
+        .select(
+            F.col("a.vec_id").alias("vec_id"),
+            F.col("a.cell").alias("cell"),
+            F.round(cosine(F.col("v.de"), F.col("pe")), 6).alias("cos_sim"),
+        )
+        .orderBy(F.desc("cos_sim"), "vec_id")
+        .limit(_TOPK)
+    )
+
+
 @query(
     "sim_ann_kmeans_ivf_topk",
     f"""
@@ -733,10 +801,7 @@ def sim_ann_kmeans_ivf_topk(spark, sf_dir):
         "vec_id",
         "label",
         as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
+        _quantize(as_double("embedding")).alias("qe"),
     ).localCheckpoint(eager=True)
     seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
     cents = (
@@ -752,32 +817,7 @@ def sim_ann_kmeans_ivf_topk(spark, sf_dir):
         cents = _km_update(
             _km_assign_arrow(e_q, cents), e_q
         ).localCheckpoint(eager=True)
-    final_assign = _km_assign_arrow(e_q, cents)
-    probe = e_q.filter(F.col("vec_id") == _PROBE_ID).select(
-        F.col("de").alias("pe")
-    )
-    cd = F.transform("cq", lambda x: x.cast("double") / _CENT_SCALE)
-    best_cell = (
-        cents.join(F.broadcast(probe))
-        .select("cell", F.round(cosine(cd, F.col("pe")), 6).alias("cs"))
-        .orderBy(F.desc("cs"), "cell")
-        .limit(_KM_NPROBE)
-        .select("cell")
-    )
-    return (
-        final_assign.join(F.broadcast(best_cell), "cell")
-        .alias("a")
-        .join(e_q.alias("v"), F.col("a.vec_id") == F.col("v.vec_id"))
-        .filter(F.col("a.vec_id") != _PROBE_ID)
-        .join(F.broadcast(probe))
-        .select(
-            F.col("a.vec_id").alias("vec_id"),
-            F.col("a.cell").alias("cell"),
-            F.round(cosine(F.col("v.de"), F.col("pe")), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(_TOPK)
-    )
+    return _km_ivf_serve(e_q, cents, _KM_NPROBE)
 
 
 @query(
@@ -1114,24 +1154,7 @@ def _emb_lsh_pairs_body(spark, sf_dir, bits: int, n: int | None = None):
     )
 
 
-@query(
-    "dedup_embedding_lsh_auto",
-    f"""
-    SELECT vec_a, vec_b, bucket, cos_sim FROM (
-      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.bucket,
-             round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                          CAST(b.embedding AS DOUBLE[])), 6)
-               AS cos_sim
-      FROM (SELECT vec_id, embedding,
-                   {_lsh_bucket_sql("embedding", _BLOCK_BITS)} AS bucket
-            FROM embeddings) a
-      JOIN (SELECT vec_id, embedding,
-                   {_lsh_bucket_sql("embedding", _BLOCK_BITS)} AS bucket
-            FROM embeddings) b
-        ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-    ) WHERE cos_sim >= {_DEDUP_TAU}
-    """,
-)
+@query("dedup_embedding_lsh_auto", ORACLES["dedup_embedding_lsh"])
 def dedup_embedding_lsh_auto(spark, sf_dir, n_override: int = None):
     """Embedding-LSH near-dup with the blocking prefix DERIVED AT BUILD
     TIME from a corpus count — the fix for the round-13 slope-census
@@ -1159,16 +1182,8 @@ def dedup_embedding_lsh_auto(spark, sf_dir, n_override: int = None):
     bucket equi-self-join, per-vector norms precomputed — plus the one
     extra corpus count every self-tuning key in this engine pays."""
     e = load(spark, sf_dir, "embeddings")
-    n = n_override if n_override is not None else e.count()
+    n = _graded_n(e, sf_dir, n_override)
     bits = _grb_auto_bits(n)
-    if n_override is None and sf_dir.rstrip("/").endswith(("sf0.001", "sf0.01")):
-        if bits != _BLOCK_BITS:
-            raise ValueError(
-                f"graded fixture {sf_dir} has {n} embeddings, deriving "
-                f"bits={bits}, but the oracle SQL is frozen at the "
-                f"fixture-derived _BLOCK_BITS={_BLOCK_BITS} — update the "
-                "frozen oracle to match the regenerated fixture"
-            )
     return _emb_lsh_pairs_body(spark, sf_dir, bits, n=n)
 
 
@@ -1356,16 +1371,8 @@ def dedup_embedding_lsh_banded(spark, sf_dir, n_override: int = None):
     width knob buys precision exponentially — the standard LSH
     trade."""
     e = load(spark, sf_dir, "embeddings")
-    n = n_override if n_override is not None else e.count()
+    n = _graded_n(e, sf_dir, n_override)
     bits = _grb_auto_bits(n)
-    if n_override is None and sf_dir.rstrip("/").endswith(("sf0.001", "sf0.01")):
-        if bits != _BLOCK_BITS:
-            raise ValueError(
-                f"graded fixture {sf_dir} has {n} embeddings, deriving "
-                f"bits={bits}, but the oracle SQL is frozen at "
-                f"_BLOCK_BITS={_BLOCK_BITS} — update the frozen oracle to "
-                "match the regenerated fixture"
-            )
     return _emb_lsh_banded_body(spark, sf_dir, bits, n=n)
 
 
@@ -1415,17 +1422,9 @@ def dedup_embedding_lsh_banded_auto(spark, sf_dir, n_override: int = None):
     volume ceiling binds — the recall/cost trade is now a POLICY
     (R_target, ceiling) instead of two per-scale hand tunings."""
     e = load(spark, sf_dir, "embeddings")
-    n = n_override if n_override is not None else e.count()
+    n = _graded_n(e, sf_dir, n_override)
     bits = _grb_auto_bits(n)
     r_band_ppm, ratio_milli, n_bands = _emb_auto_bands(bits)
-    if n_override is None and sf_dir.rstrip("/").endswith(("sf0.001", "sf0.01")):
-        if bits != _BLOCK_BITS or n_bands != _N_EMB_BANDS:
-            raise ValueError(
-                f"graded fixture {sf_dir} has {n} embeddings, deriving "
-                f"bits={bits}, n_bands={n_bands}, but the oracle SQL is "
-                f"frozen at {_N_EMB_BANDS}x{_BLOCK_BITS}-bit — update the "
-                "frozen oracle to match the regenerated fixture"
-            )
     return _emb_lsh_banded_body(
         spark, sf_dir, bits, n_bands=n_bands, n=n
     ).select(
@@ -1819,10 +1818,7 @@ def embedding_index_pipeline(spark, sf_dir):
         "vec_id",
         "label",
         as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
+        _quantize(as_double("embedding")).alias("qe"),
     ).localCheckpoint(eager=True)
     seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
     cents = (
@@ -2054,10 +2050,7 @@ def sim_pq_adc_topk(spark, sf_dir):
         load(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
-            F.transform(
-                as_double("embedding"),
-                lambda x: F.round(x * _CENT_SCALE).cast("long"),
-            ).alias("qe"),
+            _quantize(as_double("embedding")).alias("qe"),
         )
         .localCheckpoint(eager=True)
     )
@@ -2264,10 +2257,7 @@ def sim_ivf_pq_topk(spark, sf_dir):
         .select(
             "vec_id",
             "label",
-            F.transform(
-                as_double("embedding"),
-                lambda x: F.round(x * _CENT_SCALE).cast("long"),
-            ).alias("qe"),
+            _quantize(as_double("embedding")).alias("qe"),
         )
         .localCheckpoint(eager=True)
     )
@@ -2527,12 +2517,7 @@ def emb_centroid_drift(spark, sf_dir):
             "vec_id",
             "label",
             (F.col("vec_id") % 2 == 0).alias("half_a"),
-            F.posexplode(
-                F.transform(
-                    as_double("embedding"),
-                    lambda x: F.round(x * _CENT_SCALE).cast("long"),
-                )
-            ).alias("pos0", "qv"),
+            F.posexplode(_quantize(as_double("embedding"))).alias("pos0", "qv"),
         )
         .select("vec_id", "label", "half_a", (F.col("pos0") + 1).alias("pos"), "qv")
     )
@@ -2605,10 +2590,7 @@ def emb_duplicate_vectors_exact(spark, sf_dir):
         F.sha2(
             F.array_join(
                 F.transform(
-                    as_double("embedding"),
-                    lambda x: F.round(x * _CENT_SCALE)
-                    .cast("long")
-                    .cast("string"),
+                    _quantize(as_double("embedding")), lambda q: q.cast("string")
                 ),
                 ",",
             ),
@@ -2818,9 +2800,7 @@ def _gr_nodes(e, blocked: bool = False, tables=None):
         return F.instr(F.lit("0123456789abcdef"), F.substring(h, i, 1)) - 1
 
     hv = nib(1) * 16 + nib(2)
-    qe = F.transform(
-        as_double("embedding"), lambda x: F.round(x * _CENT_SCALE).cast("long")
-    )
+    qe = _quantize(as_double("embedding"))
     cols = [
         F.col("vec_id"),
         qe.alias("qe"),
@@ -2929,15 +2909,7 @@ def _grb_scored_pairs(nodes):
     # shuffle feeding the pair join (0.5M × 64 int64s), not the
     # arithmetic — the asymptotic win belongs to the kernel, the
     # fixture-scale win to neither
-    @F.pandas_udf("long")
-    def il2_pd(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="int64")
-        aa = np.array(a.tolist(), dtype=np.int64)
-        bb = np.array(b.tolist(), dtype=np.int64)
-        d = aa - bb
-        return pd.Series((d * d).sum(axis=1))
-
+    il2_pd = F.pandas_udf(_il2_kernel, "long")
     return (
         pairs.distinct()
         .join(qa.hint("shuffle_hash"), "src")
@@ -2950,6 +2922,18 @@ def _grb_scored_pairs(nodes):
             il2_pd(F.col("qa"), F.col("qb")).alias("d"),
         )
     )
+
+
+def _il2_kernel(a: pd.Series, b: pd.Series) -> pd.Series:
+    """Exact int64 squared L2 distance of two quantized-vector columns.
+    Module level, so a Python worker imports this package (see
+    ``_grb_pair_kernel``)."""
+    if len(a) == 0:
+        return pd.Series([], dtype="int64")
+    aa = np.array(a.tolist(), dtype=np.int64)
+    bb = np.array(b.tolist(), dtype=np.int64)
+    d = aa - bb
+    return pd.Series((d * d).sum(axis=1))
 
 
 def _grb_pair_kernel(pdf: pd.DataFrame, cap: int) -> pd.DataFrame:
@@ -3222,12 +3206,7 @@ def sim_ann_graph_topk_naive_demo(spark, sf_dir):
     nodes = _gr_nodes(e.filter(F.col("vec_id") != _PROBE_ID)).localCheckpoint()
     probe = (
         e.filter(F.col("vec_id") == _PROBE_ID)
-        .select(
-            F.transform(
-                as_double("embedding"),
-                lambda x: F.round(x * _CENT_SCALE).cast("long"),
-            ).alias("pq")
-        )
+        .select(_quantize(as_double("embedding")).alias("pq"))
         .localCheckpoint()
     )
     nd = _gr_probe_dists(nodes, probe)
@@ -3379,12 +3358,7 @@ def _gr_blocked(spark, sf_dir, tables=None):
     def _mk_probe():
         return (
             e.filter(F.col("vec_id") == _PROBE_ID)
-            .select(
-                F.transform(
-                    as_double("embedding"),
-                    lambda x: F.round(x * _CENT_SCALE).cast("long"),
-                ).alias("pq")
-            )
+            .select(_quantize(as_double("embedding")).alias("pq"))
             .localCheckpoint()
         )
 
@@ -3524,7 +3498,6 @@ sim_ann_graph_topk_blocked_auto.__doc__ = (
 # deployment shards the coarse quantizer, a different design).
 _KM_AUTO_MIN_K = 4
 _KM_AUTO_MAX_K = 4096
-_KM_FIXTURE_N = 500  # both graded fixtures (sf0.001/sf0.01) carry 500 vectors
 
 
 def _km_auto_k(n: int) -> int:
@@ -3567,41 +3540,13 @@ def _km_ivf_auto_body(spark, sf_dir, k: int, nprobe: int, stride: int = 1):
     e_q = e.select(
         "vec_id",
         as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
+        _quantize(as_double("embedding")).alias("qe"),
     ).localCheckpoint(eager=True)
     # round-15 opt session 2: the stride-sampled train runs driver-local
     # on the bounded sample; the stride=1 contrast regime keeps the
     # distributed loop — see `_km_train`.
     cents = _km_train(spark, e_q, k, stride)
-    final_assign = _km_assign_arrow(e_q, cents)
-    probe = e_q.filter(F.col("vec_id") == _PROBE_ID).select(
-        F.col("de").alias("pe")
-    )
-    cd = F.transform("cq", lambda x: x.cast("double") / _CENT_SCALE)
-    best_cell = (
-        cents.join(F.broadcast(probe))
-        .select("cell", F.round(cosine(cd, F.col("pe")), 6).alias("cs"))
-        .orderBy(F.desc("cs"), "cell")
-        .limit(nprobe)
-        .select("cell")
-    )
-    return (
-        final_assign.join(F.broadcast(best_cell), "cell")
-        .alias("a")
-        .join(e_q.alias("v"), F.col("a.vec_id") == F.col("v.vec_id"))
-        .filter(F.col("a.vec_id") != _PROBE_ID)
-        .join(F.broadcast(probe))
-        .select(
-            F.col("a.vec_id").alias("vec_id"),
-            F.col("a.cell").alias("cell"),
-            F.round(cosine(F.col("v.de"), F.col("pe")), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(_TOPK)
-    )
+    return _km_ivf_serve(e_q, cents, nprobe)
 
 
 @query(
@@ -3675,20 +3620,7 @@ def sim_ann_kmeans_ivf_topk_auto(spark, sf_dir, n_override: int = None):
     proving what the sample cap buys, the same convention the graph-ANN
     family uses (`sim_ann_graph_topk_blocked` vs `_wide`/`_auto`)."""
     e = load(spark, sf_dir, "embeddings")
-    n = n_override if n_override is not None else e.count()
-    if n_override is None and sf_dir.rstrip("/").endswith(("sf0.001", "sf0.01")):
-        # The SQL oracle above is frozen at the derived k/nprobe for
-        # _KM_FIXTURE_N; the Spark path derives them from a live count().
-        # If a regenerated graded fixture ever changes the embeddings row
-        # count, fail HERE with the real cause instead of letting the
-        # driver gate report what looks like an operator bug (ADVICE r11).
-        if n != _KM_FIXTURE_N:
-            raise ValueError(
-                f"graded fixture {sf_dir} has {n} embeddings but the "
-                f"oracle SQL is frozen at _KM_FIXTURE_N={_KM_FIXTURE_N} "
-                "(similarity.py) — update the constant (and the oracle's "
-                "derived k/nprobe) to match the regenerated fixture"
-            )
+    n = _graded_n(e, sf_dir, n_override)
     k = _km_auto_k(n)
     return _km_ivf_auto_body(spark, sf_dir, k, _km_auto_nprobe(k))
 
@@ -3786,15 +3718,7 @@ def sim_ann_kmeans_ivf_topk_auto_sampled(spark, sf_dir, n_override: int = None):
     production IVF build; `sim_ann_kmeans_ivf_topk_auto` is kept as the
     full-train contrast row (VERDICT r12 item 3)."""
     e = load(spark, sf_dir, "embeddings")
-    n = n_override if n_override is not None else e.count()
-    if n_override is None and sf_dir.rstrip("/").endswith(("sf0.001", "sf0.01")):
-        if n != _KM_FIXTURE_N:
-            raise ValueError(
-                f"graded fixture {sf_dir} has {n} embeddings but the "
-                f"oracle SQL is frozen at _KM_FIXTURE_N={_KM_FIXTURE_N} "
-                "(similarity.py) — update the constant (and the oracle's "
-                "derived k/nprobe/stride) to match the regenerated fixture"
-            )
+    n = _graded_n(e, sf_dir, n_override)
     k = _km_auto_k(n)
     return _km_ivf_auto_body(
         spark, sf_dir, k, _km_auto_nprobe(k), stride=_km_auto_stride(n, k)
@@ -3886,25 +3810,14 @@ def sim_ann_kmeans_ivf_batch_topk(spark, sf_dir, n_override: int = None):
     e = load(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    n = n_override if n_override is not None else e.count()
-    if n_override is None and sf_dir.rstrip("/").endswith(("sf0.001", "sf0.01")):
-        if n != _KM_FIXTURE_N:
-            raise ValueError(
-                f"graded fixture {sf_dir} has {n} embeddings but the "
-                f"oracle SQL is frozen at _KM_FIXTURE_N={_KM_FIXTURE_N} "
-                "(similarity.py) — update the constant (and the oracle's "
-                "derived k/nprobe/stride) to match the regenerated fixture"
-            )
+    n = _graded_n(e, sf_dir, n_override)
     k = _km_auto_k(n)
     nprobe = _km_auto_nprobe(k)
     stride = _km_auto_stride(n, k)
     e_q = e.select(
         "vec_id",
         as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
+        _quantize(as_double("embedding")).alias("qe"),
     ).localCheckpoint(eager=True)
     # round-15 opt session 2: the stride-sampled train runs driver-local
     # on the bounded sample; the stride=1 contrast regime keeps the
@@ -4013,6 +3926,41 @@ def _sd_pairs_fold(base):
     )
 
 
+def _sd_pair_cells(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The grouped-map kernel of the SemDeDup Arrow pair pass: one cell's
+    upper-triangle cosine block. Module level, so a Python worker imports
+    this package (see ``_grb_pair_kernel``)."""
+    n = len(pdf)
+    if n < 2:
+        return pd.DataFrame(
+            {
+                "cell": pd.Series([], dtype="int64"),
+                "id_a": pd.Series([], dtype="int64"),
+                "id_b": pd.Series([], dtype="int64"),
+                "cs_a": pd.Series([], dtype="float64"),
+                "cs_b": pd.Series([], dtype="float64"),
+                "cos_raw": pd.Series([], dtype="float64"),
+            }
+        )
+    order = np.argsort(pdf["vec_id"].to_numpy())
+    ids = pdf["vec_id"].to_numpy()[order]
+    cs = pdf["cs_cent"].to_numpy()[order]
+    V = np.array(pdf["de"].tolist(), dtype=np.float64)[order]
+    nrm = np.sqrt((V * V).sum(axis=1))
+    sims = (V @ V.T) / np.outer(nrm, nrm)
+    iu = np.triu_indices(n, k=1)
+    return pd.DataFrame(
+        {
+            "cell": np.full(len(iu[0]), pdf["cell"].iloc[0], dtype=np.int64),
+            "id_a": ids[iu[0]],
+            "id_b": ids[iu[1]],
+            "cs_a": cs[iu[0]],
+            "cs_b": cs[iu[1]],
+            "cos_raw": sims[iu],
+        }
+    )
+
+
 def _sd_pairs_arrow(base):
     """Within-cell pair pass as ONE numpy matmul per cell — the
     `_km_assign_arrow` treatment applied to the pair stage (round-15
@@ -4036,39 +3984,8 @@ def _sd_pairs_arrow(base):
     that bounds the fold's join output — a skewed cell costs both forms
     alike."""
 
-    def pair_cells(pdf):
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {
-                    "cell": pd.Series([], dtype="int64"),
-                    "id_a": pd.Series([], dtype="int64"),
-                    "id_b": pd.Series([], dtype="int64"),
-                    "cs_a": pd.Series([], dtype="float64"),
-                    "cs_b": pd.Series([], dtype="float64"),
-                    "cos_raw": pd.Series([], dtype="float64"),
-                }
-            )
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order]
-        cs = pdf["cs_cent"].to_numpy()[order]
-        V = np.array(pdf["de"].tolist(), dtype=np.float64)[order]
-        nrm = np.sqrt((V * V).sum(axis=1))
-        sims = (V @ V.T) / np.outer(nrm, nrm)
-        iu = np.triu_indices(n, k=1)
-        return pd.DataFrame(
-            {
-                "cell": np.full(len(iu[0]), pdf["cell"].iloc[0], dtype=np.int64),
-                "id_a": ids[iu[0]],
-                "id_b": ids[iu[1]],
-                "cs_a": cs[iu[0]],
-                "cs_b": cs[iu[1]],
-                "cos_raw": sims[iu],
-            }
-        )
-
     raw = base.groupBy("cell").applyInPandas(
-        pair_cells,
+        _sd_pair_cells,
         "cell long, id_a long, id_b long, cs_a double, cs_b double, "
         "cos_raw double",
     )
@@ -4119,10 +4036,7 @@ def _sd_body(spark, sf_dir, k: int, stride: int, tau: float, emit: str = "report
     e_q = e.select(
         "vec_id",
         as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
+        _quantize(as_double("embedding")).alias("qe"),
     ).localCheckpoint(eager=True)
     # round-15 opt session 2: driver-local sampled train (see `_km_train`
     # — SemDeDup's occupancy sizing keeps stride > 1 at every n).
@@ -4273,15 +4187,7 @@ def dedup_semdedup_cells(spark, sf_dir, n_override: int = None, tau: float = Non
     200k vectors, k=4000 cells — one notch under the 4096 clamp);
     nothing curves past linear — the occupancy budget holds."""
     e = load(spark, sf_dir, "embeddings")
-    n = n_override if n_override is not None else e.count()
-    if n_override is None and sf_dir.rstrip("/").endswith(("sf0.001", "sf0.01")):
-        if n != _KM_FIXTURE_N:
-            raise ValueError(
-                f"graded fixture {sf_dir} has {n} embeddings but the "
-                f"oracle SQL is frozen at _KM_FIXTURE_N={_KM_FIXTURE_N} "
-                "(similarity.py) — update the constant (and the oracle's "
-                "derived k/stride) to match the regenerated fixture"
-            )
+    n = _graded_n(e, sf_dir, n_override)
     k = _sd_auto_k(n)
     return _sd_body(
         spark,
@@ -4512,15 +4418,7 @@ def dedup_semdedup_recall_eval(spark, sf_dir):
     from ..functions.vectors import dot32, norm
 
     e = load(spark, sf_dir, "embeddings")
-    n = e.count()
-    if sf_dir.rstrip("/").endswith(("sf0.001", "sf0.01")):
-        if n != _KM_FIXTURE_N:
-            raise ValueError(
-                f"graded fixture {sf_dir} has {n} embeddings but the "
-                f"oracle SQL is frozen at _KM_FIXTURE_N={_KM_FIXTURE_N} "
-                "(similarity.py) — update the constant (and the oracle's "
-                "derived k/stride) to match the regenerated fixture"
-            )
+    n = _graded_n(e, sf_dir)
     k = _sd_auto_k(n)
     cand = _sd_body(
         spark, sf_dir, k, _km_auto_stride(n, k), _SD_TAU, emit="cand"
@@ -4679,15 +4577,7 @@ def corpus_semantic_curation_report(spark, sf_dir):
     Σ n_eval = the decontam row count, and per-source
     n_kept ≤ n_docs − max(n_eval, n_dup, n_contam)."""
     e = load(spark, sf_dir, "embeddings")
-    n = e.count()
-    if sf_dir.rstrip("/").endswith(("sf0.001", "sf0.01")):
-        if n != _KM_FIXTURE_N:
-            raise ValueError(
-                f"graded fixture {sf_dir} has {n} embeddings but the "
-                f"oracle SQL is frozen at _KM_FIXTURE_N={_KM_FIXTURE_N} "
-                "(similarity.py) — update the constant (and the oracle's "
-                "derived k/stride) to match the regenerated fixture"
-            )
+    n = _graded_n(e, sf_dir)
     k = _sd_auto_k(n)
     pairs = _sd_body(
         spark, sf_dir, k, _km_auto_stride(n, k), _SD_TAU, emit="pairs"
@@ -4982,12 +4872,7 @@ def emb_covariance_isotropy(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     q = e.select(
         "vec_id",
-        F.posexplode(
-            F.transform(
-                as_double("embedding"),
-                lambda x: F.round(x * _CENT_SCALE).cast("long"),
-            )
-        ).alias("pos0", "q"),
+        F.posexplode(_quantize(as_double("embedding"))).alias("pos0", "q"),
     ).select("vec_id", (F.col("pos0") + 1).alias("pos"), "q")
     m = q.groupBy("pos").agg(
         F.floor(F.sum("q").cast("double") / F.count("*"))
@@ -5203,9 +5088,7 @@ def sim_ann_graph_recall_eval(spark, sf_dir):
     pipelines, one agreement row."""
     ann = QUERIES["sim_ann_graph_topk"](spark, sf_dir).select("vec_id")
     e = load(spark, sf_dir, "embeddings")
-    qe = F.transform(
-        as_double("embedding"), lambda x: F.round(x * _CENT_SCALE).cast("long")
-    )
+    qe = _quantize(as_double("embedding"))
     probe = e.filter(F.col("vec_id") == _PROBE_ID).select(qe.alias("pq"))
     brute = (
         e.filter(F.col("vec_id") != _PROBE_ID)
@@ -5302,9 +5185,7 @@ def emb_label_separation_report(spark, sf_dir):
     against its own (broadcast) centroid; the centroid-pair table is
     |labels|² — trivial at any corpus size."""
     e = load(spark, sf_dir, "embeddings")
-    qe = F.transform(
-        as_double("embedding"), lambda x: F.round(x * _CENT_SCALE).cast("long")
-    )
+    qe = _quantize(as_double("embedding"))
     qv = e.select("vec_id", "label", qe.alias("qe"))
     cint = (
         qv.select("label", F.posexplode("qe").alias("pos", "q"))
@@ -5435,9 +5316,7 @@ def emb_random_projection_distortion(spark, sf_dir):
     broadcast as literals, the LSH-plane discipline); the pair sample
     joins on an id shift — O(n), no quadratic anywhere."""
     pl = _jl_planes()
-    qe = F.transform(
-        as_double("embedding"), lambda x: F.round(x * _CENT_SCALE).cast("long")
-    )
+    qe = _quantize(as_double("embedding"))
 
     def dotp(plane):
         lit = F.array(*[F.lit(x).cast("long") for x in plane])
@@ -5560,9 +5439,7 @@ def sim_mmr_diversified_topk(spark, sf_dir):
     why bounding it to a small candidate pool is the standard production
     shape."""
     e = load(spark, sf_dir, "embeddings")
-    qe = F.transform(
-        as_double("embedding"), lambda x: F.round(x * _CENT_SCALE).cast("long")
-    )
+    qe = _quantize(as_double("embedding"))
     qv = e.select("vec_id", qe.alias("qe"))
     pv = qv.filter(F.col("vec_id") == _PROBE_ID).select(
         F.col("qe").alias("pq")
@@ -5896,10 +5773,7 @@ def emb_ivf_cell_balance(spark, sf_dir):
         "vec_id",
         "label",
         as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
+        _quantize(as_double("embedding")).alias("qe"),
     ).localCheckpoint(eager=True)
     seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
     cents = (
@@ -6187,10 +6061,7 @@ def emb_kmeans_elbow_curve(spark, sf_dir):
     e_q = e.select(
         "vec_id",
         as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
+        _quantize(as_double("embedding")).alias("qe"),
     ).localCheckpoint(eager=True)
     rows = None
     for k in _ELBOW_KS:
@@ -6317,10 +6188,7 @@ def emb_pq_code_balance(spark, sf_dir):
         load(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
-            F.transform(
-                as_double("embedding"),
-                lambda x: F.round(x * _CENT_SCALE).cast("long"),
-            ).alias("qe"),
+            _quantize(as_double("embedding")).alias("qe"),
         )
         .localCheckpoint(eager=True)
     )

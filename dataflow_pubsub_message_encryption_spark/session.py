@@ -75,10 +75,9 @@ def get_session(app_name: str = "spark-graft", cpus: int | None = None) -> Spark
             # its right size tracks workload DIVERSITY (number of
             # distinct plan shapes a long-lived app serves), not data
             # volume or core count; 4096 bounds it at a few hundred MB
-            # of compiled classes in the worst case. Parameterized for
-            # deployments with narrower/wider query mixes.
+            # of compiled classes in the worst case.
             "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
+            "4096",
         )
     )
     for k, v in RUNTIME_CONFS.items():

@@ -131,3 +131,26 @@ def test_hmac_only_worker_gets_the_fix(spark, fresh_workers):
     assert one.select(hmac_hex(F.lit("x"))).collect()
     state = one.select(probe(F.lit("x")).alias("s")).first().s
     assert state == "dataflow_pubsub_message_encryption_spark._zipcache True"
+
+
+@needs_backport
+def test_udf_surface_only_worker_gets_the_fix(spark, sf_dir, fresh_workers):
+    """A new worker pool that has run only ``udf_surface`` (a vectorized
+    and a row-at-a-time UDF) has imported the engine, so it has the fix:
+    both UDF kernels are module-level functions."""
+    from dataflow_pubsub_message_encryption_spark.operators.relational import (
+        udf_surface,
+    )
+
+    def worker_state(s: pd.Series) -> pd.Series:  # nested: shipped by value
+        import sys
+        import zipimport
+
+        fn = zipimport.zipimporter.invalidate_caches
+        pkg = "dataflow_pubsub_message_encryption_spark" in sys.modules
+        return s.map(lambda _: f"{fn.__module__} {pkg}")
+
+    assert udf_surface(spark, sf_dir).collect()
+    probe = F.pandas_udf(worker_state, "string")
+    state = spark.range(0, 1, 1, 1).select(probe(F.lit("x")).alias("s")).first().s
+    assert state == "dataflow_pubsub_message_encryption_spark._zipcache True"
