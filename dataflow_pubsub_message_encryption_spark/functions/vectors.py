@@ -43,7 +43,7 @@ def dot32(a: Column, b: Column) -> Column:
     float32 through the exchange, 404.2 → 274.9 compressed B/row, one
     per-ROW cast above it) — per-element casting re-pays the cast per
     candidate pair (≈ occupancy/2 × corpus evaluations) and measured
-    20% slower at 25× (tools/slope_runs/r14/dot32_cost.log)."""
+    20% slower at 25×."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),

@@ -1723,8 +1723,7 @@ def _dsir_weights(spark, sf_dir, target: str):
     # r15-opt A/B measured the split three-aggregate form (raw census +
     # filtered target census + global totals, each re-tokenizing the
     # corpus) at 4 token-grain passes per weights instantiation vs 2
-    # here, outputs row-identical at all three SFs
-    # (tools/slope_runs/r15opt3/ab_dsir_fused.log); the law test pins
+    # here, outputs row-identical at all three SFs; the law test pins
     # per/tot ≡ the split form at both graded fixtures.
     per = bk.groupBy("b").agg(
         F.count("*").alias("nr"), F.count_if(is_target).alias("nt")
@@ -1875,7 +1874,7 @@ def corpus_dsir_resample_mix_shift(spark, sf_dir):
     # pin). Materializing (source, wi) costs one narrow write of n rows;
     # re-deriving it costs a full corpus tokenize — the pin side wins at
     # every scale past the fixture and measured at-or-faster on both
-    # fixture layouts (tools/slope_runs/r15opt3/ab_dsir_fused.log).
+    # fixture layouts.
     wint = pin(
         w.select(
             "source",

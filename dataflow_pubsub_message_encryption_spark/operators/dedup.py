@@ -1372,33 +1372,40 @@ def dedup_minhash_estimator_quality(spark, sf_dir):
     estimator, banding, and recall, all EXACT-checked. Shape: the
     verified-pair set (ids + jac) joins the signature table twice —
     ids-and-signature payloads, corpus text untouched."""
+    lanes = _lane_matches(F.col("sa"), F.col("sb"))
+    return _verified_pair_sigs(spark, sf_dir).select(
+        "doc_a",
+        "doc_b",
+        lanes.cast("int").alias("n_lanes_match"),
+        F.round(lanes.cast("double") / _N_PERMS, 6).alias("est_jac"),
+        F.col("jac").alias("true_jac"),
+    )
+
+
+def _verified_pair_sigs(spark, sf_dir):
+    """The verified ``dedup_minhash_lsh_pairs`` (doc_a, doc_b, jac) with
+    both documents' MinHash signatures attached as ``sa`` and ``sb``."""
     pairs = QUERIES["dedup_minhash_lsh_pairs"](spark, sf_dir)
     sig = (
         load(spark, sf_dir, "documents")
         .select("doc_id", _minhash_sig().alias("sig"))
         .localCheckpoint(eager=True)
     )
-    lanes = F.aggregate(
-        F.zip_with("sa", "sb", lambda x, y: (x == y).cast("int")),
+    return pairs.join(
+        sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa")),
+        "doc_a",
+    ).join(
+        sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb")),
+        "doc_b",
+    )
+
+
+def _lane_matches(a, b):
+    """Number of positions at which two equal-length arrays agree."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
         F.lit(0),
         lambda acc, x: acc + x,
-    )
-    return (
-        pairs.join(
-            sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa")),
-            "doc_a",
-        )
-        .join(
-            sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            lanes.cast("int").alias("n_lanes_match"),
-            F.round(lanes.cast("double") / _N_PERMS, 6).alias("est_jac"),
-            F.col("jac").alias("true_jac"),
-        )
     )
 
 
@@ -1457,45 +1464,20 @@ def dedup_minhash_bbit(spark, sf_dir):
     doesn't; the join shapes are identical to
     ``dedup_minhash_estimator_quality`` (ids + signatures, text
     untouched)."""
-    pairs = QUERIES["dedup_minhash_lsh_pairs"](spark, sf_dir)
-    sig = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", _minhash_sig().alias("sig"))
-        .localCheckpoint(eager=True)
-    )
     bit = lambda s: (  # noqa: E731
         F.instr(F.lit("0123456789abcdef"), F.substring(s, 16, 1)) - 1
     ) % 2
     bits = lambda c: F.transform(c, bit)  # noqa: E731
-    lanes = F.aggregate(
-        F.zip_with("sa", "sb", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    bmatch = F.aggregate(
-        F.zip_with(bits(F.col("sa")), bits(F.col("sb")),
-                   lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        pairs.join(
-            sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa")),
-            "doc_a",
-        )
-        .join(
-            sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            lanes.cast("int").alias("n_lanes_match"),
-            bmatch.cast("int").alias("n_bits_match"),
-            F.round(lanes.cast("double") / _N_PERMS, 6).alias("est_full"),
-            F.round(2.0 * bmatch / _N_PERMS - 1.0, 6).alias("est_1bit"),
-            F.col("jac").alias("true_jac"),
-        )
+    lanes = _lane_matches(F.col("sa"), F.col("sb"))
+    bmatch = _lane_matches(bits(F.col("sa")), bits(F.col("sb")))
+    return _verified_pair_sigs(spark, sf_dir).select(
+        "doc_a",
+        "doc_b",
+        lanes.cast("int").alias("n_lanes_match"),
+        bmatch.cast("int").alias("n_bits_match"),
+        F.round(lanes.cast("double") / _N_PERMS, 6).alias("est_full"),
+        F.round(2.0 * bmatch / _N_PERMS - 1.0, 6).alias("est_1bit"),
+        F.col("jac").alias("true_jac"),
     )
 
 
@@ -1806,10 +1788,9 @@ def weighted_jaccard_pairs(spark, docs):
     # pin the df-capped weighted token stream: its three consumers (the
     # per-doc weight sums and BOTH self-join sides) each re-instantiated
     # the full scan + tokenize + cap join — the r15-opt A/B read the pin
-    # at −17% on both fixture layouts (1.86→1.55 / 2.73→2.27 s med,
-    # tools/slope_runs/r15opt3/ab_q20_pin.log); pinning the PRE-cap
-    # stream instead was measured worse (the uncapped token table is the
-    # one not worth materializing). At 100 TB the trade is one
+    # at −17% on both fixture layouts (1.86→1.55 / 2.73→2.27 s med);
+    # pinning the PRE-cap stream instead was measured worse (the uncapped
+    # token table is the one not worth materializing). At 100 TB the trade is one
     # materialization of the capped stream vs two recomputes of the
     # corpus tokenize.
     from ..materialize import pin

@@ -78,11 +78,10 @@ def connected_components(pairs: DataFrame, max_rounds: int = _MAX_ROUNDS):
     # select/union/distinct over the PINNED initial edges, so an eager pin
     # here is a pure extra job + block write per execution (measured
     # interleaved A/B at sf0.1: q12 med 5.43 → 4.99 single-file /
-    # 5.38 → 4.74 multifile with labels identical at all three SFs —
-    # tools/slope_runs/r15opt4/ab_cc_jobs.log). Fusing the per-round
-    # stats pin with the violations count (persist + count-as-
-    # materializer) was measured in the same A/B and REJECTED: it gives
-    # the win back (med 5.42/5.10).
+    # 5.38 → 4.74 multifile with labels identical at all three SFs).
+    # Fusing the per-round stats pin with the violations count (persist
+    # + count-as-materializer) was measured in the same A/B and
+    # REJECTED: it gives the win back (med 5.42/5.10).
     nodes = (
         edges.select(F.col("u").alias("node"))
         .union(edges.select("v"))
@@ -1030,9 +1029,8 @@ def graph_degree_histogram(spark, sf_dir):
     # module: without it the degree union (2×) times the tot/bucket
     # double-read re-instantiated the WHOLE upstream LSH pipeline 4× —
     # 16 documents scans in the audited plan, 4 with the pin (r15-opt
-    # full-registry scan census, tools/slope_runs/r15opt3/
-    # scan_census_all.log; this body was the one und site missing the
-    # module's standard pin).
+    # full-registry scan census; this body was the one und site missing
+    # the module's standard pin).
     und = pin(
         pairs.filter(F.col("doc_a") != F.col("doc_b"))
         .select(

@@ -1185,18 +1185,48 @@ def join_bloom_prefilter(spark, sf_dir):
     right shape anyway whenever |keys| ≪ |rows|. With high-cardinality
     keys (|keys| ≈ |rows|) the per-row fast-hash form is the only
     option — the word-table arithmetic is unchanged."""
-    dim = (
+    return _bloom_census(
+        spark, sf_dir, _bloom_dim(spark, sf_dir), _bloom_positions, _BLOOM_K
+    )
+
+
+def _bloom_dim(spark, sf_dir):
+    """The selective dim side of the bloom keys: suppliers above
+    ``_BLOOM_BAL``."""
+    return (
         load(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") > _BLOOM_BAL)
         .select("s_suppkey")
     )
-    dimpos = dim.select(
+
+
+def _bloom_positions(df, key: str):
+    """(key, pos) rows: the fixed key's ``_BLOOM_K`` digest-sliced bit
+    positions per key."""
+    return df.select(
+        key,
         F.explode(
-            F.array(*[_bloom_pos_col("s_suppkey", j) for j in range(_BLOOM_K)])
-        ).alias("pos")
+            F.array(*[_bloom_pos_col(key, j) for j in range(_BLOOM_K)])
+        ).alias("pos"),
     )
+
+
+def _bloom_census(spark, sf_dir, dim, positions, k: int):
+    """The bloom prefilter census over lineitem ⋈ ``dim``: fold the dim
+    keys' bit positions (``positions(df, key)`` gives k (key, pos) rows
+    per key) into 62-bit words, test every DISTINCT fact key against
+    them, and count fact rows, bloom passes, true matches, false
+    positives and the true-match revenue.
+
+    The bloom is evaluated once per DISTINCT key (map-side partial
+    distinct), not per fact row — see ``join_bloom_prefilter``'s
+    hashing-placement note. All k bit tests go through ONE broadcast join
+    over the exploded (key, position) pairs: a key passes iff every
+    position's bit is set (count of set hits == k), which costs one
+    broadcast exchange instead of k."""
     words = (
-        dimpos.select(
+        positions(dim, "s_suppkey")
+        .select(
             F.expr("pos DIV 62").alias("w"),
             F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 62 AS INT))").alias("b"),
         )
@@ -1206,30 +1236,13 @@ def join_bloom_prefilter(spark, sf_dir):
     probe = load(spark, sf_dir, "lineitem").select(
         "l_suppkey", dec4("l_extendedprice").alias("price")
     )
-    # bloom evaluated once per DISTINCT key (map-side partial distinct),
-    # not per fact row — see the hashing-placement note above. All
-    # _BLOOM_K bit tests go through ONE broadcast join over the exploded
-    # (key, position) pairs: a key passes iff every position's bit is set
-    # (count of set hits == K), which costs one broadcast exchange
-    # instead of K.
-    keypos = (
-        probe.select("l_suppkey")
-        .distinct()
-        .select(
-            "l_suppkey",
-            F.explode(
-                F.array(
-                    *[_bloom_pos_col("l_suppkey", j) for j in range(_BLOOM_K)]
-                )
-            ).alias("pos"),
-        )
-    )
     kpass = (
-        keypos.join(F.broadcast(words), F.expr("pos DIV 62") == F.col("w"))
+        positions(probe.select("l_suppkey").distinct(), "l_suppkey")
+        .join(F.broadcast(words), F.expr("pos DIV 62") == F.col("w"))
         .filter(F.expr("(shiftright(bm, CAST(pos % 62 AS INT)) & 1) = 1"))
         .groupBy("l_suppkey")
         .agg(F.count("*").alias("hits"))
-        .filter(F.col("hits") == _BLOOM_K)
+        .filter(F.col("hits") == k)
         .select("l_suppkey")
     )
     # ONE fact scan for the whole census: membership and truth ride in as
@@ -1237,29 +1250,24 @@ def join_bloom_prefilter(spark, sf_dir):
     # false negatives — so the true flag implies the bloom flag), and the
     # four statistics fold in a single conditional aggregate instead of
     # four scans of the serial single-row-group fixture file.
-    flagged = (
-        probe.join(
-            F.broadcast(kpass.withColumn("bloom_hit", F.lit(1))),
-            "l_suppkey",
-            "left",
-        )
-        .join(
-            F.broadcast(
-                dim.select(F.col("s_suppkey").alias("l_suppkey")).withColumn(
-                    "true_hit", F.lit(1)
-                )
-            ),
-            "l_suppkey",
-            "left",
-        )
+    flagged = probe.join(
+        F.broadcast(kpass.withColumn("bloom_hit", F.lit(1))),
+        "l_suppkey",
+        "left",
+    ).join(
+        F.broadcast(
+            dim.select(F.col("s_suppkey").alias("l_suppkey")).withColumn(
+                "true_hit", F.lit(1)
+            )
+        ),
+        "l_suppkey",
+        "left",
     )
     return flagged.agg(
         F.count("*").alias("n_fact_rows"),
         F.count("bloom_hit").alias("n_bloom_pass"),
         F.count("true_hit").alias("n_true_match"),
-        (F.count("bloom_hit") - F.count("true_hit")).alias(
-            "n_false_positives"
-        ),
+        (F.count("bloom_hit") - F.count("true_hit")).alias("n_false_positives"),
         money(
             F.coalesce(
                 F.sum(F.when(F.col("true_hit") == 1, F.col("price"))), F.lit(0)
@@ -1375,7 +1383,7 @@ def _global_adjacent_pairs(df, order_cols, keep):
     # exactly as it did from the two separate filters). Outputs proven
     # identical at all three SFs for both suffix consumers; timing
     # mildly positive on a jittery box (q23 med 2.95 → 2.77, min
-    # 2.66 → 2.51; tools/slope_runs/r15opt4/ab_adj_one_collect.log) —
+    # 2.66 → 2.51) —
     # shipped for the removed bounded job, the q21-precedent class.
     rows_b = (
         marked.filter(F.col("_has_next").isNull() | (F.col("_rn") == 1))
@@ -1539,7 +1547,7 @@ def rfm_segmentation_scalable(spark, sf_dir):
     composition below is built after all three return. Measured
     interleaved A/B at sf0.1: med 2.02 → 1.41 single-file / 2.59 → 1.87
     multifile, pairwise-dominant on every rep, outputs identical at all
-    three SFs (tools/slope_runs/r15opt4/ab_rfm_overlap.log)."""
+    three SFs."""
     per_cust = (
         load(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -1639,11 +1647,7 @@ def join_bloom_prefilter_fast(spark, sf_dir):
     the fixture (a dropped true match would split the hash); the
     pass-rate internals (false positives etc.) are pinned by invariant
     tests in tests/test_scale_ops.py rather than an oracle."""
-    dim = (
-        load(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") > _BLOOM_BAL)
-        .select("s_suppkey")
-    )
+    dim = _bloom_dim(spark, sf_dir)
     dimpos = dim.select(
         F.explode(
             F.array(
@@ -1845,73 +1849,21 @@ def join_bloom_prefilter_auto(spark, sf_dir):
     pass set stays ~|true matches| instead of drifting toward the full
     fact table. Measured in the r14 slope census (supplier co-shift):
     see SCALING.md §19."""
-    dim = (
-        load(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") > _BLOOM_BAL)
-        .select("s_suppkey")
-    )
+    dim = _bloom_dim(spark, sf_dir)
     n0, m, k = _bloom_auto_params(dim.count())  # bounded driver scalar
+    jgrid = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("j")
 
-    def pos_col(key: str):
+    def positions(df, key: str):
         h = F.sha2(
             F.concat(
                 F.col(key).cast("string"), F.lit("|"), F.col("j").cast("string")
             ),
             256,
         )
-        return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % m
+        pos = F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % m
+        return df.select(key, jgrid).select(key, pos.alias("pos"))
 
-    jgrid = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("j")
-    dimpos = dim.select("s_suppkey", jgrid).select(pos_col("s_suppkey").alias("pos"))
-    words = (
-        dimpos.select(
-            F.expr("pos DIV 62").alias("w"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 62 AS INT))").alias("b"),
-        )
-        .groupBy("w")
-        .agg(F.bit_or("b").alias("bm"))
-    )
-    probe = load(spark, sf_dir, "lineitem").select(
-        "l_suppkey", dec4("l_extendedprice").alias("price")
-    )
-    keypos = (
-        probe.select("l_suppkey")
-        .distinct()
-        .select("l_suppkey", jgrid)
-        .select("l_suppkey", pos_col("l_suppkey").alias("pos"))
-    )
-    kpass = (
-        keypos.join(F.broadcast(words), F.expr("pos DIV 62") == F.col("w"))
-        .filter(F.expr("(shiftright(bm, CAST(pos % 62 AS INT)) & 1) = 1"))
-        .groupBy("l_suppkey")
-        .agg(F.count("*").alias("hits"))
-        .filter(F.col("hits") == k)
-        .select("l_suppkey")
-    )
-    flagged = probe.join(
-        F.broadcast(kpass.withColumn("bloom_hit", F.lit(1))),
-        "l_suppkey",
-        "left",
-    ).join(
-        F.broadcast(
-            dim.select(F.col("s_suppkey").alias("l_suppkey")).withColumn(
-                "true_hit", F.lit(1)
-            )
-        ),
-        "l_suppkey",
-        "left",
-    )
-    rep = flagged.agg(
-        F.count("*").alias("n_fact_rows"),
-        F.count("bloom_hit").alias("n_bloom_pass"),
-        F.count("true_hit").alias("n_true_match"),
-        (F.count("bloom_hit") - F.count("true_hit")).alias("n_false_positives"),
-        money(
-            F.coalesce(
-                F.sum(F.when(F.col("true_hit") == 1, F.col("price"))), F.lit(0)
-            )
-        ).alias("revenue"),
-    )
+    rep = _bloom_census(spark, sf_dir, dim, positions, k)
     # derived sizing EXPOSED as result columns — the oracle re-derives them
     # in SQL, so the rule itself is driver-graded, not just the census
     return rep.select(

@@ -63,6 +63,13 @@ def _quantize(col):
     return F.transform(col, lambda x: F.round(x * _CENT_SCALE).cast("long"))
 
 
+def _dequantize():
+    """The fixed-point centroid column ``cq`` back as doubles — the Spark
+    twin of the oracles' ``list_transform(cq, q -> CAST(q AS DOUBLE) /
+    _CENT_SCALE)``."""
+    return F.transform("cq", lambda q: q.cast("double") / _CENT_SCALE)
+
+
 _KM_FIXTURE_N = 500  # both graded fixtures (sf0.001/sf0.01) carry 500 vectors
 
 
@@ -121,6 +128,17 @@ def sim_cosine_topk(spark, sf_dir):
     is joined via broadcast (1-row dimension); the similarity map is
     codegen'd; the global top-k is TakeOrderedAndProject (per-partition
     heaps, no global sort)."""
+    return (
+        _probe_cosines(spark, sf_dir)
+        .orderBy(F.desc("cos_sim"), "vec_id")
+        .limit(_TOPK)
+    )
+
+
+def _probe_cosines(spark, sf_dir):
+    """(vec_id, label, cos_sim) of every non-probe vector against the
+    probe vec_id=0: the probe row joins as a 1-row broadcast and the
+    6dp-rounded cosine is one codegen'd map."""
     e = load(spark, sf_dir, "embeddings")
     probe = e.filter(F.col("vec_id") == _PROBE_ID).select(
         as_double("embedding").alias("probe_emb")
@@ -135,8 +153,6 @@ def sim_cosine_topk(spark, sf_dir):
                 cosine(as_double("embedding"), F.col("probe_emb")), 6
             ).alias("cos_sim"),
         )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(_TOPK)
     )
 
 
@@ -274,6 +290,15 @@ def sim_ann_lsh_topk(spark, sf_dir):
     engines). At scale, bucket is the partition key: partition pruning
     turns top-k into a single-bucket scan; multi-probe (hamming-1 buckets)
     is the recall knob."""
+    return _lsh_probe_topk(spark, sf_dir, F.col("bucket"))
+
+
+def _lsh_probe_topk(spark, sf_dir, p_bucket):
+    """Hyperplane-LSH top-k: every vector's ``_N_PLANES``-bit sign bucket,
+    then the exact cosine top-k among the vectors whose bucket is one the
+    probe searches. ``p_bucket`` is evaluated on the probe row (its
+    ``bucket`` column in scope) and yields the searched buckets; they
+    join as a broadcast."""
     planes = _planes()
     e = load(spark, sf_dir, "embeddings")
     emb = as_double("embedding")
@@ -285,7 +310,7 @@ def sim_ann_lsh_topk(spark, sf_dir):
         "vec_id", "label", "embedding", F.concat(*bits).alias("bucket")
     )
     probe = b.filter(F.col("vec_id") == _PROBE_ID).select(
-        F.col("bucket").alias("p_bucket"), as_double("embedding").alias("pe")
+        p_bucket.alias("p_bucket"), as_double("embedding").alias("pe")
     )
     return (
         b.join(F.broadcast(probe), F.col("bucket") == F.col("p_bucket"))
@@ -349,14 +374,6 @@ def sim_ann_multiprobe_topk(spark, sf_dir):
     bucket stays the partition key — multi-probe reads nprobe partitions
     instead of one, no shuffle-shape change; candidates from the 9
     bucket-joins share one TakeOrderedAndProject."""
-    planes = _planes()
-    e = load(spark, sf_dir, "embeddings")
-    emb = as_double("embedding")
-    bits = [
-        F.when(cosine_free_dot(emb, plane) > 0, "1").otherwise("0")
-        for plane in planes
-    ]
-    b = e.select("vec_id", "label", "embedding", F.concat(*bits).alias("bucket"))
     flips = [F.col("bucket")]
     for i in range(1, _N_PLANES + 1):
         flips.append(
@@ -366,25 +383,8 @@ def sim_ann_multiprobe_topk(spark, sf_dir):
                 F.substring("bucket", i + 1, _N_PLANES),
             )
         )
-    probe = (
-        b.filter(F.col("vec_id") == _PROBE_ID)
-        .select(
-            F.explode(F.array_distinct(F.array(*flips))).alias("p_bucket"),
-            as_double("embedding").alias("pe"),
-        )
-    )
-    return (
-        b.join(F.broadcast(probe), F.col("bucket") == F.col("p_bucket"))
-        .filter(F.col("vec_id") != _PROBE_ID)
-        .select(
-            "vec_id",
-            "bucket",
-            F.round(cosine(as_double("embedding"), F.col("pe")), 6).alias(
-                "cos_sim"
-            ),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(_TOPK)
+    return _lsh_probe_topk(
+        spark, sf_dir, F.explode(F.array_distinct(F.array(*flips)))
     )
 
 
@@ -515,7 +515,7 @@ def _km_assign(e_q, cents):
     sampled-IVF build's cost); this fold is kept as the law-test twin —
     tests pin fold ≡ Arrow on every (vec_id, cell) at both graded
     fixtures, which is what lets the Arrow stage claim exactness."""
-    cd = F.transform("cq", lambda q: q.cast("double") / _CENT_SCALE)
+    cd = _dequantize()
     return (
         e_q.join(F.broadcast(cents))
         .select(
@@ -541,9 +541,8 @@ def _km_assign_arrow(e_q, cents):
     measured the interpreted broadcast-centroid fold at 91% of the
     sampled-IVF query's cost at 200k vectors (86-96 s of ~95 s) — the
     fold evaluates a 64-element zip_with/aggregate expression tree n*k
-    times in the interpreter. The prototyped replacement
-    (tools/slope_runs/r14/proto_matmul_assign.py) read 1.5-5.5 s vs
-    73 s — up to 48x — at 200,000/200,000 cell agreement. Hierarchical
+    times in the interpreter. The prototyped replacement read 1.5-5.5 s
+    vs 73 s — up to 48x — at 200,000/200,000 cell agreement. Hierarchical
     two-level assignment was prototyped too and LOSES (17.9% agreement:
     near-isotropic 64-dim embeddings don't cluster hierarchically);
     this is the exact fix, not an approximation.
@@ -641,9 +640,8 @@ def _km_train(spark, e_q, k: int, stride: int):
     never distributed). The distributed loop paid, PER ITERATION, one
     centroid collect + one Arrow assignment pass + one (cell, pos)
     shuffle + one pin over a few-hundred-row sample — measured 2.4-3.7 s
-    of pure job overhead per train at sf0.001-sf0.1 vs 0.3-0.4 s local
-    (tools/slope_runs/r15opt2/proto_local_lloyd.log). The arithmetic is
-    the engine's EXACTLY: the `_km_assign_arrow` 6dp-rounded-cosine
+    of pure job overhead per train at sf0.001-sf0.1 vs 0.3-0.4 s local.
+    The arithmetic is the engine's EXACTLY: the `_km_assign_arrow` 6dp-rounded-cosine
     first-max argmax (cells ascending) and the `_km_update` floored
     integer mean (int64 sums ≤ 65k·2e6 ≈ 1.3e11 — exact in float64
     division); centroid sets are law-pinned bit-identical to the
@@ -708,7 +706,7 @@ def _km_ivf_serve(e_q, cents, nprobe: int):
     probe = e_q.filter(F.col("vec_id") == _PROBE_ID).select(
         F.col("de").alias("pe")
     )
-    cd = F.transform("cq", lambda x: x.cast("double") / _CENT_SCALE)
+    cd = _dequantize()
     best_cell = (
         cents.join(F.broadcast(probe))
         .select("cell", F.round(cosine(cd, F.col("pe")), 6).alias("cs"))
@@ -1070,10 +1068,10 @@ def _emb_lsh_pairs_body(spark, sf_dir, bits: int, n: int | None = None):
     join, per-vector norms precomputed so the pair stage does one fold.
 
     Shuffle economics (VERDICT r13 item 1 — every alternative measured
-    before acting, logs in tools/slope_runs/r14/):
+    before acting):
 
     - The re-join-vectors-by-id shape the fixed key's docstring used to
-      promise was implemented and REJECTED (rejoin_vs_carry.log): it
+      promise was implemented and REJECTED: it
       shuffles the CANDIDATE pairs (Σb²/2 ≈ occupancy/2 × corpus —
       7,781 pairs = 15.6× the 500 corpus rows at sf0.01, ~80× at the
       auto rule's occupancy target) twice plus the vector table for the
@@ -1082,10 +1080,10 @@ def _emb_lsh_pairs_body(spark, sf_dir, bits: int, n: int | None = None):
       every scale.
     - The carried WIDTH is the real lever: the raw ``array<float>``
       rides the shuffle (4 B/elem), measured 404.2 → 274.9 compressed
-      B/row (−32%, shuffle_q32_{before,after}.log), one ReusedExchange
+      B/row (−32%), one ReusedExchange
       before and after.
     - WHERE the float→double cast happens is regime-dependent
-      (dot32_cost.log; float→double is exact, identical accumulation
+      (float→double is exact, identical accumulation
       either way, so all three variants are oracle-identical). Casting
       per ELEMENT inside the pair fold re-pays it per candidate pair —
       20% slower at 25× (4.18 s vs 3.49 s). Casting once per row above
@@ -1175,7 +1173,7 @@ def dedup_embedding_lsh_auto(spark, sf_dir, n_override: int = None):
     the derivation end to end; law tests pin auto ≡ fixed there plus the
     subset/refinement law at a wider width. Measured at 25×: exponent
     0.31 vs the fixed key's 1.60 (127.8 s → 3.80 s at sf2.5, a 33×
-    speedup, tools/slope_runs/r13/slope_sf25_q32.log). ``n_override``
+    speedup). ``n_override``
     exists for the law tests.
 
     Scale shape: identical to the fixed key at any derived width — one
@@ -1954,13 +1952,86 @@ _PQ_SUB = 16  # dims per subspace (4 x 16 = 64)
 _PQ_K = 8  # codewords per subspace
 
 
-def _pq_il2_sql(a: str, b: str) -> str:
-    """DuckDB: integer squared-L2 between two int64 lists of length
-    {_PQ_SUB}."""
+def _il2_sql(a: str, b: str, n: int) -> str:
+    """DuckDB: integer squared-L2 between two int64 lists of length n."""
     return (
-        f"list_aggregate(list_transform(generate_series(1, {_PQ_SUB}),"
+        f"list_aggregate(list_transform(generate_series(1, {n}),"
         f" i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), 'sum')"
     )
+
+
+def _il2(a, b):
+    """Spark: integer squared-L2 between two int64 arrays (exact int64
+    arithmetic — the same accumulation the oracles' list sums perform)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+
+
+def _pq_subvectors(df, vec: str, keys: list[str]):
+    """Split the 64-dim int64 column ``vec`` into its ``_PQ_M``
+    subvectors: one (keys..., m, sv) row per subspace."""
+    return df.select(
+        *keys,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(m).alias("m"),
+                        F.slice(vec, m * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
+                    )
+                    for m in range(_PQ_M)
+                ]
+            )
+        ).alias("ms"),
+    ).select(*keys, "ms.m", "ms.sv")
+
+
+def _pq_assign(subs, codebook, keys: list[str]):
+    """Nearest codeword per subvector: (keys..., m, k) by integer
+    squared-L2, ties to the lower k. The argmin is a min_by reduction —
+    partial-aggregable, so the n·M·K scored rows collapse map-side to one
+    row per subvector before the exchange, where a row_number window
+    would shuffle and sort them all. min of the (dist, k) struct is the
+    window's (dist, k) ordering and k is unique within a group, so both
+    forms pick the same row (law-tested)."""
+    return (
+        subs.join(F.broadcast(codebook), "m")
+        .select(*keys, "m", "k", _il2(F.col("sv"), F.col("cw")).alias("dist"))
+        .groupBy(*keys, "m")
+        .agg(F.min_by("k", F.struct("dist", "k")).alias("k"))
+        .select(*keys, "m", "k")
+    )
+
+
+def _pq_train_encode(subs, keys: list[str]):
+    """PQ training and encoding over ``_pq_subvectors`` rows: codebooks
+    seeded with the subvectors of vec_id < ``_PQ_K``, one Lloyd round
+    (assign + floored integer mean per (m, k, pos)), then every
+    subvector's final code. Returns (codebook (m, k, cw), codes
+    (keys..., m, k)); the M x K-row codebook is pinned because every
+    caller reads it again after the encode."""
+    cb0 = subs.filter(F.col("vec_id") < _PQ_K).select(
+        "m", F.col("vec_id").alias("k"), F.col("sv").alias("cw")
+    )
+    cb1 = (
+        _pq_assign(subs, cb0, keys)
+        .join(subs, ["vec_id", "m"])
+        .select("m", "k", F.posexplode("sv").alias("pos", "q"))
+        .groupBy("m", "k", "pos")
+        .agg(
+            F.floor(F.sum("q").cast("double") / F.count("*"))
+            .cast("long")
+            .alias("cp")
+        )
+        .groupBy("m", "k")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "cp"))).alias("p"))
+        .select("m", "k", F.transform("p", lambda s: s.getField("cp")).alias("cw"))
+        .localCheckpoint(eager=True)
+    )
+    return cb1, _pq_assign(subs, cb1, keys)
 
 
 @query(
@@ -1985,7 +2056,7 @@ def _pq_il2_sql(a: str, b: str) -> str:
       SELECT vec_id, m, k FROM (
         SELECT s.vec_id, s.m, c.k,
                row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {_pq_il2_sql('s.sv', 'c.cw')}, c.k) AS rn
+                 ORDER BY {_il2_sql('s.sv', 'c.cw', _PQ_SUB)}, c.k) AS rn
         FROM subs s JOIN cb0 c ON c.m = s.m
       ) WHERE rn = 1
     ),
@@ -2003,13 +2074,13 @@ def _pq_il2_sql(a: str, b: str) -> str:
       SELECT vec_id, m, k FROM (
         SELECT s.vec_id, s.m, c.k,
                row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {_pq_il2_sql('s.sv', 'c.cw')}, c.k) AS rn
+                 ORDER BY {_il2_sql('s.sv', 'c.cw', _PQ_SUB)}, c.k) AS rn
         FROM subs s JOIN cb1 c ON c.m = s.m
       ) WHERE rn = 1
     ),
     probe AS (SELECT m, sv FROM subs WHERE vec_id = {_PROBE_ID}),
     ptab AS (
-      SELECT c.m, c.k, {_pq_il2_sql('p.sv', 'c.cw')} AS pd
+      SELECT c.m, c.k, {_il2_sql('p.sv', 'c.cw', _PQ_SUB)} AS pd
       FROM cb1 c JOIN probe p ON p.m = c.m
     ),
     adc AS (
@@ -2054,62 +2125,13 @@ def sim_pq_adc_topk(spark, sf_dir):
         )
         .localCheckpoint(eager=True)
     )
-    subs = e_q.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("qe", m * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
-                    )
-                    for m in range(_PQ_M)
-                ]
-            )
-        ).alias("ms"),
-    ).select("vec_id", "ms.m", "ms.sv")
-
-    def il2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    def assign(codebook):
-        w = Window.partitionBy("vec_id", "m").orderBy("dist", "k")
-        return (
-            subs.join(F.broadcast(codebook), "m")
-            .select("vec_id", "m", "k", il2(F.col("sv"), F.col("cw")).alias("dist"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "m", "k")
-        )
-
-    cb0 = subs.filter(F.col("vec_id") < _PQ_K).select(
-        "m", F.col("vec_id").alias("k"), F.col("sv").alias("cw")
-    )
-    cb1 = (
-        assign(cb0)
-        .join(subs, ["vec_id", "m"])
-        .select("m", "k", F.posexplode("sv").alias("pos", "q"))
-        .groupBy("m", "k", "pos")
-        .agg(
-            F.floor(F.sum("q").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("cp")
-        )
-        .groupBy("m", "k")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cp"))).alias("p"))
-        .select("m", "k", F.transform("p", lambda s: s.getField("cp")).alias("cw"))
-        .localCheckpoint(eager=True)  # M x K rows; 3 consumers below
-    )
-    enc = assign(cb1)
+    subs = _pq_subvectors(e_q, "qe", ["vec_id"])
+    cb1, enc = _pq_train_encode(subs, ["vec_id"])
     probe = subs.filter(F.col("vec_id") == _PROBE_ID).select(
         "m", F.col("sv").alias("pv")
     )
     ptab = cb1.join(F.broadcast(probe), "m").select(
-        "m", "k", il2(F.col("pv"), F.col("cw")).alias("pd")
+        "m", "k", _il2(F.col("pv"), F.col("cw")).alias("pd")
     )
     adc = (
         enc.filter(F.col("vec_id") != _PROBE_ID)
@@ -2122,14 +2144,6 @@ def sim_pq_adc_topk(spark, sf_dir):
         adc.withColumn("rk", F.row_number().over(w).cast("int"))
         .filter(F.col("rk") <= _TOPK)
         .select("vec_id", F.col("approx_dist").cast("long").alias("approx_dist"), "rk")
-    )
-
-
-def _il2_sql(a: str, b: str, n: int) -> str:
-    """DuckDB: integer squared-L2 between two int64 lists of length n."""
-    return (
-        f"list_aggregate(list_transform(generate_series(1, {n}),"
-        f" i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), 'sum')"
     )
 
 
@@ -2282,81 +2296,14 @@ def sim_ivf_pq_topk(spark, sf_dir):
         "cell",
         F.zip_with("qe", "cq", lambda a, b: a - b).alias("re"),
     )
-    subs = res.select(
-        "vec_id",
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("re", m * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
-                    )
-                    for m in range(_PQ_M)
-                ]
-            )
-        ).alias("ms"),
-    ).select("vec_id", "cell", "ms.m", "ms.sv")
-
-    def il2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    def assign(codebook):
-        # round-15 opt session 2: min_by replaces the row_number window —
-        # the argmin over the K codewords of each (vec_id, m) subvector
-        # is a partial-aggregable reduction (the `_km_assign` max_by
-        # precedent, r12), so the n·M·K scored rows collapse map-side to
-        # one row per subvector BEFORE the exchange instead of being
-        # shuffled AND sorted by the window; run twice per build
-        # (codebook refine + final encode). min of the (dist, k) struct
-        # is the window's exact (dist, k) ordering — k is unique within
-        # a group, so the argmin is deterministic and the law test pins
-        # row-identity with the window form at both fixtures.
-        return (
-            subs.join(F.broadcast(codebook), "m")
-            .select(
-                "vec_id",
-                "cell",
-                "m",
-                "k",
-                il2(F.col("sv"), F.col("cw")).alias("dist"),
-            )
-            .groupBy("vec_id", "cell", "m")
-            .agg(F.min_by("k", F.struct("dist", "k")).alias("k"))
-            .select("vec_id", "cell", "m", "k")
-        )
-
-    cb0 = subs.filter(F.col("vec_id") < _PQ_K).select(
-        "m", F.col("vec_id").alias("k"), F.col("sv").alias("cw")
-    )
-    cb1 = (
-        assign(cb0)
-        .join(subs, ["vec_id", "m"])
-        .select("m", "k", F.posexplode("sv").alias("pos", "q"))
-        .groupBy("m", "k", "pos")
-        .agg(
-            F.floor(F.sum("q").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("cp")
-        )
-        .groupBy("m", "k")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cp"))).alias("p"))
-        .select(
-            "m", "k", F.transform("p", lambda s: s.getField("cp")).alias("cw")
-        )
-        .localCheckpoint(eager=True)  # M x K rows; 2 consumers below
-    )
-    enc = assign(cb1)
+    subs = _pq_subvectors(res, "re", ["vec_id", "cell"])
+    cb1, enc = _pq_train_encode(subs, ["vec_id", "cell"])
     pv = e_q.filter(F.col("vec_id") == _PROBE_ID).select(
         F.col("qe").alias("pq")
     )
     pcell = (
         cint.crossJoin(F.broadcast(pv))
-        .select("cell", il2(F.col("cq"), F.col("pq")).alias("d"))
+        .select("cell", _il2(F.col("cq"), F.col("pq")).alias("d"))
         .orderBy("d", "cell")
         .limit(_IVFPQ_NPROBE)
         .select("cell")
@@ -2368,22 +2315,9 @@ def sim_ivf_pq_topk(spark, sf_dir):
             "cell", F.zip_with("pq", "cq", lambda a, b: a - b).alias("re")
         )
     )
-    psubs = pres.select(
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("re", m * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
-                    )
-                    for m in range(_PQ_M)
-                ]
-            )
-        ).alias("ms"),
-    ).select("cell", "ms.m", "ms.sv")
+    psubs = _pq_subvectors(pres, "re", ["cell"])
     ptab = cb1.join(F.broadcast(psubs), "m").select(
-        "cell", "m", "k", il2(F.col("sv"), F.col("cw")).alias("pd")
+        "cell", "m", "k", _il2(F.col("sv"), F.col("cw")).alias("pd")
     )
     adc = (
         enc.filter(F.col("vec_id") != _PROBE_ID)
@@ -2638,18 +2572,6 @@ def _gr_isq_sql(a: str, b: str) -> str:
     )
 
 
-def _gr_edges_sql(l: int) -> str:
-    return f"""e{l} AS MATERIALIZED (
-      SELECT src, dst FROM (
-        SELECT a.vec_id AS src, b.vec_id AS dst,
-               row_number() OVER (PARTITION BY a.vec_id
-                 ORDER BY {_gr_isq_sql('a.qe', 'b.qe')}, b.vec_id) AS rk
-        FROM lv a JOIN lv b
-          ON a.lvl >= {l} AND b.lvl >= {l} AND a.vec_id != b.vec_id
-      ) WHERE rk <= {_GR_M}
-    )"""
-
-
 # LSH-blocked graph build (VERDICT r6 item 3): two independent 4-bit
 # hyperplane hash tables over the 8 deterministic planes — candidate edges
 # come from bucket-mates in EITHER table (OR-amplified, the multiprobe
@@ -2681,10 +2603,10 @@ def _lsh_slice_sql(col: str, lo: int, hi: int) -> str:
 
 
 def _grb_edges_sql(l: int) -> str:
-    """Level-l M-NN edges restricted to LSH-bucket-mates: same rank rule
-    as the naive build, candidate set pruned to pairs agreeing in table 1
-    OR table 2 (identical to the union-distinct of the two equi-joins the
-    Spark side runs)."""
+    """Level-l M-NN edges restricted to LSH-bucket-mates: each source
+    keeps its _GR_M nearest by (integer distance, dst id), over the pairs
+    agreeing in table 1 OR table 2 (identical to the union-distinct of
+    the two equi-joins the Spark side runs)."""
     return f"""e{l} AS MATERIALIZED (
       SELECT src, dst FROM (
         SELECT a.vec_id AS src, b.vec_id AS dst,
@@ -2711,22 +2633,18 @@ def _gr_step_sql(t: int, l: int) -> str:
     )"""
 
 
-def _gr_sql(blocked: bool = False, tables=None) -> str:
+def _gr_sql(tables=None) -> str:
     steps, t = [], 0
     for l in _GR_LEVELS:
         for _ in range(_GR_HOPS):
             t += 1
             steps.append(_gr_step_sql(t, l))
     final = t
-    bcols = ""
-    if blocked:
-        (lo1, hi1), (lo2, hi2) = tables if tables is not None else _GRB_TABLES
-        bcols = (
-            f", {_lsh_slice_sql('embedding', lo1, hi1)} AS b1"
-            f", {_lsh_slice_sql('embedding', lo2, hi2)} AS b2"
-        )
-    bpass = ", b1, b2" if blocked else ""
-    edges_sql = _grb_edges_sql if blocked else _gr_edges_sql
+    (lo1, hi1), (lo2, hi2) = tables if tables is not None else _GRB_TABLES
+    bcols = (
+        f", {_lsh_slice_sql('embedding', lo1, hi1)} AS b1"
+        f", {_lsh_slice_sql('embedding', lo2, hi2)} AS b2"
+    )
     return f"""
     WITH qv AS MATERIALIZED (
       SELECT vec_id,
@@ -2736,12 +2654,12 @@ def _gr_sql(blocked: bool = False, tables=None) -> str:
       FROM embeddings
     ),
     lv AS MATERIALIZED (
-      SELECT vec_id, qe{bpass},
+      SELECT vec_id, qe, b1, b2,
              CASE WHEN hv % 16 = 0 THEN 2
                   WHEN hv % 4 = 0 THEN 1
                   ELSE 0 END AS lvl
       FROM (
-        SELECT vec_id, qe{bpass},
+        SELECT vec_id, qe, b1, b2,
                (instr('0123456789abcdef',
                       substr(sha256(CAST(vec_id AS VARCHAR)), 1, 1)) - 1) * 16
                + (instr('0123456789abcdef',
@@ -2753,7 +2671,7 @@ def _gr_sql(blocked: bool = False, tables=None) -> str:
     probe AS MATERIALIZED (
       SELECT qe AS pq FROM qv WHERE vec_id = {_PROBE_ID}
     ),
-    {', '.join(edges_sql(l) for l in _GR_LEVELS)},
+    {', '.join(_grb_edges_sql(l) for l in _GR_LEVELS)},
     c0 AS MATERIALIZED (
       SELECT vec_id FROM lv ORDER BY lvl DESC, vec_id LIMIT 1
     ),
@@ -2777,23 +2695,13 @@ def _gr_sql(blocked: bool = False, tables=None) -> str:
     """
 
 
-def _gr_isq(a, b):
-    """Spark: integer squared-L2 (exact int64 arithmetic — the same
-    accumulation the oracle's list_sum performs)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
-def _gr_nodes(e, blocked: bool = False, tables=None):
+def _gr_nodes(e, tables=None):
     """Quantize + seeded level assignment (sha-nibble of the vec_id: the
     deterministic stand-in for HNSW's geometric level draw — P(lvl>=1)=1/4,
-    P(lvl=2)=1/16, the 'exponentially decaying layer population'). With
-    ``blocked``, each node also carries its LSH table keys (the blocked
-    build's candidate-generation columns); ``tables`` overrides the
-    fixture-tuned ``_GRB_TABLES`` plane slices (the scale knob)."""
+    P(lvl=2)=1/16, the 'exponentially decaying layer population'). Each
+    node also carries its LSH table keys b1, b2 (the blocked build's
+    candidate-generation columns); ``tables`` overrides the fixture-tuned
+    ``_GRB_TABLES`` plane slices (the scale knob)."""
     h = F.sha2(F.col("vec_id").cast("string"), 256)
 
     def nib(i):
@@ -2806,39 +2714,16 @@ def _gr_nodes(e, blocked: bool = False, tables=None):
         qe.alias("qe"),
         F.when(hv % 16 == 0, 2).when(hv % 4 == 0, 1).otherwise(0).alias("lvl"),
     ]
-    if blocked:
-        tabs = tables if tables is not None else _GRB_TABLES
-        planes = _planes(max(hi for _, hi in tabs))
-        for i, (lo, hi) in enumerate(tabs, start=1):
-            bits = [
-                F.when(cosine_free_dot(as_double("embedding"), p) > 0, "1")
-                .otherwise("0")
-                for p in planes[lo:hi]
-            ]
-            cols.append(F.concat(*bits).alias(f"b{i}"))
+    tabs = tables if tables is not None else _GRB_TABLES
+    planes = _planes(max(hi for _, hi in tabs))
+    for i, (lo, hi) in enumerate(tabs, start=1):
+        bits = [
+            F.when(cosine_free_dot(as_double("embedding"), p) > 0, "1")
+            .otherwise("0")
+            for p in planes[lo:hi]
+        ]
+        cols.append(F.concat(*bits).alias(f"b{i}"))
     return e.select(*cols)
-
-
-def _gr_edges(nodes, l: int):
-    """Level-l M-NN graph: self-join among nodes living at level >= l,
-    keep each source's _GR_M nearest by (integer distance, dst id)."""
-    a, b = nodes.alias("a"), nodes.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.lvl") >= l)
-        & (F.col("b.lvl") >= l)
-        & (F.col("a.vec_id") != F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("src"),
-        F.col("b.vec_id").alias("dst"),
-        _gr_isq(F.col("a.qe"), F.col("b.qe")).alias("d"),
-    )
-    w = Window.partitionBy("src").orderBy("d", "dst")
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _GR_M)
-        .select("src", "dst")
-    )
 
 
 def _grb_scored_pairs(nodes):
@@ -2847,8 +2732,8 @@ def _grb_scored_pairs(nodes):
     join form is kept to anchor that exactness claim and the plan
     assertions on the join shape.]
 
-    All LSH-blocked candidate pairs, scored once for every level — the
-    100 TB build shape `_gr_edges` documents: candidates are bucket-mates
+    All LSH-blocked candidate pairs, scored once for every level:
+    candidates are bucket-mates
     in either of two 4-bit hyperplane tables (equi-joins on the bucket
     key, union-distinct = the oracle's OR), ids only through the shuffle;
     quantized vectors re-join by id for the distance score. No all-pairs
@@ -2983,7 +2868,7 @@ def _grb_scored_pairs_arrow(nodes):
     to the blocked build's candidate stage (round-15 optimization, guide
     §4.2), law-pinned row-set-identical to the join form
     (:func:`_grb_scored_pairs`, kept as the twin) at both graded fixtures
-    AND at sf0.1 (488,486 pairs — tools/slope_runs/r15opt2/proto_grb.log).
+    AND at sf0.1 (488,486 pairs).
 
     Why: the join form distincts the id pairs and then re-joins the
     quantized vectors by id TWICE (qa by src, qb by dst), shipping two
@@ -2996,7 +2881,7 @@ def _grb_scored_pairs_arrow(nodes):
     vectors cross the Python boundary once per node per table instead of
     twice per pair (~250× less Arrow traffic), and both shuffle_hash
     vector re-joins disappear. Measured 2.4 → 0.9 s warm on the stage at
-    sf0.1 (same-box A/B, proto_grb.log).
+    sf0.1 (same-box A/B).
 
     Exactness: distances use the norm expansion |a|²+|b|²−2a·b over the
     int64 quantized vectors in float64 BLAS — every intermediate is an
@@ -3052,7 +2937,8 @@ def _grb_scored_pairs_arrow(nodes):
 
 def _grb_edges(nodes, l: int, scored=None):
     """Level-l M-NN edges from the shared scored pair set (see
-    :func:`_grb_scored_pairs`); same rank rule as the naive build."""
+    :func:`_grb_scored_pairs`): each source keeps its _GR_M nearest by
+    (d, dst)."""
     if scored is None:
         scored = _grb_scored_pairs(nodes)
     sub = scored.filter((F.col("src_lvl") >= l) & (F.col("dst_lvl") >= l))
@@ -3069,13 +2955,13 @@ def _gr_probe_dists(nodes, probe):
     round-16 walk optimization's key observation: a node's distance to
     the probe is EXECUTION-INVARIANT, yet the r15 walk re-derived it
     inside every hop (frontier ⋈ nodes, crossJoin probe, interpreted
-    64-element fold). Computed once here (same exact int64 `_gr_isq`
+    64-element fold). Computed once here (same exact int64 `_il2`
     arithmetic, same values) and attached to the pinned edge tables so
     the hops never touch vectors again. Left UNPINNED: its two consumers
     (the entry-point job and the edge-pin attach join) re-run one narrow
     map over the pinned node table — cheaper than a third eager pin."""
     return nodes.crossJoin(F.broadcast(probe)).select(
-        "vec_id", "lvl", _gr_isq(F.col("qe"), F.col("pq")).alias("pd")
+        "vec_id", "lvl", _il2(F.col("qe"), F.col("pq")).alias("pd")
     )
 
 
@@ -3138,7 +3024,7 @@ def _gr_step(cur, edges):
     Round-16 shape: ``cur`` carries (vec_id, pd) and ``edges`` carries
     the dst's pd, so the hop is neighbor-join ∪ distinct → top-beam by
     (pd, vec_id) — no node-table join, no probe crossJoin, no per-row
-    distance fold (all removed; the distance is the same `_gr_isq`
+    distance fold (all removed; the distance is the same `_il2`
     int64, computed once in `_gr_probe_dists`). The rename-projection
     (`_cv`) keeps the frontier⋈edges join free of dataset-qualified
     self-join ambiguity (cur's lineage now derives from the same edge
@@ -3151,75 +3037,19 @@ def _gr_step(cur, edges):
     return frontier.orderBy("pd", "vec_id").limit(_GR_BEAM)
 
 
-@query("sim_ann_graph_topk", _gr_sql(blocked=True))
+@query("sim_ann_graph_topk", _gr_sql())
 def sim_ann_graph_topk(spark, sf_dir):
     """Graph-index ANN (HNSW/NSW class), primary key. Delegates to the
     LSH-blocked build (VERDICT r7 item 6 — the same re-pointing the ntile
     family got): a user calling the family's primary key must never get
     the all-pairs self-join index build, so the registered semantics ARE
-    the blocked semantics (oracle = the blocked SQL, edge-for-edge). The
-    quadratic build survives only as the unregistered plan-contrast demo
-    :func:`sim_ann_graph_topk_naive_demo` (this family's one allowed
-    anti-pattern demo)."""
+    the blocked semantics (oracle = the blocked SQL, edge-for-edge)."""
     return sim_ann_graph_topk_blocked(spark, sf_dir)
 
 
-def sim_ann_graph_topk_naive_demo(spark, sf_dir):
-    """Graph-index ANN (HNSW/NSW class) with the NAIVE all-pairs index
-    build — UNREGISTERED plan-contrast demo (measured ~53 s/pass at sf0.1
-    vs ~5.6 s blocked; the quadratic self-join is the anti-pattern the
-    blocked build exists to replace). Kept because its recall pin
-    (1.0/0.9 — above the blocked 0.8/0.7) documents what the candidate
-    pruning trades away, and because the walk (`_gr_search`) is shared
-    byte-identical with the registered key.
-
-    Original design notes: a multi-level navigable small-world graph,
-    fully deterministic so an unrolled oracle can replay it move for
-    move.
-
-    Build: fixed-point vectors (round(x·1e6) int64 — integer squared-L2 is
-    exact cross-engine); each node draws its level from sha-nibbles of its
-    id (P(lvl≥1)=1/4, P(lvl=2)=1/16 — HNSW's exponentially-thinning
-    layers, seeded instead of random); each level keeps every node's
-    ``_GR_M`` nearest same-or-higher-level neighbors (ties by id).
-
-    Search: enter at the topmost node (id tie-break), run ``_GR_HOPS``
-    greedy hops per level from sparse to dense (frontier = self ∪
-    neighbors, move to the probe-nearest), then score the final node's
-    2-hop base-layer neighborhood (≤ 1+M+M² candidates — the ef-candidate
-    set) and return the exact top-10 by (distance, id).
-
-    Scale shape: the per-level graph build here is the naive self-join
-    (fixture |V|=500); at 100 TB the build is NN-descent or LSH-bucketed
-    candidate generation (both shuffle candidate edges, never all pairs)
-    — the rank-per-source window and everything downstream is unchanged.
-    The walk itself touches ≤ (M+1)·hops·levels rows per query and serves
-    from a broadcast edge list: graph ANN is built distributed, served
-    cheap. Recall vs the brute-force truth op is pinned in
-    tests/test_ext_ops.py (like sim_ann_recall_eval)."""
-    e = load(spark, sf_dir, "embeddings")
-    # eager localCheckpoint = the oracle's MATERIALIZED: each greedy step
-    # references its predecessor twice and the shared edge/node tables, so
-    # lazy lineage would double per hop (2^9 subtrees — measured: the plan
-    # never finishes compiling). Same per-round pattern as the connected-
-    # components contraction loop (graph.py).
-    nodes = _gr_nodes(e.filter(F.col("vec_id") != _PROBE_ID)).localCheckpoint()
-    probe = (
-        e.filter(F.col("vec_id") == _PROBE_ID)
-        .select(_quantize(as_double("embedding")).alias("pq"))
-        .localCheckpoint()
-    )
-    nd = _gr_probe_dists(nodes, probe)
-    edges = {
-        l: _with_probe_dist(_gr_edges(nodes, l), nd).localCheckpoint()
-        for l in _GR_LEVELS
-    }
-    return _gr_search(nd, edges)
-
-
 def _gr_search(nd, edges):
-    """Beam descent + 2-hop base-layer rerank, shared by the naive and
-    LSH-blocked builds (the index changes; the walk does not).
+    """Beam descent + 2-hop base-layer rerank, shared by every blocked
+    build width (the index changes; the walk does not).
 
     Round-16 optimization (VERDICT r15 item 3): the walk consumes the
     probe-distance table ``nd`` (see `_gr_probe_dists`) and
@@ -3227,12 +3057,11 @@ def _gr_search(nd, edges):
     each of the 9 hops drops its node-table join, its probe crossJoin
     and its interpreted 64-element distance fold (5 operators → 3), and
     the final 2-hop rerank drops its candidates⋈nodes join the same
-    way. Same `_gr_isq` int64 arithmetic computed once per node, same
+    way. Same `_il2` int64 arithmetic computed once per node, same
     (distance, id) rank rule, so every beam and the final top-k are
     row-identical — proven by collect-compare at all three SFs for
-    blocked/wide/auto (tools/slope_runs/r16/ab_gr_walk_dcarry.log) and
-    law-pinned end-to-end in tests/test_round16_opt.py. Interleaved
-    sf0.1 A/B: blocked 4.43 → 4.32 med (4/5 pairwise), wide
+    blocked/wide/auto and law-pinned end-to-end in
+    tests/test_round16_opt.py. Interleaved sf0.1 A/B: blocked 4.43 → 4.32 med (4/5 pairwise), wide
     4.71 → 4.55 (4/5), auto 4.46 → 4.30 (4/5).
 
     Round-15 optimization note — the driver-fed literal-beam walk was
@@ -3242,7 +3071,7 @@ def _gr_search(nd, edges):
     every execution (the pinned-frontier form compiles each hop shape
     ONCE — identical source, new checkpointed RDD). Measured on quiet
     same-box A/B at sf0.1: blocked 6.73 → 9.25 s, wide 5.78 → 7.15,
-    auto 7.25 → 10.0 (tools/slope_runs/r15opt/). The per-hop pin is 1
+    auto 7.25 → 10.0. The per-hop pin is 1
     job either way; the collect saved nothing and paid recompilation.
     Kept: the DataFrame frontier + per-hop eager localCheckpoint.
 
@@ -3252,8 +3081,7 @@ def _gr_search(nd, edges):
     successor, so the saved job is paid with duplicated tiny-subtree
     execution + a deeper plan per compile). Interleaved 5-rep A/B on the
     full walk at sf0.1, outputs identical at both graded fixtures:
-    per-hop med 2.30 s, every-2 2.52, every-3 2.60
-    (tools/slope_runs/r15opt3/walk_cadence_ab.log). The per-hop pin is
+    per-hop med 2.30 s, every-2 2.52, every-3 2.60. The per-hop pin is
     the walk's measured floor.
 
     ALSO MEASURED AND REJECTED (round-15 opt session 6): the probe as a
@@ -3263,10 +3091,9 @@ def _gr_search(nd, edges):
     interleaved 7-rep A/Bs read blocked med 5.27 → 5.19 (noise), auto
     4.85 → 5.17 (the literal form loses 6/7 pairwise; outputs identical
     at all three SFs): the saved pin job is repaid per row — the
-    literal array is re-constructed per _gr_isq evaluation where the
-    broadcast side references one materialized ArrayData
-    (tools/slope_runs/r15opt4/ab_gr_probe_lit.log and the single-key
-    rerun logs beside it). The probe-distance table is different in
+    literal array is re-constructed per _il2 evaluation where the
+    broadcast side references one materialized ArrayData. The
+    probe-distance table is different in
     kind from both: the pd computation stays a DataFrame map over the
     pinned nodes (no literals in generated code — codegen cache safe)
     and is evaluated once per BUILD, not once per hop."""
@@ -3298,14 +3125,14 @@ def _gr_search(nd, edges):
     )
 
 
-@query("sim_ann_graph_topk_blocked", _gr_sql(blocked=True))
+@query("sim_ann_graph_topk_blocked", _gr_sql())
 def sim_ann_graph_topk_blocked(spark, sf_dir):
     """Graph ANN with the SCALE-SAFE index build (VERDICT r6 item 3): the
     per-level M-NN graph is built from LSH-bucketed candidates — two
     independent 4-bit hyperplane tables (planes 0-3 / 4-7, the same
     deterministic ±1 planes the LSH/multiprobe ops inline), candidate
-    pairs = bucket-mates in EITHER table — instead of `_gr_edges`'s
-    all-pairs self-join. The build shuffles ids on equi bucket keys and
+    pairs = bucket-mates in EITHER table — instead of an all-pairs
+    self-join. The build shuffles ids on equi bucket keys and
     re-joins quantized vectors by id; nothing in the plan is quadratic in
     |V| (plan-asserted nested-loop-free in tests/test_plans.py). The walk
     (`_gr_search`), beam, hops, levels, and rerank are byte-identical to
@@ -3313,11 +3140,11 @@ def sim_ann_graph_topk_blocked(spark, sf_dir):
     edge (the OR of the two table keys ≡ the union-distinct of the two
     equi-joins), so the EXACT gate grades the blocked semantics.
     Recall@10 vs the brute-force truth is pinned exactly in
-    tests/test_ext_ops.py alongside the naive build's.
+    tests/test_ext_ops.py.
 
-    NOTE: the 4-bit width here is FIXTURE-TUNED and deliberately kept as
-    the superlinear contrast row in the slope harness (bucket occupancy
-    grows with n at fixed width — measured exponent ~1.08). Production
+    NOTE: the 4-bit width here is FIXTURE-TUNED and superlinear at scale
+    (bucket occupancy grows with n at fixed width — measured exponent
+    ~1.08). Production
     use is `sim_ann_graph_topk_blocked_auto`, which derives the width
     from a corpus count (bits ≈ log2(n/160)) and measured 0.39-0.40 at
     3x/10x/25x."""
@@ -3335,7 +3162,7 @@ def _gr_blocked(spark, sf_dir, tables=None):
     # the walk's 9 sequential tiny per-hop jobs each re-scan the node
     # table — ~300 near-empty task launches per execution ate more than
     # the build saved (quiet same-box A/B at sf0.1: blocked 6.73 → 8.54 s,
-    # auto 7.25 → 8.60; tools/slope_runs/r15opt/). On a real multi-file
+    # auto 7.25 → 8.60). On a real multi-file
     # corpus the scan arrives parallel WITHOUT the repartition, so the
     # fixture-only win wasn't there to buy either. The build's wide
     # stages get their parallelism from their own exchanges regardless.
@@ -3347,12 +3174,12 @@ def _gr_blocked(spark, sf_dir, tables=None):
     # §2.6; the q17 rank-pass precedent). Outputs identical at all three
     # SFs for blocked/wide/auto; timing mildly positive on a jittery box
     # (blocked multifile med 5.49 → 4.78, auto 4.38 → 4.30 single-file /
-    # 13.40 → 9.86 multifile; ab_gr_pin_overlap.log) — the saved wait is
+    # 13.40 → 9.86 multifile) — the saved wait is
     # the smaller (probe) pin job. The probe-as-literal-array variant
     # was measured here too and REJECTED (see `_gr_search`'s docstring).
     def _mk_nodes():
         return _gr_nodes(
-            e.filter(F.col("vec_id") != _PROBE_ID), blocked=True, tables=tables
+            e.filter(F.col("vec_id") != _PROBE_ID), tables=tables
         ).localCheckpoint()
 
     def _mk_probe():
@@ -3390,8 +3217,7 @@ def sim_ann_graph_topk_blocked_scaled(spark, sf_dir, bits: int):
     bits ≈ log2(n/B) for a target mean occupancy B: every +1 bit halves
     occupancy, so growing bits with log n holds per-bucket pair work
     CONSTANT and the total pair count ∝ n — measured: 10× vectors with
-    bits 4→7 reads near-linear (slope table in tools/scale_slope.py
-    output / BASELINE.md). The parameterized form stays unregistered
+    bits 4→7 reads near-linear (BASELINE.md). The parameterized form stays unregistered
     (one EXACT oracle inlines one fixed plane set); it is driver-proven
     at TWO widths instead — bits=4 ≡ the registered
     `sim_ann_graph_topk_blocked` row-for-row (law,
@@ -3407,7 +3233,7 @@ _GRB_WIDE_TABLES = ((0, _GRB_WIDE_BITS), (_GRB_WIDE_BITS, 2 * _GRB_WIDE_BITS))
 
 @query(
     "sim_ann_graph_topk_blocked_wide",
-    _gr_sql(blocked=True, tables=_GRB_WIDE_TABLES),
+    _gr_sql(tables=_GRB_WIDE_TABLES),
 )
 def sim_ann_graph_topk_blocked_wide(spark, sf_dir):
     """Graph ANN, blocked build at the PRODUCTION table width (bits=7 —
@@ -3420,9 +3246,7 @@ def sim_ann_graph_topk_blocked_wide(spark, sf_dir):
     plane literals and replays the wide build edge for edge, exactly as
     the 4-bit oracle does. At fixture n the wide buckets are sparse
     (mean occupancy ~4 vs ~31), so this row also pins that the walk's
-    recall machinery tolerates a thin candidate graph; the sf1 slope
-    harness measures THIS registered key (tools/scale_slope.py), closing
-    the loop from driver-proof to measured exponent."""
+    recall machinery tolerates a thin candidate graph."""
     return _gr_blocked(spark, sf_dir, tables=_GRB_WIDE_TABLES)
 
 
@@ -3446,7 +3270,7 @@ def _grb_auto_bits(n: int) -> int:
     return max(_GRB_AUTO_MIN_BITS, min(_GRB_AUTO_MAX_BITS, raw))
 
 
-@query("sim_ann_graph_topk_blocked_auto", _gr_sql(blocked=True))
+@query("sim_ann_graph_topk_blocked_auto", _gr_sql())
 def sim_ann_graph_topk_blocked_auto(spark, sf_dir, n_override: int = None):
     """Graph ANN, blocked build with the table width DERIVED AT BUILD
     TIME from a corpus count — closing the last hand-set scale knob
@@ -3461,9 +3285,7 @@ def sim_ann_graph_topk_blocked_auto(spark, sf_dir, n_override: int = None):
     (499) the rule clamps to 4, so this key's EXACT oracle IS the 4-bit
     blocked SQL and the driver grade proves the derivation end to end;
     the law tests pin auto(n) == the fixed 4/7-bit keys where the rule
-    lands there (tests/test_round11_ops.py), and the slope harness runs
-    THIS key at every scale so the measured exponent is the auto form's,
-    no hand re-tuning (tools/scale_slope.py). ``n_override`` exists for
+    lands there (tests/test_round11_ops.py). ``n_override`` exists for
     the law tests only — it substitutes the counted n, never the data.
 
     Scale shape: identical to the fixed-width build (ids-only bucket
@@ -3827,7 +3649,7 @@ def sim_ann_kmeans_ivf_batch_topk(spark, sf_dir, n_override: int = None):
     probes = e_q.filter(F.col("vec_id") < _N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("de").alias("pe")
     )
-    cd = F.transform("cq", lambda x: x.cast("double") / _CENT_SCALE)
+    cd = _dequantize()
     wrank = Window.partitionBy("probe_id").orderBy(F.desc("ccs"), "cell")
     crank = (
         cents.join(F.broadcast(probes))  # k x |probes| rows — broadcast grain
@@ -3877,7 +3699,7 @@ def _sd_auto_k(n: int) -> int:
     naive "balanced" alternative k = round(√(n/2)) (equal RAW dot
     counts between the n·k assignment and n²/2k pair terms, the
     textbook n^1.5 split) and it lost 3–5× at every scale (25×: 22.2 s
-    vs 7.1; 50×: 44.1 s vs 9.0 — slope_*_semdedup_bal.log): the two
+    vs 7.1; 50×: 44.1 s vs 9.0): the two
     terms' CONSTANTS differ by ~3500× (codegen'd per-pair cosine fold
     ≈ 1.75 µs/pair, measured; Arrow-BLAS assignment dot ≈ 0.5 ns), so
     the cost-weighted balance point √(c_p/c_a · n/2) ≈ 42√n sits ABOVE
@@ -3966,8 +3788,7 @@ def _sd_pairs_arrow(base):
     `_km_assign_arrow` treatment applied to the pair stage (round-15
     optimization; guide §4.2). The r15 sizing work measured the
     interpreted per-pair cosine fold at ~1.75 µs/pair vs ~0.5 ns per
-    BLAS dot (~3500×), and the committed prototype
-    (tools/slope_runs/r15/proto_pair_matmul.py) read 2× at shipped grain
+    BLAS dot (~3500×), and a prototype read 2× at shipped grain
     (occupancy 50) with EXACT round-6 agreement on both graded fixtures'
     full pair sets and identical 25× checksums (1.25M pairs) — the
     advantage grows with occupancy, so the asymptotic story improves
@@ -4042,7 +3863,7 @@ def _sd_body(spark, sf_dir, k: int, stride: int, tau: float, emit: str = "report
     # — SemDeDup's occupancy sizing keeps stride > 1 at every n).
     cents = _km_train(spark, e_q, k, stride)
     assign = _km_assign_arrow(e_q, cents)
-    cd = F.transform("cq", lambda q: q.cast("double") / _CENT_SCALE)
+    cd = _dequantize()
     base = (
         assign.alias("a")
         .join(e_q.alias("v"), F.col("a.vec_id") == F.col("v.vec_id"))
@@ -4182,7 +4003,7 @@ def dedup_semdedup_cells(spark, sf_dir, n_override: int = None, tau: float = Non
     (τ=-1 ⇒ kept=1 per cell, τ>1 ⇒ removed=0); ``n_override``/``tau``
     exist for those tests.
 
-    Measured (tools/slope_runs/r15/slope_{{25,100}}x_semdedup.log):
+    Measured at 25× and 100×:
     25× exponent **0.087** (5.4 → 7.1 s), 100× **0.425** (33.1 s at
     200k vectors, k=4000 cells — one notch under the 4096 clamp);
     nothing curves past linear — the occupancy budget holds."""
@@ -4286,7 +4107,7 @@ def decontam_embedding_cosine(spark, sf_dir, tau: float = None):
     brute top-k (same probe, eval ids filtered); ``tau`` exists for the
     law tests.
 
-    Measured (tools/slope_runs/r15/slope_{{25,100}}x_semdedup.log):
+    Measured at 25× and 100×:
     25× exponent **0.20** (0.71 → 1.35 s), 100× **0.674** (14.8 s at
     200k vectors — the derived modulus walks 50 → 20000, the eval set
     stays 10 rows, and the scan stays the only corpus-sized term)."""
@@ -4684,22 +4505,7 @@ def sim_radius_search(spark, sf_dir):
     top-k's k-th distance is unknown a priori); the pruned variants reuse
     ``sim_ann_*``'s bucket machinery unchanged with τ as the verify
     filter."""
-    e = load(spark, sf_dir, "embeddings")
-    probe = e.filter(F.col("vec_id") == _PROBE_ID).select(
-        as_double("embedding").alias("probe_emb")
-    )
-    return (
-        e.filter(F.col("vec_id") != _PROBE_ID)
-        .join(F.broadcast(probe))
-        .select(
-            "vec_id",
-            "label",
-            F.round(
-                cosine(as_double("embedding"), F.col("probe_emb")), 6
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= _RADIUS_TAU)
-    )
+    return _probe_cosines(spark, sf_dir).filter(F.col("cos_sim") >= _RADIUS_TAU)
 
 
 _TRUNC_D = 16  # truncated prefix dimensionality (64 -> 16, MRL-style)
@@ -5082,8 +4888,7 @@ def sim_ann_graph_recall_eval(spark, sf_dir):
     same law in-process; this row makes it a driver-graded artifact).
     Since the primary key's r8 re-pointing to the LSH-blocked build, the
     measured index is the blocked one: 0.8 at sf0.001, 0.7 at sf0.01
-    (the naive build's 1.0/0.9 pin lives on the unregistered demo in
-    tests/test_ext_ops.py). The oracle nests the COMPLETE unrolled
+    (pinned in tests/test_ext_ops.py too). The oracle nests the COMPLETE unrolled
     graph-search oracle as a CTE next to the brute ranking — two full
     pipelines, one agreement row."""
     ann = QUERIES["sim_ann_graph_topk"](spark, sf_dir).select("vec_id")
@@ -5094,7 +4899,7 @@ def sim_ann_graph_recall_eval(spark, sf_dir):
         e.filter(F.col("vec_id") != _PROBE_ID)
         .select("vec_id", qe.alias("qe"))
         .join(F.broadcast(probe))
-        .select("vec_id", _gr_isq(F.col("qe"), F.col("pq")).alias("d"))
+        .select("vec_id", _il2(F.col("qe"), F.col("pq")).alias("d"))
         .orderBy("d", "vec_id")
         .limit(_TOPK)
         .select("vec_id")
@@ -5205,7 +5010,7 @@ def emb_label_separation_report(spark, sf_dir):
     )
     wd = (
         qv.join(F.broadcast(cint), qv.label == cint.cell)
-        .select("label", _gr_isq(F.col("qe"), F.col("cq")).alias("d"))
+        .select("label", _il2(F.col("qe"), F.col("cq")).alias("d"))
         .groupBy("label")
         .agg(F.count("*").alias("n"), F.sum("d").alias("sw"))
     )
@@ -5215,7 +5020,7 @@ def emb_label_separation_report(spark, sf_dir):
     nn = (
         a.join(b, F.col("label") != F.col("other"))
         .select(
-            "label", "other", _gr_isq(F.col("ca"), F.col("cb")).alias("d")
+            "label", "other", _il2(F.col("ca"), F.col("cb")).alias("d")
         )
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
@@ -5338,8 +5143,8 @@ def emb_random_projection_distortion(spark, sf_dir):
         F.col("pe").alias("pb"),
     ).alias("b")
     pairs = a.join(b, "vec_id").select(
-        _gr_isq(F.col("a.qe"), F.col("qb")).alias("od"),
-        _gr_isq(F.col("a.pe"), F.col("pb")).alias("pd"),
+        _il2(F.col("a.qe"), F.col("qb")).alias("od"),
+        _il2(F.col("a.pe"), F.col("pb")).alias("pd"),
     )
     r = F.round(
         F.col("pd").cast("double")
@@ -5447,7 +5252,7 @@ def sim_mmr_diversified_topk(spark, sf_dir):
     cand = (
         qv.filter(F.col("vec_id") != _PROBE_ID)
         .crossJoin(F.broadcast(pv))
-        .select("vec_id", "qe", _gr_isq(F.col("qe"), F.col("pq")).alias("odp"))
+        .select("vec_id", "qe", _il2(F.col("qe"), F.col("pq")).alias("odp"))
         .orderBy("odp", "vec_id")
         .limit(_MMR_C)
         .localCheckpoint()
@@ -5463,7 +5268,7 @@ def sim_mmr_diversified_topk(spark, sf_dir):
             .select(
                 "vec_id",
                 "odp",
-                _gr_isq(F.col("qe"), F.col("pqe")).alias("dd"),
+                _il2(F.col("qe"), F.col("pqe")).alias("dd"),
             )
             .groupBy("vec_id", "odp")
             .agg(F.min("dd").alias("mind"))
@@ -5652,7 +5457,7 @@ def emb_hard_negative_mining(spark, sf_dir):
     knob, same as serving). Shuffle payload is ids + bucket keys;
     quantized vectors re-join by id for scoring."""
     e = load(spark, sf_dir, "embeddings")
-    nodes = _gr_nodes(e, blocked=True).localCheckpoint()
+    nodes = _gr_nodes(e).localCheckpoint()
     lab = e.select("vec_id", "label")
     nodes = nodes.join(lab, "vec_id")
     pairs = None
@@ -5687,7 +5492,7 @@ def emb_hard_negative_mining(spark, sf_dir):
             "anchor_label",
             "neg_id",
             "neg_label",
-            _gr_isq(F.col("qa"), F.col("qb")).alias("idist"),
+            _il2(F.col("qa"), F.col("qb")).alias("idist"),
         )
     )
     w = Window.partitionBy("anchor_id").orderBy("idist", "neg_id")
@@ -6077,7 +5882,7 @@ def emb_kmeans_elbow_curve(spark, sf_dir):
         # (broadcast k-row join) — O(n) cosine evaluations instead of
         # the old O(n*k) scored-fold, and the emitted value goes through
         # the exact same codegen'd cosine + F.round the oracle mirrors.
-        cd = F.transform("cq", lambda q: q.cast("double") / _CENT_SCALE)
+        cd = _dequantize()
         fin = (
             _km_assign_arrow(e_q, cents)
             .join(e_q.select("vec_id", "de"), "vec_id")
@@ -6133,7 +5938,7 @@ def emb_kmeans_elbow_curve(spark, sf_dir):
       SELECT vec_id, m, k FROM (
         SELECT s.vec_id, s.m, c.k,
                row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {_pq_il2_sql('s.sv', 'c.cw')}, c.k) AS rn
+                 ORDER BY {_il2_sql('s.sv', 'c.cw', _PQ_SUB)}, c.k) AS rn
         FROM subs s JOIN cb0 c ON c.m = s.m
       ) WHERE rn = 1
     ),
@@ -6151,7 +5956,7 @@ def emb_kmeans_elbow_curve(spark, sf_dir):
       SELECT vec_id, m, k FROM (
         SELECT s.vec_id, s.m, c.k,
                row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {_pq_il2_sql('s.sv', 'c.cw')}, c.k) AS rn
+                 ORDER BY {_il2_sql('s.sv', 'c.cw', _PQ_SUB)}, c.k) AS rn
         FROM subs s JOIN cb1 c ON c.m = s.m
       ) WHERE rn = 1
     ),
@@ -6170,10 +5975,9 @@ def emb_kmeans_elbow_curve(spark, sf_dir):
 def emb_pq_code_balance(spark, sf_dir):
     """Codebook-utilization report for the PQ index — the PQ sibling of
     `emb_ivf_cell_balance`: after the SAME train→encode chain as
-    `sim_pq_adc_topk` (seeded codebooks, one Lloyd round of integer
-    squared-L2 assignment + floored-mean update — the chain is duplicated
-    here verbatim rather than refactored out, so the green serving op's
-    plan is untouched), count how many vectors each of the {_PQ_M}×
+    `sim_pq_adc_topk` (`_pq_train_encode`: seeded codebooks, one Lloyd
+    round of integer squared-L2 assignment + floored-mean update), count
+    how many vectors each of the {_PQ_M}×
     {_PQ_K} codewords actually encodes. Dead codewords (n_vecs = 0 —
     kept via the LEFT join from the codebook side) waste code space and
     signal bad seeding; a dominant codeword means the subspace carries
@@ -6192,59 +5996,8 @@ def emb_pq_code_balance(spark, sf_dir):
         )
         .localCheckpoint(eager=True)
     )
-    subs = e_q.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("qe", m * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
-                    )
-                    for m in range(_PQ_M)
-                ]
-            )
-        ).alias("ms"),
-    ).select("vec_id", "ms.m", "ms.sv")
-
-    def il2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    def assign(codebook):
-        w = Window.partitionBy("vec_id", "m").orderBy("dist", "k")
-        return (
-            subs.join(F.broadcast(codebook), "m")
-            .select(
-                "vec_id", "m", "k", il2(F.col("sv"), F.col("cw")).alias("dist")
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "m", "k")
-        )
-
-    cb0 = subs.filter(F.col("vec_id") < _PQ_K).select(
-        "m", F.col("vec_id").alias("k"), F.col("sv").alias("cw")
-    )
-    cb1 = (
-        assign(cb0)
-        .join(subs, ["vec_id", "m"])
-        .select("m", "k", F.posexplode("sv").alias("pos", "q"))
-        .groupBy("m", "k", "pos")
-        .agg(
-            F.floor(F.sum("q").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("cp")
-        )
-        .groupBy("m", "k")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cp"))).alias("p"))
-        .select("m", "k", F.transform("p", lambda s: s.getField("cp")).alias("cw"))
-        .localCheckpoint(eager=True)  # M x K rows; assign + report join
-    )
-    enc = assign(cb1)
+    subs = _pq_subvectors(e_q, "qe", ["vec_id"])
+    cb1, enc = _pq_train_encode(subs, ["vec_id"])
     bt = enc.groupBy("m").agg(F.count("*").cast("long").alias("tot"))
     bc = enc.groupBy("m", "k").agg(F.count("*").cast("long").alias("n_vecs"))
     return (

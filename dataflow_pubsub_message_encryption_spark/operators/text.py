@@ -264,9 +264,7 @@ def text_tfidf_top3(spark, sf_dir):
     # df from tf, exactly as the oracle's CTE chain already states it:
     # tf rows are unique per (doc_id, term), so df == count(*) per term
     # — no second tokenize pass and no distinct machinery; tf's one
-    # aggregation exchange is shared by both consumers (the r15-opt
-    # tfidf_keywords A/B carries the measured numbers for this shape,
-    # tools/slope_runs/r15opt3/ab_tfidf_nv.log).
+    # aggregation exchange is shared by both consumers.
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     # corpus size as a broadcast 1-row aggregate, not a driver .count():
     # the whole DAG stays lazy and the scan isn't executed twice.
@@ -940,6 +938,22 @@ def text_bigram_logprob(spark, sf_dir):
     ride in as broadcasts; the corpus is tokenized exactly once per
     statistic, never re-scanned per document."""
     docs = load(spark, sf_dir, "documents")
+    tf, bc, lm = _bigram_counts(docs)
+    vv = (
+        docs.select(F.explode(tokens("text")).alias("term"))
+        .agg(F.count_distinct("term").alias("v"))
+    )
+    return _bigram_score(
+        tf.join(bc, ["p", "q"]).join(F.broadcast(lm), "p").join(F.broadcast(vv)),
+        (F.col("bcnt") + 1).cast("double") / (F.col("lcnt") + F.col("v")),
+    )
+
+
+def _bigram_counts(docs):
+    """The bigram LM count tables over whitespace tokens: per-doc bigram
+    counts tf (doc_id, p, q, c), corpus bigram counts bc (p, q, bcnt) and
+    the left-context marginal lm (p, lcnt). Docs with fewer than two
+    tokens contribute none."""
     toks = docs.select("doc_id", tokens("text").alias("t")).filter(
         F.size("t") >= 2
     )
@@ -955,30 +969,29 @@ def text_bigram_logprob(spark, sf_dir):
     tf = pairs.groupBy("doc_id", "p", "q").agg(F.count("*").alias("c"))
     bc = pairs.groupBy("p", "q").agg(F.count("*").alias("bcnt"))
     lm = bc.groupBy("p").agg(F.sum("bcnt").alias("lcnt"))
-    vv = (
-        docs.select(F.explode(tokens("text")).alias("term"))
-        .agg(F.count_distinct("term").alias("v"))
-    )
-    lp_int = F.round(
-        F.log((F.col("bcnt") + 1).cast("double") / (F.col("lcnt") + F.col("v")))
-        * 1_000_000_000
-    ).cast("long")
-    scored = (
-        tf.join(bc, ["p", "q"])
-        .join(F.broadcast(lm), "p")
-        .join(F.broadcast(vv))
-        .groupBy("doc_id")
+    return tf, bc, lm
+
+
+def _bigram_score(scored, prob):
+    """Per-doc (doc_id, n_bigrams, avg_neg_logprob) from the per-doc
+    bigram rows (c per bigram) and each bigram's probability column:
+    ln p is int64-quantized at 1e9 BEFORE the per-doc sum, so the
+    accumulation commutes across any partitioning."""
+    lp_int = F.round(F.log(prob) * 1_000_000_000).cast("long")
+    return (
+        scored.groupBy("doc_id")
         .agg(
             F.sum("c").cast("long").alias("n_bigrams"),
             F.sum(F.col("c") * lp_int).alias("s"),
         )
-    )
-    return scored.select(
-        "doc_id",
-        "n_bigrams",
-        F.round(
-            -(F.col("s").cast("double") / 1_000_000_000) / F.col("n_bigrams"), 6
-        ).alias("avg_neg_logprob"),
+        .select(
+            "doc_id",
+            "n_bigrams",
+            F.round(
+                -(F.col("s").cast("double") / 1_000_000_000) / F.col("n_bigrams"),
+                6,
+            ).alias("avg_neg_logprob"),
+        )
     )
 
 
@@ -1042,21 +1055,7 @@ def text_interpolated_logprob(spark, sf_dir):
     corpus-size scalar); the unigram table joins on the RIGHT token —
     one extra broadcast-sized join, no new corpus scan."""
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokens("text").alias("t")).filter(
-        F.size("t") >= 2
-    )
-    pairs = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(t) - 2),"
-                " i -> struct(t[i] AS p, t[i + 1] AS q))"
-            )
-        ).alias("pq"),
-    ).select("doc_id", "pq.p", "pq.q")
-    tf = pairs.groupBy("doc_id", "p", "q").agg(F.count("*").alias("c"))
-    bc = pairs.groupBy("p", "q").agg(F.count("*").alias("bcnt"))
-    lm = bc.groupBy("p").agg(F.sum("bcnt").alias("lcnt"))
+    tf, bc, lm = _bigram_counts(docs)
     allt = docs.select(F.explode(tokens("text")).alias("term"))
     uc = allt.groupBy("term").agg(F.count("*").alias("ucnt"))
     nn = allt.agg(F.count("*").alias("n"))
@@ -1065,27 +1064,12 @@ def text_interpolated_logprob(spark, sf_dir):
         + F.lit(10 - _JM_NUM) * F.col("ucnt") * F.col("lcnt")
     )
     den = F.lit(10) * F.col("lcnt") * F.col("n")
-    lp_int = F.round(
-        F.log(num.cast("double") / den.cast("double")) * 1_000_000_000
-    ).cast("long")
-    scored = (
+    return _bigram_score(
         tf.join(bc, ["p", "q"])
         .join(F.broadcast(lm), "p")
         .join(F.broadcast(uc), tf.q == uc.term)
-        .join(F.broadcast(nn))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").cast("long").alias("n_bigrams"),
-            F.sum(F.col("c") * lp_int).alias("s"),
-        )
-    )
-    return scored.select(
-        "doc_id",
-        "n_bigrams",
-        F.round(
-            -(F.col("s").cast("double") / 1_000_000_000) / F.col("n_bigrams"),
-            6,
-        ).alias("avg_neg_logprob"),
+        .join(F.broadcast(nn)),
+        num.cast("double") / den.cast("double"),
     )
 
 
@@ -1192,8 +1176,8 @@ def text_heldout_perplexity(spark, sf_dir):
     # reused at runtime where the direct count/count_distinct over trtok
     # re-scanned and re-exploded the training folds (r15-opt A/B:
     # outputs row-identical at all three SFs, one job/stage fewer,
-    # fixture-neutral; the win is the removed full-corpus pass at scale
-    # — tools/slope_runs/r15opt3/ab_q22_nv.log).
+    # fixture-neutral; the win is the removed full-corpus pass at
+    # scale).
     nv = uc.agg(F.sum("ucnt").alias("n"), F.count("*").alias("v"))
 
     def bigrams(frame, with_doc):
@@ -1766,9 +1750,8 @@ def text_tfidf_keywords_topk(spark, sf_dir):
     # nd == count_distinct(doc_id) over tf — exact integer identities,
     # and all three consumers now share tf's one aggregation exchange
     # (runtime stage reuse) where the split form re-tokenized the corpus
-    # three times (r15-opt: outputs row-identical at all three SFs,
-    # tools/slope_runs/r15opt3/ab_tfidf_nv.log; law test pins both
-    # identities at the graded fixtures).
+    # three times (r15-opt: outputs row-identical at all three SFs; law
+    # test pins both identities at the graded fixtures).
     nd = tf.agg(F.count_distinct("doc_id").alias("nd"))
     idf = (
         tf.groupBy("term")

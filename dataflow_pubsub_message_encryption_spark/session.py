@@ -69,8 +69,7 @@ def get_session(app_name: str = "spark-graft", cpus: int | None = None) -> Spark
             # "warm" execution re-pays Janino compilation + HotSpot
             # re-tiering for every stage — measured at ~30% of the whole
             # mix (same-box back-to-back arms: 90.5/85.0 s per pass at
-            # 100 entries vs 63.7/57.6 s at 4096; 37/38 queries faster —
-            # tools/slope_runs/r15opt4/ab_codegen_{default2,big2}.log).
+            # 100 entries vs 63.7/57.6 s at 4096; 37/38 queries faster).
             # Scale-honest: the cache is keyed on generated SOURCE, so
             # its right size tracks workload DIVERSITY (number of
             # distinct plan shapes a long-lived app serves), not data

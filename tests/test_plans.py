@@ -292,9 +292,9 @@ def test_pit_join_is_equi_not_nested_loop(spark, sf_dir):
 def test_blocked_graph_ann_build_has_no_nested_loop(spark, sf_dir):
     """_grb_edges (the LSH-blocked graph-index build, VERDICT r6 item 3):
     candidate generation must be equi-joins on the bucket keys + id
-    re-joins — nothing quadratic in |V|. The naive `_gr_edges` build is
-    the documented contrast: its lvl>=l/!= theta self-join plans as a
-    nested-loop join, which is exactly what must NOT appear here."""
+    re-joins — nothing quadratic in |V|. A lvl>=l/!= theta self-join
+    would plan as a nested-loop join, which is exactly what must NOT
+    appear here."""
     from pyspark.sql import functions as F
 
     from dataflow_pubsub_message_encryption_spark.operators.similarity import (
@@ -305,7 +305,7 @@ def test_blocked_graph_ann_build_has_no_nested_loop(spark, sf_dir):
     from dataflow_pubsub_message_encryption_spark.sources import load
 
     e = load(spark, sf_dir, "embeddings")
-    nodes = _gr_nodes(e.filter(F.col("vec_id") != _PROBE_ID), blocked=True)
+    nodes = _gr_nodes(e.filter(F.col("vec_id") != _PROBE_ID))
     plan = formatted_plan(_grb_edges(nodes, 0))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -575,9 +575,7 @@ def test_pinned_side_joins_never_broadcast(spark, sf_dir):
             f"{key}: a pinned side is planned as broadcast\n{plan[:1500]}"
         )
 
-    nodes = _gr_nodes(
-        load(spark, sf_dir, "embeddings"), blocked=True
-    ).localCheckpoint()
+    nodes = _gr_nodes(load(spark, sf_dir, "embeddings")).localCheckpoint()
     plan = formatted_plan(_grb_scored_pairs(nodes))
     assert "BroadcastHashJoin" not in plan
     assert "ShuffledHashJoin" in plan

@@ -301,116 +301,6 @@ def test_suffix_ladder_survives_injected_task_failure(tmp_path):
     )
 
 
-# --- VERDICT r14 item 4: the dihedral documents lap, laws pinned ---
-
-
-def _doc_perms():
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-        ),
-    )
-    import scale_slope
-
-    return scale_slope._doc_perm
-
-
-def test_doc_perm_family_laws():
-    """The slope generator's per-copy text transform must be a family of
-    52 DISTINCT character bijections (dup-cluster invariance within a
-    copy; no silent cluster merges across copies)."""
-    perm = _doc_perms()
-    pairs = [perm(k) for k in range(52)]
-    # distinct permutations — copy k and copy j never share text
-    assert len({dst for _, dst in pairs}) == 52
-    for src, dst in pairs:
-        # bijection per character class (letters stay letters, digits
-        # stay digits — tokenization/shingle boundaries are invariant)
-        assert sorted(dst[:26]) == sorted(src[:26])
-        assert sorted(dst[26:52]) == sorted(src[26:52])
-        assert sorted(dst[52:]) == sorted(src[52:])
-    # a non-identity dihedral element fixes at most 2 letters, so any
-    # >=3-distinct-char span maps to different text under different
-    # copies — the no-cross-copy-collision guarantee
-    for i in range(52):
-        for j in range(i + 1, 52):
-            agree = sum(
-                1
-                for a, b in zip(pairs[i][1][:26], pairs[j][1][:26])
-                if a == b
-            )
-            assert agree <= 2, (i, j, agree)
-
-
-def test_doc_perm_preserves_dup_structure():
-    """Character bijections preserve string equality, LCP lengths, and
-    span-cluster structure EXACTLY — the invariance that makes the 50x
-    documents decade measure the algorithm, not a data artifact."""
-    import duckdb
-
-    perm = _doc_perms()
-    texts = [
-        r[0]
-        for r in duckdb.sql(
-            "SELECT text FROM read_parquet("
-            "'/root/testdata/sf0.001/documents.parquet') LIMIT 40"
-        ).fetchall()
-    ]
-
-    def lcp(a, b):
-        n = 0
-        for x, y in zip(a, b):
-            if x != y:
-                break
-            n += 1
-        return n
-
-    for k in (1, 25, 26, 39, 51):
-        src, dst = perm(k)
-        tab = str.maketrans(src, dst)
-        mapped = [t.translate(tab) for t in texts]
-        # round-trip: bijection inverts exactly
-        inv = str.maketrans(dst, src)
-        assert [m.translate(inv) for m in mapped] == texts
-        # equality and LCP structure preserved pairwise
-        for i in range(0, 20, 3):
-            for j in range(1, 20, 4):
-                assert (texts[i] == texts[j]) == (mapped[i] == mapped[j])
-                assert lcp(texts[i], texts[j]) == lcp(mapped[i], mapped[j])
-        # distinct-text census invariant (span clusters neither merge
-        # nor split)
-        assert len(set(mapped)) == len(set(texts))
-
-
-def test_doc_perm_cross_copy_spans_never_collide():
-    """A 64-char span from copy i never equals the same span's image in
-    copy j (the exact property that keeps cross-copy dup clusters
-    separate in the 50x suffix/winnowing/span census)."""
-    import duckdb
-
-    perm = _doc_perms()
-    spans = [
-        r[0][:64]
-        for r in duckdb.sql(
-            "SELECT text FROM read_parquet("
-            "'/root/testdata/sf0.001/documents.parquet') "
-            "WHERE len(text) >= 64 LIMIT 15"
-        ).fetchall()
-    ]
-    assert spans
-    tabs = [str.maketrans(*perm(k)) for k in range(52)]
-    for s in spans:
-        if len(set(s)) < 3:
-            continue
-        images = {s.translate(t) for t in tabs}
-        assert len(images) == 52, "cross-copy span collision"
-
-
 @pytest.mark.parametrize("shape", ["multibatch", "skewed_empty"])
 def test_km_assign_arrow_multibatch_and_empty_partitions(spark, shape):
     """The fixtures exercise ONE Arrow batch; the scale path is many

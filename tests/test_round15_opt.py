@@ -117,9 +117,7 @@ def test_grb_edges_all_equals_per_level(spark, fixture):
     from dataflow_pubsub_message_encryption_spark.sources import load
 
     e = load(spark, fixture, "embeddings")
-    nodes = S._gr_nodes(
-        e.filter(F.col("vec_id") != S._PROBE_ID), blocked=True
-    ).localCheckpoint()
+    nodes = S._gr_nodes(e.filter(F.col("vec_id") != S._PROBE_ID)).localCheckpoint()
     scored = S._grb_scored_pairs(nodes).localCheckpoint()
 
     probe = (
@@ -159,9 +157,7 @@ def test_grb_scored_pairs_arrow_equals_join(spark, fixture):
     from dataflow_pubsub_message_encryption_spark.sources import load
 
     e = load(spark, fixture, "embeddings")
-    nodes = S._gr_nodes(
-        e.filter(F.col("vec_id") != S._PROBE_ID), blocked=True
-    ).localCheckpoint()
+    nodes = S._gr_nodes(e.filter(F.col("vec_id") != S._PROBE_ID)).localCheckpoint()
 
     def rows(df):
         return sorted(
@@ -184,9 +180,7 @@ def test_grb_scored_pairs_arrow_plan_shape(spark, sf_dir):
     from dataflow_pubsub_message_encryption_spark.sources import load
 
     e = load(spark, sf_dir, "embeddings")
-    nodes = S._gr_nodes(
-        e.filter(F.col("vec_id") != S._PROBE_ID), blocked=True
-    ).localCheckpoint()
+    nodes = S._gr_nodes(e.filter(F.col("vec_id") != S._PROBE_ID)).localCheckpoint()
     plan = formatted_plan(S._grb_scored_pairs_arrow(nodes))
     assert "FlatMapGroupsInPandas" in plan
     assert "Join" not in plan
@@ -293,14 +287,21 @@ def test_km_train_local_equals_distributed(spark, fixture):
         assert dist == local, f"centroids differ at k={k} stride={stride}"
 
 
-@pytest.mark.parametrize("fixture", FIXTURES)
-def test_pq_assign_min_by_equals_window(spark, fixture):
-    """The PQ codeword assignment's min_by reduction (engine path since
-    the r15 optimization's second session) must pick, for every
-    (vec_id, m) subvector, exactly the codeword the row_number window it
-    replaced picked — same (dist, k) ordering, k unique within a group.
-    Reconstructs sim_ivf_pq_topk's subs/cb0 stage verbatim and compares
-    both assign forms row for row at both graded fixtures."""
+@pytest.mark.parametrize(
+    "fixture,residual",
+    [pytest.param(f, True, id=f) for f in FIXTURES]
+    + [pytest.param(f, False, id=f"plain:{f}") for f in FIXTURES],
+)
+def test_pq_assign_min_by_equals_window(spark, fixture, residual):
+    """The PQ codeword assignment's min_by reduction (`_pq_assign`, the
+    one assign every PQ key runs) must pick, for every (vec_id, m)
+    subvector, exactly the codeword a row_number window picks — same
+    (dist, k) ordering, k unique within a group. Runs the engine's own
+    `_pq_subvectors` and `_pq_assign` on both inputs they serve: the
+    IVF residuals keyed (vec_id, cell) of sim_ivf_pq_topk, and the plain
+    quantized vectors keyed vec_id of sim_pq_adc_topk and
+    emb_pq_code_balance; compares both assign forms row for row at both
+    graded fixtures."""
     from pyspark.sql import Window
 
     from dataflow_pubsub_message_encryption_spark.operators import similarity as S
@@ -311,76 +312,53 @@ def test_pq_assign_min_by_equals_window(spark, fixture):
         .select(
             "vec_id",
             "label",
-            F.transform(
-                S.as_double("embedding"),
-                lambda x: F.round(x * S._CENT_SCALE).cast("long"),
-            ).alias("qe"),
+            S._quantize(S.as_double("embedding")).alias("qe"),
         )
         .localCheckpoint(eager=True)
     )
-    cint = (
-        e_q.select("label", F.posexplode("qe").alias("pos", "q"))
-        .groupBy("label", "pos")
-        .agg(
-            F.floor(F.sum("q").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("cq")
-        )
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cq"))).alias("p"))
-        .select(
-            F.col("label").alias("cell"),
-            F.transform("p", lambda s: s.getField("cq")).alias("cq"),
-        )
-    )
-    res = e_q.join(F.broadcast(cint), e_q.label == cint.cell).select(
-        "vec_id",
-        "cell",
-        F.zip_with("qe", "cq", lambda a, b: a - b).alias("re"),
-    )
-    subs = res.select(
-        "vec_id",
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("re", m * S._PQ_SUB + 1, S._PQ_SUB).alias("sv"),
-                    )
-                    for m in range(S._PQ_M)
-                ]
+    if residual:
+        cint = (
+            e_q.select("label", F.posexplode("qe").alias("pos", "q"))
+            .groupBy("label", "pos")
+            .agg(
+                F.floor(F.sum("q").cast("double") / F.count("*"))
+                .cast("long")
+                .alias("cq")
             )
-        ).alias("ms"),
-    ).select("vec_id", "cell", "ms.m", "ms.sv")
-
-    def il2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
+            .groupBy("label")
+            .agg(F.array_sort(F.collect_list(F.struct("pos", "cq"))).alias("p"))
+            .select(
+                F.col("label").alias("cell"),
+                F.transform("p", lambda s: s.getField("cq")).alias("cq"),
+            )
         )
+        res = e_q.join(F.broadcast(cint), e_q.label == cint.cell).select(
+            "vec_id",
+            "cell",
+            F.zip_with("qe", "cq", lambda a, b: a - b).alias("re"),
+        )
+        keys = ["vec_id", "cell"]
+        subs = S._pq_subvectors(res, "re", keys)
+    else:
+        keys = ["vec_id"]
+        subs = S._pq_subvectors(e_q, "qe", keys)
 
     cb0 = subs.filter(F.col("vec_id") < S._PQ_K).select(
         "m", F.col("vec_id").alias("k"), F.col("sv").alias("cw")
     )
     scored = subs.join(F.broadcast(cb0), "m").select(
-        "vec_id", "cell", "m", "k", il2(F.col("sv"), F.col("cw")).alias("dist")
+        *keys, "m", "k", S._il2(F.col("sv"), F.col("cw")).alias("dist")
     )
     w = Window.partitionBy("vec_id", "m").orderBy("dist", "k")
     window_form = sorted(
-        (r.vec_id, r.cell, r.m, r.k)
+        tuple(r)
         for r in scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("vec_id", "cell", "m", "k")
+        .select(*keys, "m", "k")
         .collect()
     )
     min_by_form = sorted(
-        (r.vec_id, r.cell, r.m, r.k)
-        for r in scored.groupBy("vec_id", "cell", "m")
-        .agg(F.min_by("k", F.struct("dist", "k")).alias("k"))
-        .select("vec_id", "cell", "m", "k")
-        .collect()
+        tuple(r) for r in S._pq_assign(subs, cb0, keys).collect()
     )
     assert window_form, "fixture admits no PQ assignments — law vacuous"
     assert window_form == min_by_form

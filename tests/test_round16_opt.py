@@ -9,7 +9,7 @@ compute; these laws are the equivalence proofs:
   crossJoin / per-row fold — must return exactly the r15 walk's top-k.
   The r15 form is reconstructed here as the law twin (per-hop
   frontier ⋈ nodes ⋈ probe scoring over pd-less edges).
-- The attached pd on every fused edge equals the `_gr_isq` distance
+- The attached pd on every fused edge equals the `_il2` distance
   recomputed directly from the dst node's quantized vector and the
   probe (the attach join maps the right value to the right endpoint).
 - The triu pair kernel (emit i<j once + JVM mirror) is covered by the
@@ -32,9 +32,7 @@ def _blocked_build(spark, fixture):
     from dataflow_pubsub_message_encryption_spark.sources import load
 
     e = load(spark, fixture, "embeddings")
-    nodes = S._gr_nodes(
-        e.filter(F.col("vec_id") != S._PROBE_ID), blocked=True
-    ).localCheckpoint()
+    nodes = S._gr_nodes(e.filter(F.col("vec_id") != S._PROBE_ID)).localCheckpoint()
     probe = (
         e.filter(F.col("vec_id") == S._PROBE_ID)
         .select(
@@ -52,7 +50,7 @@ def _blocked_build(spark, fixture):
 def _r15_walk(S, nodes, probe, edges_plain):
     """The round-15 walk form, kept verbatim as the law twin: per-hop
     frontier ⋈ edges, union, distinct, re-join the node table for qe,
-    crossJoin the broadcast probe, interpreted `_gr_isq` fold, top-beam;
+    crossJoin the broadcast probe, interpreted `_il2` fold, top-beam;
     final 2-hop rerank re-joins nodes + probe the same way."""
     cur = nodes.orderBy(F.desc("lvl"), "vec_id").limit(1).select("vec_id")
     for l in S._GR_LEVELS:
@@ -66,7 +64,7 @@ def _r15_walk(S, nodes, probe, edges_plain):
                 frontier.join(nodes, "vec_id")
                 .crossJoin(F.broadcast(probe))
                 .select(
-                    "vec_id", S._gr_isq(F.col("qe"), F.col("pq")).alias("d")
+                    "vec_id", S._il2(F.col("qe"), F.col("pq")).alias("d")
                 )
             )
             cur = (
@@ -89,7 +87,7 @@ def _r15_walk(S, nodes, probe, edges_plain):
     return (
         cand.join(nodes.select("vec_id", "qe"), "vec_id")
         .crossJoin(F.broadcast(probe))
-        .select("vec_id", S._gr_isq(F.col("qe"), F.col("pq")).alias("idist"))
+        .select("vec_id", S._il2(F.col("qe"), F.col("pq")).alias("idist"))
         .orderBy("idist", "vec_id")
         .limit(S._TOPK)
     )
@@ -121,7 +119,7 @@ def test_gr_walk_dcarry_equals_r15_form(spark, fixture):
 
 @pytest.mark.parametrize("fixture", FIXTURES)
 def test_gr_edges_pd_equals_recomputed_distance(spark, fixture):
-    """Every fused edge's attached pd must equal the `_gr_isq` probe
+    """Every fused edge's attached pd must equal the `_il2` probe
     distance recomputed directly from the dst node's quantized vector —
     the attach join maps the right distance to the right endpoint."""
     S, nodes, probe, scored = _blocked_build(spark, fixture)
@@ -131,7 +129,7 @@ def test_gr_edges_pd_equals_recomputed_distance(spark, fixture):
         r.vec_id: r.pd
         for r in nodes.crossJoin(F.broadcast(probe))
         .select(
-            "vec_id", S._gr_isq(F.col("qe"), F.col("pq")).alias("pd")
+            "vec_id", S._il2(F.col("qe"), F.col("pq")).alias("pd")
         )
         .collect()
     }
