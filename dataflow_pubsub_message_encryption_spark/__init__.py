@@ -27,7 +27,9 @@ Layout
                    shuffle assertions used by tests).
 - ``streaming``  : Structured Streaming mirror of the reference pipeline
                    (watermarks, tumbling/sliding/session windows, stateful
-                   dedup, sinks).
+                   dedup, checkpointed parquet/text sinks). Batch output
+                   is plain ``DataFrameWriter``; there is no batch sink
+                   module.
 """
 
 from . import _zipcache  # noqa: F401  (installs the zip-directory cache fix)

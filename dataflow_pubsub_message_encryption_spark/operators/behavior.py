@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.normalize import date_str, dec4, duck_ts, money, ts_str
 from ..sources import load, load_events
 from .base import make_registry
+from .relational import _asof_best
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -1844,36 +1845,24 @@ def events_attribution_last_touch(spark, sf_dir):
     (identical resolve-then-tolerance discipline as `join_asof_tolerance`,
     here with INNER output: the attribution report lists attributed
     conversions). Purchase value rides through in the decimal-money
-    discipline. Shape: user-keyed equi-join carrying only ids+timestamps,
-    per-purchase rank window at user-session cardinality, tolerance as a
-    projection; at 100 TB both sides come pre-partitioned by the same
+    discipline; at 100 TB both sides come pre-partitioned by the same
     user-keyed shuffle sessionization already pays. Gap math in integer
     microseconds keeps the match set cross-engine exact."""
-    ev = load_events(spark, sf_dir)
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        "ts",
-        "value",
+    best = _asof_best(
+        load_events(spark, sf_dir),
+        "purchase",
+        "click",
+        F.col("m_ts") <= F.col("ts"),
+        F.desc("m_ts"),
+        F.desc("m_id"),
     )
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user_id"),
-        F.col("ts").alias("c_ts"),
-    )
-    w = Window.partitionBy("purchase_id").orderBy(
-        F.desc("c_ts"), F.desc("click_id")
-    )
-    gap = F.expr("timestampdiff(MICROSECOND, c_ts, ts)")
+    gap = F.expr("timestampdiff(MICROSECOND, m_ts, ts)")
     return (
-        p.join(c, (p.user_id == c.c_user_id) & (F.col("c_ts") <= p.ts))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .withColumn("gap_us", gap)
+        best.withColumn("gap_us", gap)
         .filter(F.col("gap_us") <= _ATTR_TOL_US)
         .select(
-            "purchase_id",
-            "click_id",
+            F.col("event_id").alias("purchase_id"),
+            F.col("m_id").alias("click_id"),
             F.col("gap_us").cast("long").alias("gap_us"),
             money(dec4("value")).alias("value"),
         )
@@ -2260,6 +2249,39 @@ def events_anomaly_mad(spark, sf_dir):
     )
 
 
+def _daily_fanout(spark, sf_dir, offsets: range):
+    """Daily per-type volume cells paired with their neighbours: one row
+    per (event_type, day, cnt) cell and offset k in ``offsets`` whose
+    shifted day (day + k) has a cell of the same type, carrying that
+    cell as ``o_day`` / ``o_cnt`` (gap days pair with nothing). Scale
+    shape: the fact table collapses to |types|×|days| cells in one
+    partial-aggregating pass; a broadcast ``spark.range`` of offsets fans
+    the tiny summary out ×|offsets|, and an equi-join on (type, shifted
+    day) pairs it with itself. Nothing downstream touches event grain."""
+    cells = (
+        load_events(spark, sf_dir)
+        .groupBy("event_type", F.to_date(F.date_trunc("day", "ts")).alias("day"))
+        .agg(F.count("*").cast("long").alias("cnt"))
+    )
+    ks = spark.range(offsets.start, offsets.stop).select(
+        F.col("id").cast("int").alias("k")
+    )
+    o = cells.select(
+        F.col("event_type").alias("o_type"),
+        F.col("day").alias("o_day"),
+        F.col("cnt").alias("o_cnt"),
+    )
+    return (
+        cells.join(F.broadcast(ks))
+        .join(
+            o,
+            (F.col("o_type") == F.col("event_type"))
+            & (F.col("o_day") == F.date_add("day", "k")),
+        )
+        .drop("o_type")
+    )
+
+
 @query(
     "events_acf_lags",
     """
@@ -2309,36 +2331,13 @@ def events_acf_lags(spark, sf_dir):
     only float steps are two sqrt's of exactly-representable int64s
     (< 2^53), one multiply, one division, one 6dp round — IEEE-identical
     in both engines (the `events_anomaly_mad` discipline). Scale shape:
-    the fact table collapses to |types|×|days| cells in one
-    partial-aggregating pass; the lag pairing is an equi-join of that
-    tiny summary against itself on (type, day+lag) — 7 lags fan the
-    summary out ×7 before a second partial aggregation to |types|×7
-    rows. Nothing downstream of the first groupBy touches event grain."""
-    ev = load_events(spark, sf_dir)
-    cells = ev.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.count("*").cast("long").alias("cnt"))
-    lags = spark.range(1, 8).select(F.col("id").cast("int").alias("lag"))
-    a = cells.alias("a")
-    b = cells.select(
-        F.col("event_type").alias("b_type"),
-        F.col("day").alias("b_day"),
-        F.col("cnt").alias("y"),
-    )
-    pairs = (
-        a.join(F.broadcast(lags))
-        .withColumn("tgt", F.date_add(F.col("a.day"), F.col("lag")))
-        .join(
-            b,
-            (F.col("b_type") == F.col("a.event_type"))
-            & (F.col("b_day") == F.col("tgt")),
-        )
-        .select(
-            F.col("a.event_type").alias("event_type"),
-            "lag",
-            F.col("a.cnt").alias("x"),
-            "y",
-        )
+    the 7 lags fan the daily cells out ×7 (:func:`_daily_fanout`) before
+    a second partial aggregation to |types|×7 rows."""
+    pairs = _daily_fanout(spark, sf_dir, range(1, 8)).select(
+        "event_type",
+        F.col("k").alias("lag"),
+        F.col("cnt").alias("x"),
+        F.col("o_cnt").alias("y"),
     )
     s = pairs.groupBy("event_type", "lag").agg(
         F.count("*").cast("long").alias("n"),
@@ -2404,36 +2403,15 @@ def events_ewma_daily(spark, sf_dir):
     numerator and denominator are exact BIGINT sums over whichever of the
     10 lookback days exist (gap days contribute nothing and the weight sum
     renormalizes automatically), and the reported EWMA is one double
-    division + 6dp round. Scale shape: the fact table collapses to
-    |types|×|days| cells once; the lookback is a broadcast of 10 offsets
-    fanning the tiny summary ×10 into a second partial aggregation —
-    the `events_acf_lags` plan shape with weights."""
-    ev = load_events(spark, sf_dir)
-    cells = ev.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.count("*").cast("long").alias("cnt"))
-    ks = spark.range(0, 10).select(F.col("id").cast("int").alias("k"))
-    b = cells.select(
-        F.col("event_type").alias("b_type"),
-        F.col("day").alias("b_day"),
-        F.col("cnt").alias("past_cnt"),
-    )
-    terms = (
-        cells.alias("a")
-        .join(F.broadcast(ks))
-        .withColumn("src", F.date_sub(F.col("a.day"), F.col("k")))
-        .join(
-            b,
-            (F.col("b_type") == F.col("a.event_type"))
-            & (F.col("b_day") == F.col("src")),
-        )
-        .select(
-            F.col("a.event_type").alias("event_type"),
-            F.col("a.day").alias("day"),
-            F.col("a.cnt").alias("cnt"),
-            "past_cnt",
-            F.expr("shiftleft(CAST(1 AS BIGINT), 9 - k)").alias("w"),
-        )
+    division + 6dp round. Scale shape: the 10-day lookback is offsets
+    −9..0 of :func:`_daily_fanout` (offset −k is k days back), the ×10
+    fan-out feeding a second partial aggregation."""
+    terms = _daily_fanout(spark, sf_dir, range(-9, 1)).select(
+        "event_type",
+        "day",
+        "cnt",
+        F.col("o_cnt").alias("past_cnt"),
+        F.expr("shiftleft(CAST(1 AS BIGINT), 9 + k)").alias("w"),
     )
     return (
         terms.groupBy("event_type", "day")
@@ -2776,37 +2754,15 @@ def window_rolling_median(spark, sf_dir):
     count is reported); the median is the deterministic lower-median at
     rank (n+1)//2 under a (value, day) total order — the
     `events_anomaly_mad` discipline, all-integer end to end. Scale
-    shape: the fact table reduces to |types|×|days| cells once; the
-    window materializes via a 7-offset broadcast fan-out (the
-    `events_ewma_daily` plan shape) and the rank windows are PARTITIONED
-    by (type, anchor day) over ≤7-row groups — no global window, no
-    unbounded frame."""
-    ev = load_events(spark, sf_dir)
-    cells = ev.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.count("*").cast("long").alias("cnt"))
-    ks = spark.range(-3, 4).select(F.col("id").cast("int").alias("k"))
-    b = cells.select(
-        F.col("event_type").alias("b_type"),
-        F.col("day").alias("w_day"),
-        F.col("cnt").alias("w_cnt"),
-    )
-    pairs = (
-        cells.alias("a")
-        .join(F.broadcast(ks))
-        .withColumn("tgt", F.date_add(F.col("a.day"), F.col("k")))
-        .join(
-            b,
-            (F.col("b_type") == F.col("a.event_type"))
-            & (F.col("w_day") == F.col("tgt")),
-        )
-        .select(
-            F.col("a.event_type").alias("event_type"),
-            F.col("a.day").alias("day"),
-            F.col("a.cnt").alias("cnt"),
-            "w_cnt",
-            "w_day",
-        )
+    shape: the window is offsets −3..3 of :func:`_daily_fanout`, and the
+    rank windows are PARTITIONED by (type, anchor day) over ≤7-row
+    groups — no global window, no unbounded frame."""
+    pairs = _daily_fanout(spark, sf_dir, range(-3, 4)).select(
+        "event_type",
+        "day",
+        "cnt",
+        F.col("o_cnt").alias("w_cnt"),
+        F.col("o_day").alias("w_day"),
     )
     wrk = Window.partitionBy("event_type", "day").orderBy("w_cnt", "w_day")
     wn = Window.partitionBy("event_type", "day")

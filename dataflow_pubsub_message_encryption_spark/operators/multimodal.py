@@ -790,6 +790,15 @@ def multimodal_chunk_dedup_savings(spark, sf_dir):
         .cast("long")
         .alias("nb"),
     )
+    return _chunk_savings(ch)
+
+
+def _chunk_savings(ch):
+    """Chunk-store savings of (chash, nb) chunk rows: the chunk census is
+    ONE hash-groupBy whose shuffle carries (hash, size) pairs — the exact
+    shape of the store build itself — and the savings rollup is a 1-row
+    aggregate (n_chunks, n_unique, bytes_total, bytes_unique,
+    savings_ppm). All integer arithmetic, ppm floor-div."""
     g = ch.groupBy("chash", "nb").agg(F.count("*").alias("cnt"))
     return g.agg(
         F.sum("cnt").cast("long").alias("n_chunks"),
@@ -977,8 +986,8 @@ def multimodal_cdc_chunk_savings(spark, sf_dir):
     Arrow kernel, entirely within each input partition — no explode, no
     per-byte rows, no payload in any post-kernel row; the kernel emits
     ~1 row per 64-byte chunk carrying (hash, size) only, and the single
-    wide op is the chunk-census groupBy those rows feed — the exact
-    shape of the CAS store build itself. The equivalence law
+    wide op is the :func:`_chunk_savings` census those rows feed. The
+    equivalence law
     (tests/test_round9_ops.py) pins kernel ≡ the SQL-mirror explode/lag
     twin on fixtures, and the EXACT oracle pins both. The fixture scan
     is rebalanced before the kernel (single-row-group parquet would
@@ -988,15 +997,4 @@ def multimodal_cdc_chunk_savings(spark, sf_dir):
 
     m = with_media(_parallel(spark, load(spark, sf_dir, "documents")))
     hx = m.select("doc_id", F.lower(F.hex("payload")).alias("h"))
-    ch = _cdc_chunks(hx).select("chash", "nb")
-    cg = ch.groupBy("chash", "nb").agg(F.count("*").alias("cnt"))
-    return cg.agg(
-        F.sum("cnt").cast("long").alias("n_chunks"),
-        F.count("*").alias("n_unique"),
-        F.sum(F.col("nb") * F.col("cnt")).cast("long").alias("bytes_total"),
-        F.sum("nb").cast("long").alias("bytes_unique"),
-        F.expr(
-            "CAST((SUM(nb * cnt) - SUM(nb)) * 1000000"
-            " DIV SUM(nb * cnt) AS BIGINT)"
-        ).alias("savings_ppm"),
-    )
+    return _chunk_savings(_cdc_chunks(hx).select("chash", "nb"))

@@ -229,6 +229,35 @@ def join_range_theta(spark, sf_dir):
     return o.join(li, cond).groupBy("o_orderpriority").agg(F.count("*").alias("cnt"))
 
 
+def _asof_best(ev, left_type, right_type, cond, *order):
+    """Rank-1 as-of match per left event: every ``left_type`` event joins
+    the same user's ``right_type`` events that pass ``cond``, and a
+    ``row_number`` window PARTITIONED by the left ``event_id`` keeps the
+    first candidate under ``order``. Spark has no ASOF builtin; this is
+    the scalable idiom — the join shuffles on user_id only, candidate
+    fan-out is bounded per user (skewed users are the thing to salt at
+    scale), and the rank window runs per left event, never globally.
+    ``cond`` and ``order`` read the left event's ``ts`` and the
+    candidate's ``m_id`` / ``m_ts``; ``order`` must end on ``m_id`` so
+    the match is a total order both engines share. Returns every events
+    column of the left event plus its match's ``m_id`` and ``m_ts``;
+    left events without a candidate are absent (callers wanting LEFT
+    semantics re-join their left events by ``event_id``)."""
+    right = ev.filter(F.col("event_type") == right_type).select(
+        F.col("event_id").alias("m_id"),
+        F.col("user_id").alias("m_user_id"),
+        F.col("ts").alias("m_ts"),
+    )
+    w = Window.partitionBy("event_id").orderBy(*order)
+    return (
+        ev.filter(F.col("event_type") == left_type)
+        .join(right, (F.col("user_id") == F.col("m_user_id")) & cond)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn", "m_user_id")
+    )
+
+
 @query(
     "join_asof",
     f"""
@@ -241,37 +270,21 @@ def join_range_theta(spark, sf_dir):
 )
 def join_asof(spark, sf_dir):
     """C11 — as-of join: each error event matched to the same user's most
-    recent prior (or simultaneous) signup. Spark has no ASOF builtin; the
-    scalable idiom is equi-join on the entity key + row_number over the
-    candidate matches, keeping rank 1. The shuffle is on user_id only —
-    candidate fan-out is bounded per user, and skewed users would be the
-    thing to salt at scale. Oracle: DuckDB's native ASOF JOIN."""
-    ev = load_events(spark, sf_dir)
-    err = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
+    recent prior (or simultaneous) signup (inner: errors with no such
+    signup drop out). Oracle: DuckDB's native ASOF JOIN."""
+    best = _asof_best(
+        load_events(spark, sf_dir),
+        "error",
+        "signup",
+        F.col("m_ts") <= F.col("ts"),
+        F.desc("m_ts"),
+        F.desc("m_id"),
     )
-    sig = ev.filter(F.col("event_type") == "signup").select(
-        F.col("event_id").alias("signup_event_id"),
-        F.col("user_id").alias("s_user_id"),
-        F.col("ts").alias("signup_ts_raw"),
-    )
-    joined = err.join(
-        sig,
-        (err.user_id == sig.s_user_id) & (err.ts >= sig.signup_ts_raw),
-        "inner",
-    )
-    w = Window.partitionBy("event_id").orderBy(
-        F.desc("signup_ts_raw"), F.desc("signup_event_id")
-    )
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "event_id",
-            "signup_event_id",
-            ts_str("ts").alias("error_ts"),
-            ts_str("signup_ts_raw").alias("signup_ts"),
-        )
+    return best.select(
+        "event_id",
+        F.col("m_id").alias("signup_event_id"),
+        ts_str("ts").alias("error_ts"),
+        ts_str("m_ts").alias("signup_ts"),
     )
 
 
@@ -1670,30 +1683,19 @@ def join_asof_nearest(spark, sf_dir):
     after — the sensor-alignment / feature-attach variant the plain
     backward ASOF (C11) can't express. Ties break on (earlier signup,
     smaller id), a total order both engines share; distance is an
-    INTEGER microsecond diff, so the argmin is exact. Same scale shape
-    as C11: equi-join on the entity key, per-event ranking window —
-    candidate fan-out bounded per user, skewed users are the documented
-    salting case."""
-    ev = load_events(spark, sf_dir)
-    err = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
+    INTEGER microsecond diff, so the argmin is exact."""
+    delta = F.abs(F.expr("timestampdiff(MICROSECOND, m_ts, ts)"))
+    best = _asof_best(
+        load_events(spark, sf_dir),
+        "error",
+        "signup",
+        F.lit(True),
+        delta,
+        F.col("m_ts"),
+        F.col("m_id"),
     )
-    sig = ev.filter(F.col("event_type") == "signup").select(
-        F.col("event_id").alias("signup_event_id"),
-        F.col("user_id").alias("s_user_id"),
-        F.col("ts").alias("s_ts"),
-    )
-    joined = err.join(sig, err.user_id == sig.s_user_id).withColumn(
-        "delta_us",
-        F.abs(F.expr("timestampdiff(MICROSECOND, s_ts, ts)")),
-    )
-    w = Window.partitionBy("event_id").orderBy(
-        "delta_us", "s_ts", "signup_event_id"
-    )
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("event_id", "signup_event_id", "delta_us")
+    return best.select(
+        "event_id", F.col("m_id").alias("signup_event_id"), delta.alias("delta_us")
     )
 
 
@@ -2286,40 +2288,27 @@ def join_asof_tolerance(spark, sf_dir):
     rows disappear, unlike the inner C11 form). The match is resolved
     BEFORE the tolerance test, so a too-old nearest match yields NULL
     rather than sliding to an even older one — pandas semantics, pinned
-    by the oracle. Shape: user-keyed equi-join + per-error ranking
-    window (ids and timestamps only), then the tolerance filter as a
-    projection; integer-µs gap math keeps NULL-vs-match cross-engine
+    by the oracle. The tolerance filter is a projection over the LEFT
+    re-join; integer-µs gap math keeps NULL-vs-match cross-engine
     exact."""
     ev = load_events(spark, sf_dir)
-    e = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    s = ev.filter(F.col("event_type") == "signup").select(
-        F.col("event_id").alias("s_event_id"),
-        F.col("user_id").alias("s_user_id"),
-        F.col("ts").alias("s_ts"),
-    )
-    w = Window.partitionBy("event_id").orderBy(
-        F.desc("s_ts"), F.desc("s_event_id")
-    )
-    m = (
-        e.join(
-            s,
-            (e.user_id == s.s_user_id) & (F.col("s_ts") <= e.ts),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("event_id", "s_event_id", "s_ts")
-    )
-    gap = F.expr("timestampdiff(MICROSECOND, s_ts, ts)")
+    best = _asof_best(
+        ev,
+        "error",
+        "signup",
+        F.col("m_ts") <= F.col("ts"),
+        F.desc("m_ts"),
+        F.desc("m_id"),
+    ).select("event_id", "m_id", "m_ts")
+    gap = F.expr("timestampdiff(MICROSECOND, m_ts, ts)")
     return (
-        e.join(m, "event_id", "left")
+        ev.filter(F.col("event_type") == "error")
+        .select("event_id", "ts")
+        .join(best, "event_id", "left")
         .select(
             "event_id",
             ts_str("ts").alias("error_ts"),
-            F.when(gap <= _ASOF_TOL_US, F.col("s_event_id")).alias(
-                "signup_event_id"
-            ),
+            F.when(gap <= _ASOF_TOL_US, F.col("m_id")).alias("signup_event_id"),
             F.when(gap <= _ASOF_TOL_US, gap).alias("gap_us"),
         )
     )
@@ -2469,36 +2458,27 @@ def join_asof_forward(spark, sf_dir):
     / recovery-after-failure lookup (pandas ``merge_asof
     direction='forward'``). LEFT semantics keep errors with no later
     purchase (NULL match) — the population whose churn the number
-    exists to measure. Same scalable idiom as the siblings: equi-join on
-    user_id, per-error candidate ranking by (earliest ts, id) — windows
-    PARTITIONED per error event, shuffle on the user key only. The
-    oracle ranks with the identical window (DuckDB's native ASOF binds
-    the backward direction only)."""
+    exists to measure. The oracle ranks with the identical window
+    (DuckDB's native ASOF binds the backward direction only)."""
     ev = load_events(spark, sf_dir)
-    err = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    pur = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("next_purchase_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("pts"),
-    )
-    cand = err.join(
-        pur,
-        (err.user_id == pur.p_user_id) & (pur.pts >= err.ts),
-        "inner",
-    )
-    w = Window.partitionBy("event_id").orderBy("pts", "next_purchase_id")
-    best = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("event_id", "next_purchase_id", "pts")
-    )
-    return err.join(best, "event_id", "left").select(
-        "event_id",
-        "next_purchase_id",
-        ts_str("ts").alias("error_ts"),
-        ts_str("pts").alias("purchase_ts"),
+    best = _asof_best(
+        ev,
+        "error",
+        "purchase",
+        F.col("m_ts") >= F.col("ts"),
+        F.col("m_ts"),
+        F.col("m_id"),
+    ).select("event_id", "m_id", "m_ts")
+    return (
+        ev.filter(F.col("event_type") == "error")
+        .select("event_id", "ts")
+        .join(best, "event_id", "left")
+        .select(
+            "event_id",
+            F.col("m_id").alias("next_purchase_id"),
+            ts_str("ts").alias("error_ts"),
+            ts_str("m_ts").alias("purchase_ts"),
+        )
     )
 
 

@@ -49,6 +49,7 @@ from ..materialize import pin
 from ..sources import load, load_events
 from .base import make_registry
 from .relational import ORACLES as _REL_ORACLES  # relational imports scale lazily
+from .relational import orders_pareto_abc
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -652,41 +653,17 @@ def profile_key_skew(spark, sf_dir):
 )
 def agg_exact_median_twopass(spark, sf_dir):
     """EXACT global median (lower median, rank ⌈N/2⌉) without a global
-    sort — the two-pass bucket-prune algorithm a 100 TB engine uses when
-    ``percentile_approx`` isn't good enough (billing, SLA thresholds):
-
-    pass 1 histograms the column into integer buckets (partial-
-    aggregating groupBy, |buckets| rows) and walks the cumulative counts
-    to find the bucket containing the target rank; pass 2 re-scans ONLY
-    that bucket (predicate pushed to the parquet scan) and takes the
-    (rank - preceding) smallest inside it via TakeOrdered — never a
-    whole-table sort. The cumulative walk rides ``_global_cumsum``
-    (range-partitioned prefix sum): bucket count ∝ value range, so a
-    bare ``SUM OVER (ORDER BY b)`` would be the single-partition-window
-    trap on a wide-range column — caught in round 9 by a WindowExec
-    warning sweep over BUILD-side jobs (the returned-plan sweep can't
-    see a window a driver-scalar collect already consumed). Driver
-    transfer is two scalars (total count; the located bucket + its
-    preceding cumulative count), the same bounded pattern as the
-    components fixed-point loop. The oracle computes the same rank with
-    a row_number over the full table — the prune is value-checked, not
-    trusted."""
+    sort — the one-rank case of :func:`_exact_order_stats`, the two-pass
+    bucket-prune algorithm a 100 TB engine uses when
+    ``percentile_approx`` isn't good enough (billing, SLA thresholds).
+    Also reports how many rows the pruned second pass scanned. The
+    oracle computes the same rank with a row_number over the full table
+    — the prune is value-checked, not trusted."""
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("x")
     )
     n = li.agg(F.count("*")).collect()[0][0]  # driver-scalar
-    rank = (n + 1) // 2
-    hist = li.groupBy(F.floor("x").alias("b")).agg(F.count("*").alias("c"))
-    cum = _global_cumsum(hist, "c", "b").filter(
-        F.col("cum") >= rank
-    ).orderBy("b").limit(1)
-    located = cum.agg(F.min("b").alias("b"), F.min(F.col("cum") - F.col("c")).alias("prev")).collect()[0]  # driver-scalar
-    b_star, prev_cum = located["b"], located["prev"]
-    k = rank - prev_cum
-    in_bucket = li.filter(F.floor("x") == b_star)
-    median = (
-        in_bucket.orderBy("x").limit(int(k)).agg(F.max("x").alias("median_x"))
-    )
+    median, (in_bucket,) = _exact_order_stats(li, {"median_x": (n + 1) // 2})
     n_bucket = in_bucket.agg(F.count("*").alias("n_bucket_scanned"))
     return (
         median.crossJoin(F.broadcast(n_bucket))  # 1 row x 1 row
@@ -696,6 +673,46 @@ def agg_exact_median_twopass(spark, sf_dir):
             "n_bucket_scanned",
         )
     )
+
+
+def _bucket_locate(li, cum, rank: int):
+    """Locate a target rank in a ``_global_cumsum`` frame over the
+    integer-bucket histogram ``(b, c, cum)`` of column ``x``: the first
+    bucket whose cumulative mass reaches ``rank``, found with ONE
+    driver-scalar collect of ``(b, prev)`` (the bucket and the mass
+    before it). Returns the rows of ``li`` in that bucket (the floor
+    predicate pushes down to the parquet scan) and the rank's residual
+    inside it, ``rank - prev``."""
+    loc = cum.filter(F.col("cum") >= rank).orderBy("b").limit(1)
+    row = loc.agg(F.min("b").alias("b"), F.min(F.col("cum") - F.col("c")).alias("prev")).collect()[0]  # driver-scalar
+    return li.filter(F.floor("x") == row["b"]), int(rank - row["prev"])
+
+
+def _exact_order_stats(li, ranks: dict):
+    """EXACT order statistics of column ``x`` at each 1-based rank in
+    ``ranks`` (output column → rank), without a global sort:
+
+    pass 1 histograms the column into integer buckets (partial-
+    aggregating groupBy, |buckets| rows) and walks the cumulative counts
+    once (:func:`_global_cumsum`, the range-partitioned prefix sum:
+    bucket count ∝ value range, so a bare ``SUM OVER (ORDER BY b)``
+    would be the single-partition-window trap on a wide-range column —
+    caught in round 9 by a WindowExec warning sweep over BUILD-side
+    jobs); pass 2 re-scans ONLY each located bucket
+    (:func:`_bucket_locate`) and takes its (rank − preceding) smallest
+    via TakeOrdered — never a whole-table sort. Driver transfer is one
+    located-bucket row per rank, bounded like the components loop.
+    Returns the one-row frame of all ranks' values (1×1 broadcast
+    crosses) and the in-bucket frame of each rank, in ``ranks`` order."""
+    hist = li.groupBy(F.floor("x").alias("b")).agg(F.count("*").alias("c"))
+    cum = _global_cumsum(hist, "c", "b")
+    out, buckets = None, []
+    for name, rank in ranks.items():
+        in_bucket, k = _bucket_locate(li, cum, rank)
+        val = in_bucket.orderBy("x").limit(k).agg(F.max("x").alias(name))
+        out = val if out is None else out.crossJoin(F.broadcast(val))  # 1x1
+        buckets.append(in_bucket)
+    return out, buckets
 
 
 _PCTS = (25, 50, 90)
@@ -714,40 +731,17 @@ _PCTS = (25, 50, 90)
     """,
 )
 def agg_exact_percentiles_twopass(spark, sf_dir):
-    """EXACT p25/p50/p90 with ONE histogram pass + ONE pruned second
-    pass — the multi-rank generalization of ``agg_exact_median_twopass``
-    (rank_p = ceil(n*p/100), the lower-value convention, all-integer):
-    the shared integer-bucket histogram locates every target rank's
-    bucket in a single cumulative walk (``_global_cumsum`` — the
-    range-partitioned prefix sum; buckets ∝ value range, so the bare
-    global window this op used until round 9 was the single-partition
-    trap in a BUILD-side job the returned-plan sweep can't see); the
-    second scan filters to the union of located buckets (predicate
-    pushed to parquet) and takes each in-bucket order statistic via
-    TakeOrdered. Driver transfer is the count plus one located-bucket
-    row per percentile — bounded, like the components loop. At 100 TB
-    this is how exact SLA/billing percentiles are actually computed: two
-    corpus passes, no global sort, no sketch error bar."""
+    """EXACT p25/p50/p90 from ONE histogram pass + ONE pruned second
+    pass per percentile (:func:`_exact_order_stats` over a single
+    cumulative walk; rank_p = ceil(n*p/100), the lower-value convention,
+    all-integer). At 100 TB this is how exact SLA/billing percentiles
+    are actually computed: two corpus passes, no global sort, no sketch
+    error bar."""
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("x")
     )
     n = li.agg(F.count("*")).collect()[0][0]  # driver-scalar
-    ranks = {p: (n * p + 99) // 100 for p in _PCTS}
-    hist = li.groupBy(F.floor("x").alias("b")).agg(F.count("*").alias("c"))
-    cum = _global_cumsum(hist, "c", "b")
-    out = None
-    for p in _PCTS:
-        rank = ranks[p]
-        loc = cum.filter(F.col("cum") >= rank).orderBy("b").limit(1)
-        row = loc.agg(F.min("b").alias("b"), F.min(F.col("cum") - F.col("c")).alias("prev")).collect()[0]  # driver-scalar
-        k = int(rank - row["prev"])
-        val = (
-            li.filter(F.floor("x") == row["b"])
-            .orderBy("x")
-            .limit(k)
-            .agg(F.max("x").alias(f"p{p}"))
-        )
-        out = val if out is None else out.crossJoin(F.broadcast(val))  # 1x1
+    out, _ = _exact_order_stats(li, {f"p{p}": (n * p + 99) // 100 for p in _PCTS})
     return out.select(
         F.lit(n).cast("long").alias("n_rows"),
         *[F.col(f"p{p}") for p in _PCTS],
@@ -1961,16 +1955,14 @@ def agg_exact_weighted_median(spark, sf_dir):
     weighted by token count' is this op with (score, n_tokens); here
     (l_extendedprice, l_quantity) exercises it on the big fact table.
 
-    Same two-pass prune as ``agg_exact_median_twopass``, generalized to
-    weights: pass 1 histograms WEIGHT mass into integer buckets and walks
-    the cumulative masses to the target bucket; pass 2 rescans ONLY that
-    bucket (pushed predicate), collapses it per distinct value (weights
-    re-sum — associative), and takes the first value whose in-bucket
-    cumulative weight crosses the residual target. BOTH cumulative walks
-    ride ``_global_cumsum`` (round 9 — the histogram one was the
-    build-side single-partition-window catch; the in-bucket one was
-    bucket-bounded-admissible but the uniform machinery costs the same
-    and leaves zero WindowExec-global sites in the family).
+    The two-pass prune of :func:`_exact_order_stats`, generalized to
+    weights: pass 1 histograms WEIGHT mass into integer buckets and
+    locates the target bucket (:func:`_bucket_locate`); pass 2 collapses
+    that bucket per distinct value (weights re-sum — associative) and
+    takes the first value whose in-bucket cumulative weight crosses the
+    residual target. The in-bucket walk also rides ``_global_cumsum``:
+    it is bucket-bounded, but the uniform machinery costs the same and
+    leaves zero WindowExec-global sites in the family.
     Determinism under ties: rows of equal x always expose their full
     cumulative mass at the value's last row, so 'min x with cum ≥ k' is
     order-independent — the oracle's per-row running sum and the
@@ -1983,19 +1975,7 @@ def agg_exact_weighted_median(spark, sf_dir):
     W = li.agg(F.sum("w").alias("W")).collect()[0][0]  # driver-scalar
     k = (W + 1) // 2
     hist = li.groupBy(F.floor("x").alias("b")).agg(F.sum("w").alias("c"))
-    # histogram cumulative mass via _global_cumsum (buckets ∝ value
-    # range — the bare global window here was the round-9 build-side
-    # WindowExec catch); the in-bucket walk below rides the same
-    # machinery (see docstring)
-    cum = (
-        _global_cumsum(hist, "c", "b")
-        .filter(F.col("cum") >= k)
-        .orderBy("b")
-        .limit(1)
-    )
-    row = cum.agg(F.min("b").alias("b"), F.min(F.col("cum") - F.col("c")).alias("prev")).collect()[0]  # driver-scalar
-    k_res = int(k - row["prev"])
-    in_bucket = li.filter(F.floor("x") == row["b"])
+    in_bucket, k_res = _bucket_locate(li, _global_cumsum(hist, "c", "b"), k)
     vals = in_bucket.groupBy("x").agg(F.sum("w").alias("vw"))
     med = (
         _global_cumsum(vals, "vw", "x")
@@ -2096,45 +2076,12 @@ def scan_agg_pushdown_stats(spark, sf_dir):
     """,
 )
 def orders_pareto_class(spark, sf_dir):
-    """ABC / Pareto classification — "which customers are the 80%": rank
-    customers by revenue descending and classify by CUMULATIVE revenue
-    share (A ≤ 80%, B ≤ 95%, C the tail), the inventory-management
-    cousin of the quartile segmentations. The interesting machinery is
-    the global running sum: the oracle's bare ``SUM() OVER (ORDER BY)``
-    is the same single-partition WindowExec trap the ntile family had,
-    so the Spark side runs :func:`_global_cumsum` — range repartition,
-    per-partition decimal prefix sums in parallel, bounded per-partition
-    offset fix-up — proven equal to the plain window form by this very
-    oracle. Class boundaries compare ``cum·100 ≤ total·80`` in exact
-    DECIMAL arithmetic (no share-rounding at the boundary); the output
-    share is one double division per class row."""
-    rev = (
-        load(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(F.sum(dec4("o_totalprice")).alias("r"))
-    )
-    c = _global_cumsum(rev, "r", F.desc("r"), F.col("o_custkey"))
-    tot = rev.agg(F.sum("r").alias("tot"))
-    cls = (
-        c.crossJoin(F.broadcast(tot))
-        .select(
-            "r",
-            F.when(
-                F.col("cum") * 100 <= F.col("tot") * 80, "A"
-            )
-            .when(F.col("cum") * 100 <= F.col("tot") * 95, "B")
-            .otherwise("C")
-            .alias("cls"),
-            "tot",
-        )
-    )
-    return cls.groupBy(F.col("cls").alias("pareto_class")).agg(
-        F.count("*").alias("n_customers"),
-        money(F.sum("r")).alias("revenue"),
-        F.round(
-            F.sum("r").cast("double") / F.max("tot").cast("double"), 6
-        ).alias("revenue_share"),
-    )
+    """ABC / Pareto classification — "which customers are the 80%": the
+    `orders_pareto_abc` census (customers ranked by revenue descending,
+    classed by CUMULATIVE revenue share: A ≤ 80%, B ≤ 95%, C the tail,
+    over :func:`_global_cumsum`) with its class column named
+    ``pareto_class``."""
+    return orders_pareto_abc(spark, sf_dir).withColumnRenamed("cls", "pareto_class")
 
 
 _BIN_TARGET = 65536  # 64 KiB bins at fixture scale; 128-512 MiB in production

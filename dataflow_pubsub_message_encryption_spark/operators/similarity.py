@@ -909,36 +909,46 @@ _KNN_STRIDE = 100  # query set = every 100th vector
 def sim_knn_join(spark, sf_dir):
     """Batch k-NN JOIN — top-k corpus neighbors for EVERY query vector at
     once (the retrieval/labeling workload shape), not a single probe like
-    sim_cosine_topk. The query set broadcasts (it is the small side by
-    construction); each corpus partition scores all queries locally —
-    an embarrassingly parallel nested loop with NO shuffle of the corpus —
-    and only the per-(query, corpus-partition) top-k rows reach the
-    ranking window's shuffle, which is sized |queries| x k x partitions,
-    independent of corpus width. Ranking orders by the ROUNDED similarity
-    with vec_id tie-break in both engines, so the selected set is
-    deterministic. At 100 TB: same plan, query batch capped to keep the
-    broadcast under the executor budget."""
-    e = load(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") % _KNN_STRIDE == 0).select(
-        F.col("vec_id").alias("q_id"), as_double("embedding").alias("q_emb")
-    )
-    from pyspark.sql import Window
+    sim_cosine_topk: every 100th vector is a query
+    (:func:`_batch_probe_topk`). At 100 TB: same plan, query batch capped
+    to keep the broadcast under the executor budget."""
+    return _batch_probe_topk(
+        spark, sf_dir, F.col("vec_id") % _KNN_STRIDE == 0, _KNN_K
+    ).select(F.col("pid").alias("q_id"), "vec_id", "cos_sim")
 
-    scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
+
+def _batch_probe_topk(spark, sf_dir, probe_filter, k: int):
+    """Top-``k`` corpus neighbors of every probe in a batch: the vectors
+    passing ``probe_filter`` broadcast (the small side by construction);
+    each corpus partition scores all probes locally — an embarrassingly
+    parallel nested loop with NO shuffle of the corpus — and a
+    ``row_number`` window partitioned by probe keeps the first ``k``
+    (pid, vec_id, rk, cos_sim) per probe, a vector never its own
+    neighbor. Only the per-(probe, corpus-partition) top-k rows reach
+    the window's shuffle, sized |probes| × k × partitions, independent
+    of corpus width. Ranking orders by the ROUNDED similarity with vec_id
+    tie-break in both engines, so the selected set is deterministic.
+    Scale note: with FEW probes the ranking window skews (one partition
+    per probe); the fix is the two-level top-K of
+    ``topk_per_group_twolevel`` — per-(probe, salt) pre-top-K then merge
+    — proven result-identical there; with realistic probe batches
+    (millions) the window partitioning is already uniform."""
+    e = load(spark, sf_dir, "embeddings")
+    probes = e.filter(probe_filter).select(
+        F.col("vec_id").alias("pid"), as_double("embedding").alias("pe")
+    )
+    w = Window.partitionBy("pid").orderBy(F.desc("cos_sim"), "vec_id")
+    return (
+        e.join(F.broadcast(probes), F.col("vec_id") != F.col("pid"))
         .select(
-            "q_id",
+            "pid",
             "vec_id",
-            F.round(cosine(as_double("embedding"), F.col("q_emb")), 6).alias(
+            F.round(cosine(as_double("embedding"), F.col("pe")), 6).alias(
                 "cos_sim"
             ),
         )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KNN_K)
-        .select("q_id", "vec_id", "cos_sim")
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
     )
 
 
@@ -1098,38 +1108,57 @@ def _emb_lsh_pairs_body(spark, sf_dir, bits: int, n: int | None = None):
       broadcasts, pre-cast doubles ride the broadcast; above → explicit
       bucket repartition anchoring ONE narrow float32 exchange and a
       single per-row cast above it. Results are law-pinned identical."""
+    e, shuffle_regime = _emb_lsh_source(spark, sf_dir, n)
+    return _emb_band_pairs(e, bits, 0, shuffle_regime)
+
+
+def _emb_lsh_source(spark, sf_dir, n: int | None):
+    """The embeddings scan and its regime for ``_emb_band_pairs``: the
+    shuffle regime above ``_EMB_BCAST_MAX`` vectors; otherwise (or n
+    unknown) the broadcast regime, with the scan round-robin
+    repartitioned ONCE for every band.
+
+    Round-15 opt: in the BROADCAST regime there is no exchange at all, so
+    the whole query — the interpreted per-row derivations (4+ plane
+    dots, norm, cast) AND the per-candidate pair folds — inherits the
+    SCAN partitioning, which on the single-row-group fixture is ONE task
+    (measured: q11 2.71 s single-file vs 0.66 s on the 32-file twin).
+    The dedup.py `_parallel` idiom: a round-robin repartition of the
+    ≤_EMB_BCAST_MAX-row corpus (≤6 MB) spreads both stages; on an
+    already-partitioned real corpus it degrades to a cheap balanced
+    shuffle. This is NOT the keyed repartition ``_emb_lsh_pairs_body``
+    rejects — that one added two REPARTITION_BY_COL stages on top of the
+    broadcast; this one replaces the 1-task scan with the parallelism the
+    broadcast join preserves."""
+    e = load(spark, sf_dir, "embeddings")
+    shuffle_regime = n is not None and n > _EMB_BCAST_MAX
+    if not shuffle_regime:
+        e = e.repartition(spark.sparkContext.defaultParallelism)
+    return e, shuffle_regime
+
+
+def _emb_band_pairs(e, bits: int, start: int, shuffle_regime: bool):
+    """One LSH band: bucketize every vector on the ``bits`` hyperplanes
+    from plane ``start`` on, self-join on the bucket, and verify each
+    candidate pair's cosine against ``_DEDUP_TAU`` — (vec_a, vec_b,
+    bucket, cos_sim). Per-vector norms are precomputed so the pair stage
+    does one dot fold. In the shuffle regime the raw float32 vector
+    rides ONE explicit bucket exchange and is cast once per row above
+    it; in the broadcast regime the pre-cast doubles ride the broadcast
+    (see ``_emb_lsh_pairs_body``)."""
     from ..functions.vectors import dot, norm
 
-    e = load(spark, sf_dir, "embeddings")
-    if n is not None and n > _EMB_BCAST_MAX:
-        b = e.select(
-            "vec_id",
-            F.col("embedding").alias("emb32"),
-            norm(as_double("embedding")).alias("nrm"),
-            _bucket_bits(as_double("embedding"), bits).alias("bucket"),
-        ).repartition(F.col("bucket"))
-        bd = b.withColumn("emb", as_double("emb32")).drop("emb32")
-    else:
-        # Round-15 opt: in the BROADCAST regime there is no exchange at
-        # all, so the whole query — the interpreted per-row derivations
-        # (4+ plane dots, norm, cast) AND the per-candidate pair folds —
-        # inherits the SCAN partitioning, which on the single-row-group
-        # fixture is ONE task (measured: q11 2.71 s single-file vs
-        # 0.66 s on the 32-file twin). The dedup.py `_parallel` idiom:
-        # a round-robin repartition of the ≤_EMB_BCAST_MAX-row corpus
-        # (≤6 MB) spreads both stages; on an already-partitioned real
-        # corpus it degrades to a cheap balanced shuffle. This is NOT
-        # the keyed repartition the docstring rejects above — that one
-        # added two REPARTITION_BY_COL stages on top of the broadcast;
-        # this one replaces the 1-task scan with the parallelism the
-        # broadcast join preserves.
-        e = e.repartition(spark.sparkContext.defaultParallelism)
-        bd = e.select(
-            "vec_id",
-            as_double("embedding").alias("emb"),
-            norm(as_double("embedding")).alias("nrm"),
-            _bucket_bits(as_double("embedding"), bits).alias("bucket"),
+    bucket = _bucket_bits(as_double("embedding"), bits, start).alias("bucket")
+    nrm = norm(as_double("embedding")).alias("nrm")
+    if shuffle_regime:
+        bd = (
+            e.select("vec_id", F.col("embedding").alias("emb32"), nrm, bucket)
+            .repartition(F.col("bucket"))
+            .withColumn("emb", as_double("emb32"))
+            .drop("emb32")
         )
+    else:
+        bd = e.select("vec_id", as_double("embedding").alias("emb"), nrm, bucket)
     x, y = bd.alias("x"), bd.alias("y")
     cs = F.round(
         dot(F.col("x.emb"), F.col("y.emb"))
@@ -1266,67 +1295,19 @@ def _emb_deriv_sql(bits: int) -> str:
 def _emb_lsh_banded_body(
     spark, sf_dir, bits: int, n_bands: int = _N_EMB_BANDS, n: int | None = None
 ):
-    """OR-amplified embedding-LSH: each band blocks on a DISJOINT
-    hyperplane range and runs the proven pair body shape (regime-aware —
-    see ``_emb_lsh_pairs_body``: broadcast below ``_EMB_BCAST_MAX``,
-    narrow float32 bucket exchange above); verified per-band pair sets
-    are unioned and grouped to one row per pair with a band-hit census.
-    Per-band verification beats dedupe-then-verify here for the same
-    reason the carry beats the re-join (see ``_emb_lsh_pairs_body``):
-    grouping candidates first would strip the vectors and force a
-    verify-stage re-join over the candidate multiple of the corpus."""
-    from ..functions.vectors import dot, norm
-
-    e = load(spark, sf_dir, "embeddings")
-    shuffle_regime = n is not None and n > _EMB_BCAST_MAX
-    if not shuffle_regime:
-        # broadcast regime: spread the 1-task fixture scan before the
-        # per-row plane dots / pair folds — see `_emb_lsh_pairs_body`
-        # (round-15 opt; one repartition feeds BOTH bands' projections).
-        e = e.repartition(spark.sparkContext.defaultParallelism)
-    bands = []
+    """OR-amplified embedding-LSH: each band runs ``_emb_band_pairs`` on
+    a DISJOINT hyperplane range (band b = planes [b*bits, (b+1)*bits)),
+    and the verified per-band pair sets are unioned and grouped to one
+    row per pair with a band-hit census. Per-band verification beats
+    dedupe-then-verify here for the same reason the carry beats the
+    re-join (see ``_emb_lsh_pairs_body``): grouping candidates first
+    would strip the vectors and force a verify-stage re-join over the
+    candidate multiple of the corpus."""
+    e, shuffle_regime = _emb_lsh_source(spark, sf_dir, n)
+    u = None
     for band in range(n_bands):
-        if shuffle_regime:
-            b = e.select(
-                "vec_id",
-                F.col("embedding").alias("emb32"),
-                norm(as_double("embedding")).alias("nrm"),
-                _bucket_bits(as_double("embedding"), bits, band * bits).alias(
-                    "bucket"
-                ),
-            ).repartition(F.col("bucket"))
-            bd = b.withColumn("emb", as_double("emb32")).drop("emb32")
-        else:
-            bd = e.select(
-                "vec_id",
-                as_double("embedding").alias("emb"),
-                norm(as_double("embedding")).alias("nrm"),
-                _bucket_bits(as_double("embedding"), bits, band * bits).alias(
-                    "bucket"
-                ),
-            )
-        x, y = bd.alias("x"), bd.alias("y")
-        cs = F.round(
-            dot(F.col("x.emb"), F.col("y.emb"))
-            / (F.col("x.nrm") * F.col("y.nrm")),
-            6,
-        )
-        bands.append(
-            x.join(
-                y,
-                (F.col("x.bucket") == F.col("y.bucket"))
-                & (F.col("x.vec_id") < F.col("y.vec_id")),
-            )
-            .select(
-                F.col("x.vec_id").alias("vec_a"),
-                F.col("y.vec_id").alias("vec_b"),
-                cs.alias("cos_sim"),
-            )
-            .filter(F.col("cos_sim") >= _DEDUP_TAU)
-        )
-    u = bands[0]
-    for d in bands[1:]:
-        u = u.unionAll(d)
+        d = _emb_band_pairs(e, bits, band * bits, shuffle_regime).drop("bucket")
+        u = d if u is None else u.unionAll(d)
     return u.groupBy("vec_a", "vec_b").agg(
         F.count("*").cast("long").alias("n_bands"),
         F.max("cos_sim").alias("cos_sim"),
@@ -1634,31 +1615,15 @@ def sim_search_batch_topk(spark, sf_dir):
     """Batch similarity serving: top-{_BATCH_K} neighbors for a BATCH of
     {_N_PROBES} probe vectors in one pass — the offline-retrieval /
     hard-negative-mining shape (one probe per training example, not one
-    query at a time). The probe set broadcasts (KB-scale), the corpus
-    scan stays embarrassingly parallel, and ranking partitions by
-    probe_id. Scale note: with FEW probes the ranking window would skew
-    (10 partitions); the fix is the same two-level top-K as
-    ``topk_per_group_twolevel`` — per-(probe, salt) pre-top-K then merge
-    — proven result-identical there; with realistic probe batches
-    (millions) the window partitioning is already uniform."""
-    e = load(spark, sf_dir, "embeddings")
-    probes = e.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        as_double("embedding").alias("pe"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return (
-        e.join(F.broadcast(probes), F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "vec_id",
-            F.round(cosine(as_double("embedding"), F.col("pe")), 6).alias(
-                "cos_sim"
-            ),
-        )
-        .withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= _BATCH_K)
-        .select("probe_id", "vec_id", "rk", "cos_sim")
+    query at a time); :func:`_batch_probe_topk` with the rank
+    reported."""
+    return _batch_probe_topk(
+        spark, sf_dir, F.col("vec_id") < _N_PROBES, _BATCH_K
+    ).select(
+        F.col("pid").alias("probe_id"),
+        "vec_id",
+        F.col("rk").cast("int").alias("rk"),
+        "cos_sim",
     )
 
 

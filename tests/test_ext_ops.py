@@ -187,32 +187,6 @@ def test_minhash_lsh_finds_exact_duplicate_sets(spark, sf_dir):
     assert not missed, f"identical-token-set pairs missed by LSH: {missed[:5]}"
 
 
-def test_salted_agg_equals_plain_groupby(spark, sf_dir):
-    """Salted two-phase aggregation must be a pure physical rewrite —
-    identical results to the plain groupBy for associative aggregates."""
-    from dataflow_pubsub_message_encryption_spark.functions.skew import salted_agg
-    from dataflow_pubsub_message_encryption_spark.sources import load_events
-
-    ev = load_events(spark, sf_dir)
-    salted = salted_agg(
-        ev,
-        key="event_type",
-        salt_src="event_id",
-        aggs={
-            "n": ("event_id", "count"),
-            "v_sum": ("value", "sum"),
-            "v_max": ("value", "max"),
-        },
-        n_salts=8,
-    )
-    plain = ev.groupBy("event_type").agg(
-        F.count("*").alias("n"), F.sum("value").alias("v_sum"), F.max("value").alias("v_max")
-    )
-    s = {r.event_type: (r.n, round(r.v_sum, 6), r.v_max) for r in salted.collect()}
-    p = {r.event_type: (r.n, round(r.v_sum, 6), r.v_max) for r in plain.collect()}
-    assert s == p
-
-
 def test_approx_percentile_error_bound(spark, sf_dir):
     exact = {
         r.l_returnflag: (r.median_price, r.p90_price)
@@ -587,6 +561,60 @@ def test_pair_cap_bounds_hot_source_key(spark, monkeypatch):
     assert got == want
     # (c) the cold source's pair survives
     assert (100, 101) in got
+
+
+def test_ngram_jaccard_short_texts_match_oracle(spark, tmp_path):
+    """dedup_ngram_jaccard on texts with fewer than two tokens: a
+    one-token or empty text has no word bigram (the oracle's empty
+    range(1, 1)), so it pairs with nothing — it must neither abort the
+    query (indexing past the token array raises under ANSI mode) nor
+    reach the output. Runs the key's body and its registered oracle on
+    the same synthetic documents file and compares them the way
+    tools/check.py does."""
+    import os
+    import sys
+
+    import duckdb
+    import pandas as pd
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    )
+    from check import compare
+
+    from dataflow_pubsub_message_encryption_spark.operators.dedup import (
+        ORACLES as DEDUPO,
+    )
+
+    texts = [
+        "alpha",
+        "",
+        "beta",
+        "alpha beta gamma delta",
+        "alpha beta gamma delta",
+        "alpha beta gamma epsilon",
+        "omega psi chi",
+    ]
+    pd.DataFrame(
+        {
+            "doc_id": pd.Series(range(1, len(texts) + 1), dtype="int64"),
+            "text": texts,
+            "lang": "en",
+            "source": "web",
+            "n_chars": pd.Series([len(t) for t in texts], dtype="int64"),
+        }
+    ).to_parquet(tmp_path / "documents.parquet", index=False)
+
+    got = DEDUPQ["dedup_ngram_jaccard"](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'documents.parquet'}')"
+    )
+    want = con.execute(DEDUPO["dedup_ngram_jaccard"]).fetchdf()
+    con.close()
+    assert len(want) == 3, want  # (4, 5), (4, 6) and (5, 6): not vacuous
+    assert compare("dedup_ngram_jaccard", got, want) == []
 
 
 def test_wjac_df_cap_drops_hot_term_fanout(spark):

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from dataflow_pubsub_message_encryption_spark.plans import formatted_plan
 from dataflow_pubsub_message_encryption_spark.sources import load_events
-from dataflow_pubsub_message_encryption_spark.sources import sinks
 
 
 @pytest.fixture()
@@ -23,8 +22,8 @@ def tmpdir():
 
 def test_partitioned_write_prunes_on_read(spark, sf_dir, tmpdir):
     ev = load_events(spark, sf_dir)
-    sinks.write_partitioned_parquet(ev, f"{tmpdir}/by_type", ["event_type"])
-    back = sinks.read_partitioned_parquet(spark, f"{tmpdir}/by_type")
+    ev.write.mode("overwrite").partitionBy("event_type").parquet(f"{tmpdir}/by_type")
+    back = spark.read.parquet(f"{tmpdir}/by_type")
     q = back.filter(F.col("event_type") == "purchase").select("event_id")
     plan = formatted_plan(q)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
@@ -35,9 +34,11 @@ def test_partitioned_write_prunes_on_read(spark, sf_dir, tmpdir):
 
 def test_csv_roundtrip(spark, sf_dir, tmpdir):
     ev = load_events(spark, sf_dir).select("event_id", "event_type", "value")
-    sinks.write_csv(ev, f"{tmpdir}/csv")
-    back = sinks.read_csv(
-        spark, f"{tmpdir}/csv", "event_id BIGINT, event_type STRING, value DOUBLE"
+    ev.write.mode("overwrite").option("header", True).csv(f"{tmpdir}/csv")
+    back = (
+        spark.read.schema("event_id BIGINT, event_type STRING, value DOUBLE")
+        .option("header", True)
+        .csv(f"{tmpdir}/csv")
     )
     assert back.count() == ev.count()
     assert back.agg(F.sum("event_id")).collect() == ev.agg(F.sum("event_id")).collect()
@@ -51,12 +52,10 @@ def test_json_roundtrip_preserves_nested(spark, sf_dir, tmpdir):
     from dataflow_pubsub_message_encryption_spark.sources import load
 
     m = with_media(load(spark, sf_dir, "documents"))
-    sinks.write_json(m.select("doc_id", "meta"), f"{tmpdir}/json")
-    back = sinks.read_json(
-        spark,
-        f"{tmpdir}/json",
-        "doc_id BIGINT, meta STRUCT<mime: STRING, n_bytes: INT, width: INT, height: INT>",
-    )
+    m.select("doc_id", "meta").write.mode("overwrite").json(f"{tmpdir}/json")
+    back = spark.read.schema(
+        "doc_id BIGINT, meta STRUCT<mime: STRING, n_bytes: INT, width: INT, height: INT>"
+    ).json(f"{tmpdir}/json")
     assert back.count() == m.count()
     a = sorted(r.meta.mime for r in back.select("meta").collect())
     b = sorted(r.meta.mime for r in m.select("meta").collect())
@@ -83,9 +82,9 @@ def test_ann_bucket_partition_layout_prunes_probe_scan(spark, sf_dir, tmpdir):
         for plane in _planes()
     ]
     bucketed = e.withColumn("bucket", F2.concat(*bits))
-    sinks.write_partitioned_parquet(bucketed, f"{tmpdir}/ann", ["bucket"])
+    bucketed.write.mode("overwrite").partitionBy("bucket").parquet(f"{tmpdir}/ann")
 
-    back = sinks.read_partitioned_parquet(spark, f"{tmpdir}/ann")
+    back = spark.read.parquet(f"{tmpdir}/ann")
     probe_bucket = bucketed.filter("vec_id = 0").select("bucket").collect()[0][0]
     q = back.filter(F.col("bucket") == probe_bucket).select("vec_id")
     plan = formatted_plan(q)
@@ -173,7 +172,6 @@ def test_binaryfile_source_ingests_media_dir(spark, sf_dir, tmpdir):
     import os
 
     from dataflow_pubsub_message_encryption_spark.sources import load
-    from dataflow_pubsub_message_encryption_spark.sources.sinks import read_binary_files
 
     docs = (
         load(spark, sf_dir, "documents")
@@ -190,7 +188,11 @@ def test_binaryfile_source_ingests_media_dir(spark, sf_dir, tmpdir):
     with open(os.path.join(media, "decoy.txt"), "w") as f:
         f.write("must never be ingested")
 
-    bf = read_binary_files(spark, media, "*.bin")
+    bf = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.bin")
+        .load(media)
+    )
     got = {
         os.path.basename(r.path): (bytes(r.content), r.length)
         for r in bf.collect()

@@ -287,10 +287,32 @@ def test_km_train_local_equals_distributed(spark, fixture):
         assert dist == local, f"centroids differ at k={k} stride={stride}"
 
 
+def _pq_tied_vectors(spark):
+    """Synthetic quantized vectors whose subvectors sit at equal distance
+    from two codewords. Codeword k (vec_id k < _PQ_K) is the constant
+    10·k; each later vector is built from per-subspace constants, where
+    10·k + 5 ties codewords k and k + 1, and 10·k is an exact match."""
+    from dataflow_pubsub_message_encryption_spark.operators import similarity as S
+
+    rows = [(k, [10 * k] * 64) for k in range(S._PQ_K)]
+    subspace_values = [
+        (5, 15, 25, 35),
+        (45, 55, 65, 5),
+        (5, 30, 65, 3),
+        (70, 0, 15, 45),
+    ]
+    for i, vals in enumerate(subspace_values):
+        rows.append(
+            (S._PQ_K + i, [v for v in vals for _ in range(S._PQ_SUB)])
+        )
+    return spark.createDataFrame(rows, "vec_id long, qe array<long>")
+
+
 @pytest.mark.parametrize(
     "fixture,residual",
     [pytest.param(f, True, id=f) for f in FIXTURES]
-    + [pytest.param(f, False, id=f"plain:{f}") for f in FIXTURES],
+    + [pytest.param(f, False, id=f"plain:{f}") for f in FIXTURES]
+    + [pytest.param(None, False, id="planted-ties")],
 )
 def test_pq_assign_min_by_equals_window(spark, fixture, residual):
     """The PQ codeword assignment's min_by reduction (`_pq_assign`, the
@@ -301,21 +323,26 @@ def test_pq_assign_min_by_equals_window(spark, fixture, residual):
     IVF residuals keyed (vec_id, cell) of sim_ivf_pq_topk, and the plain
     quantized vectors keyed vec_id of sim_pq_adc_topk and
     emb_pq_code_balance; compares both assign forms row for row at both
-    graded fixtures."""
+    graded fixtures. Neither fixture has a subvector equidistant from
+    two codewords, so a third input plants such ties: it pins the
+    tie-break to the lower k."""
     from pyspark.sql import Window
 
     from dataflow_pubsub_message_encryption_spark.operators import similarity as S
     from dataflow_pubsub_message_encryption_spark.sources import load
 
-    e_q = (
-        load(spark, fixture, "embeddings")
-        .select(
-            "vec_id",
-            "label",
-            S._quantize(S.as_double("embedding")).alias("qe"),
+    if fixture is None:
+        e_q = _pq_tied_vectors(spark)
+    else:
+        e_q = (
+            load(spark, fixture, "embeddings")
+            .select(
+                "vec_id",
+                "label",
+                S._quantize(S.as_double("embedding")).alias("qe"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
     if residual:
         cint = (
             e_q.select("label", F.posexplode("qe").alias("pos", "q"))
