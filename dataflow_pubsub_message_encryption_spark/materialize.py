@@ -1,29 +1,20 @@
-"""Eager materialization with a durability switch (the 100 TB recipe as
-code, not prose — VERDICT r7 item 8).
+"""Eager materialization: the one place the package truncates lineage.
 
 The iterative/two-pass operators (``_global_rank`` / ``_global_cumsum``'s
-partition-id pinning, the graph fixed-point loops) must truncate lineage
-eagerly per step: each step references its predecessor more than once, so
-lazy lineage doubles per round (plans stop COMPILING around 9 rounds),
-and the rank machinery additionally needs the sampled range partitioning
-frozen across its two passes.
+partition-id pinning, the graph fixed-point loops, the corpus builds that
+feed one table to several consumers) must truncate lineage eagerly per
+step: each step references its predecessor more than once, so lazy
+lineage doubles per round (plans stop COMPILING around 9 rounds), and the
+rank machinery additionally needs the sampled range partitioning frozen
+across its two passes.
 
-Two ways to pin, one switch:
-
-- **default** (``reliable=False``): ``localCheckpoint`` — blocks go to
-  EXECUTOR storage. Cheapest, but on a real cluster an executor loss
-  between passes makes the lineage unrecoverable and FAILS (not
-  corrupts) the job. The right trade on a single-JVM harness, and often
-  on clusters too (rerun on loss).
-- **reliable** (``reliable=True`` or env ``SPARK_GRAFT_RELIABLE_PIN=1``):
-  a durable materialization that survives executor loss — Spark's
-  reliable ``checkpoint()`` when the session has a checkpoint dir set
-  (the cluster recipe: point it at durable storage), else
-  ``persist(StorageLevel.DISK_ONLY_2)`` (two disk replicas) forced eager
-  with a count. Costs one extra write of the pinned table.
-
-``tests/test_scale_ops.py`` exercises the reliable path end-to-end (same
-results as the default path on the rank/cumsum machinery).
+One rule, read from the session: ``pin`` returns Spark's reliable
+``checkpoint()`` when the SparkContext has a checkpoint dir set (the
+deployment recipe: point it at durable storage, and a pinned table
+survives a lost executor), else ``localCheckpoint()`` (executor block
+storage: cheapest, but an executor lost between passes FAILS the job
+instead of recomputing). Spark's default session has no checkpoint dir,
+so the default is ``localCheckpoint``. Both are eager.
 
 **Join-planning hazard (round-10 finding)**: a pinned frame's logical
 plan carries the PRE-pin size estimate, and a broadcast built directly
@@ -39,33 +30,12 @@ family, graph-ANN build); bounded pinned sides (≤beam frontiers,
 
 from __future__ import annotations
 
-import os
 
-from pyspark import StorageLevel
-
-RELIABLE_ENV = "SPARK_GRAFT_RELIABLE_PIN"
-
-
-def _reliable_default() -> bool:
-    return os.environ.get(RELIABLE_ENV, "").lower() not in ("", "0", "false")
-
-
-def pin(df, reliable: bool | None = None):
-    """Materialize ``df`` NOW and truncate its lineage; see module doc.
-
-    ``reliable=None`` reads the ``SPARK_GRAFT_RELIABLE_PIN`` env switch so
-    a whole run (bench, driver, cluster job) can flip every pin site to
-    the durable form without threading a flag through the operators."""
-    if reliable is None:
-        reliable = _reliable_default()
-    if not reliable:
-        return df.localCheckpoint()
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint()  # eager=True by default; durable storage
-    out = df.persist(StorageLevel.DISK_ONLY_2)
-    out.count()  # force materialization so later passes reuse the blocks
-    return out
+def pin(df):
+    """Materialize ``df`` NOW and truncate its lineage; see module doc."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()
 
 
 def release_pins(spark) -> int:

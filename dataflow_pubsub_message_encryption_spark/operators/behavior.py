@@ -23,6 +23,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.normalize import date_str, dec4, duck_ts, money, ts_str
+from ..materialize import pin
 from ..sources import load, load_events
 from .base import make_registry
 from .relational import _asof_best
@@ -1757,7 +1758,7 @@ def events_markov_stationary(spark, sf_dir):
     transition matrix already pays (user-partitioned, shared with
     sessionization at 100 TB); every iteration then runs on the
     |types|²-row matrix — the Spark loop keeps it distributed (tiny
-    joins, eager localCheckpoint per round, the §5 lineage discipline)
+    joins, eager pin per round, the §5 lineage discipline)
     with zero driver collection."""
     ev = load_events(spark, sf_dir).select(
         "user_id", "event_type", "ts", "event_id"
@@ -1767,10 +1768,9 @@ def events_markov_stationary(spark, sf_dir):
         F.col("event_type").alias("next_type"),
         F.lag("event_type").over(w).alias("prev_type"),
     ).filter(F.col("prev_type").isNotNull())
-    c = (
+    c = pin(
         seq.groupBy("prev_type", "next_type")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint()
     )
     # alias the row-sum's key: r derives from c, so joining on
     # c.prev_type == r.prev_type would pit two Columns with the SAME
@@ -1778,15 +1778,14 @@ def events_markov_stationary(spark, sf_dir):
     # self-join disambiguation (logs "trivially true equals predicate";
     # fragile across versions) — a distinct name makes the equi-join
     # unambiguous by construction
-    r = (
+    r = pin(
         c.groupBy(F.col("prev_type").alias("r_prev"))
         .agg(F.sum("n").alias("rn"))
-        .localCheckpoint()
     )
-    types = ev.select(F.col("event_type").alias("t")).distinct().localCheckpoint()
+    types = pin(ev.select(F.col("event_type").alias("t")).distinct())
     x = types.select("t", F.lit(_MKV_SCALE).cast("long").alias("w"))
     for _ in range(_MKV_ROUNDS):
-        x = (
+        x = pin(
             x.join(c, x.t == c.prev_type)
             .join(r, c.prev_type == r.r_prev)
             .select(
@@ -1795,7 +1794,6 @@ def events_markov_stationary(spark, sf_dir):
             )
             .groupBy("t")
             .agg(F.sum("dw").cast("long").alias("w"))
-            .localCheckpoint()
         )
     tot = x.agg(F.sum("w").alias("s"))
     return (

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.normalize import sim
 from ..functions.textfns import distinct_tokens, fp64
+from ..materialize import pin
 from ..sources import load
 from .base import make_registry
 
@@ -347,11 +348,11 @@ def _lsh_candidates_n(banded, nb: int):
     touches; unhex is injective on sha256 hex), so the candidate set —
     and the frozen banded-union oracle — are bit-identical to the wide
     form. Measured at tau=0.7 (4x4, sf0.01, broadcast disabled so the
-    scale-path exchange materializes — tools/shuffle_bytes.py): the
-    exploded-side shuffle dropped 89.1 -> 50.0 compressed bytes/row,
-    AND from two 178 KB exchanges to ONE reused 100 KB exchange (the
-    old per-column carry defeated Spark's ReusedExchange on the
-    self-join; the uniform struct shape restores it) — 3.6x less
+    scale-path exchange materializes; Spark's per-stage shuffle-write
+    bytes): the exploded-side shuffle dropped 89.1 -> 50.0 compressed
+    bytes/row, AND from two 178 KB exchanges to ONE reused 100 KB
+    exchange (the old per-column carry defeated Spark's ReusedExchange
+    on the self-join; the uniform struct shape restores it) — 3.6x less
     exploded-shuffle traffic end to end. Shuffle volume is
     nb x (doc_id + ~nb/2 digests) per doc — still ids+hashes only,
     never payloads; the sliced prefix is what buys the distinct-free
@@ -1257,11 +1258,13 @@ def dedup_lsh_band_tuning(spark, sf_dir):
     equi-join (ids + hash only), emit-once distinct, fingerprint verify —
     the production shapes, swept."""
     docs = _parallel(spark, load(spark, sf_dir, "documents"))
-    base = docs.select(
-        "doc_id",
-        _minhash_sig().alias("sig"),
-        fp64(distinct_tokens("text")).alias("toks"),
-    ).localCheckpoint(eager=True)
+    base = pin(
+        docs.select(
+            "doc_id",
+            _minhash_sig().alias("sig"),
+            fp64(distinct_tokens("text")).alias("toks"),
+        )
+    )
     out = None
     for nb, r in _TUNE_CONFIGS:
         bands = base.select(
@@ -1366,10 +1369,9 @@ def _verified_pair_sigs(spark, sf_dir):
     """The verified ``dedup_minhash_lsh_pairs`` (doc_a, doc_b, jac) with
     both documents' MinHash signatures attached as ``sa`` and ``sb``."""
     pairs = QUERIES["dedup_minhash_lsh_pairs"](spark, sf_dir)
-    sig = (
+    sig = pin(
         load(spark, sf_dir, "documents")
         .select("doc_id", _minhash_sig().alias("sig"))
-        .localCheckpoint(eager=True)
     )
     return pairs.join(
         sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa")),
@@ -1773,8 +1775,6 @@ def weighted_jaccard_pairs(spark, docs):
     # token table is the one not worth materializing). At 100 TB the trade is one
     # materialization of the capped stream vs two recomputes of the
     # corpus tokenize.
-    from ..materialize import pin
-
     dt = pin(d.join(kept, "term"))
     sums = dt.groupBy("doc_id").agg(F.sum("w").alias("sw"))
     a, b = dt.alias("a"), dt.alias("b")
@@ -2120,7 +2120,6 @@ def dedup_span_suffix_doubling(spark, sf_dir):
     how a 100 TB suffix array is built (the capped op's docstring
     recipe, now code). Fixture corpora share >256-char spans, so the
     extension is non-vacuous (1790 shared 260-grams at sf0.001)."""
-    from ..materialize import pin
     from .scale import _global_rank
 
     # _parallel before the explode — same round-15 opt as
@@ -2477,8 +2476,6 @@ def dedup_winnowing_fingerprints(spark, sf_dir):
     EXACT oracle pins both. `_parallel` spreads the single-row-group
     fixture scan before the kernel (measured 13.6 s -> ~2 s at sf0.1 in
     the explode form; a real corpus arrives partitioned)."""
-    from ..materialize import pin
-
     docs = _parallel(spark, load(spark, sf_dir, "documents"))
     # pin: the census references wmin twice (df groupBy + the per-doc
     # join), and a lazy lineage would run the hashing kernel twice over

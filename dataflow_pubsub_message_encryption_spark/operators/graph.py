@@ -33,9 +33,9 @@ Scale notes (100 TB):
   than an edge.
 - Lineage is truncated with an eager pin (``materialize.pin``) per
   round — without it the plan doubles every iteration and Catalyst
-  re-optimizes the whole history. The pin defaults to ``localCheckpoint``;
-  ``SPARK_GRAFT_RELIABLE_PIN=1`` (or a session checkpoint dir) flips every
-  round to the durable cluster form — the recipe is code, not prose.
+  re-optimizes the whole history. The pin is ``localCheckpoint`` unless
+  the session has a checkpoint dir set, which makes every round's pin a
+  durable ``checkpoint()`` (the cluster form; see ``materialize``).
 - The ONLY driver-side data transfer is the 1-scalar star-forest
   violation count per round (from the per-node census the large-star
   step computes anyway). The edge table itself never leaves the
@@ -197,7 +197,7 @@ def dedup_cluster_components(spark, sf_dir):
     component's canonical id (the component's minimum doc_id) plus the
     component size — the keep-one-per-group decision a corpus cleaner
     executes. Alternating large-star/small-star contraction (O(log n)
-    rounds; see module docstring) with a per-round eager localCheckpoint.
+    rounds; see module docstring) with a per-round eager pin.
     The EXACT oracle recomputes the same components in DuckDB via a
     recursive CTE — the full iterative fixed point is value-checked
     cross-engine, not just row counts."""
@@ -271,7 +271,7 @@ def graph_pagerank_int(spark, sf_dir):
 
     Scale notes (100 TB): each iteration is one join on the edge list
     (partitioned by source) + one partial-aggregating groupBy(dest) —
-    ids and two longs per row. Spark would localCheckpoint per round at
+    ids and two longs per row. Spark would pin per round at
     depth; 3 rounds keeps the plan shallow enough without. Skewed
     celebrity nodes (huge deg) cost nothing here — contributions
     DIVIDE by deg; the skew risk is on the RECEIVING side (sum at a hub
@@ -673,7 +673,7 @@ def graph_label_propagation(spark, sf_dir):
     label ASC). Each round = one edges⋈labels equi-join + a per-(node,
     label) partial-aggregating count + a per-node argmax window
     (PARTITIONED — parallel), ids only, with per-round eager
-    localCheckpoint exactly like the components loop. At 100 TB: rounds
+    pin exactly like the components loop. At 100 TB: rounds
     are O(|E|) shuffles; label skew (a giant community) concentrates in
     the count aggregate, which partial-aggregates map-side — the same
     reason the components loop survives."""

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..materialize import pin
 from ..sources import load
 from .base import make_registry
 
@@ -701,9 +702,11 @@ def multimodal_phash_hamming(spark, sf_dir):
             )
         return F.expr(" + ".join(bits)).cast("int")
 
-    ph = base.select(
-        "doc_id", F.array(*[band(g) for g in range(_PH_BANDS)]).alias("bands")
-    ).localCheckpoint()  # shared by the band join AND both verify sides
+    ph = pin(
+        base.select(
+            "doc_id", F.array(*[band(g) for g in range(_PH_BANDS)]).alias("bands")
+        )
+    )  # shared by the band join AND both verify sides
     bt = ph.select("doc_id", F.posexplode("bands").alias("g", "bv"))
     a = bt.select(F.col("doc_id").alias("doc_a"), "g", "bv")
     b = bt.select(F.col("doc_id").alias("doc_b"), "g", "bv")

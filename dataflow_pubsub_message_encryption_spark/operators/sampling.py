@@ -157,18 +157,14 @@ def sample_stratified(spark, sf_dir):
     """Stratified deterministic sample: the K docs per lang with the
     smallest content hash — an order-free "random but reproducible"
     choice (the hash order is uniform over content, stable across runs
-    and partitionings; doc_id breaks exact-duplicate ties). One shuffle
-    on the stratum key. At scale, row_number over a mega-stratum
-    serializes that stratum through one task — the scale path is the
-    two-level (lang, salt) pre-top-K + merge, executable and
-    oracle-proven result-identical as ``topk_per_group_twolevel``
-    (operators/scale.py)."""
-    docs = load(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(F.sha2("text", 256), "doc_id")
-    return (
-        docs.select("doc_id", "lang", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= _STRATUM_K)
-    )
+    and partitionings; doc_id breaks exact-duplicate ties). A single
+    row_number over a mega-stratum would serialize that stratum through
+    one task, so this delegates to the two-level (lang, salt) pre-top-K +
+    merge, ``topk_per_group_twolevel`` (operators/scale.py) — same
+    oracle, same rows."""
+    from .scale import topk_per_group_twolevel
+
+    return topk_per_group_twolevel(spark, sf_dir)
 
 
 @query(

@@ -540,9 +540,8 @@ def agg_incremental_merge(spark, sf_dir):
     """,
 )
 def topk_per_group_twolevel(spark, sf_dir):
-    """Two-level per-group top-K — the scale path ``sample_stratified``'s
-    docstring promises, made executable and proven result-identical (the
-    oracle runs the single-window form). A mega-stratum serializes a
+    """Two-level per-group top-K — the body of ``sample_stratified`` too,
+    proven result-identical to the single-window form the oracle runs. A mega-stratum serializes a
     single ranking window through one task; instead, level 1 ranks within
     (lang, salt) — ``_N_SALT``x the parallelism, state bounded by K per
     salted partition — and keeps only each sub-partition's top K; level 2
@@ -1286,15 +1285,12 @@ def _global_rank(df, *order_cols):
        ``_N_RANGE``-row aggregate to the driver — the same bounded-scalar
        pattern as the two-pass percentile ops).
 
-    Durability: the pin (``materialize.pin``) defaults to
-    ``localCheckpoint`` — executor block storage, so on a real cluster an
-    executor loss between the passes FAILS (not corrupts) the job. The
-    100 TB recipe is now code, not prose: ``reliable=True`` (or env
-    ``SPARK_GRAFT_RELIABLE_PIN=1``) swaps in Spark's durable
-    ``checkpoint()`` when a checkpoint dir is set, else
-    ``persist(DISK_ONLY_2)``, at the cost of one extra write of the
-    ranged table — exercised by tests/test_scale_ops.py. Local single-JVM
-    runs (this harness) cannot lose an executor, so cheap is the default.
+    Durability: the pin (``materialize.pin``) is ``localCheckpoint`` —
+    executor block storage, so on a real cluster an executor loss between
+    the passes FAILS (not corrupts) the job — unless the session has a
+    checkpoint dir set: then it is Spark's durable ``checkpoint()``, at
+    the cost of one extra write of the ranged table (exercised by
+    tests/test_scale_ops.py).
 
     Returns (ranked_df with ``rk`` column, total row count n).
     """
@@ -1440,9 +1436,9 @@ def _global_cumsum(df, value_col, *order_cols):
        partition order, so use an EXACT value type: decimal/integer, not
        float).
 
-    Same pin-durability switch as `_global_rank` (see its docstring —
-    ``materialize.pin``'s reliable path is the cluster recipe, executable
-    and tested). Returns the frame with a ``cum`` column added."""
+    Same pin durability as `_global_rank` (see its docstring: durable
+    when the session has a checkpoint dir). Returns the frame with a
+    ``cum`` column added."""
     ranged = pin(
         df.repartitionByRange(_N_RANGE, *order_cols)
         .withColumn("pid", F.spark_partition_id())
@@ -1542,7 +1538,10 @@ def rfm_segmentation_scalable(spark, sf_dir):
     interleaved A/B at sf0.1: med 2.02 → 1.41 single-file / 2.59 → 1.87
     multifile, pairwise-dominant on every rep, outputs identical at all
     three SFs."""
-    per_cust = (
+    # one eager materialization: the three rank passes AND the final
+    # join would otherwise each re-aggregate the orders fact (4 scans;
+    # measured 2.9 s -> see BASELINE round-6 notes). |customers| rows.
+    per_cust = pin(
         load(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
@@ -1550,10 +1549,6 @@ def rfm_segmentation_scalable(spark, sf_dir):
             F.count("*").alias("frequency"),
             F.sum(dec4("o_totalprice")).alias("monetary"),
         )
-        # one eager materialization: the three rank passes AND the final
-        # join would otherwise each re-aggregate the orders fact (4 scans;
-        # measured 2.9 s -> see BASELINE round-6 notes). |customers| rows.
-        .localCheckpoint()
     )
 
     def score(order_col, name):
@@ -2014,7 +2009,7 @@ def scan_agg_pushdown_stats(spark, sf_dir):
     asserted in tests/test_plans.py) and the scan reads zero data columns.
 
     Session hygiene: the two confs are flipped only around an EAGER
-    ``localCheckpoint`` (pushdown is decided at optimization time, i.e.
+    ``pin`` (pushdown is decided at optimization time, i.e.
     at execution — a lazy return would escape the conf window), then
     restored — the shared driver session never sees leaked state, and
     later queries keep their v1 source plans. The checkpointed result is
@@ -2027,7 +2022,7 @@ def scan_agg_pushdown_stats(spark, sf_dir):
     try:
         for k, v in keys.items():
             spark.conf.set(k, v)
-        out = (
+        out = pin(
             spark.read.parquet(f"{sf_dir}/lineitem.parquet")
             .agg(
                 F.count("*").alias("n_rows"),
@@ -2036,8 +2031,7 @@ def scan_agg_pushdown_stats(spark, sf_dir):
                 F.min("l_extendedprice").cast("double").alias("min_price"),
                 F.max("l_extendedprice").cast("double").alias("max_price"),
             )
-            .localCheckpoint()  # execute UNDER the pushdown confs
-        )
+        )  # execute UNDER the pushdown confs
     finally:
         for k, old in saved.items():
             if old is None:

@@ -26,6 +26,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, cosine
+from ..materialize import pin
 from ..sources import load
 from .base import make_registry
 
@@ -657,9 +658,7 @@ def _km_train(spark, e_q, k: int, stride: int):
     )
     if stride <= 1:
         for _ in range(_KM_ITERS):
-            cents = _km_update(
-                _km_assign_arrow(e_q, cents), e_q
-            ).localCheckpoint(eager=True)
+            cents = pin(_km_update(_km_assign_arrow(e_q, cents), e_q))
         return cents
     seeds = sorted(
         cents.collect(),  # driver-bounded: k <= _KM_AUTO_MAX_K rows
@@ -795,12 +794,14 @@ def sim_ann_kmeans_ivf_topk(spark, sf_dir):
     trained cell id becomes the partition key so a probe reads nprobe/K
     of the data."""
     e = load(spark, sf_dir, "embeddings")
-    e_q = e.select(
-        "vec_id",
-        "label",
-        as_double("embedding").alias("de"),
-        _quantize(as_double("embedding")).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = pin(
+        e.select(
+            "vec_id",
+            "label",
+            as_double("embedding").alias("de"),
+            _quantize(as_double("embedding")).alias("qe"),
+        )
+    )
     seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
     cents = (
         seeds.alias("s")
@@ -812,9 +813,7 @@ def sim_ann_kmeans_ivf_topk(spark, sf_dir):
         # lets the trained table's three consumers (final assignment,
         # probe cell ranking, search join) reuse it instead of re-running
         # the whole training lineage.
-        cents = _km_update(
-            _km_assign_arrow(e_q, cents), e_q
-        ).localCheckpoint(eager=True)
+        cents = pin(_km_update(_km_assign_arrow(e_q, cents), e_q))
     return _km_ivf_serve(e_q, cents, _KM_NPROBE)
 
 
@@ -1694,14 +1693,13 @@ def emb_pca_power_iteration(spark, sf_dir):
         (F.col("p0") + 1).alias("pos"),
         F.floor(F.col("x") * _PI_SCALE + 0.5).cast("long").alias("qv"),
     )
-    m = (
+    m = pin(
         q.alias("a")
         .join(q.alias("b"), F.col("a.vec_id") == F.col("b.vec_id"))
         .groupBy(
             F.col("a.pos").alias("i"), F.col("b.pos").alias("j")
         )
         .agg(F.sum(F.col("a.qv") * F.col("b.qv")).alias("m"))
-        .localCheckpoint(eager=True)
     )
     v = spark.range(1, 65).select(
         F.col("id").alias("pos"), F.lit(_PI_SCALE).cast("long").alias("v")
@@ -1713,12 +1711,14 @@ def emb_pca_power_iteration(spark, sf_dir):
             .agg(F.sum(F.col("m") * F.col("v")).alias("w"))
         )
         mx = w.agg(F.max(F.abs(F.col("w"))).alias("mx"))
-        v = w.crossJoin(F.broadcast(mx)).select(  # 64 rows x 1 row
-            "pos",
-            F.floor(
-                (F.col("w") * _PI_SCALE).cast("double") / F.col("mx")
-            ).cast("long").alias("v"),
-        ).localCheckpoint(eager=True)
+        v = pin(
+            w.crossJoin(F.broadcast(mx)).select(  # 64 rows x 1 row
+                "pos",
+                F.floor(
+                    (F.col("w") * _PI_SCALE).cast("double") / F.col("mx")
+                ).cast("long").alias("v"),
+            )
+        )
     return v.select(F.col("pos").cast("int").alias("pos"), F.col("v").alias("v_scaled"))
 
 
@@ -1777,12 +1777,14 @@ def embedding_index_pipeline(spark, sf_dir):
     manifest IS the partition layout: vectors land in cell-keyed
     partitions sized by n_vecs."""
     e = load(spark, sf_dir, "embeddings")
-    e_q = e.select(
-        "vec_id",
-        "label",
-        as_double("embedding").alias("de"),
-        _quantize(as_double("embedding")).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = pin(
+        e.select(
+            "vec_id",
+            "label",
+            as_double("embedding").alias("de"),
+            _quantize(as_double("embedding")).alias("qe"),
+        )
+    )
     seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
     cents = (
         seeds.alias("s")
@@ -1790,9 +1792,7 @@ def embedding_index_pipeline(spark, sf_dir):
         .select(F.col("s.label").alias("cell"), F.col("v.qe").alias("cq"))
     )
     for _ in range(_KM_ITERS):
-        cents = _km_update(
-            _km_assign_arrow(e_q, cents), e_q
-        ).localCheckpoint(eager=True)
+        cents = pin(_km_update(_km_assign_arrow(e_q, cents), e_q))
     assign = _km_assign_arrow(e_q, cents)
     q = F.transform(as_double("embedding"), lambda x: F.floor(x * 127 + 0.5).cast("int"))
     q8 = e.select(
@@ -1981,7 +1981,7 @@ def _pq_train_encode(subs, keys: list[str]):
     cb0 = subs.filter(F.col("vec_id") < _PQ_K).select(
         "m", F.col("vec_id").alias("k"), F.col("sv").alias("cw")
     )
-    cb1 = (
+    cb1 = pin(
         _pq_assign(subs, cb0, keys)
         .join(subs, ["vec_id", "m"])
         .select("m", "k", F.posexplode("sv").alias("pos", "q"))
@@ -1994,7 +1994,6 @@ def _pq_train_encode(subs, keys: list[str]):
         .groupBy("m", "k")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "cp"))).alias("p"))
         .select("m", "k", F.transform("p", lambda s: s.getField("cp")).alias("cw"))
-        .localCheckpoint(eager=True)
     )
     return cb1, _pq_assign(subs, cb1, keys)
 
@@ -2082,13 +2081,12 @@ def sim_pq_adc_topk(spark, sf_dir):
     reads codes (4 B/vector), not embeddings — that compression IS the
     point of PQ. Recall-vs-exact is pinned in tests (like the IVF and
     multiprobe ops); composes with IVF cells for the full IVF-PQ index."""
-    e_q = (
+    e_q = pin(
         load(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
             _quantize(as_double("embedding")).alias("qe"),
         )
-        .localCheckpoint(eager=True)
     )
     subs = _pq_subvectors(e_q, "qe", ["vec_id"])
     cb1, enc = _pq_train_encode(subs, ["vec_id"])
@@ -2231,16 +2229,15 @@ def sim_ivf_pq_topk(spark, sf_dir):
     nprobe/|cells| of the corpus — IVF's pruning multiplied by PQ's
     512× compression, which is exactly why this composition is the
     standard billion-vector index."""
-    e_q = (
+    e_q = pin(
         load(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
             "label",
             _quantize(as_double("embedding")).alias("qe"),
         )
-        .localCheckpoint(eager=True)
     )
-    cint = (
+    cint = pin(
         e_q.select("label", F.posexplode("qe").alias("pos", "q"))
         .groupBy("label", "pos")
         .agg(
@@ -2254,8 +2251,7 @@ def sim_ivf_pq_topk(spark, sf_dir):
             F.col("label").alias("cell"),
             F.transform("p", lambda s: s.getField("cq")).alias("cq"),
         )
-        .localCheckpoint(eager=True)  # 10 rows; 3 consumers below
-    )
+    )  # 10 rows; 3 consumers below
     res = e_q.join(F.broadcast(cint), e_q.label == cint.cell).select(
         "vec_id",
         "cell",
@@ -2973,7 +2969,7 @@ def _grb_edges_all(scored, nd):
         .filter(F.col("rk") <= _GR_M)
         .select("walk_lvl", "src", "dst")
     )
-    allr = _with_probe_dist(ranked, nd).localCheckpoint()
+    allr = pin(_with_probe_dist(ranked, nd))
     return {
         l: allr.filter(F.col("walk_lvl") == l).select("src", "dst", "pd")
         for l in _GR_LEVELS
@@ -3038,7 +3034,7 @@ def _gr_search(nd, edges):
     same-box A/B at sf0.1: blocked 6.73 → 9.25 s, wide 5.78 → 7.15,
     auto 7.25 → 10.0. The per-hop pin is 1
     job either way; the collect saved nothing and paid recompilation.
-    Kept: the DataFrame frontier + per-hop eager localCheckpoint.
+    Kept: the DataFrame frontier + per-hop eager pin.
 
     ALSO MEASURED AND REJECTED (round-15 opt session 4): pinning every
     2nd or 3rd hop instead of every hop (halving/thirding the pin-job
@@ -3067,7 +3063,7 @@ def _gr_search(nd, edges):
     )
     for l in _GR_LEVELS:
         for _ in range(_GR_HOPS):
-            cur = _gr_step(cur, edges[l]).localCheckpoint()
+            cur = pin(_gr_step(cur, edges[l]))
     e0 = edges[0]
     curk = cur.select(F.col("vec_id").alias("_cv"))
     hop1 = e0.join(curk, F.col("src") == F.col("_cv")).select(
@@ -3143,15 +3139,12 @@ def _gr_blocked(spark, sf_dir, tables=None):
     # the smaller (probe) pin job. The probe-as-literal-array variant
     # was measured here too and REJECTED (see `_gr_search`'s docstring).
     def _mk_nodes():
-        return _gr_nodes(
-            e.filter(F.col("vec_id") != _PROBE_ID), tables=tables
-        ).localCheckpoint()
+        return pin(_gr_nodes(e.filter(F.col("vec_id") != _PROBE_ID), tables=tables))
 
     def _mk_probe():
-        return (
+        return pin(
             e.filter(F.col("vec_id") == _PROBE_ID)
             .select(_quantize(as_double("embedding")).alias("pq"))
-            .localCheckpoint()
         )
 
     with ThreadPoolExecutor(max_workers=2) as _pool:
@@ -3161,7 +3154,7 @@ def _gr_blocked(spark, sf_dir, tables=None):
     # id-pair distinct + two shuffle_hash vector re-joins + per-pair
     # pandas-UDF scoring) — see `_grb_scored_pairs_arrow`; the join form
     # is kept as the law-test twin.
-    scored = _grb_scored_pairs_arrow(nodes).localCheckpoint()
+    scored = pin(_grb_scored_pairs_arrow(nodes))
     # round-16 opt: probe distances computed once and attached to the
     # pinned edges — the walk never touches vectors (see `_gr_search`).
     nd = _gr_probe_dists(nodes, probe)
@@ -3324,11 +3317,13 @@ def _km_ivf_auto_body(spark, sf_dir, k: int, nprobe: int, stride: int = 1):
     e = load(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    e_q = e.select(
-        "vec_id",
-        as_double("embedding").alias("de"),
-        _quantize(as_double("embedding")).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = pin(
+        e.select(
+            "vec_id",
+            as_double("embedding").alias("de"),
+            _quantize(as_double("embedding")).alias("qe"),
+        )
+    )
     # round-15 opt session 2: the stride-sampled train runs driver-local
     # on the bounded sample; the stride=1 contrast regime keeps the
     # distributed loop — see `_km_train`.
@@ -3601,11 +3596,13 @@ def sim_ann_kmeans_ivf_batch_topk(spark, sf_dir, n_override: int = None):
     k = _km_auto_k(n)
     nprobe = _km_auto_nprobe(k)
     stride = _km_auto_stride(n, k)
-    e_q = e.select(
-        "vec_id",
-        as_double("embedding").alias("de"),
-        _quantize(as_double("embedding")).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = pin(
+        e.select(
+            "vec_id",
+            as_double("embedding").alias("de"),
+            _quantize(as_double("embedding")).alias("qe"),
+        )
+    )
     # round-15 opt session 2: the stride-sampled train runs driver-local
     # on the bounded sample; the stride=1 contrast regime keeps the
     # distributed loop — see `_km_train`.
@@ -3807,7 +3804,7 @@ def _sd_body(spark, sf_dir, k: int, stride: int, tau: float, emit: str = "report
     as the elbow key's inertia re-join (numpy-rounded cs would race
     Spark's half-up rounding at midpoints).
 
-    Scale: base is pinned once (localCheckpoint — assignment runs ONCE);
+    Scale: base is pinned once (assignment runs ONCE);
     the Arrow pair pass hashes the base by cell into `applyInPandas` —
     ONE exchange of the base rows (the fold's self-join reused a single
     identical exchange, measured at 25× with broadcast disabled,
@@ -3819,17 +3816,19 @@ def _sd_body(spark, sf_dir, k: int, stride: int, tau: float, emit: str = "report
     e = load(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    e_q = e.select(
-        "vec_id",
-        as_double("embedding").alias("de"),
-        _quantize(as_double("embedding")).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = pin(
+        e.select(
+            "vec_id",
+            as_double("embedding").alias("de"),
+            _quantize(as_double("embedding")).alias("qe"),
+        )
+    )
     # round-15 opt session 2: driver-local sampled train (see `_km_train`
     # — SemDeDup's occupancy sizing keeps stride > 1 at every n).
     cents = _km_train(spark, e_q, k, stride)
     assign = _km_assign_arrow(e_q, cents)
     cd = _dequantize()
-    base = (
+    base = pin(
         assign.alias("a")
         .join(e_q.alias("v"), F.col("a.vec_id") == F.col("v.vec_id"))
         .join(F.broadcast(cents.select("cell", cd.alias("cd"))), "cell")
@@ -3839,7 +3838,6 @@ def _sd_body(spark, sf_dir, k: int, stride: int, tau: float, emit: str = "report
             F.col("v.de").alias("de"),
             F.round(cosine(F.col("v.de"), F.col("cd")), 6).alias("cs_cent"),
         )
-        .localCheckpoint(eager=True)
     )
     # round-15 opt: the pair pass runs as the Arrow matmul kernel (2× at
     # shipped grain, exact — see `_sd_pairs_arrow`; `_sd_pairs_fold` is
@@ -3849,8 +3847,8 @@ def _sd_body(spark, sf_dir, k: int, stride: int, tau: float, emit: str = "report
         # the recall eval's candidate-volume axis: every within-cell pair,
         # BEFORE the τ cut (counted once — no pin, no second consumer)
         return pairs_all
-    pairs = pairs_all.filter(F.col("cos_sim") >= F.lit(tau)).localCheckpoint(
-        eager=True
+    pairs = pin(
+        pairs_all.filter(F.col("cos_sim") >= F.lit(tau))
     )  # narrow (ids+scalars); read twice below
     if emit == "pairs":
         return pairs
@@ -4957,7 +4955,7 @@ def emb_label_separation_report(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     qe = _quantize(as_double("embedding"))
     qv = e.select("vec_id", "label", qe.alias("qe"))
-    cint = (
+    cint = pin(
         qv.select("label", F.posexplode("qe").alias("pos", "q"))
         .groupBy("label", "pos")
         .agg(
@@ -4971,8 +4969,7 @@ def emb_label_separation_report(spark, sf_dir):
             F.col("label").alias("cell"),
             F.transform("p", lambda s: s.getField("cq")).alias("cq"),
         )
-        .localCheckpoint(eager=True)  # |labels| rows; 3 consumers
-    )
+    )  # |labels| rows; 3 consumers
     wd = (
         qv.join(F.broadcast(cint), qv.label == cint.cell)
         .select("label", _il2(F.col("qe"), F.col("cq")).alias("d"))
@@ -5203,7 +5200,7 @@ def sim_mmr_diversified_topk(spark, sf_dir):
     Scale shape: the candidate pool is a TakeOrdered top-{_MMR_C} over
     the corpus (or any ANN op in this family feeding it); the greedy
     stage then touches only {_MMR_C} rows per step — {_MMR_K − 1} tiny
-    joins, eager localCheckpoint per step (the iterative-lineage
+    joins, eager pin per step (the iterative-lineage
     discipline), never a corpus-sized operation. MMR's sequential
     dependency is irreducible (each pick conditions the next), which is
     why bounding it to a small candidate pool is the standard production
@@ -5214,15 +5211,14 @@ def sim_mmr_diversified_topk(spark, sf_dir):
     pv = qv.filter(F.col("vec_id") == _PROBE_ID).select(
         F.col("qe").alias("pq")
     )
-    cand = (
+    cand = pin(
         qv.filter(F.col("vec_id") != _PROBE_ID)
         .crossJoin(F.broadcast(pv))
         .select("vec_id", "qe", _il2(F.col("qe"), F.col("pq")).alias("odp"))
         .orderBy("odp", "vec_id")
         .limit(_MMR_C)
-        .localCheckpoint()
     )
-    sel = cand.orderBy("odp", "vec_id").limit(1).select("vec_id").localCheckpoint()
+    sel = pin(cand.orderBy("odp", "vec_id").limit(1).select("vec_id"))
     for _ in range(_MMR_K - 1):
         picked = cand.join(sel, "vec_id").select(
             F.col("vec_id").alias("p_id"), F.col("qe").alias("pqe")
@@ -5246,7 +5242,7 @@ def sim_mmr_diversified_topk(spark, sf_dir):
             )
         )
         pick = scored.orderBy("score", "vec_id").limit(1).select("vec_id")
-        sel = sel.union(pick).localCheckpoint()
+        sel = pin(sel.union(pick))
     w = Window.orderBy("odp", "vec_id")
     return (
         sel.join(cand, "vec_id")
@@ -5422,7 +5418,7 @@ def emb_hard_negative_mining(spark, sf_dir):
     knob, same as serving). Shuffle payload is ids + bucket keys;
     quantized vectors re-join by id for scoring."""
     e = load(spark, sf_dir, "embeddings")
-    nodes = _gr_nodes(e).localCheckpoint()
+    nodes = pin(_gr_nodes(e))
     lab = e.select("vec_id", "label")
     nodes = nodes.join(lab, "vec_id")
     pairs = None
@@ -5539,12 +5535,14 @@ def emb_ivf_cell_balance(spark, sf_dir):
     hash-grouped aggregates over the |V|-row assignment plus a
     per-cell argmax window PARTITIONED by cell."""
     e = load(spark, sf_dir, "embeddings")
-    e_q = e.select(
-        "vec_id",
-        "label",
-        as_double("embedding").alias("de"),
-        _quantize(as_double("embedding")).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = pin(
+        e.select(
+            "vec_id",
+            "label",
+            as_double("embedding").alias("de"),
+            _quantize(as_double("embedding")).alias("qe"),
+        )
+    )
     seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
     cents = (
         seeds.alias("s")
@@ -5552,11 +5550,9 @@ def emb_ivf_cell_balance(spark, sf_dir):
         .select(F.col("s.label").alias("cell"), F.col("v.qe").alias("cq"))
     )
     for _ in range(_KM_ITERS):
-        cents = _km_update(
-            _km_assign_arrow(e_q, cents), e_q
-        ).localCheckpoint(eager=True)
+        cents = pin(_km_update(_km_assign_arrow(e_q, cents), e_q))
     # shared by 3 consumers
-    afin = _km_assign_arrow(e_q, cents).localCheckpoint()
+    afin = pin(_km_assign_arrow(e_q, cents))
     tot = afin.agg(
         F.count("*").cast("long").alias("n"),
         F.countDistinct("cell").cast("long").alias("k"),
@@ -5828,20 +5824,20 @@ def emb_kmeans_elbow_curve(spark, sf_dir):
     (embarrassingly parallel across k at cluster scale); the output is
     3 rows. Cost scales with k·rounds, not k²."""
     e = load(spark, sf_dir, "embeddings")
-    e_q = e.select(
-        "vec_id",
-        as_double("embedding").alias("de"),
-        _quantize(as_double("embedding")).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = pin(
+        e.select(
+            "vec_id",
+            as_double("embedding").alias("de"),
+            _quantize(as_double("embedding")).alias("qe"),
+        )
+    )
     rows = None
     for k in _ELBOW_KS:
         cents = e_q.filter(F.col("vec_id") < k).select(
             F.col("vec_id").alias("cell"), F.col("qe").alias("cq")
         )
         for _ in range(_KM_ITERS):
-            cents = _km_update(
-                _km_assign_arrow(e_q, cents), e_q
-            ).localCheckpoint(eager=True)
+            cents = pin(_km_update(_km_assign_arrow(e_q, cents), e_q))
         # Arrow argmax picks the cell; the inertia term cs is then ONE
         # JVM-side cosine per vector against the assigned centroid
         # (broadcast k-row join) — O(n) cosine evaluations instead of
@@ -5953,13 +5949,12 @@ def emb_pq_code_balance(spark, sf_dir):
     training/encoding shuffle (vec, subspace)-grain integer subvectors;
     the report is an {_PQ_M}×{_PQ_K}-row aggregate; codebooks stay a
     KB-scale broadcast."""
-    e_q = (
+    e_q = pin(
         load(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
             _quantize(as_double("embedding")).alias("qe"),
         )
-        .localCheckpoint(eager=True)
     )
     subs = _pq_subvectors(e_q, "qe", ["vec_id"])
     cb1, enc = _pq_train_encode(subs, ["vec_id"])

@@ -15,6 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.textfns import LANG_MARKERS, fingerprint, marker_hits, tokens
+from ..materialize import pin
 from ..sources import load
 from .base import make_registry
 
@@ -620,14 +621,13 @@ def text_bpe_merges(spark, sf_dir):
     the scale shape and the cross-engine exactness argument; the oracle
     unrolls every round as chained CTEs, so the full training loop is
     value-checked, not just the final counts."""
-    words = _bpe_words0(spark, sf_dir).localCheckpoint(eager=True)
+    words = pin(_bpe_words0(spark, sf_dir))
     merges = []
     for r in range(1, _BPE_MERGES + 1):
-        best = (
+        best = pin(
             _bpe_pair_counts(words)
             .orderBy(F.desc("pc"), "s1", "s2")
             .limit(1)
-            .localCheckpoint(eager=True)
         )
         merges.append(
             best.select(
@@ -638,9 +638,7 @@ def text_bpe_merges(spark, sf_dir):
             )
         )
         if r < _BPE_MERGES:
-            words = _bpe_apply_merge(words, best.select("s1", "s2")).localCheckpoint(
-                eager=True
-            )
+            words = pin(_bpe_apply_merge(words, best.select("s1", "s2")))
     out = merges[0]
     for m in merges[1:]:
         out = out.unionByName(m)
@@ -705,16 +703,15 @@ def text_repetition_stats(spark, sf_dir):
 def _bpe_sizes(spark, sf_dir):
     """Train the BPE merges and return the word -> token-count dimension
     (shared by the encode op and the fertility report)."""
-    words = _bpe_words0(spark, sf_dir).localCheckpoint(eager=True)
+    words = pin(_bpe_words0(spark, sf_dir))
     for _ in range(_BPE_MERGES):
-        best = (
+        best = pin(
             _bpe_pair_counts(words)
             .orderBy(F.desc("pc"), "s1", "s2")
             .limit(1)
             .select("s1", "s2")
-            .localCheckpoint(eager=True)
         )
-        words = _bpe_apply_merge(words, best).localCheckpoint(eager=True)
+        words = pin(_bpe_apply_merge(words, best))
     return words.select("word", F.size("syms").alias("ntok"))
 
 

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 from pyspark.sql import functions as F
 
 from dataflow_pubsub_message_encryption_spark.operators.relational import QUERIES
@@ -82,29 +85,70 @@ def test_decrypt_pipeline_fact_path_is_narrow(spark, sf_dir):
     assert count_exchanges(df) == 4
 
 
+_PKG = pathlib.Path(__file__).parent.parent / "dataflow_pubsub_message_encryption_spark"
+
+
+def _method_calls(names):
+    """Every ``<expr>.<name>(...)`` call in the package whose method name
+    is in ``names``, as (path, call node, the source lines it spans) — an
+    ``ast`` walk, so a call wrapped over several lines is one call."""
+    for py in sorted(_PKG.rglob("*.py")):
+        src = py.read_text()
+        lines = src.splitlines()
+        for node in ast.walk(ast.parse(src)):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in names
+            ):
+                yield py, node, lines[node.lineno - 1 : node.end_lineno]
+
+
+def _chain_calls(call, method):
+    """Whether the receiver chain of ``call`` calls ``.<method>(...)``."""
+    node = call.func.value
+    while isinstance(node, (ast.Call, ast.Attribute, ast.Subscript)):
+        if isinstance(node, ast.Call):
+            if isinstance(node.func, ast.Attribute) and node.func.attr == method:
+                return True
+            node = node.func
+        else:
+            node = node.value
+    return False
+
+
 def test_no_collect_in_engine_code():
     """Engine code must never materialize distributed data on the driver
     (SURVEY §4: 'no collect() anywhere in engine code')."""
-    import pathlib
-
-    pkg = pathlib.Path(__file__).parent.parent / "dataflow_pubsub_message_encryption_spark"
     offenders = []
-    for py in pkg.rglob("*.py"):
-        for line in py.read_text().splitlines():
-            if ".collect()" in line or ".toPandas()" in line:
-                # two sanctioned exceptions, both explicitly marked:
-                # a single-scalar aggregate fetched for an iterative
-                # fixed-point convergence check (# driver-scalar), and a
-                # table bounded by construction (# driver-bounded — e.g.
-                # the <=4096-row centroid matrix the Arrow assignment
-                # stage broadcasts, round 15). Anything unmarked is an
-                # offender.
-                if "# driver-scalar" in line and ".agg(" in line:
-                    continue
-                if "# driver-bounded" in line:
-                    continue
-                offenders.append(f"{py}: {line.strip()}")
+    for py, call, span in _method_calls({"collect", "toPandas"}):
+        # two sanctioned exceptions, both explicitly marked anywhere in
+        # the call's lines: a single-scalar aggregate fetched for an
+        # iterative fixed-point convergence check (# driver-scalar, on an
+        # .agg( chain), and a table bounded by construction
+        # (# driver-bounded — e.g. the <=4096-row centroid matrix the
+        # Arrow assignment stage broadcasts, round 15). Anything unmarked
+        # is an offender.
+        text = "\n".join(span)
+        if "# driver-scalar" in text and _chain_calls(call, "agg"):
+            continue
+        if "# driver-bounded" in text:
+            continue
+        offenders.append(f"{py}:{call.lineno}: {span[0].strip()}")
     assert not offenders, f"driver-side materialization in: {offenders}"
+
+
+def test_lineage_cuts_only_in_materialize():
+    """``materialize.pin`` is the package's one way to cut lineage (it
+    picks durable ``checkpoint()`` or ``localCheckpoint()`` from the
+    session's checkpoint dir); a direct call elsewhere would bypass that
+    rule."""
+    offenders = [
+        f"{py}:{call.lineno}: {span[0].strip()}"
+        for py, call, span in _method_calls({"localCheckpoint", "checkpoint", "persist"})
+        if py != _PKG / "materialize.py"
+    ]
+    assert not offenders, f"lineage cut outside materialize.pin: {offenders}"
 
 
 def test_bucketed_join_has_no_join_exchange(spark, sf_dir):

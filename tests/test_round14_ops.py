@@ -224,7 +224,6 @@ spark = (
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
-spark.sparkContext.setCheckpointDir(sys.argv[1])
 
 from pyspark.sql.types import LongType
 
@@ -256,9 +255,9 @@ from dataflow_pubsub_message_encryption_spark.operators.scale import _global_ran
 
 out = {}
 for mode in ("clean0", "drill0", "clean1", "drill1"):
-    reliable = mode.endswith("1")
+    if mode == "clean1":  # from here on every pin is a durable checkpoint()
+        spark.sparkContext.setCheckpointDir(sys.argv[1])
     drilled = mode.startswith("drill")
-    os.environ["SPARK_GRAFT_RELIABLE_PIN"] = "1" if reliable else "0"
     df = spark.range(0, 1000, 1, 8).select(
         F.col("id"), (F.col("id") % 37).alias("v")
     )

@@ -208,7 +208,6 @@ spark = (
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
-spark.sparkContext.setCheckpointDir(sys.argv[1])
 MARKER = sys.argv[2]
 SF_DIR = sys.argv[3]
 
@@ -248,7 +247,8 @@ def poisoned_load(spark_, sf_dir_, table):
 
 out = {}
 for mode in ("clean0", "drill0", "clean1", "drill1"):
-    os.environ["SPARK_GRAFT_RELIABLE_PIN"] = "1" if mode.endswith("1") else "0"
+    if mode == "clean1":  # from here on every pin is a durable checkpoint()
+        spark.sparkContext.setCheckpointDir(sys.argv[1])
     D.load = poisoned_load if mode.startswith("drill") else real_load
     rows = sorted(
         tuple(r) for r in D.dedup_span_suffix_doubling(spark, SF_DIR).collect()
@@ -362,7 +362,6 @@ spark = (
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
-spark.sparkContext.setCheckpointDir(sys.argv[1])
 MARKER = sys.argv[2]
 SF_DIR = sys.argv[3]
 
@@ -402,7 +401,8 @@ def poisoned_load(spark_, sf_dir_, table):
 
 out = {}
 for mode in ("clean0", "drill0", "clean1", "drill1"):
-    os.environ["SPARK_GRAFT_RELIABLE_PIN"] = "1" if mode.endswith("1") else "0"
+    if mode == "clean1":  # from here on every pin is a durable checkpoint()
+        spark.sparkContext.setCheckpointDir(sys.argv[1])
     S.load = poisoned_load if mode.startswith("drill") else real_load
     rows = sorted(
         tuple(r)
@@ -448,6 +448,9 @@ def test_arrow_ivf_build_survives_injected_task_failure(tmp_path):
     assert out["drill0"] == out["clean0"], "default pin: drill diverged"
     assert out["drill1"] == out["clean1"], "reliable pin: drill diverged"
     assert out["clean1"] == out["clean0"], "pin modes disagree"
+    # Spark makes <dir>/<uuid>/ at setCheckpointDir; a reliable
+    # checkpoint() writes rdd-<id>/ under it
+    assert any((tmp_path / "ckpt").glob("*/rdd-*")), "durable pin never wrote"
     fired = marker.read_text().count("fired") if marker.exists() else 0
     assert fired >= 2, (
         f"injection fired {fired} times — expected >= 1 per drilled mode"
@@ -675,7 +678,6 @@ spark = (
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
-spark.sparkContext.setCheckpointDir(sys.argv[1])
 MARKER = sys.argv[2]
 SF_DIR = sys.argv[3]
 
@@ -712,7 +714,8 @@ def poisoned_load(spark_, sf_dir_, table):
 
 out = {}
 for mode in ("clean0", "drill0", "clean1", "drill1"):
-    os.environ["SPARK_GRAFT_RELIABLE_PIN"] = "1" if mode.endswith("1") else "0"
+    if mode == "clean1":  # from here on every pin is a durable checkpoint()
+        spark.sparkContext.setCheckpointDir(sys.argv[1])
     S.load = poisoned_load if mode.startswith("drill") else real_load
     rows = sorted(
         tuple(r) for r in S.dedup_semdedup_cells(spark, SF_DIR).collect()
@@ -757,6 +760,9 @@ def test_semdedup_build_survives_injected_task_failure(tmp_path):
     assert out["drill0"] == out["clean0"], "default pin: drill diverged"
     assert out["drill1"] == out["clean1"], "reliable pin: drill diverged"
     assert out["clean1"] == out["clean0"], "pin modes disagree"
+    # Spark makes <dir>/<uuid>/ at setCheckpointDir; a reliable
+    # checkpoint() writes rdd-<id>/ under it
+    assert any((tmp_path / "ckpt").glob("*/rdd-*")), "durable pin never wrote"
     fired = marker.read_text().count("fired") if marker.exists() else 0
     assert fired >= 2, (
         f"injection fired {fired} times — expected >= 1 per drilled mode"

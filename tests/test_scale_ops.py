@@ -423,16 +423,15 @@ def test_fast_bloom_no_false_negatives(spark):
     assert n_pass >= 300, "pass-set must contain every inserted key"
 
 
-def test_reliable_pin_paths_match_default(spark, sf_dir, tmp_path, monkeypatch):
+def test_reliable_pin_paths_match_default(spark, sf_dir, tmp_path):
     """The 100 TB durability recipe is executable (VERDICT r7 item 8):
-    materialize.pin's reliable path — persist(DISK_ONLY_2) without a
-    checkpoint dir, Spark reliable checkpoint() with one — must produce
-    the SAME _global_rank/_global_cumsum results as the default
-    localCheckpoint path, both via the explicit arg and the env switch.
-    Default behavior is unchanged (env unset -> localCheckpoint)."""
+    with a checkpoint dir set, materialize.pin is Spark's reliable
+    checkpoint(), and it must produce the SAME _global_rank/_global_cumsum
+    results as the default localCheckpoint path. The session-scoped
+    session leaves without a checkpoint dir, so every later test's pins
+    stay local."""
     from pyspark.sql import functions as F
 
-    from dataflow_pubsub_message_encryption_spark.materialize import pin
     from dataflow_pubsub_message_encryption_spark.operators.scale import (
         _global_cumsum,
         _global_rank,
@@ -455,24 +454,17 @@ def test_reliable_pin_paths_match_default(spark, sf_dir, tmp_path, monkeypatch):
         )
         return sorted((r.c_custkey, r.cum) for r in c.collect())
 
-    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_PIN", raising=False)
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
     want_rank, want_cum = ranks(), cums()
 
-    # reliable via env, no checkpoint dir -> persist(DISK_ONLY_2)
-    assert spark.sparkContext.getCheckpointDir() is None
-    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_PIN", "1")
-    assert ranks() == want_rank
-    assert cums() == want_cum
-
-    # reliable via checkpoint dir -> Spark reliable checkpoint()
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    assert ranks() == want_rank
-    assert cums() == want_cum
-    import os
-
-    assert os.listdir(str(tmp_path / "ckpt")), "reliable checkpoint never wrote"
-
-    # the explicit arg wins without the env
-    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_PIN", raising=False)
-    out = pin(base, reliable=True)
-    assert out.count() == base.count()
+    # checkpoint dir set -> Spark reliable checkpoint()
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        assert ranks() == want_rank
+        assert cums() == want_cum
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+    # setCheckpointDir makes <dir>/<uuid>/; checkpoint() writes rdd-<id>/
+    assert any((tmp_path / "ckpt").glob("*/rdd-*")), "reliable checkpoint never wrote"
