@@ -271,11 +271,11 @@ def graph_pagerank_int(spark, sf_dir):
 
     Scale notes (100 TB): each iteration is one join on the edge list
     (partitioned by source) + one partial-aggregating groupBy(dest) —
-    ids and two longs per row. Spark would pin per round at
-    depth; 3 rounds keeps the plan shallow enough without. Skewed
-    celebrity nodes (huge deg) cost nothing here — contributions
-    DIVIDE by deg; the skew risk is on the RECEIVING side (sum at a hub
-    dest), the documented salting/AQE case."""
+    ids and two longs per row. Deeper loops pin per round; 3 rounds
+    keeps the plan shallow enough without. Skewed celebrity nodes (huge
+    deg) cost nothing here — contributions DIVIDE by deg; the skew risk
+    is on the RECEIVING side (sum at a hub dest), the documented
+    salting/AQE case."""
     pairs = _DEDUP_QUERIES["dedup_minhash_lsh_pairs"](spark, sf_dir).select(
         "doc_a", "doc_b"
     )

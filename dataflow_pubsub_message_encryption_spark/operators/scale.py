@@ -541,11 +541,12 @@ def agg_incremental_merge(spark, sf_dir):
 )
 def topk_per_group_twolevel(spark, sf_dir):
     """Two-level per-group top-K — the body of ``sample_stratified`` too,
-    proven result-identical to the single-window form the oracle runs. A mega-stratum serializes a
-    single ranking window through one task; instead, level 1 ranks within
-    (lang, salt) — ``_N_SALT``x the parallelism, state bounded by K per
-    salted partition — and keeps only each sub-partition's top K; level 2
-    re-ranks the surviving ``K x _N_SALT`` rows per stratum. Identical
+    proven result-identical to the single-window form the oracle runs. A
+    mega-stratum serializes a single ranking window through one task;
+    instead, level 1 ranks within (lang, salt) — ``_N_SALT``x the
+    parallelism, state bounded by K per salted partition — and keeps
+    only each sub-partition's top K; level 2 re-ranks the surviving
+    ``K x _N_SALT`` rows per stratum. Identical
     output because min-K of a union is the min-K of the per-part min-Ks
     (any row outside its sub-partition's top K is beaten by K rows in its
     OWN sub-partition, so it can never enter the global top K). Ordering
