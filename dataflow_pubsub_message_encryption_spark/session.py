@@ -30,6 +30,23 @@ RUNTIME_CONFS = {
     # cost (a 40-file batch's getBatch: 559 -> 70 ms). Keep listing on
     # the driver for any realistic backlog.
     "spark.sql.sources.parallelPartitionDiscovery.threshold": "1000000",
+    # Every checkpoint write (offsets and commits logs, file-source and
+    # file-sink logs, HDFS-backed and RocksDB state files) goes through
+    # Hadoop's FileSystem API. PySpark bundles no libhadoop, so Spark's
+    # default FileContext manager forks four `readlink` processes per
+    # rename to resolve links; the FileSystem manager's local rename is
+    # one File.renameTo (a dedup -> parquet-sink micro-batch on 4 shuffle
+    # partitions: 100 -> 25 forks; each created file's `chmod` fork is
+    # left). On file:// neither manager makes "check the destination,
+    # then rename" atomic; for overwrites this one's POSIX rename replaces
+    # the destination atomically, where FileContext deletes it first. A
+    # runtime SQL conf, so Spark copies it into the Hadoop conf it hands
+    # to executors. Object-store checkpoints need the manager their store
+    # requires.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

@@ -21,6 +21,10 @@ Scale notes: stateful ops (windowed counts, dropDuplicatesWithinWatermark)
 keep per-key state in the state store — bound it with watermarks (done
 here); for 100 TB/day streams configure the RocksDB state store provider
 (spark.sql.streaming.stateStore.providerClass) so state spills off-heap.
+Checkpoint logs and state files go through Hadoop's FileSystem API
+(session.RUNTIME_CONFS): without libhadoop Spark's default FileContext
+manager forks four ``readlink`` processes per local rename; an object-store
+checkpoint needs the manager its store requires.
 """
 
 from __future__ import annotations

@@ -16,6 +16,7 @@ from dataflow_pubsub_message_encryption_spark import streaming as st
 from dataflow_pubsub_message_encryption_spark.operators.ref_pipeline import (
     QUERIES as REFQ,
 )
+from dataflow_pubsub_message_encryption_spark.session import configure
 from dataflow_pubsub_message_encryption_spark.sources import load_events, wire
 
 
@@ -660,6 +661,107 @@ def test_wire_topic_redelivery_and_restart_is_effectively_once(
     assert drain() == len(ts[0]) + len(ts[-1])
     ids = [r.event_id for r in spark.read.parquet(out).select("event_id").collect()]
     assert len(ids) == len(set(ids)), "a redelivered message reached the sink twice"
+    assert set(ids) == want
+
+
+# --- checkpoint file manager ------------------------------------------------
+
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager(spark, path):
+    """Simple name of the CheckpointFileManager Spark builds for ``path``
+    from the session's Hadoop conf, the conf every checkpoint writer gets."""
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    mgr = checkpointing.CheckpointFileManager.create(jvm.org.apache.hadoop.fs.Path(path), hconf)
+    return mgr.getClass().getSimpleName()
+
+
+def test_local_checkpoints_use_the_filesystem_manager(spark, tmpdir):
+    """A local checkpoint is written through Hadoop's FileSystem API, both
+    in the session ``get_session`` builds and once ``configure`` has set up
+    a session where the key was unset (Spark's default is the FileContext
+    manager, whose local rename forks ``readlink`` processes)."""
+    assert _checkpoint_manager(spark, tmpdir) == "FileSystemBasedCheckpointFileManager"
+    spark.conf.unset(_CKPT_MANAGER_KEY)
+    try:
+        assert _checkpoint_manager(spark, tmpdir) == "FileContextBasedCheckpointFileManager"
+        configure(spark)
+        assert _checkpoint_manager(spark, tmpdir) == "FileSystemBasedCheckpointFileManager"
+    finally:
+        configure(spark)
+
+
+def test_filecontext_checkpoint_resumes_under_filesystem_manager(spark, sf_dir, tmpdir):
+    """Upgrade path: a dedup -> parquet-sink query checkpointed by Spark's
+    default FileContext manager restarts on the same checkpoint under the
+    engine's FileSystem manager. New segments and a redelivered one arrive
+    in between; the restored offsets, watermark and dedup state must leave
+    every verified message in the sink exactly once, the batch decode's
+    set."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    topic, src, out, ckpt = (
+        os.path.join(tmpdir, d) for d in ("topic", "src", "out", "ckpt")
+    )
+    n = wire.publish_topic(spark, sf_dir, topic, tamper=True, n_files=4)
+    want = {
+        r.event_id
+        for r in wire.decode_wire(wire.read_topic_batch(spark, topic))
+        .select("event_id")
+        .collect()
+    }
+    assert len(want) == n // 2
+    segs = sorted(glob.glob(f"{topic}/part-*.parquet"), key=os.path.getmtime)
+    rows = [pq.ParquetFile(s).metadata.num_rows for s in segs]
+    assert len(segs) == 4
+    stamp = int(os.path.getmtime(segs[-1]))
+    os.makedirs(src)
+
+    def deliver(seg, name, i):  # mtime order is the source's batch order
+        path = os.path.join(src, name)
+        shutil.copy(seg, path)
+        os.utime(path, (stamp + i, stamp + i))
+
+    def drain() -> int:
+        stream = st.stateful_dedup_stream(
+            wire.decode_wire(wire.read_topic_stream(spark, src)), watermark="10 days"
+        )
+        q = (
+            st.write_parquet_sink(stream.select("event_id"), out, ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(300), "stream still active after 300s"
+        return sum(p["numInputRows"] for p in q.recentProgress)
+
+    deliver(segs[0], "seg-0.parquet", 1)
+    deliver(segs[1], "seg-1.parquet", 2)
+    spark.conf.set(
+        _CKPT_MANAGER_KEY,
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+    )
+    try:
+        assert _checkpoint_manager(spark, ckpt) == "FileContextBasedCheckpointFileManager"
+        assert drain() == rows[0] + rows[1]
+    finally:
+        configure(spark)
+    assert _checkpoint_manager(spark, ckpt) == "FileSystemBasedCheckpointFileManager"
+
+    # the redelivered segment is handed over first, so it meets the restored
+    # watermark and dedup state; its newest rows lie ahead of that watermark
+    deliver(segs[1], "redelivered-1.parquet", 3)
+    deliver(segs[2], "seg-2.parquet", 4)
+    deliver(segs[3], "seg-3.parquet", 5)
+    # the first run's segments are not read again on resume
+    assert drain() == rows[1] + rows[2] + rows[3]
+    ids = [r.event_id for r in spark.read.parquet(out).select("event_id").collect()]
+    assert len(ids) == len(set(ids)), "a message reached the sink twice"
     assert set(ids) == want
 
 
