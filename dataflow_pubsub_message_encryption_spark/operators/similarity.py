@@ -469,12 +469,25 @@ _KM_ITERS = 2
 _KM_NPROBE = 3
 
 
-def _km_iter_sql(prev_c: str, a: str, cur_c: str, src: str = "qv") -> str:
-    """One Lloyd round as two CTEs: assignment under ``prev_c`` and the
-    fixed-point centroid update producing ``cur_c``. ``src`` is the
-    vector CTE the round trains on — ``qv`` (full corpus) by default,
-    the stride-sampled ``sv`` for the sample-capped train."""
-    return f"""{a} AS (
+def _km_qv_sql(label: bool, materialized: bool = False) -> str:
+    """The oracles' ``qv`` CTE: every vector as ``(vec_id[, label], de,
+    qe)`` — the text twin of :func:`_km_quantized`."""
+    return f"""qv AS{" MATERIALIZED" if materialized else ""} (
+      SELECT vec_id,{" label," if label else ""}
+             CAST(embedding AS DOUBLE[]) AS de,
+             list_transform(CAST(embedding AS DOUBLE[]),
+                            x -> CAST(round(x * {_CENT_SCALE}) AS BIGINT)) AS qe
+      FROM embeddings
+    )"""
+
+
+def _km_assign_sql(
+    a: str, prev_c: str, src: str = "qv", materialized: bool = False
+) -> str:
+    """Nearest-centroid assignment CTE ``a`` of every ``src`` vector
+    under the centroid CTE ``prev_c`` — the text twin of
+    :func:`_km_assign_arrow`."""
+    return f"""{a} AS{" MATERIALIZED" if materialized else ""} (
       SELECT vec_id, cell FROM (
         SELECT {src}.vec_id, c.cell,
                row_number() OVER (PARTITION BY {src}.vec_id
@@ -484,8 +497,21 @@ def _km_iter_sql(prev_c: str, a: str, cur_c: str, src: str = "qv") -> str:
                  c.cell) AS rn
         FROM {src}, {prev_c} c
       ) WHERE rn = 1
-    ),
-    {cur_c} AS (
+    )"""
+
+
+def _km_iter_sql(
+    prev_c: str, a: str, cur_c: str, src: str = "qv", materialized: bool = False
+) -> str:
+    """One Lloyd round as two CTEs: assignment under ``prev_c`` and the
+    fixed-point centroid update producing ``cur_c``. ``src`` is the
+    vector CTE the round trains on — ``qv`` (full corpus) by default,
+    the stride-sampled ``sv`` for the sample-capped train.
+    ``materialized`` marks both CTEs MATERIALIZED, for an oracle that
+    unrolls several chains and references each round more than once
+    (DuckDB re-evaluates a plain CTE at every reference)."""
+    return f"""{_km_assign_sql(a, prev_c, src, materialized)},
+    {cur_c} AS{" MATERIALIZED" if materialized else ""} (
       SELECT cell, list(cq1 ORDER BY pos) AS cq FROM (
         SELECT a.cell, i AS pos,
                CAST(floor(CAST(SUM({src}.qe[i]) AS DOUBLE) / COUNT(*))
@@ -495,6 +521,61 @@ def _km_iter_sql(prev_c: str, a: str, cur_c: str, src: str = "qv") -> str:
         GROUP BY a.cell, i
       ) GROUP BY cell
     )"""
+
+
+def _km_chain_sql(k: int | None = None, stride: int | None = None) -> str:
+    """The ``WITH`` head every learned-cell oracle shares — the text twin
+    of :func:`_km_train` plus the final assignment: ``qv``, seeds ``c0``
+    (each label's minimum vec_id when ``k`` is None, else the ``k``
+    smallest vec_ids as singleton cells), _KM_ITERS Lloyd rounds — over
+    the stride sample ``sv`` when ``stride`` is given — and ``afin``,
+    every vector's cell under the trained ``c{_KM_ITERS}``."""
+    src = "qv" if stride is None else "sv"
+    ctes = [_km_qv_sql(label=k is None)]
+    if stride is not None:
+        ctes.append(f"sv AS (SELECT * FROM qv WHERE vec_id % {stride} = 0)")
+    if k is None:
+        ctes.append(
+            """seeds AS (SELECT label AS cell, min(vec_id) AS sid
+              FROM embeddings GROUP BY label),
+    c0 AS (SELECT s.cell, qv.qe AS cq
+           FROM seeds s JOIN qv ON qv.vec_id = s.sid)"""
+        )
+    else:
+        ctes.append(
+            f"""c0 AS (SELECT vec_id AS cell, qe AS cq FROM qv
+           WHERE vec_id < {k})"""
+        )
+    ctes += [
+        _km_iter_sql(f"c{i}", f"a{i + 1}", f"c{i + 1}", src=src)
+        for i in range(_KM_ITERS)
+    ]
+    ctes.append(_km_assign_sql("afin", f"c{_KM_ITERS}"))
+    return "WITH " + ",\n    ".join(ctes)
+
+
+def _km_ivf_sql(nprobe: int, k: int | None = None, stride: int | None = None) -> str:
+    """Oracle of a single-probe learned-IVF key (:func:`_km_ivf_serve`):
+    the trained chain, the ``nprobe`` cells nearest the probe, and the
+    exact top-_TOPK inside them."""
+    return f"""
+    {_km_chain_sql(k, stride)},
+    probe AS (SELECT de AS pe FROM qv WHERE vec_id = {_PROBE_ID}),
+    best_cell AS (
+      SELECT cell FROM c{_KM_ITERS}, probe
+      ORDER BY round(list_cosine_similarity(
+                 list_transform(cq, q -> CAST(q AS DOUBLE) / {_CENT_SCALE}),
+                 pe), 6) DESC, cell
+      LIMIT {nprobe}
+    )
+    SELECT vec_id, cell, cos_sim FROM (
+      SELECT qv.vec_id, a.cell,
+             round(list_cosine_similarity(qv.de, probe.pe), 6) AS cos_sim
+      FROM afin a JOIN qv USING (vec_id)
+      JOIN best_cell USING (cell), probe
+      WHERE qv.vec_id != {_PROBE_ID}
+    ) ORDER BY cos_sim DESC, vec_id LIMIT {_TOPK}
+    """
 
 
 def _km_assign(e_q, cents):
@@ -538,15 +619,14 @@ def _km_assign_arrow(e_q, cents):
     computed as one vectorized numpy matmul per Arrow batch instead of
     an interpreted per-(vector, cell) expression fold.
 
-    Why it exists (round 15, VERDICT r14 item 1): the r14 100x census
-    measured the interpreted broadcast-centroid fold at 91% of the
-    sampled-IVF query's cost at 200k vectors (86-96 s of ~95 s) — the
-    fold evaluates a 64-element zip_with/aggregate expression tree n*k
-    times in the interpreter. The prototyped replacement read 1.5-5.5 s
-    vs 73 s — up to 48x — at 200,000/200,000 cell agreement. Hierarchical
-    two-level assignment was prototyped too and LOSES (17.9% agreement:
-    near-isotropic 64-dim embeddings don't cluster hierarchically);
-    this is the exact fix, not an approximation.
+    Why: the interpreted broadcast-centroid fold evaluates a 64-element
+    zip_with/aggregate expression tree n*k times; at 200k vectors it
+    was 91% of the sampled-IVF query's cost (86-96 s of ~95 s), where
+    this stage reads 1.5-5.5 s against the fold's 73 s — up to 48x — at
+    200,000/200,000 cell agreement. Hierarchical two-level assignment
+    LOSES (17.9% agreement: near-isotropic 64-dim embeddings don't
+    cluster hierarchically); this is the exact fix, not an
+    approximation.
 
     Shape: the trained centroid table is a bounded driver scalar
     (k <= _KM_AUTO_MAX_K = 4096 rows x 64 components, <= 2 MB) —
@@ -562,8 +642,9 @@ def _km_assign_arrow(e_q, cents):
     a KB-scale broadcast, the cheapest shape an index-build assignment
     can have. Law tests pin Arrow ≡ fold bit-identically on every cell
     at both graded fixtures (tests/test_round15_ops.py), and the
-    unrolled-trajectory oracles of all six consumer keys re-prove the
-    whole training chain cross-engine through the driver gate."""
+    unrolled-trajectory oracles of all ten learned-cell keys (see
+    :func:`_km_train`) re-prove the whole training chain cross-engine
+    against DuckDB."""
     spark = e_q.sparkSession
     # bounded by construction: k <= 4096 centroid rows (clamped by
     # _km_auto_k / the label count), ~64 int64 components each — <=2 MB.
@@ -624,44 +705,90 @@ def _km_update(assign, e_q):
     )
 
 
-def _km_train(spark, e_q, k: int, stride: int):
-    """Sampled-Lloyd coarse-quantizer train, shared by the IVF-auto,
-    batch-serve and SemDeDup bodies: returns the trained (cell, cq)
-    centroid table after ``_KM_ITERS`` Lloyd rounds, vec_id-seeded with
-    the k smallest ids as singleton cells.
+def _km_quantized(e, with_label: bool = False):
+    """The pinned ``(vec_id[, label], de, qe)`` projection every Lloyd
+    train and assignment runs on: each vector as doubles ``de`` and as
+    fixed-point BIGINTs ``qe`` (see _CENT_SCALE). ``label`` rides along
+    for the label-seeded keys. The oracle twin is :func:`_km_qv_sql`."""
+    keys = ["vec_id", "label"] if with_label else ["vec_id"]
+    return pin(
+        e.select(
+            *keys,
+            as_double("embedding").alias("de"),
+            _quantize(as_double("embedding")).alias("qe"),
+        )
+    )
 
-    ``stride > 1`` (the production sample-capped regime) trains
-    DRIVER-LOCAL (round-15 optimization session 2, guide §1.2 step 1):
-    the stride rule ``max(1, n // (_KM_SAMPLE_FACTOR·k))`` bounds the
-    train sample at ~2·_KM_SAMPLE_FACTOR·k ≤ ~65k rows by construction
-    (k ≤ _KM_AUTO_MAX_K = 4096), i.e. a bounded table in the
+
+def _km_vecid_seeds(e_q, k: int):
+    """Seed cells: the ``k`` smallest vec_ids as singleton cells, cell id =
+    vec_id (int64)."""
+    return e_q.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cell"), F.col("qe").alias("cq")
+    )
+
+
+def _km_label_seeds(e_q):
+    """Seed cells: each label's minimum-vec_id vector, cell id = label
+    (int32). ``e_q`` must carry ``label`` (``_km_quantized(e, True)``)."""
+    sid = e_q.groupBy("label").agg(F.min("vec_id").alias("sid"))
+    return (
+        sid.alias("s")
+        .join(e_q.alias("v"), F.col("s.sid") == F.col("v.vec_id"))
+        .select(F.col("s.label").alias("cell"), F.col("v.qe").alias("cq"))
+    )
+
+
+def _km_train(spark, e_q, seeds, stride: int):
+    """The one Lloyd coarse-quantizer train of the ten learned-cell keys
+    — `sim_ann_kmeans_ivf_topk`, `sim_ann_kmeans_ivf_topk_auto`,
+    `sim_ann_kmeans_ivf_topk_auto_sampled`,
+    `sim_ann_kmeans_ivf_batch_topk`, `embedding_index_pipeline`,
+    `emb_ivf_cell_balance`, `emb_kmeans_elbow_curve`,
+    `dedup_semdedup_cells`, `dedup_semdedup_recall_eval` and
+    `corpus_semantic_curation_report`: returns the trained (cell, cq)
+    centroid table after ``_KM_ITERS`` Lloyd rounds over the pinned
+    ``e_q`` of :func:`_km_quantized`, started from the (cell, cq)
+    ``seeds`` (:func:`_km_vecid_seeds` or :func:`_km_label_seeds`). The
+    oracles unroll the same chain as :func:`_km_chain_sql`.
+
+    ``stride <= 1`` trains on the full corpus as a distributed loop:
+    per round one `_km_assign_arrow` pass, one `_km_update` (cell, pos)
+    shuffle and one pin. The train set IS the corpus there, so it must
+    never hit the driver. Label-seeded trains run here (stride 1), so
+    their cells keep the label's int32 dtype.
+
+    ``stride > 1`` (the sample-capped regime) trains DRIVER-LOCAL on the
+    stride sample ``vec_id % stride == 0``: the stride rule
+    ``max(1, n // (_KM_SAMPLE_FACTOR·k))`` bounds the sample at
+    ~2·_KM_SAMPLE_FACTOR·k ≤ ~65k rows by construction (k ≤
+    _KM_AUTO_MAX_K = 4096), i.e. a bounded table in the
     `# driver-bounded` collect class — and single-node training of the
     coarse quantizer on the sample is the standard production shape
     (ANN libraries train the quantizer on tens of samples per centroid,
-    never distributed). The distributed loop paid, PER ITERATION, one
-    centroid collect + one Arrow assignment pass + one (cell, pos)
-    shuffle + one pin over a few-hundred-row sample — measured 2.4-3.7 s
-    of pure job overhead per train at sf0.001-sf0.1 vs 0.3-0.4 s local.
-    The arithmetic is the engine's EXACTLY: the `_km_assign_arrow` 6dp-rounded-cosine
-    first-max argmax (cells ascending) and the `_km_update` floored
-    integer mean (int64 sums ≤ 65k·2e6 ≈ 1.3e11 — exact in float64
-    division); centroid sets are law-pinned bit-identical to the
-    distributed loop at both graded fixtures AND were verified at sf0.1
-    for both sizing rules (proto log). Corpus-grain work (the final
-    full-corpus assignment, serving) stays distributed.
-
-    ``stride <= 1`` (the full-corpus-train contrast regime,
-    `sim_ann_kmeans_ivf_topk_auto`) keeps the distributed loop verbatim
-    — there the train set IS the corpus and must never hit the driver."""
-    cents = e_q.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cell"), F.col("qe").alias("cq")
-    )
+    never distributed). Run distributed, the sample train pays PER
+    ITERATION one centroid collect + one Arrow assignment pass + one
+    (cell, pos) shuffle + one pin over a few-hundred-row sample —
+    measured 2.4-3.7 s of pure job overhead per train at sf0.001-sf0.1
+    vs 0.3-0.4 s local. The arithmetic is the distributed loop's
+    EXACTLY: the `_km_assign_arrow` 6dp-rounded-cosine first-max argmax
+    (cells ascending) and the `_km_update` floored integer mean (int64
+    sums ≤ 65k·2e6 ≈ 1.3e11 — exact in float64 division); centroid sets
+    are law-pinned bit-identical to the distributed loop at both graded
+    fixtures AND were verified at sf0.1 for both sizing rules. Its
+    cells come back int64, the dtype of vec_id seeds. Corpus-grain
+    work (the final full-corpus assignment, serving) stays distributed."""
     if stride <= 1:
+        cents = seeds
         for _ in range(_KM_ITERS):
+            # eager pin per round: K rows; keeps the plan shallow and lets
+            # the trained table's consumers (final assignment, probe cell
+            # ranking, search join) reuse it instead of re-running the
+            # whole training lineage.
             cents = pin(_km_update(_km_assign_arrow(e_q, cents), e_q))
         return cents
-    seeds = sorted(
-        cents.collect(),  # driver-bounded: k <= _KM_AUTO_MAX_K rows
+    srows = sorted(
+        seeds.collect(),  # driver-bounded: k <= _KM_AUTO_MAX_K rows
         key=lambda r: r.cell,
     )
     trows = (
@@ -672,8 +799,8 @@ def _km_train(spark, e_q, k: int, stride: int):
     V = np.array([r.de for r in trows], dtype=np.float64)
     Q = np.array([r.qe for r in trows], dtype=np.int64)
     vn = np.sqrt((V * V).sum(axis=1))
-    cells = np.array([r.cell for r in seeds], dtype=np.int64)
-    C = np.array([r.cq for r in seeds], dtype=np.int64)
+    cells = np.array([r.cell for r in srows], dtype=np.int64)
+    C = np.array([r.cq for r in srows], dtype=np.int64)
     for _ in range(_KM_ITERS):
         Cd = C.astype(np.float64) / _CENT_SCALE
         cn = np.sqrt((Cd * Cd).sum(axis=1))
@@ -729,50 +856,7 @@ def _km_ivf_serve(e_q, cents, nprobe: int):
     )
 
 
-@query(
-    "sim_ann_kmeans_ivf_topk",
-    f"""
-    WITH qv AS (
-      SELECT vec_id, label,
-             CAST(embedding AS DOUBLE[]) AS de,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(round(x * {_CENT_SCALE}) AS BIGINT)) AS qe
-      FROM embeddings
-    ),
-    seeds AS (SELECT label AS cell, min(vec_id) AS sid
-              FROM embeddings GROUP BY label),
-    c0 AS (SELECT s.cell, qv.qe AS cq
-           FROM seeds s JOIN qv ON qv.vec_id = s.sid),
-    {_km_iter_sql("c0", "a1", "c1")},
-    {_km_iter_sql("c1", "a2", "c2")},
-    afin AS (
-      SELECT vec_id, cell FROM (
-        SELECT qv.vec_id, c.cell,
-               row_number() OVER (PARTITION BY qv.vec_id
-                 ORDER BY round(list_cosine_similarity(qv.de,
-                   list_transform(c.cq,
-                     q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) DESC,
-                 c.cell) AS rn
-        FROM qv, c{_KM_ITERS} c
-      ) WHERE rn = 1
-    ),
-    probe AS (SELECT de AS pe FROM qv WHERE vec_id = {_PROBE_ID}),
-    best_cell AS (
-      SELECT cell FROM c{_KM_ITERS}, probe
-      ORDER BY round(list_cosine_similarity(
-                 list_transform(cq, q -> CAST(q AS DOUBLE) / {_CENT_SCALE}),
-                 pe), 6) DESC, cell
-      LIMIT {_KM_NPROBE}
-    )
-    SELECT vec_id, cell, cos_sim FROM (
-      SELECT qv.vec_id, a.cell,
-             round(list_cosine_similarity(qv.de, probe.pe), 6) AS cos_sim
-      FROM afin a JOIN qv USING (vec_id)
-      JOIN best_cell USING (cell), probe
-      WHERE qv.vec_id != {_PROBE_ID}
-    ) ORDER BY cos_sim DESC, vec_id LIMIT {_TOPK}
-    """,
-)
+@query("sim_ann_kmeans_ivf_topk", _km_ivf_sql(_KM_NPROBE))
 def sim_ann_kmeans_ivf_topk(spark, sf_dir):
     """Learned IVF: coarse cells trained by {_KM_ITERS} Lloyd's k-means
     iterations (seeded with each label's min-vec_id vector), then the
@@ -781,11 +865,12 @@ def sim_ann_kmeans_ivf_topk(spark, sf_dir):
     story past ``sim_ann_ivf_topk``'s label-defined cells: the cells here
     come from the data, not the metadata.
 
-    Every Lloyd round is assignment (broadcast K centroids, argmax of
-    6dp-rounded cosine, cell tie-break — since round 15 the exact
-    Arrow-matmul stage `_km_assign_arrow`, law-pinned bit-identical to
-    the interpreted fold) + update (integer component sums, one floored
-    double division — see the fixed-point block comment). The oracle
+    Training is `_km_train` from `_km_label_seeds`. Every Lloyd round is
+    assignment (broadcast K centroids, argmax of 6dp-rounded cosine,
+    cell tie-break — the exact Arrow-matmul stage `_km_assign_arrow`,
+    law-pinned bit-identical to the interpreted fold) + update (integer
+    component sums, one floored double division — see the fixed-point
+    block comment). The oracle
     unrolls all rounds as chained CTEs, so the entire training
     trajectory is value-checked cross-engine. At 100 TB: K centroids are
     a broadcast dimension (KB-scale); each round is one embarrassingly
@@ -793,27 +878,8 @@ def sim_ann_kmeans_ivf_topk(spark, sf_dir):
     (cell, pos); assignment state never leaves the executors; the
     trained cell id becomes the partition key so a probe reads nprobe/K
     of the data."""
-    e = load(spark, sf_dir, "embeddings")
-    e_q = pin(
-        e.select(
-            "vec_id",
-            "label",
-            as_double("embedding").alias("de"),
-            _quantize(as_double("embedding")).alias("qe"),
-        )
-    )
-    seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
-    cents = (
-        seeds.alias("s")
-        .join(e_q.alias("v"), F.col("s.sid") == F.col("v.vec_id"))
-        .select(F.col("s.label").alias("cell"), F.col("v.qe").alias("cq"))
-    )
-    for _ in range(_KM_ITERS):
-        # eager checkpoint per round: K rows, keeps the plan shallow and
-        # lets the trained table's three consumers (final assignment,
-        # probe cell ranking, search join) reuse it instead of re-running
-        # the whole training lineage.
-        cents = pin(_km_update(_km_assign_arrow(e_q, cents), e_q))
+    e_q = _km_quantized(load(spark, sf_dir, "embeddings"), with_label=True)
+    cents = _km_train(spark, e_q, _km_label_seeds(e_q), 1)
     return _km_ivf_serve(e_q, cents, _KM_NPROBE)
 
 
@@ -1725,30 +1791,7 @@ def emb_pca_power_iteration(spark, sf_dir):
 @query(
     "embedding_index_pipeline",
     f"""
-    WITH qv AS (
-      SELECT vec_id, label,
-             CAST(embedding AS DOUBLE[]) AS de,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(round(x * {_CENT_SCALE}) AS BIGINT)) AS qe
-      FROM embeddings
-    ),
-    seeds AS (SELECT label AS cell, min(vec_id) AS sid
-              FROM embeddings GROUP BY label),
-    c0 AS (SELECT s.cell, qv.qe AS cq
-           FROM seeds s JOIN qv ON qv.vec_id = s.sid),
-    {_km_iter_sql("c0", "a1", "c1")},
-    {_km_iter_sql("c1", "a2", "c2")},
-    afin AS (
-      SELECT vec_id, cell FROM (
-        SELECT qv.vec_id, c.cell,
-               row_number() OVER (PARTITION BY qv.vec_id
-                 ORDER BY round(list_cosine_similarity(qv.de,
-                   list_transform(c.cq,
-                     q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) DESC,
-                 c.cell) AS rn
-        FROM qv, c{_KM_ITERS} c
-      ) WHERE rn = 1
-    ),
+    {_km_chain_sql()},
     q8 AS (
       SELECT vec_id,
              CAST(list_aggregate(
@@ -1777,22 +1820,8 @@ def embedding_index_pipeline(spark, sf_dir):
     manifest IS the partition layout: vectors land in cell-keyed
     partitions sized by n_vecs."""
     e = load(spark, sf_dir, "embeddings")
-    e_q = pin(
-        e.select(
-            "vec_id",
-            "label",
-            as_double("embedding").alias("de"),
-            _quantize(as_double("embedding")).alias("qe"),
-        )
-    )
-    seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
-    cents = (
-        seeds.alias("s")
-        .join(e_q.alias("v"), F.col("s.sid") == F.col("v.vec_id"))
-        .select(F.col("s.label").alias("cell"), F.col("v.qe").alias("cq"))
-    )
-    for _ in range(_KM_ITERS):
-        cents = pin(_km_update(_km_assign_arrow(e_q, cents), e_q))
+    e_q = _km_quantized(e, with_label=True)
+    cents = _km_train(spark, e_q, _km_label_seeds(e_q), 1)
     assign = _km_assign_arrow(e_q, cents)
     q = F.transform(as_double("embedding"), lambda x: F.floor(x * 127 + 0.5).cast("int"))
     q8 = e.select(
@@ -3293,11 +3322,12 @@ def _km_auto_nprobe(k: int) -> int:
 def _km_ivf_auto_body(spark, sf_dir, k: int, nprobe: int, stride: int = 1):
     """Learned-IVF train + search at an explicit (k, nprobe) — the shared
     body `sim_ann_kmeans_ivf_topk_auto` derives its parameters for, and
-    the law tests call directly. Identical Lloyd machinery to
+    the law tests call directly. The same `_km_train` as
     `sim_ann_kmeans_ivf_topk` (same fixed-point determinism disciplines);
-    the only differences are the seeding (the k smallest vec_ids as
-    singleton cells, cell id = vec_id — the `emb_kmeans_elbow_curve`
-    idiom, metadata-free) and the derived nprobe.
+    the only differences are the seeding (`_km_vecid_seeds`: the k
+    smallest vec_ids as singleton cells, cell id = vec_id — the
+    `emb_kmeans_elbow_curve` idiom, metadata-free) and the derived
+    nprobe.
 
     ``stride`` > 1 caps the TRAIN set at the deterministic stride sample
     ``vec_id % stride == 0`` (the `sim_ann_kmeans_ivf_topk_auto_sampled`
@@ -3306,76 +3336,31 @@ def _km_ivf_auto_body(spark, sf_dir, k: int, nprobe: int, stride: int = 1):
     sample-capped quantizer train, stride=1 degenerates to the full
     train bit for bit.
 
-    The post-scan rebalance below is the dedup.py ``_parallel`` idiom
-    (VERDICT r11 item 3): the fixture files are single-row-group parquet,
-    so without it the projected+checkpointed ``e_q`` inherits ONE
-    partition and every Lloyd assign/update of the train runs on one
-    task — measured 6.97 s single-file vs 2.50 s on the 32-file twin at
-    sf0.1 (r11 artifact). A real multi-file corpus arrives partitioned
-    and the repartition degrades to a balanced shuffle of the vectors the
-    train would shuffle anyway."""
+    The post-scan rebalance below is the dedup.py ``_parallel`` idiom:
+    the fixture files are single-row-group parquet, so without it the
+    projected+checkpointed ``e_q`` inherits ONE partition and every
+    Lloyd assign/update of the train runs on one task — measured
+    6.97 s single-file vs 2.50 s on the 32-file twin at sf0.1. A real
+    multi-file corpus arrives partitioned and the repartition degrades
+    to a balanced shuffle of the vectors the train would shuffle
+    anyway."""
     e = load(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    e_q = pin(
-        e.select(
-            "vec_id",
-            as_double("embedding").alias("de"),
-            _quantize(as_double("embedding")).alias("qe"),
-        )
-    )
-    # round-15 opt session 2: the stride-sampled train runs driver-local
-    # on the bounded sample; the stride=1 contrast regime keeps the
-    # distributed loop — see `_km_train`.
-    cents = _km_train(spark, e_q, k, stride)
+    e_q = _km_quantized(e)
+    cents = _km_train(spark, e_q, _km_vecid_seeds(e_q, k), stride)
     return _km_ivf_serve(e_q, cents, nprobe)
 
 
 @query(
     "sim_ann_kmeans_ivf_topk_auto",
-    f"""
-    WITH qv AS (
-      SELECT vec_id,
-             CAST(embedding AS DOUBLE[]) AS de,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(round(x * {_CENT_SCALE}) AS BIGINT)) AS qe
-      FROM embeddings
+    _km_ivf_sql(
+        _km_auto_nprobe(_km_auto_k(_KM_FIXTURE_N)), _km_auto_k(_KM_FIXTURE_N)
     ),
-    c0 AS (SELECT vec_id AS cell, qe AS cq FROM qv
-           WHERE vec_id < {_km_auto_k(_KM_FIXTURE_N)}),
-    {_km_iter_sql("c0", "a1", "c1")},
-    {_km_iter_sql("c1", "a2", "c2")},
-    afin AS (
-      SELECT vec_id, cell FROM (
-        SELECT qv.vec_id, c.cell,
-               row_number() OVER (PARTITION BY qv.vec_id
-                 ORDER BY round(list_cosine_similarity(qv.de,
-                   list_transform(c.cq,
-                     q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) DESC,
-                 c.cell) AS rn
-        FROM qv, c{_KM_ITERS} c
-      ) WHERE rn = 1
-    ),
-    probe AS (SELECT de AS pe FROM qv WHERE vec_id = {_PROBE_ID}),
-    best_cell AS (
-      SELECT cell FROM c{_KM_ITERS}, probe
-      ORDER BY round(list_cosine_similarity(
-                 list_transform(cq, q -> CAST(q AS DOUBLE) / {_CENT_SCALE}),
-                 pe), 6) DESC, cell
-      LIMIT {_km_auto_nprobe(_km_auto_k(_KM_FIXTURE_N))}
-    )
-    SELECT vec_id, cell, cos_sim FROM (
-      SELECT qv.vec_id, a.cell,
-             round(list_cosine_similarity(qv.de, probe.pe), 6) AS cos_sim
-      FROM afin a JOIN qv USING (vec_id)
-      JOIN best_cell USING (cell), probe
-      WHERE qv.vec_id != {_PROBE_ID}
-    ) ORDER BY cos_sim DESC, vec_id LIMIT {_TOPK}
-    """,
 )
 def sim_ann_kmeans_ivf_topk_auto(spark, sf_dir, n_override: int = None):
     """Learned IVF with BOTH serving knobs derived at build time — the
-    clustering twin of `sim_ann_graph_topk_blocked_auto` (round 11):
+    clustering twin of `sim_ann_graph_topk_blocked_auto`:
     `sim_ann_kmeans_ivf_topk` fixes k to the label count and nprobe=3 by
     fiat, and the tuning ops (`emb_kmeans_elbow_curve`,
     `sim_ann_ivf_nprobe_curve`) report the curves a human would read to
@@ -3391,7 +3376,7 @@ def sim_ann_kmeans_ivf_topk_auto(spark, sf_dir, n_override: int = None):
     ``n_override`` exists for the law tests only.
 
     Scale shape: identical to `sim_ann_kmeans_ivf_topk` — per round one
-    broadcast-centroid Arrow-matmul assignment (round 15) + one
+    broadcast-centroid Arrow-matmul assignment + one
     (cell, pos)-keyed partial-agg shuffle; plus the one extra corpus
     count (the two-pass idiom).
 
@@ -3426,46 +3411,7 @@ _KM_SAMP_S = _km_auto_stride(_KM_FIXTURE_N, _KM_SAMP_K)
 
 @query(
     "sim_ann_kmeans_ivf_topk_auto_sampled",
-    f"""
-    WITH qv AS (
-      SELECT vec_id,
-             CAST(embedding AS DOUBLE[]) AS de,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(round(x * {_CENT_SCALE}) AS BIGINT)) AS qe
-      FROM embeddings
-    ),
-    sv AS (SELECT * FROM qv WHERE vec_id % {_KM_SAMP_S} = 0),
-    c0 AS (SELECT vec_id AS cell, qe AS cq FROM qv
-           WHERE vec_id < {_KM_SAMP_K}),
-    {_km_iter_sql("c0", "a1", "c1", src="sv")},
-    {_km_iter_sql("c1", "a2", "c2", src="sv")},
-    afin AS (
-      SELECT vec_id, cell FROM (
-        SELECT qv.vec_id, c.cell,
-               row_number() OVER (PARTITION BY qv.vec_id
-                 ORDER BY round(list_cosine_similarity(qv.de,
-                   list_transform(c.cq,
-                     q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) DESC,
-                 c.cell) AS rn
-        FROM qv, c{_KM_ITERS} c
-      ) WHERE rn = 1
-    ),
-    probe AS (SELECT de AS pe FROM qv WHERE vec_id = {_PROBE_ID}),
-    best_cell AS (
-      SELECT cell FROM c{_KM_ITERS}, probe
-      ORDER BY round(list_cosine_similarity(
-                 list_transform(cq, q -> CAST(q AS DOUBLE) / {_CENT_SCALE}),
-                 pe), 6) DESC, cell
-      LIMIT {_km_auto_nprobe(_KM_SAMP_K)}
-    )
-    SELECT vec_id, cell, cos_sim FROM (
-      SELECT qv.vec_id, a.cell,
-             round(list_cosine_similarity(qv.de, probe.pe), 6) AS cos_sim
-      FROM afin a JOIN qv USING (vec_id)
-      JOIN best_cell USING (cell), probe
-      WHERE qv.vec_id != {_PROBE_ID}
-    ) ORDER BY cos_sim DESC, vec_id LIMIT {_TOPK}
-    """,
+    _km_ivf_sql(_km_auto_nprobe(_KM_SAMP_K), _KM_SAMP_K, _KM_SAMP_S),
 )
 def sim_ann_kmeans_ivf_topk_auto_sampled(spark, sf_dir, n_override: int = None):
     """Auto-sized learned IVF with a SAMPLE-CAPPED Lloyd train — the
@@ -3491,14 +3437,13 @@ def sim_ann_kmeans_ivf_topk_auto_sampled(spark, sf_dir, n_override: int = None):
 
     Scale shape: the train iterations shuffle only the ~8k-row sample;
     the one full-corpus stage per build is the final broadcast-centroid
-    assignment — since round 15 the exact Arrow-matmul stage
-    (`_km_assign_arrow`): the r14 100x census measured the previous
-    interpreted max_by fold at 91% of this query's cost at 200k vectors
-    (SCALING.md §19-20), and the swap removes that term at 100%
-    agreement. Exactly the index-build pass a 100 TB deployment pays
-    anyway, now one embarrassingly parallel Arrow scan. THIS is the
+    assignment — the exact Arrow-matmul stage (`_km_assign_arrow`): the
+    interpreted max_by fold measured 91% of this query's cost at 200k
+    vectors (SCALING.md §19-20), and the Arrow stage removes that term
+    at 100% agreement. Exactly the index-build pass a 100 TB deployment
+    pays anyway, as one embarrassingly parallel Arrow scan. THIS is the
     production IVF build; `sim_ann_kmeans_ivf_topk_auto` is kept as the
-    full-train contrast row (VERDICT r12 item 3)."""
+    full-train contrast row."""
     e = load(spark, sf_dir, "embeddings")
     n = _graded_n(e, sf_dir, n_override)
     k = _km_auto_k(n)
@@ -3510,29 +3455,7 @@ def sim_ann_kmeans_ivf_topk_auto_sampled(spark, sf_dir, n_override: int = None):
 @query(
     "sim_ann_kmeans_ivf_batch_topk",
     f"""
-    WITH qv AS (
-      SELECT vec_id,
-             CAST(embedding AS DOUBLE[]) AS de,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(round(x * {_CENT_SCALE}) AS BIGINT)) AS qe
-      FROM embeddings
-    ),
-    sv AS (SELECT * FROM qv WHERE vec_id % {_KM_SAMP_S} = 0),
-    c0 AS (SELECT vec_id AS cell, qe AS cq FROM qv
-           WHERE vec_id < {_KM_SAMP_K}),
-    {_km_iter_sql("c0", "a1", "c1", src="sv")},
-    {_km_iter_sql("c1", "a2", "c2", src="sv")},
-    afin AS (
-      SELECT vec_id, cell FROM (
-        SELECT qv.vec_id, c.cell,
-               row_number() OVER (PARTITION BY qv.vec_id
-                 ORDER BY round(list_cosine_similarity(qv.de,
-                   list_transform(c.cq,
-                     q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) DESC,
-                 c.cell) AS rn
-        FROM qv, c{_KM_ITERS} c
-      ) WHERE rn = 1
-    ),
+    {_km_chain_sql(_KM_SAMP_K, _KM_SAMP_S)},
     probes AS (SELECT vec_id AS probe_id, de AS pe FROM qv
                WHERE vec_id < {_N_PROBES}),
     crank AS (
@@ -3567,7 +3490,7 @@ def sim_ann_kmeans_ivf_batch_topk(spark, sf_dir, n_override: int = None):
     ANN service actually runs: train ONCE (the production sampled-train
     auto-sized build, identical derivations and Lloyd machinery to
     `sim_ann_kmeans_ivf_topk_auto_sampled`, assignment through the
-    round-15 Arrow-matmul stage), then answer {_N_PROBES} probes in one
+    Arrow-matmul stage), then answer {_N_PROBES} probes in one
     DAG — each probe ranks the broadcast centroid table, searches its
     nprobe best cells exhaustively, and returns its top-{_BATCH_K}. The
     batch shapes that existed before ran over label-defined cells
@@ -3596,17 +3519,8 @@ def sim_ann_kmeans_ivf_batch_topk(spark, sf_dir, n_override: int = None):
     k = _km_auto_k(n)
     nprobe = _km_auto_nprobe(k)
     stride = _km_auto_stride(n, k)
-    e_q = pin(
-        e.select(
-            "vec_id",
-            as_double("embedding").alias("de"),
-            _quantize(as_double("embedding")).alias("qe"),
-        )
-    )
-    # round-15 opt session 2: the stride-sampled train runs driver-local
-    # on the bounded sample; the stride=1 contrast regime keeps the
-    # distributed loop — see `_km_train`.
-    cents = _km_train(spark, e_q, k, stride)
+    e_q = _km_quantized(e)
+    cents = _km_train(spark, e_q, _km_vecid_seeds(e_q, k), stride)
     final_assign = _km_assign_arrow(e_q, cents)
     probes = e_q.filter(F.col("vec_id") < _N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("de").alias("pe")
@@ -3683,6 +3597,17 @@ def _sd_auto_k(n: int) -> int:
 
 _SD_K = _sd_auto_k(_KM_FIXTURE_N)
 _SD_S = _km_auto_stride(_KM_FIXTURE_N, _SD_K)
+# The SemDeDup oracles' head: the sampled train at the fixture derivation
+# and the (vec_id, cell, de, cs_cent) base `_sd_body` pins.
+_SD_BASE_SQL = f"""{_km_chain_sql(_SD_K, _SD_S)},
+    base AS MATERIALIZED (
+      SELECT a.vec_id, a.cell, qv.de,
+             round(list_cosine_similarity(qv.de,
+               list_transform(c.cq,
+                 q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) AS cs_cent
+      FROM afin a JOIN qv USING (vec_id)
+      JOIN c{_KM_ITERS} c ON c.cell = a.cell
+    )"""
 
 
 def _sd_pairs_fold(base):
@@ -3789,20 +3714,19 @@ def _sd_body(spark, sf_dir, k: int, stride: int, tau: float, emit: str = "report
     pre-τ within-cell pair set the recall eval counts as its volume
     axis).
 
-    Train = the family's sampled Lloyd machinery verbatim (vec_id-seeded
-    singleton cells, fixed-point updates, round-15 Arrow-matmul
-    assignment); then ONE within-cell pair pass over the
-    (vec_id, cell, de, cs_cent) base — since the round-15 optimization
-    pass an Arrow per-cell matmul kernel (`_sd_pairs_arrow`, law-pinned
-    ≡ the `_sd_pairs_fold` self-join it replaced), keeping pairs with
-    6dp-rounded cosine ≥ τ. Keep-rule (the paper's): within a dup
-    pair the vector FARTHER from its centroid is the keeper — remove the
-    endpoint with the GREATER (cs_cent, vec_id); a vector is removed iff
-    ANY neighbor beats it, so the kept set is pair-free (no surviving dup
-    pair retains both endpoints — law-tested) without an iterative
-    components pass. cs_cent rides the same codegen'd cosine+round path
-    as the elbow key's inertia re-join (numpy-rounded cs would race
-    Spark's half-up rounding at midpoints).
+    Train = `_km_train` (vec_id-seeded singleton cells, fixed-point
+    updates, Arrow-matmul assignment); then ONE within-cell pair pass
+    over the (vec_id, cell, de, cs_cent) base — an Arrow per-cell matmul
+    kernel (`_sd_pairs_arrow`, law-pinned ≡ the `_sd_pairs_fold`
+    self-join), keeping pairs with 6dp-rounded cosine ≥ τ. Keep-rule
+    (the paper's): within a dup pair the vector FARTHER from its
+    centroid is the keeper — remove the endpoint with the GREATER
+    (cs_cent, vec_id); a vector is removed iff ANY neighbor beats it,
+    so the kept set is pair-free (no surviving dup pair retains both
+    endpoints — law-tested) without an iterative components pass.
+    cs_cent rides the same codegen'd cosine+round path as the elbow
+    key's inertia re-join (numpy-rounded cs would race Spark's half-up
+    rounding at midpoints).
 
     Scale: base is pinned once (assignment runs ONCE);
     the Arrow pair pass hashes the base by cell into `applyInPandas` —
@@ -3816,16 +3740,10 @@ def _sd_body(spark, sf_dir, k: int, stride: int, tau: float, emit: str = "report
     e = load(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    e_q = pin(
-        e.select(
-            "vec_id",
-            as_double("embedding").alias("de"),
-            _quantize(as_double("embedding")).alias("qe"),
-        )
-    )
-    # round-15 opt session 2: driver-local sampled train (see `_km_train`
-    # — SemDeDup's occupancy sizing keeps stride > 1 at every n).
-    cents = _km_train(spark, e_q, k, stride)
+    e_q = _km_quantized(e)
+    # SemDeDup's occupancy sizing keeps stride > 1 at every n, so the
+    # train runs driver-local (see `_km_train`).
+    cents = _km_train(spark, e_q, _km_vecid_seeds(e_q, k), stride)
     assign = _km_assign_arrow(e_q, cents)
     cd = _dequantize()
     base = pin(
@@ -3839,9 +3757,9 @@ def _sd_body(spark, sf_dir, k: int, stride: int, tau: float, emit: str = "report
             F.round(cosine(F.col("v.de"), F.col("cd")), 6).alias("cs_cent"),
         )
     )
-    # round-15 opt: the pair pass runs as the Arrow matmul kernel (2× at
-    # shipped grain, exact — see `_sd_pairs_arrow`; `_sd_pairs_fold` is
-    # the law-pinned twin).
+    # the pair pass runs as the Arrow matmul kernel (2× at shipped grain,
+    # exact — see `_sd_pairs_arrow`; `_sd_pairs_fold` is the law-pinned
+    # twin).
     pairs_all = _sd_pairs_arrow(base)
     if emit == "cand":
         # the recall eval's candidate-volume axis: every within-cell pair,
@@ -3882,37 +3800,7 @@ def _sd_body(spark, sf_dir, k: int, stride: int, tau: float, emit: str = "report
 @query(
     "dedup_semdedup_cells",
     f"""
-    WITH qv AS (
-      SELECT vec_id,
-             CAST(embedding AS DOUBLE[]) AS de,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(round(x * {_CENT_SCALE}) AS BIGINT)) AS qe
-      FROM embeddings
-    ),
-    sv AS (SELECT * FROM qv WHERE vec_id % {_SD_S} = 0),
-    c0 AS (SELECT vec_id AS cell, qe AS cq FROM qv
-           WHERE vec_id < {_SD_K}),
-    {_km_iter_sql("c0", "a1", "c1", src="sv")},
-    {_km_iter_sql("c1", "a2", "c2", src="sv")},
-    afin AS (
-      SELECT vec_id, cell FROM (
-        SELECT qv.vec_id, c.cell,
-               row_number() OVER (PARTITION BY qv.vec_id
-                 ORDER BY round(list_cosine_similarity(qv.de,
-                   list_transform(c.cq,
-                     q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) DESC,
-                 c.cell) AS rn
-        FROM qv, c{_KM_ITERS} c
-      ) WHERE rn = 1
-    ),
-    base AS MATERIALIZED (
-      SELECT a.vec_id, a.cell, qv.de,
-             round(list_cosine_similarity(qv.de,
-               list_transform(c.cq,
-                 q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) AS cs_cent
-      FROM afin a JOIN qv USING (vec_id)
-      JOIN c{_KM_ITERS} c ON c.cell = a.cell
-    ),
+    {_SD_BASE_SQL},
     pairs AS MATERIALIZED (
       SELECT a.cell, a.vec_id AS id_a, b.vec_id AS id_b,
              a.cs_cent AS cs_a, b.cs_cent AS cs_b
@@ -4119,29 +4007,7 @@ decontam_embedding_cosine.__doc__ = decontam_embedding_cosine.__doc__.format(
 @query(
     "dedup_semdedup_recall_eval",
     f"""
-    WITH qv AS (
-      SELECT vec_id,
-             CAST(embedding AS DOUBLE[]) AS de,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(round(x * {_CENT_SCALE}) AS BIGINT)) AS qe
-      FROM embeddings
-    ),
-    sv AS (SELECT * FROM qv WHERE vec_id % {_SD_S} = 0),
-    c0 AS (SELECT vec_id AS cell, qe AS cq FROM qv
-           WHERE vec_id < {_SD_K}),
-    {_km_iter_sql("c0", "a1", "c1", src="sv")},
-    {_km_iter_sql("c1", "a2", "c2", src="sv")},
-    afin AS (
-      SELECT vec_id, cell FROM (
-        SELECT qv.vec_id, c.cell,
-               row_number() OVER (PARTITION BY qv.vec_id
-                 ORDER BY round(list_cosine_similarity(qv.de,
-                   list_transform(c.cq,
-                     q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) DESC,
-                 c.cell) AS rn
-        FROM qv, c{_KM_ITERS} c
-      ) WHERE rn = 1
-    ),
+    {_km_chain_sql(_SD_K, _SD_S)},
     base AS MATERIALIZED (
       SELECT a.vec_id, a.cell, qv.de
       FROM afin a JOIN qv USING (vec_id)
@@ -4249,37 +4115,7 @@ def dedup_semdedup_recall_eval(spark, sf_dir):
 @query(
     "corpus_semantic_curation_report",
     f"""
-    WITH qv AS (
-      SELECT vec_id,
-             CAST(embedding AS DOUBLE[]) AS de,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(round(x * {_CENT_SCALE}) AS BIGINT)) AS qe
-      FROM embeddings
-    ),
-    sv AS (SELECT * FROM qv WHERE vec_id % {_SD_S} = 0),
-    c0 AS (SELECT vec_id AS cell, qe AS cq FROM qv
-           WHERE vec_id < {_SD_K}),
-    {_km_iter_sql("c0", "a1", "c1", src="sv")},
-    {_km_iter_sql("c1", "a2", "c2", src="sv")},
-    afin AS (
-      SELECT vec_id, cell FROM (
-        SELECT qv.vec_id, c.cell,
-               row_number() OVER (PARTITION BY qv.vec_id
-                 ORDER BY round(list_cosine_similarity(qv.de,
-                   list_transform(c.cq,
-                     q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) DESC,
-                 c.cell) AS rn
-        FROM qv, c{_KM_ITERS} c
-      ) WHERE rn = 1
-    ),
-    base AS MATERIALIZED (
-      SELECT a.vec_id, a.cell, qv.de,
-             round(list_cosine_similarity(qv.de,
-               list_transform(c.cq,
-                 q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) AS cs_cent
-      FROM afin a JOIN qv USING (vec_id)
-      JOIN c{_KM_ITERS} c ON c.cell = a.cell
-    ),
+    {_SD_BASE_SQL},
     pairs AS MATERIALIZED (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b,
              a.cs_cent AS cs_a, b.cs_cent AS cs_b
@@ -5475,30 +5311,7 @@ ORACLES["emb_hard_negative_mining"] = ORACLES["emb_hard_negative_mining"].format
 @query(
     "emb_ivf_cell_balance",
     f"""
-    WITH qv AS (
-      SELECT vec_id, label,
-             CAST(embedding AS DOUBLE[]) AS de,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(round(x * {_CENT_SCALE}) AS BIGINT)) AS qe
-      FROM embeddings
-    ),
-    seeds AS (SELECT label AS cell, min(vec_id) AS sid
-              FROM embeddings GROUP BY label),
-    c0 AS (SELECT s.cell, qv.qe AS cq
-           FROM seeds s JOIN qv ON qv.vec_id = s.sid),
-    {_km_iter_sql("c0", "a1", "c1")},
-    {_km_iter_sql("c1", "a2", "c2")},
-    afin AS (
-      SELECT vec_id, cell FROM (
-        SELECT qv.vec_id, c.cell,
-               row_number() OVER (PARTITION BY qv.vec_id
-                 ORDER BY round(list_cosine_similarity(qv.de,
-                   list_transform(c.cq,
-                     q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) DESC,
-                 c.cell) AS rn
-        FROM qv, c{_KM_ITERS} c
-      ) WHERE rn = 1
-    ),
+    {_km_chain_sql()},
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
                    CAST(count(DISTINCT cell) AS BIGINT) AS k
             FROM afin),
@@ -5534,23 +5347,8 @@ def emb_ivf_cell_balance(spark, sf_dir):
     partial-aggregating update shuffles); the census itself is two
     hash-grouped aggregates over the |V|-row assignment plus a
     per-cell argmax window PARTITIONED by cell."""
-    e = load(spark, sf_dir, "embeddings")
-    e_q = pin(
-        e.select(
-            "vec_id",
-            "label",
-            as_double("embedding").alias("de"),
-            _quantize(as_double("embedding")).alias("qe"),
-        )
-    )
-    seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
-    cents = (
-        seeds.alias("s")
-        .join(e_q.alias("v"), F.col("s.sid") == F.col("v.vec_id"))
-        .select(F.col("s.label").alias("cell"), F.col("v.qe").alias("cq"))
-    )
-    for _ in range(_KM_ITERS):
-        cents = pin(_km_update(_km_assign_arrow(e_q, cents), e_q))
+    e_q = _km_quantized(load(spark, sf_dir, "embeddings"), with_label=True)
+    cents = _km_train(spark, e_q, _km_label_seeds(e_q), 1)
     # shared by 3 consumers
     afin = pin(_km_assign_arrow(e_q, cents))
     tot = afin.agg(
@@ -5729,42 +5527,14 @@ def sim_ann_ivf_nprobe_curve(spark, sf_dir):
 _ELBOW_KS = (2, 4, 8)
 
 
-def _eb_iter_sql(prev_c: str, a: str, cur_c: str) -> str:
-    """One Lloyd round for the elbow sweep — the `_km_iter_sql` body with
-    both CTEs marked MATERIALIZED (the sweep instantiates 3 chains in one
-    oracle; without materialization DuckDB re-evaluates each round per
-    downstream reference)."""
-    return f"""{a} AS MATERIALIZED (
-      SELECT vec_id, cell FROM (
-        SELECT qv.vec_id, c.cell,
-               row_number() OVER (PARTITION BY qv.vec_id
-                 ORDER BY round(list_cosine_similarity(qv.de,
-                   list_transform(c.cq,
-                     q -> CAST(q AS DOUBLE) / {_CENT_SCALE})), 6) DESC,
-                 c.cell) AS rn
-        FROM qv, {prev_c} c
-      ) WHERE rn = 1
-    ),
-    {cur_c} AS MATERIALIZED (
-      SELECT cell, list(cq1 ORDER BY pos) AS cq FROM (
-        SELECT a.cell, i AS pos,
-               CAST(floor(CAST(SUM(qv.qe[i]) AS DOUBLE) / COUNT(*))
-                    AS BIGINT) AS cq1
-        FROM {a} a JOIN qv USING (vec_id),
-             (SELECT unnest(generate_series(1, 64)) AS i)
-        GROUP BY a.cell, i
-      ) GROUP BY cell
-    )"""
-
-
 def _eb_chain_sql(k: int) -> str:
     """The per-k CTE chain: seeded c0, two Lloyd rounds, final scored
     assignment."""
     return f"""ek{k}c0 AS MATERIALIZED (
       SELECT vec_id AS cell, qe AS cq FROM qv WHERE vec_id < {k}
     ),
-    {_eb_iter_sql(f"ek{k}c0", f"ek{k}a1", f"ek{k}c1")},
-    {_eb_iter_sql(f"ek{k}c1", f"ek{k}a2", f"ek{k}c2")},
+    {_km_iter_sql(f"ek{k}c0", f"ek{k}a1", f"ek{k}c1", materialized=True)},
+    {_km_iter_sql(f"ek{k}c1", f"ek{k}a2", f"ek{k}c2", materialized=True)},
     ek{k}fin AS MATERIALIZED (
       SELECT vec_id, cs FROM (
         SELECT qv.vec_id,
@@ -5791,13 +5561,7 @@ def _eb_chain_sql(k: int) -> str:
 @query(
     "emb_kmeans_elbow_curve",
     f"""
-    WITH qv AS MATERIALIZED (
-      SELECT vec_id,
-             CAST(embedding AS DOUBLE[]) AS de,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(round(x * {_CENT_SCALE}) AS BIGINT)) AS qe
-      FROM embeddings
-    ),
+    WITH {_km_qv_sql(label=False, materialized=True)},
     {",".join(_eb_chain_sql(k) for k in _ELBOW_KS)}
     SELECT k, n_vecs, inertia_ppm,
            round(CAST(inertia_ppm AS DOUBLE) / (n_vecs * 1000000.0), 6)
@@ -5808,40 +5572,29 @@ def _eb_chain_sql(k: int) -> str:
 def emb_kmeans_elbow_curve(spark, sf_dir):
     """The k-selection elbow curve — the clustering twin of
     `sim_ann_ivf_nprobe_curve`'s serving knob: run the SAME fixed-point
-    Lloyd machinery as `sim_ann_kmeans_ivf_topk` (2 rounds, integer
-    centroids, 6dp-round + cell tie-break assignment) at k ∈ {_ELBOW_KS},
-    seeded with the k smallest vec_ids, and report each run's inertia
+    Lloyd train (`_km_train`) as `sim_ann_kmeans_ivf_topk` (2 rounds,
+    integer centroids, 6dp-round + cell tie-break assignment) at
+    k ∈ {_ELBOW_KS}, seeded with the k smallest vec_ids, and report each run's inertia
     (total cosine dissimilarity to the assigned centroid, in exact ppm
     units: Σ (10⁶ − round(cs·10⁶))). The inertia-vs-k knee is how an IVF
     deployment picks its cell count before `sim_ann_ivf_nprobe_curve`
     picks its probe count. The oracle unrolls all THREE training chains
     as MATERIALIZED CTEs, so every Lloyd round of every k is
     value-checked cross-engine. Scale shape: per k, each round is one
-    broadcast-centroid Arrow-matmul assignment (round 15) + one
+    broadcast-centroid Arrow-matmul assignment + one
     (cell, pos)-keyed partial-agg shuffle; the inertia term is an O(n)
     per-vector cosine re-join against the assigned centroid instead of
-    the old O(n·k) scored fold; the sweep is 3 independent chains
+    an O(n·k) scored fold; the sweep is 3 independent chains
     (embarrassingly parallel across k at cluster scale); the output is
     3 rows. Cost scales with k·rounds, not k²."""
-    e = load(spark, sf_dir, "embeddings")
-    e_q = pin(
-        e.select(
-            "vec_id",
-            as_double("embedding").alias("de"),
-            _quantize(as_double("embedding")).alias("qe"),
-        )
-    )
+    e_q = _km_quantized(load(spark, sf_dir, "embeddings"))
     rows = None
     for k in _ELBOW_KS:
-        cents = e_q.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("cell"), F.col("qe").alias("cq")
-        )
-        for _ in range(_KM_ITERS):
-            cents = pin(_km_update(_km_assign_arrow(e_q, cents), e_q))
+        cents = _km_train(spark, e_q, _km_vecid_seeds(e_q, k), 1)
         # Arrow argmax picks the cell; the inertia term cs is then ONE
         # JVM-side cosine per vector against the assigned centroid
         # (broadcast k-row join) — O(n) cosine evaluations instead of
-        # the old O(n*k) scored-fold, and the emitted value goes through
+        # an O(n*k) scored fold, and the emitted value goes through
         # the exact same codegen'd cosine + F.round the oracle mirrors.
         cd = _dequantize()
         fin = (

@@ -152,3 +152,34 @@ def test_readme_query_count_matches_registry():
     assert int(m.group(1)) == len(QUERIES), (
         f"README declares {m.group(1)} queries, registry has {len(QUERIES)}"
     )
+
+
+def test_check_digest_prints_contract_without_spark():
+    """`tools/check.py --digest` prints the registry contract's sha256
+    with the key and oracle counts of the live registry, and starts no
+    Spark session."""
+    import re
+    import subprocess
+    import sys
+
+    probe = "\n".join(
+        [
+            "import runpy, sys",
+            "sys.argv = ['check.py', '--digest']",
+            "try:",
+            f"    runpy.run_path({_REPO + '/tools/check.py'!r}, run_name='__main__')",
+            "except SystemExit as e:",
+            "    assert not e.code, e.code",
+            "from pyspark import SparkContext",
+            "print('active context:', SparkContext._active_spark_context)",
+        ]
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True, cwd=_REPO
+    )
+    assert r.returncode == 0, r.stdout + r.stderr
+    lines = r.stdout.splitlines()
+    assert re.fullmatch(
+        rf"[0-9a-f]{{64}}  {len(KEYS)} keys, {len(ORACLES)} oracles", lines[0]
+    ), lines
+    assert lines[-1] == "active context: None", lines

@@ -29,18 +29,7 @@ def _e_q(spark, fixture, with_label=False):
     from dataflow_pubsub_message_encryption_spark.operators import similarity as S
     from dataflow_pubsub_message_encryption_spark.sources import load
 
-    e = load(spark, fixture, "embeddings")
-    cols = [
-        "vec_id",
-        S.as_double("embedding").alias("de"),
-        F.transform(
-            S.as_double("embedding"),
-            lambda x: F.round(x * S._CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ]
-    if with_label:
-        cols.insert(1, F.col("label"))
-    return e.select(*cols).localCheckpoint(eager=True)
+    return S._km_quantized(load(spark, fixture, "embeddings"), with_label)
 
 
 def _seed_cents_vecid(spark, e_q):
@@ -93,17 +82,27 @@ def test_km_assign_arrow_equals_fold(spark, fixture, seeding):
         cents = S._km_update(fold, e_q).localCheckpoint(eager=True)
 
 
-@pytest.mark.parametrize("fixture", FIXTURES)
-def test_km_trained_trajectory_identical(spark, fixture):
+@pytest.mark.parametrize(
+    "fixture,seeding",
+    [pytest.param(f, "vecid", id=f) for f in FIXTURES]
+    + [pytest.param(f, "label", id=f"label-{f}") for f in FIXTURES],
+)
+def test_km_trained_trajectory_identical(spark, fixture, seeding):
     """The full _KM_ITERS Lloyd trajectory is bit-identical whether the
     per-round assignment runs through the fold or the Arrow stage —
     the property that makes the engine-wide swap (train loops included)
     safe: identical per-vector cells => identical integer centroid sums
-    => identical next-round centroids, inductively."""
+    => identical next-round centroids, inductively. The Arrow side is
+    the engine's own full-corpus train (`_km_train`, stride 1), for both
+    seedings; label-seeded cells must keep their int32 dtype."""
     from dataflow_pubsub_message_encryption_spark.operators import similarity as S
 
-    e_q = _e_q(spark, fixture)
-    seed = _seed_cents_vecid(spark, e_q).localCheckpoint(eager=True)
+    e_q = _e_q(spark, fixture, with_label=(seeding == "label"))
+    seed = (
+        _seed_cents_label(spark, e_q)
+        if seeding == "label"
+        else _seed_cents_vecid(spark, e_q)
+    ).localCheckpoint(eager=True)
 
     def train(assign_fn):
         cents = seed
@@ -113,7 +112,11 @@ def test_km_trained_trajectory_identical(spark, fixture):
             )
         return sorted((r.cell, tuple(r.cq)) for r in cents.collect())
 
-    assert train(S._km_assign) == train(S._km_assign_arrow)
+    trained = S._km_train(spark, e_q, seed, stride=1)
+    assert train(S._km_assign) == sorted(
+        (r.cell, tuple(r.cq)) for r in trained.collect()
+    )
+    assert trained.schema["cell"].dataType == seed.schema["cell"].dataType
 
 
 # --- target-recall band derivation (VERDICT r14 item 3) ---

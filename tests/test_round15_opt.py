@@ -47,14 +47,7 @@ def _sd_base(spark, fixture):
     n = e.count()
     k = S._sd_auto_k(n)
     stride = S._km_auto_stride(n, k)
-    e_q = e.select(
-        "vec_id",
-        S.as_double("embedding").alias("de"),
-        F.transform(
-            S.as_double("embedding"),
-            lambda x: F.round(x * S._CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = S._km_quantized(e)
     cents = e_q.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cell"), F.col("qe").alias("cq")
     )
@@ -256,14 +249,7 @@ def test_km_train_local_equals_distributed(spark, fixture):
         spark.sparkContext.defaultParallelism
     )
     n = e.count()
-    e_q = e.select(
-        "vec_id",
-        S.as_double("embedding").alias("de"),
-        F.transform(
-            S.as_double("embedding"),
-            lambda x: F.round(x * S._CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = S._km_quantized(e)
     for k in (S._km_auto_k(n), S._sd_auto_k(n)):
         stride = S._km_auto_stride(n, k)
         assert stride > 1, "fixture fell into the full-train regime — law vacuous"
@@ -281,7 +267,9 @@ def test_km_train_local_equals_distributed(spark, fixture):
         dist = sorted((r.cell, tuple(r.cq)) for r in cents.collect())
         local = sorted(
             (r.cell, tuple(r.cq))
-            for r in S._km_train(spark, e_q, k, stride).collect()
+            for r in S._km_train(
+                spark, e_q, S._km_vecid_seeds(e_q, k), stride
+            ).collect()
         )
         assert dist, "no centroids trained — law would be vacuous"
         assert dist == local, f"centroids differ at k={k} stride={stride}"

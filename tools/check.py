@@ -6,6 +6,7 @@ value comparison) so regressions surface locally before a round ends.
 Usage: python tools/check.py [sf_dir] [query ...]
        python tools/check.py --wrapper [sf_dir] [query ...]
        python tools/check.py --changed [--wrapper] [sf_dir]
+       python tools/check.py --digest
 
 --wrapper: exercise the exact driver path — a bare SparkSession (no engine
 confs pre-applied) calling ``__spark_entry__.queries()`` / ``oracle_sql()``
@@ -19,10 +20,17 @@ edits must not mask operator changes already committed — round-6 review
 catch). A touched shared module (functions/ sources/ plans/ streaming/ or
 the registry machinery) can affect any query, so that escalates to the
 full sweep instead of under-checking.
+
+--digest: print the sha256 of the registry contract — the JSON dump of
+the key order, then name → oracle SQL sorted by name — with the key and
+oracle counts, and exit. Starts no Spark session; a refactor that keeps
+every key, its order and its oracle text keeps this digest.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import sys
 import time
@@ -117,8 +125,23 @@ def _changed_query_names() -> set[str]:
     return names, bool(shared)
 
 
+def registry_digest() -> tuple[str, int, int]:
+    """(sha256, key count, oracle count) of the registry contract."""
+    from dataflow_pubsub_message_encryption_spark.operators import registry
+
+    queries, oracles = registry()
+    blob = json.dumps(
+        {"order": list(queries), "oracles": {k: oracles[k] for k in sorted(oracles)}}
+    )
+    return hashlib.sha256(blob.encode()).hexdigest(), len(queries), len(oracles)
+
+
 def main() -> int:
     args = sys.argv[1:]
+    if "--digest" in args:
+        digest, n_keys, n_oracles = registry_digest()
+        print(f"{digest}  {n_keys} keys, {n_oracles} oracles")
+        return 0
     wrapper = "--wrapper" in args
     changed = "--changed" in args
     args = [a for a in args if a not in ("--wrapper", "--changed")]
